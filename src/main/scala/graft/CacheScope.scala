@@ -102,6 +102,13 @@ object CacheScope {
     df
   }
 
+  /** Lineage truncation for driver-synchronized rounds: rebuild `df`
+    * from its (persisted, already materialized) RDD, so the next
+    * round's plan starts at a leaf instead of embedding this round's
+    * full lineage. */
+  private[graft] def truncate(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(df.rdd, df.schema)
+
   private[graft] def pendingCount(s: SparkSession): Int =
     lock.synchronized(Option(pending.get(s)).map(_.size).getOrElse(0))
 

@@ -701,8 +701,7 @@ object Dedup {
     // before the data is big. Rebuilding from the persisted RDD makes
     // each round's plan start at a leaf (the round is already
     // materialized by the count below, so the RDD reads the cache).
-    def truncate(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
+    import CacheScope.truncate
     // canonical undirected edges (x, y) with y < x, deduped
     var eP = pairDf
       .select(greatest(col("doc_a"), col("doc_b")).as("x"),

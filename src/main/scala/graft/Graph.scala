@@ -92,12 +92,10 @@ object Graph {
     val ed = e.join(deg, "src")
     var rank = deg.select(col("src").as("node"), lit(1000000L).as("r"))
     for (_ <- 1 to PageRankIters) {
-      // lineage-truncate each round (lazy — no driver barrier): keeps
-      // AQE re-planning the round, not the whole recurrence prefix
-      rank = Recurrence.round(ed.join(rank, col("src") === col("node"))
+      rank = ed.join(rank, col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(expr("150000 + (850 * sum(r div outdeg)) div 1000").as("r"))
-        .select(col("dst").as("node"), col("r")))
+        .select(col("dst").as("node"), col("r"))
     }
     rank.select(col("node"), col("r").as("rank_micro")).orderBy(col("node"))
   }
@@ -256,7 +254,9 @@ object Graph {
     var dist = seeds
     var frontier = seeds
     for (k <- 1 to BfsRounds) {
-      val nf = Recurrence.roundCached(
+      // persisted: nf feeds both the next frontier join and the settled
+      // union, so a plain plan would double per round
+      val nf = CacheScope.cached(
         frontier.join(e, col("node") === col("src"))
           .select(col("dst").as("node")).distinct()
           .join(dist, Seq("node"), "left_anti")
@@ -304,10 +304,7 @@ object Graph {
     * (empty peel set) cost one cached count each. */
   def kCore(spark: SparkSession, d: String): DataFrame = {
     val k = KCoreK
-    // rebuild from the materialized RDD: the next round's plan starts
-    // at a leaf instead of embedding this round's full lineage
-    def truncate(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
+    import CacheScope.truncate
     // round 0's arc relation is a leaf parquet scan of the salted
     // stage — nothing to persist or truncate (r13); later rounds'
     // shrunken arc sets stay persisted+truncated as before
@@ -391,9 +388,9 @@ object Graph {
     *
     * Shape per round: one dst-keyed join (labels onto arcs) + one
     * (node, label) count hash-agg + one node-keyed argmax hash-agg —
-    * all equi-shuffles on node keys, per-round cost ∝ arcs. Labels
-    * lineage-truncate per round (CacheScope). At 100 TB this is the
-    * canonical Pregel-style superstep as three relational ops. */
+    * all equi-shuffles on node keys, per-round cost ∝ arcs. At 100 TB
+    * this is the canonical Pregel-style superstep as three relational
+    * ops. */
   def labelProp(spark: SparkSession, d: String): DataFrame = {
     val e = tradeArcs(spark, d)
     val nodes = CacheScope.cached(e.select(col("src").as("node")).distinct())
@@ -410,10 +407,10 @@ object Graph {
       val votes = e2.join(lab, col("dst") === col("node"))
         .select(col("src").as("node"), col("lbl"))
         .groupBy(col("node"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      lab = Recurrence.round(votes
+      lab = votes
         .groupBy(col("node"))
         .agg(max(struct(col("cnt"), (-col("lbl")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("lbl")))
+        .select(col("node"), (-col("m.nl")).as("lbl"))
     }
     lab.select(col("node"), col("lbl").as("community"))
       .orderBy(col("node"))
@@ -482,7 +479,7 @@ object Graph {
     * join + ONE dst-keyed hash agg, plus a node-keyed left join to
     * re-add the teleport (the nodes relation is one row per node —
     * same cardinality the rank relation already has). Fixed rounds ⇒
-    * one lazy plan, lineage-truncated per round. */
+    * one lazy plan, each round persisted via CacheScope. */
   def personalizedPageRank(spark: SparkSession, d: String): DataFrame = {
     val e = tradeArcs(spark, d)
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
@@ -495,10 +492,10 @@ object Graph {
       val contrib = ed.join(rank, col("src") === col("node"))
         .groupBy(col("dst"))
         .agg(expr("(850 * sum(r div outdeg)) div 1000").as("c"))
-      // roundCached, not round: the teleport re-join makes each round's
-      // plan reference BOTH nodes and contrib; measured at sf0.1 the
+      // persisted: the teleport re-join makes each round's plan
+      // reference BOTH nodes and contrib; measured at sf0.1 the
       // persisted-round form ran 2.7 s vs 3.8-5.1 s plain
-      rank = Recurrence.roundCached(
+      rank = CacheScope.cached(
         nodes.join(contrib, col("node") === col("dst"), "left")
           .select(col("node"),
             (col("seed") * 150000L + coalesce(col("c"), lit(0L))).as("r")))
@@ -659,8 +656,7 @@ object Graph {
     val thr = (KTrussK - 2).toLong
     ktRebuildRounds = 0
     ktDeltaRounds = 0
-    def truncate(df: DataFrame): DataFrame =
-      spark.createDataFrame(df.rdd, df.schema)
+    import CacheScope.truncate
     // triangle triple → its three canonical (p1 < p2) edges; corner
     // ids are arbitrary order under (deg,id) orientation, so each
     // edge is re-sorted — the triple itself stays the identity key
@@ -1095,7 +1091,7 @@ object Graph {
     // monotonically), so newly-set bits at hop h contribute
     // popcount · (1000 div h) — identical semantics, and the whole
     // 4-round recurrence is back to ONE lazy plan (no per-round
-    // driver barrier; Recurrence.round lineage-truncates). At >64
+    // driver barrier; each round is a CacheScope persist). At >64
     // seeds the mask generalizes to an array of words, same plan.
     // shiftleft wraps mod 64 in Spark: a seed count past 64 would
     // silently alias seeds into the same bit and corrupt results, not
@@ -1113,7 +1109,9 @@ object Graph {
     // state: (node, reached mask, harmonic_milli so far, seeds reached
     // so far); dist-0 self-bits seed the masks but never score (the
     // dist > 0 contract) — monotone masks mean they can't re-enter
-    var state = Recurrence.roundCached(seeds.select(col("node"),
+    // persisted per round: each round reads state twice (neighbor fold
+    // + carry join), so a plain plan would double per round
+    var state = CacheScope.cached(seeds.select(col("node"),
       expr("shiftleft(1L, cast(bit as int))").as("reached"),
       lit(0L).as("harm"), lit(0L).as("nsr")))
     for (h <- 1 to BfsRounds) {
@@ -1121,7 +1119,7 @@ object Graph {
           col("src") === col("j"))
         .groupBy(col("dst")).agg(expr("bit_or(reached)").as("m"))
         .select(col("dst").as("node"), col("m"))
-      state = Recurrence.roundCached(
+      state = CacheScope.cached(
         state.join(nbr, Seq("node"), "full")
           .select(col("node"),
             expr("coalesce(reached, 0L) | coalesce(m, 0L)").as("reached"),

@@ -163,15 +163,7 @@ object CurateDag {
   def main(args: Array[String]): Unit = {
     val dataRoot = args.headOption.getOrElse("/root/testdata/sf0.001")
     val workRoot = args.lift(1).getOrElse("./data/curate")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .appName("graft-curate")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.memory.fraction", graft.SessionTuning.memoryFractionConf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     try {
       // capstone timing (r12): one wall-clock number for the whole DAG

@@ -1,7 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI entry ≅ `python -m pb_etl` (reference pb_etl/cli.py:6-16):
   * builds the full DAG to FinalResults with salted memoization.
   *
@@ -14,15 +12,7 @@ object Main {
     val workRoot = args.lift(1).getOrElse(
       sys.env.getOrElse("GRAFT_WORK_ROOT", "./data/work"))
     val epochs = args.lift(2).map(_.toInt).getOrElse(2)
-    val spark = SparkSession.builder()
-      .appName("pb-etl-spark")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.memory.fraction", graft.SessionTuning.memoryFractionConf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     try {
       val executed = PbEtl.runAll(Ctx(spark, PbConf(dataRoot, workRoot, epochs = epochs)))

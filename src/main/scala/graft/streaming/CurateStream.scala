@@ -292,15 +292,7 @@ object CurateStream {
     val work = args.headOption.getOrElse("./data/curate-stream")
     val n = args.lift(1).getOrElse("5000").toLong
     val rpb = args.lift(2).getOrElse("1000").toLong
-    val spark = SparkSession.builder()
-      .appName("graft-curate-stream")
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.memory.fraction", graft.SessionTuning.memoryFractionConf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     try {
       import org.apache.spark.sql.functions._

@@ -29,10 +29,18 @@ class CompactionSpec extends SparkSpec {
   test("clustered compaction restores disjoint per-file key ranges (data skipping)") {
     val tmp = java.nio.file.Files.createTempDirectory("compact_z").toString
     val in = s"$tmp/frag"
+    // the 16-file input must exceed the 64 KiB target: read as
+    // TIMESTAMP_NTZ, o_orderdate is written as INT64 (68 KB in all);
+    // the session's LTZ read writes it as INT96 (63 KB, one file)
+    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val prevNtz = spark.conf.get(ntz)
+    spark.conf.set(ntz, "true")
     // fragmented AND interleaved: every file spans the whole key range
-    Tables.orders(spark, d).repartition(16).write.parquet(in)
-    Compaction.compact(spark, in, s"$tmp/out", targetBytes = 64L << 10,
-      sortCols = Seq(col("o_orderkey")))
+    try {
+      Tables.orders(spark, d).repartition(16).write.parquet(in)
+      Compaction.compact(spark, in, s"$tmp/out", targetBytes = 64L << 10,
+        sortCols = Seq(col("o_orderkey")))
+    } finally spark.conf.set(ntz, prevNtz)
     val ranges = spark.read.parquet(s"$tmp/out")
       .withColumn("f", input_file_name())
       .groupBy("f").agg(min("o_orderkey").as("lo"), max("o_orderkey").as("hi"))

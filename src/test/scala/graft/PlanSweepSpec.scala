@@ -257,7 +257,7 @@ class PlanSweepSpec extends SparkSpec {
     *    ≤64 rows by construction. It is the ONLY partitionless window
     *    on the surface (r14 audit: all 5 "No Partition Defined"
     *    warnings in a full Verify run came from this one subtree,
-    *    executed once per roundCached materialization). */
+    *    executed once per persisted-round materialization). */
   private val boundedGlobalWindows = Map("q311_harmonic_closeness" -> 1)
 
   test("no single-partition window over corpus-sized data in any query plan") {

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   * per replica) and times the five heaviest scale-sensitive plans —
   * q126 PageRank, q311 harmonic closeness, q258 k-truss (graph),
   * q192 sparse cosine (documents), q161 coreset (embeddings) — at 1×,
-  * 10× and 100× in ONE local[32] session, so the two decade ratios
+  * 10× and 100× in ONE session, so the two decade ratios
   * are internally consistent.
   *
   * Two passes per scale: plans with persisted salted stages (the three
@@ -26,17 +26,7 @@ object ScaleProbe100 {
 
   def main(args: Array[String]): Unit = {
     val only = if (args.isEmpty) Set.empty[String] else args.toSet
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.memory.fraction", SessionTuning.memoryFractionConf)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("WARN")
     val fs = new org.apache.hadoop.fs.Path(tmp(""))
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
