@@ -106,9 +106,11 @@ object PbEtl {
       else d.withColumn(c, col(c).cast("double") / lit(m))
     }
 
-  /** Feature-prep stages shared by fit and predict: one
-    * StringIndexer+OneHotEncoder pair per categorical column, then a
-    * VectorAssembler over the 8 numeric + 10 encoded features.
+  /** Feature-prep stages shared by fit and predict: one multi-column
+    * StringIndexer over the categorical columns, one OneHotEncoder over
+    * its outputs, then a VectorAssembler over the 8 numeric + 10 encoded
+    * features. The single indexer fits every column in one `collect_set`
+    * select, and the fitted PipelineModel persists 4 stages, not 13.
     *
     * Reference bug not reproduced: its `indicator_column` sits outside
     * the vocab loop so only `HD` is actually one-hot encoded
@@ -120,10 +122,10 @@ object PbEtl {
     // strict-compat mode (M4): reproduce the reference's literal
     // behavior — only `HD` one-hot encoded (pb_etl/tasks.py:285-286)
     val cats = if (onlyHd) Seq("HD") else catCol
-    val indexers = cats.map { c =>
-      new StringIndexer().setInputCol(s"${c}_str").setOutputCol(s"${c}_idx")
-        .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
-    }
+    val indexer = new StringIndexer()
+      .setInputCols(cats.map(c => s"${c}_str").toArray)
+      .setOutputCols(cats.map(c => s"${c}_idx").toArray)
+      .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
     val ohe = new OneHotEncoder()
       .setInputCols(cats.map(c => s"${c}_idx").toArray)
       .setOutputCols(cats.map(c => s"${c}_vec").toArray)
@@ -131,7 +133,7 @@ object PbEtl {
     val assembler = new VectorAssembler()
       .setInputCols((numCol ++ cats.map(c => s"${c}_vec")).toArray)
       .setOutputCol("features")
-    (indexers :+ ohe :+ assembler).toArray
+    Array(indexer, ohe, assembler)
   }
 
   /** RES30 is an int64-valued categorical (pb_etl/tasks.py:32,54) —

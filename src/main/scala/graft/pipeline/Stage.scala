@@ -81,11 +81,14 @@ trait Stage {
     * S4 read gate: refuses to read an incomplete target — a dir without
     * its `_SUCCESS` flag is a partial/failed write (the reference's
     * read_dask raises the same way, pb_etl/luigi/dask/target.py:139-148). */
-  def read(ctx: Ctx): DataFrame = {
+  def read(ctx: Ctx): DataFrame = ctx.spark.read.parquet(readableDir(ctx))
+
+  /** The output dir, once it has passed the S4 read gate. */
+  def readableDir(ctx: Ctx): String = {
     val d = outputDir(ctx).getOrElse(sys.error(s"stage $name has no output dir"))
     require(complete(ctx),
       s"stage $name output at $d is incomplete (no _SUCCESS flag) — not reading a partial write")
-    ctx.spark.read.parquet(d)
+    d
   }
 }
 

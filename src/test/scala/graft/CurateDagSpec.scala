@@ -14,11 +14,29 @@ class CurateDagSpec extends SparkSpec {
     val work = Files.createTempDirectory("curate").toString
     val ctx = Ctx(spark, PbConf(dataRoot = d, workRoot = work))
 
+    // the report's one-aggregation funnel equals each stage's own count
+    def stageCounts = CurateDag.funnelStages.map { case (k, s) => k -> s.read(ctx).count() }
+
     val first = CurateDag.run(ctx)
     assert(first == Seq("QualityGate", "Decontaminate", "DedupCanonical",
       "Redact", "Mixture", "Pack", "ChunkManifest", "CurationReport"), first.toString)
+    val counts = stageCounts
+    assert(CurateDag.CurationReport.last.contains(counts), CurateDag.CurationReport.last.toString)
     // memoization: everything but the always-rerun report skips
+    CurateDag.CurationReport.last = None
     assert(CurateDag.run(ctx) == Seq("CurationReport"))
+    assert(CurateDag.CurationReport.last.contains(counts), CurateDag.CurationReport.last.toString)
+
+    // the report's scans keep the S4 read gate: an incomplete stage
+    // output fails the report, naming the stage
+    val mixDir = CurateDag.Mixture.outputDir(ctx).get
+    val flag = new org.apache.hadoop.fs.Path(mixDir, "_SUCCESS")
+    val fs = ctx.fs(mixDir)
+    assert(fs.delete(flag, false))
+    try {
+      val e = intercept[IllegalArgumentException](CurateDag.CurationReport.run(ctx))
+      assert(e.getMessage.contains("stage Mixture "), e.getMessage)
+    } finally fs.create(flag, true).close()
 
     val raw = CurateDag.RawDocs.read(ctx).count()
     val quality = CurateDag.QualityGate.read(ctx)

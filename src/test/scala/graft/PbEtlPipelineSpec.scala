@@ -2,7 +2,12 @@ package graft
 
 import graft.pipeline._
 import java.nio.file.Files
-import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.ml.{Pipeline, PipelineStage}
+import org.apache.spark.ml.attribute.AttributeGroup
+import org.apache.spark.ml.feature.StringIndexer
+import org.apache.spark.ml.linalg.Vector
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions._
 
 /** End-to-end pipeline test on the reference's own 3-row fixtures
   * (ported verbatim from /root/reference/test_pset.py:26-119 per
@@ -76,7 +81,6 @@ class PbEtlPipelineSpec extends SparkSpec {
   }
 
   test("theNorm scales to [0,1] and keeps zero-max columns unscaled") {
-    import org.apache.spark.sql.functions._
     val df = PbEtl.theNorm(PbEtl.LoadData.read(ctx), PbEtl.NormDenominators.maxMap(ctx))
     val r = df.agg(max("REN"), max("DOMAIN_LENGTH"), max("RESTORES"), max("TRAFFIC_SCORE")).head()
     assert(r.getDouble(0) == 1.0 && r.getDouble(1) == 1.0)
@@ -148,12 +152,16 @@ class PbEtlPipelineSpec extends SparkSpec {
     assert(row.length == 1)
   }
 
-  test("M4 strict-compat: onlyHd assembles numeric + single HD indicator only") {
-    import org.apache.spark.ml.Pipeline
-    import org.apache.spark.ml.attribute.AttributeGroup
+  /** The normalized fixture with the `<cat>_str` columns the feature
+    * stages read (what FitModel hands them). */
+  private def featureInput: DataFrame = {
     val data = PbEtl.theNorm(PbEtl.LoadData.read(ctx), PbEtl.NormDenominators.maxMap(ctx))
-    val withStrings = Schemas.catCol.foldLeft(data)((d, c) =>
+    Schemas.catCol.foldLeft(data)((d, c) =>
       d.withColumn(s"${c}_str", d(c).cast("string"))).na.fill(0.0, Schemas.numCol)
+  }
+
+  test("M4 strict-compat: onlyHd assembles numeric + single HD indicator only") {
+    val withStrings = featureInput
     def width(onlyHd: Boolean): Int = {
       val out = new Pipeline().setStages(PbEtl.featureStages(onlyHd))
         .fit(withStrings).transform(withStrings)
@@ -168,6 +176,42 @@ class PbEtlPipelineSpec extends SparkSpec {
     assert(intended > strict) // all 10 categoricals encoded
     // and the fitted salt distinguishes the modes (different model dirs)
     assert(PbEtl.FitModel.salt(ctx.conf) != PbEtl.FitModel.salt(ctx.conf.copy(onlyHd = true)))
+  }
+
+  test("feature prep: the multi-column indexer equals one indexer per categorical") {
+    // the fixture repeats one value per categorical: vary it per row and
+    // null one row per column, then score the fit rows plus a copy whose
+    // categoricals are all unseen labels (the "keep" bucket)
+    val id = col("TRANSACTION_ID")
+    val fit = Schemas.catCol.zipWithIndex.foldLeft(featureInput) { case (d, (c, i)) =>
+      d.withColumn(s"${c}_str", when(id % 3 === i % 3, lit(null).cast("string"))
+        .otherwise(concat(col(s"${c}_str"), (id % 2).cast("string"))))
+    }
+    val score = fit.withColumn("probe", lit(0)).unionByName(
+      Schemas.catCol.foldLeft(fit)((d, c) => d.withColumn(s"${c}_str", lit("unseen")))
+        .withColumn("probe", lit(1)))
+    for (onlyHd <- Seq(false, true)) {
+      val cats = if (onlyHd) Seq("HD") else Schemas.catCol
+      val stages = PbEtl.featureStages(onlyHd)
+      val reference = cats.map { c =>
+        new StringIndexer().setInputCol(s"${c}_str").setOutputCol(s"${c}_idx")
+          .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
+      } ++ stages.drop(1)
+      def features(ps: Seq[PipelineStage]): (Int, Seq[(Long, Int, Vector)]) = {
+        val out = new Pipeline().setStages(ps.toArray).fit(fit).transform(score)
+        val rows = out.select(id, col("probe"), col("features")).collect()
+          .map(r => (r.getLong(0), r.getInt(1), r.getAs[Vector](2))).sortBy(r => (r._1, r._2))
+        (AttributeGroup.fromStructField(out.schema("features")).size, rows.toSeq)
+      }
+      val (size, rows) = features(stages.toSeq)
+      assert(stages.length == 3, s"onlyHd=$onlyHd")
+      assert((size, rows) == features(reference), s"onlyHd=$onlyHd")
+      assert(size > Schemas.numCol.length && rows.length == 6, s"onlyHd=$onlyHd")
+    }
+    // the persisted model: indexer, encoder, assembler, classifier
+    val fitted = PbEtl.FitModel.load(ctx).stages
+    assert(fitted.map(_.getClass.getSimpleName).toSeq == Seq("StringIndexerModel",
+      "OneHotEncoderModel", "VectorAssembler", "MultilayerPerceptronClassificationModel"))
   }
 
   test("salt: deterministic, version-sensitive, lineage-sensitive (O3)") {
