@@ -481,8 +481,8 @@ object Dedup {
     * (`embeddingNearDupExact`) is measured in DedupSpec. */
   def embeddingNearDup(spark: SparkSession, d: String): DataFrame = {
     // referenced by the explode and both verify-join sides: cached so the
-    // norm + 16 plane projections compute once per row; released by the
-    // CacheScope listener after the caller's terminal action
+    // norm + 16 plane projections compute once per row; released when
+    // the caller's scope ends
     val e = CacheScope.cached(Similarity.withNorm(Tables.embeddings(spark, d))
       .withColumn("buckets", Similarity.lshBuckets(col("v"))))
     val b = e.select(col("vec_id"), posexplode(col("buckets")).as(Seq("t", "bucket")))
@@ -525,7 +525,7 @@ object Dedup {
     // corpus-proportional cells (≡ 16 at driver SFs; see scaledNlist)
     val (_, corpus) =
       IvfIndex.buildOrLoad(spark, d, IvfIndex.scaledNlist(spark, d))
-    // both self-join sides; released by the CacheScope listener
+    // both self-join sides; released when the caller's scope ends
     val e = CacheScope.cached(corpus)
     val cos = Similarity.cosine(col("a.v"), col("b.v"), col("a.nn"), col("b.nn"))
     e.as("a").join(e.as("b"),
@@ -703,10 +703,10 @@ object Dedup {
     // materialized by the count below, so the RDD reads the cache).
     import CacheScope.truncate
     // canonical undirected edges (x, y) with y < x, deduped
-    var eP = pairDf
+    var eP = CacheScope.cached(pairDf
       .select(greatest(col("doc_a"), col("doc_b")).as("x"),
         least(col("doc_a"), col("doc_b")).as("y"))
-      .filter(col("x") =!= col("y")).distinct().persist()
+      .filter(col("x") =!= col("y")).distinct())
     // count() computes EVERY partition, fully populating the cache
     // before a predecessor is dropped (isEmpty would early-exit,
     // leaving most partitions uncached and recomputing lineage)
@@ -772,7 +772,7 @@ object Dedup {
       // phase stays bounded, and skipping its persist+count removes one
       // driver-synchronized job per round — the whole LS+SS iteration
       // computes in a single job from the previous round's cache
-      val ssP = phase(phase(e, large = true), large = false).persist()
+      val ssP = CacheScope.cached(phase(phase(e, large = true), large = false))
       val ssCount = ssP.count()
       val ss = truncate(ssP)
       // unchanged-by-iteration ⟺ star forest reached: both sets are
@@ -790,10 +790,9 @@ object Dedup {
       s"components not converged after $rounds star rounds — raise the cap " +
         "(expected O(log n): this indicates a defect, not a deep graph)")
     lastClusterRounds = rounds
-    // the final star forest backs the caller's label reads; the
-    // CacheScope listener releases it after the caller's terminal
-    // action (no reliance on a session-level clearCache)
-    CacheScope.adopt(eP)
+    // the final star forest (eP) backs the caller's label reads and
+    // stays cached until the caller's scope ends; each earlier round
+    // was unpersisted once its successor was materialized
     // star forest: every non-root x has exactly one edge (x, root)
     val lab = e.select(col("x").as("doc_id"), col("y").as("cid"))
     docs.select(col("doc_id"))
@@ -843,8 +842,8 @@ object Dedup {
     val remap = clusterLabels(touched, contracted)
       .select(col("doc_id").as("cluster_id"), col("cluster_id").as("merged"))
     // referenced by both the size agg and the final join — cached so the
-    // standing-label scan + remap join runs once, released after the
-    // caller's terminal action
+    // standing-label scan + remap join runs once, released when the
+    // caller's scope ends
     val updated = CacheScope.cached(
       all.join(broadcast(remap), Seq("cluster_id"), "left")
         .select(col("doc_id"),
@@ -1129,22 +1128,25 @@ object Dedup {
   def deconBloom(spark: SparkSession, d: String): DataFrame = {
     import graft.functions.Bloom._
     val (corpus, eval_) = evalSplit(spark, d)
-    val ev = deconShingles(eval_).select(col("h")).distinct().persist()
-    // capacity = max(observed distinct shingles, 100k floor) at 8
-    // bits/item: the floor keeps per-probe FPP effectively zero on
-    // small eval sets (a corpus doc probes hundreds of shingles, so
-    // even 2% per-probe FPP would flag nearly every doc), and growing
-    // with the OBSERVED count means an eval set outgrowing the floor
-    // can never silently saturate the filter past the ~2.2% ceiling
-    // ((1−e^{−6/8})^6 with the optimal 6 hashes). The count is an
-    // extra action over the (tiny, persisted) eval side only.
-    val nItems = math.max(ev.count(), 100000L)
-    // one-row filter collected to the driver and re-entering the plan
-    // as a constant — the same lifecycle as a broadcast variable, and
-    // what might_contain's constant-input rule requires
-    val bf = ev.agg(bloomAgg(col("h"), nItems, 8L * nItems).as("bf"))
-      .head().getAs[Array[Byte]](0)
-    ev.unpersist()
+    // the eval side is cached across its two actions (count, filter
+    // build) and released by this scope once the filter is collected
+    val bf = CacheScope.scope {
+      val ev = CacheScope.cached(deconShingles(eval_).select(col("h")).distinct())
+      // capacity = max(observed distinct shingles, 100k floor) at 8
+      // bits/item: the floor keeps per-probe FPP effectively zero on
+      // small eval sets (a corpus doc probes hundreds of shingles, so
+      // even 2% per-probe FPP would flag nearly every doc), and growing
+      // with the OBSERVED count means an eval set outgrowing the floor
+      // can never silently saturate the filter past the ~2.2% ceiling
+      // ((1−e^{−6/8})^6 with the optimal 6 hashes). The count is an
+      // extra action over the (tiny, persisted) eval side only.
+      val nItems = math.max(ev.count(), 100000L)
+      // one-row filter collected to the driver and re-entering the plan
+      // as a constant — the same lifecycle as a broadcast variable, and
+      // what might_contain's constant-input rule requires
+      ev.agg(bloomAgg(col("h"), nItems, 8L * nItems).as("bf"))
+        .head().getAs[Array[Byte]](0)
+    }
     deconShingles(corpus)
       .filter(mightContain(lit(bf), col("h")))
       .groupBy(col("doc_id"))
@@ -1185,8 +1187,8 @@ object Dedup {
     // 1. exact text match against the persisted corpus keys (anti-join)
     val s1 = fresh.join(corpusKeys, lower(fresh("text")) === col("k"), "left_anti")
     // 2. near-dup vs corpus: batch-side signatures only; read by the
-    // band probe and the verify join; released by the CacheScope
-    // listener after the caller's terminal action
+    // band probe and the verify join; released when the caller's
+    // scope ends (a streaming sink's per-batch scope)
     val newSets = CacheScope.cached(fresh
       .select(col("doc_id"), shingleHashSet(col("text"), NearDupShingleN).as("hs"))
       .filter(size(col("hs")) > 0)
@@ -1812,14 +1814,10 @@ object Dedup {
     * stop-shingle argument). 2 one-row aggregates folded on the
     * driver (bounded collects). Output is |grid| = 3 rows. */
   def shingleSizeAblation(spark: SparkSession, d: String): DataFrame = {
-    // MANUAL persist lifecycle, not CacheScope.cached (r13): each grid
-    // point runs TWO internal actions (df stats, pair stats), and the
-    // CacheScope contract releases a registered cache after the FIRST
-    // completed action — so the expensive pair join was recomputing
-    // the shingle pass uncached. The kernel shingle relation and the
-    // df relation are persisted across both actions and released when
-    // the grid point finishes — in a finally, so a failed action
-    // can't leak them for the session lifetime (r13 ADVICE).
+    // Each grid point is one CacheScope on its pool thread: the kernel
+    // shingle relation and the df relation are cached across the
+    // point's TWO internal actions (df stats, pair stats) and released
+    // when the point finishes or fails.
     //
     // The grid points are INDEPENDENT (each reads only the corpus and
     // its own persists), so they run as concurrent driver-submitted
@@ -1830,41 +1828,38 @@ object Dedup {
     // back-fill the tail. |grid| = 3 bounds both the thread pool and
     // the peak persist footprint (3 shingle relations ≤ 3× the n=8
     // one the sequential form already held).
-    def gridPoint(n: Int): (Long, Long, Long, Long, Long, Long) = {
-      val g = Tables.documentsDist(spark, d)
+    def gridPoint(n: Int): (Long, Long, Long, Long, Long, Long) = CacheScope.scope {
+      val g = CacheScope.cached(Tables.documentsDist(spark, d)
         .select(col("doc_id"), col("source"),
           explode(graft.functions.GraftFunctions.shingleHashes(
-            split(col("text"), " "), n)).as("h"))
-        .persist()
-      val dfRel = g.groupBy(col("h")).agg(count(lit(1)).as("df")).persist()
-      try {
-        val dfStats = dfRel.agg(count(lit(1)),
-          sum(when(col("df") > AblationDfCap, 1L).otherwise(0L))).head()
-        val kept = dfRel.filter(col("df") <= AblationDfCap).select(col("h"))
-        val gi = g.join(kept, "h")
-        // per-gram doc list (sorted by doc_id — unique per gram, the
-        // per-doc hashes are distinct), then all i<j combinations via
-        // posexplode + slice: a.doc_id < b.doc_id exactly like the old
-        // join predicate
-        val byGram = gi.groupBy(col("h"))
-          .agg(sort_array(collect_list(struct(col("doc_id"), col("source"))))
-            .as("ds"))
-          .filter(size(col("ds")) >= 2)
-        val pairStats = byGram
-          .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-          .select(col("a"),
-            explode(slice(col("ds"), col("i") + lit(2),
-              size(col("ds")) - col("i") - lit(1))).as("b"))
-          .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-            (col("a.source") === col("b.source")).as("same"))
-          .distinct()
-          .agg(sum(when(col("same"), 1L).otherwise(0L)),
-            sum(when(!col("same"), 1L).otherwise(0L))).head()
-        val within = if (pairStats.isNullAt(0)) 0L else pairStats.getLong(0)
-        val cross = if (pairStats.isNullAt(1)) 0L else pairStats.getLong(1)
-        (n.toLong, dfStats.getLong(0), dfStats.getLong(1), within, cross,
-          if (within + cross == 0L) 0L else 1000L * cross / (within + cross))
-      } finally { g.unpersist(); dfRel.unpersist() }
+            split(col("text"), " "), n)).as("h")))
+      val dfRel = CacheScope.cached(g.groupBy(col("h")).agg(count(lit(1)).as("df")))
+      val dfStats = dfRel.agg(count(lit(1)),
+        sum(when(col("df") > AblationDfCap, 1L).otherwise(0L))).head()
+      val kept = dfRel.filter(col("df") <= AblationDfCap).select(col("h"))
+      val gi = g.join(kept, "h")
+      // per-gram doc list (sorted by doc_id — unique per gram, the
+      // per-doc hashes are distinct), then all i<j combinations via
+      // posexplode + slice: a.doc_id < b.doc_id exactly like the old
+      // join predicate
+      val byGram = gi.groupBy(col("h"))
+        .agg(sort_array(collect_list(struct(col("doc_id"), col("source"))))
+          .as("ds"))
+        .filter(size(col("ds")) >= 2)
+      val pairStats = byGram
+        .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
+        .select(col("a"),
+          explode(slice(col("ds"), col("i") + lit(2),
+            size(col("ds")) - col("i") - lit(1))).as("b"))
+        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
+          (col("a.source") === col("b.source")).as("same"))
+        .distinct()
+        .agg(sum(when(col("same"), 1L).otherwise(0L)),
+          sum(when(!col("same"), 1L).otherwise(0L))).head()
+      val within = if (pairStats.isNullAt(0)) 0L else pairStats.getLong(0)
+      val cross = if (pairStats.isNullAt(1)) 0L else pairStats.getLong(1)
+      (n.toLong, dfStats.getLong(0), dfStats.getLong(1), within, cross,
+        if (within + cross == 0L) 0L else 1000L * cross / (within + cross))
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(AblationNs.size)
     implicit val ec: scala.concurrent.ExecutionContext =

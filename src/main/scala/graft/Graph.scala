@@ -175,17 +175,11 @@ object Graph {
     * bounded by the orientation's O(√m) out-degree bound — the same
     * bound that kept the wedge join skew-safe at 100 TB.
     *
-    * `deg` is the (node, dg) full-degree relation of `edges` (callers
-    * already have it cached). Caller runs ONE action over the result:
-    * the internal `oriented` cache is CacheScope-released after it. */
-  private def orientedTriangles(edges: DataFrame, deg: DataFrame): DataFrame = {
-    val dl = deg.select(col("node").as("p1"), col("dg").as("dg1"))
-    val dr = deg.select(col("node").as("p2"), col("dg").as("dg2"))
-    val lt = struct(col("dg1"), col("p1")) < struct(col("dg2"), col("p2"))
-    val oriented = CacheScope.cached(edges.join(dl, "p1").join(dr, "p2")
-      .select(
-        when(lt, col("p1")).otherwise(col("p2")).as("src"),
-        when(lt, col("p2")).otherwise(col("p1")).as("dst")))
+    * `oriented` is [[orient]]'s edge relation. The result plan reads it
+    * three times, so callers pass it cached and own its release: one
+    * action over the result, or a count that fills their own cache of
+    * it, and it feeds nothing more. */
+  private def orientedTriangles(oriented: DataFrame): DataFrame = {
     val adj = oriented.groupBy(col("src"))
       .agg(collect_list(col("dst")).as("ns"))
     oriented
@@ -197,12 +191,25 @@ object Graph {
         explode(array_intersect(col("na"), col("nb"))).as("c"))
   }
 
+  /** `edges` oriented low → high by (degree, id); `deg` is the (node,
+    * dg) full-degree relation of `edges` (callers already have it
+    * cached). */
+  private def orient(edges: DataFrame, deg: DataFrame): DataFrame = {
+    val dl = deg.select(col("node").as("p1"), col("dg").as("dg1"))
+    val dr = deg.select(col("node").as("p2"), col("dg").as("dg2"))
+    val lt = struct(col("dg1"), col("p1")) < struct(col("dg2"), col("p2"))
+    edges.join(dl, "p1").join(dr, "p2")
+      .select(
+        when(lt, col("p1")).otherwise(col("p2")).as("src"),
+        when(lt, col("p2")).otherwise(col("p1")).as("dst"))
+  }
+
   def triangleCounts(spark: SparkSession, d: String): DataFrame = {
     val pairs = coPurchaseEdges(spark, d)
     val deg = CacheScope.cached(
       pairs.select(col("p1").as("node")).union(pairs.select(col("p2").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("dg")))
-    val tris = orientedTriangles(pairs, deg)
+    val tris = orientedTriangles(CacheScope.cached(orient(pairs, deg)))
     // corners exploded in ONE pass (r13): the union-of-3-selects form
     // inlined the whole enumeration subtree three times in the plan
     val perNode = tris
@@ -322,12 +329,13 @@ object Graph {
       // per-round degrees over the SURVIVING node universe (0 for
       // isolated survivors) — one persisted node-cardinality relation
       // whose cheap filters feed everything below, keeping each
-      // round's plan linear in the previous round's leaves
-      val degAllP = nodes.join(deg, col("node") === col("src"), "left")
-        .select(col("node"), coalesce(col("dg"), lit(0L)).as("dg"))
-        .persist()
+      // round's plan linear in the previous round's leaves; the peel
+      // filters feed the result plan, so it lives to the caller's
+      // scope end
+      val degAllP = CacheScope.cached(
+        nodes.join(deg, col("node") === col("src"), "left")
+          .select(col("node"), coalesce(col("dg"), lit(0L)).as("dg")))
       degAllP.count()
-      CacheScope.adopt(degAllP) // peel filters feed the result plan
       val degAll = truncate(degAllP)
       val out = degAll.filter(col("dg") < k)
         .select(col("node"), lit(r.toLong).as("peel_round"),
@@ -341,10 +349,9 @@ object Graph {
       if (!converged) {
         peels :+= out
         nodes = degAll.filter(col("dg") >= k).select(col("node"))
-        val nextP = arcs
+        val nextP = CacheScope.cached(arcs
           .join(out.select(col("node").as("src")), Seq("src"), "left_anti")
-          .join(out.select(col("node").as("dst")), Seq("dst"), "left_anti")
-          .persist()
+          .join(out.select(col("node").as("dst")), Seq("dst"), "left_anti"))
         nextP.count()
         // predecessor fully superseded — safe to drop (round 0 has none)
         if (arcsP != null) arcsP.unpersist()
@@ -353,9 +360,8 @@ object Graph {
       }
       r += 1
     }
-    // the surviving-core arcs back the result (null if nothing peeled:
-    // arcs is then still the leaf parquet scan, nothing to release)
-    if (arcsP != null) CacheScope.adopt(arcsP)
+    // the surviving-core arcs (arcsP, when anything peeled) back the
+    // result until the caller's scope ends
     val coreDeg = arcs.groupBy(col("src")).agg(count(lit(1)).as("dg"))
     val core = nodes.join(coreDeg, col("node") === col("src"), "left")
       .select(col("node"), lit(0L).as("peel_round"),
@@ -701,8 +707,8 @@ object Graph {
     // hash-agg, partial aggregation map-side), and the triangle
     // relation the incremental rounds need is built LATER, on whatever
     // subgraph survives the peel (the rebuild arm below). ----
-    var supP = supportOf(edges0, orientedTriangles(edges0, degreesOf(edges0)))
-      .persist()
+    val oriented0 = CacheScope.cached(orient(edges0, degreesOf(edges0)))
+    var supP = CacheScope.cached(supportOf(edges0, orientedTriangles(oriented0)))
     // |edges| rides the round-1 materialization: later rounds derive
     // the survivor count arithmetically (total − peeled) instead of
     // paying a separate count job per round (r14 — the old loop ran
@@ -711,6 +717,7 @@ object Graph {
     // fused rebuild, each later round's fixed driver-barrier cost
     // roughly halves at sf0.1 where survivor graphs are tiny).
     var total = supP.count()
+    oriented0.unpersist() // the count filled supP: it feeds nothing more
     var sup = truncate(supP)
 
     // survivor triangle relation, materialized lazily by the first
@@ -727,14 +734,12 @@ object Graph {
     // is materialized, its predecessor feeds nothing (peel rows have
     // their own cache) and unpersists immediately.
     var peels = Vector.empty[DataFrame]
-    var keep = List.empty[DataFrame]
     var r = 1
     var converged = false
     while (r <= KTrussRounds && !converged) {
-      val peelP = sup.filter(col("s") < thr)
+      val peelP = CacheScope.cached(sup.filter(col("s") < thr)
         .select(col("p1"), col("p2"), lit(r.toLong).as("peel_round"),
-          col("s").as("support"))
-        .persist()
+          col("s").as("support")))
       // convergence = the SAME count job that materializes the peel
       // rows (the old separate isEmpty action is gone)
       val nPeeled = peelP.count()
@@ -742,7 +747,6 @@ object Graph {
       if (converged) peelP.unpersist()
       else {
         peels :+= peelP
-        keep ::= peelP
         val nSurv = total - nPeeled
         // survivor edges re-filter the CACHED support — an in-memory
         // scan per reference, no persist of its own needed
@@ -762,9 +766,11 @@ object Graph {
           // of the arm — it computes through nextAliveP's persist and
           // fills the triangle cache as a side effect, so the old
           // separate enumerate count() barrier is gone
-          val nextAliveP = orientedTriangles(surv, degreesOf(surv)).persist()
-          val nextSupP = supportOf(surv, nextAliveP).persist()
+          val oriented = CacheScope.cached(orient(surv, degreesOf(surv)))
+          val nextAliveP = CacheScope.cached(orientedTriangles(oriented))
+          val nextSupP = CacheScope.cached(supportOf(surv, nextAliveP))
           nextSupP.count()
+          oriented.unpersist()
           if (aliveP != null) aliveP.unpersist()
           aliveP = nextAliveP
           alive = truncate(nextAliveP)
@@ -777,21 +783,19 @@ object Graph {
           // a triangle dies with its first peeled edge; DISTINCT triples
           // so a triangle losing 2+ edges this round still decrements
           // its surviving edge exactly once
-          val deadP = incidence(alive).join(peeled, Seq("p1", "p2"))
-            .select(col("a"), col("b"), col("c")).distinct()
-            .persist()
+          val deadP = CacheScope.cached(incidence(alive).join(peeled, Seq("p1", "p2"))
+            .select(col("a"), col("b"), col("c")).distinct())
           deadP.count()
           val dead = truncate(deadP)
           val dec = incidence(dead).groupBy(col("p1"), col("p2"))
             .agg(count(lit(1)).as("dcnt"))
-          val nextSupP = sup.filter(col("s") >= thr)
+          val nextSupP = CacheScope.cached(sup.filter(col("s") >= thr)
             .join(dec, Seq("p1", "p2"), "left")
             .select(col("p1"), col("p2"),
-              (col("s") - coalesce(col("dcnt"), lit(0L))).as("s"))
-            .persist()
+              (col("s") - coalesce(col("dcnt"), lit(0L))).as("s")))
           nextSupP.count()
-          val nextAliveP = alive.join(dead, Seq("a", "b", "c"), "left_anti")
-            .persist()
+          val nextAliveP = CacheScope.cached(
+            alive.join(dead, Seq("a", "b", "c"), "left_anti"))
           nextAliveP.count()
           aliveP.unpersist(); deadP.unpersist()
           aliveP = nextAliveP
@@ -804,9 +808,9 @@ object Graph {
       }
       r += 1
     }
+    // the peel rows and the final support back the result until the
+    // caller's scope ends
     if (aliveP != null) aliveP.unpersist()
-    keep ::= supP
-    keep.foreach(CacheScope.adopt)
     // survivor support: the maintained relation IS the support on the
     // final surviving graph (invariant above) — no re-pricing pass in
     // either exit. When converged the filter is the identity (an empty

@@ -442,19 +442,11 @@ object Multimodal {
     * replays the closure as a recursive CTE over the same exact pair
     * relation.
     *
-    * Cache lifecycle: the banded Hamming pair relation is adopted at
-    * return, so the CALLER's first completed action releases it (the
-    * CacheScope single-action contract). A caller running a second
-    * action on the returned DataFrame recomputes that pair join
-    * uncached — correct but expensive; persist the RESULT for
-    * multi-action reuse. */
+    * Cache lifecycle: the banded Hamming pair relation is read by the
+    * label loop's internal actions and by the result plan, and stays
+    * cached until the caller's scope ends. */
   def mediaDupClusters(spark: SparkSession, d: String): DataFrame = {
-    // MANUAL persist + adopt-at-return (r13): clusterLabels runs its
-    // own internal actions, and CacheScope.cached releases after the
-    // FIRST completed action — the final edges join was recomputing
-    // the banded Hamming pair join uncached. Adopt after the label
-    // loop so the CALLER's terminal action releases it.
-    val pairs = aHashPairsDf(Tables.documentsDist(spark, d)).persist()
+    val pairs = CacheScope.cached(aHashPairsDf(Tables.documentsDist(spark, d)))
     val docs = Tables.documents(spark, d)
       .filter(length(col("text")) - 64L >= AHashBlocks.toLong)
       .select(col("doc_id"))
@@ -476,7 +468,6 @@ object Multimodal {
       .agg(count(lit(1)).as("n_edges"),
         sum(when(col("dist") === 0L, 1L).otherwise(0L)).as("n_exact_edges"),
         max(col("dist")).as("max_dist"))
-    CacheScope.adopt(pairs)
     sizes.join(edges, col("cluster_id") === col("cid"))
       .select(col("cluster_id"), col("n_docs"), col("n_edges"),
         col("n_exact_edges"), col("max_dist"))

@@ -73,15 +73,15 @@ object PqIndex {
   private def build(spark: SparkSession, d: String, p: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, d)
-    // persisted for the whole (eager) build: every Lloyd round and the
-    // final encode re-consume the exploded component relation — without
-    // the cache each round would re-run the full posexplode chain
-    val q = emb
+    // cached for the whole (eager) build, whose scope is
+    // SaltedIndex.ensureBuilt's: every Lloyd round and the final encode
+    // re-consume the exploded component relation — without the cache
+    // each round would re-run the full posexplode chain
+    val q = CacheScope.cached(emb
       .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
       .select(col("vec_id"), expr(s"cast(pos as bigint) div $DSub").as("sub"),
         col("pos").cast("long").as("pos"),
-        floor(col("col") * lit(1000000.0d)).cast("long").as("vm"))
-      .persist()
+        floor(col("col") * lit(1000000.0d)).cast("long").as("vm")))
     // first-KSub seeds numbered 0..KSub-1 via a bounded collect (the
     // IVF-centroid idiom) — a no-partition row_number window would
     // plan the banned single-partition sort
@@ -121,7 +121,6 @@ object PqIndex {
       .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), x -> x.cm)")
         .as("cv"))
       .coalesce(1).write.mode("overwrite").parquet(s"$p/codebooks")
-    q.unpersist()
     SaltedIndex.markSuccess(spark, p)
   }
 }

@@ -24,18 +24,18 @@ private[graft] trait QueriesAnalytics {
     *
     * Why value-keyed buckets and not repartitionByRange +
     * spark_partition_id: the result plan is LAZY, and the driver-folded
-    * offsets are baked into it as literals. Under the original
-    * pid-based scheme the offsets were only valid for the one physical
-    * partitioning they were collected from — if the persisted
-    * intermediate was released before the caller's terminal action
-    * (CacheScope claims it at the operator's next internal action; any
-    * multi-histCumBefore operator does this), the recompute could
-    * range-sample DIFFERENT boundaries and silently shift every
-    * `before` (caught live: q268's full-Verify run disagreed with its
-    * solo run on 17 cells). bk is a pure function of the value and the
-    * two collected scalars, so a recompute reproduces the mapping
-    * bit-for-bit no matter how the data is partitioned. The persist is
-    * now a pure optimization, never a correctness dependency.
+    * offsets are baked into it as literals. Under a pid-based scheme
+    * the offsets are only valid for the one physical partitioning they
+    * were collected from, so any recompute of the intermediate (a
+    * caller's second action after its scope has released the cache,
+    * an evicted block) could range-sample DIFFERENT boundaries and
+    * silently shift every `before` (caught live once: q268's
+    * full-Verify run disagreed with its solo run on 17 cells, when an
+    * earlier cache lifetime released at the operator's own next
+    * internal action). bk is a pure function of the value and the two
+    * collected scalars, so a recompute reproduces the mapping
+    * bit-for-bit no matter how the data is partitioned. The persist
+    * is a pure optimization, never a correctness dependency.
     *
     * Balance note: 8·|parts| fixed-width buckets balance dense value
     * domains (every call site today: days, counts, token counts,
@@ -55,13 +55,11 @@ private[graft] trait QueriesAnalytics {
     val lo = mm.getLong(0)
     val w = math.max(1L, (mm.getLong(1) - lo) / (8L * parts) + 1L)
     val n = mm.getLong(2)
-    val bucketed = hist
-      .withColumn("bk", expr(s"(CAST($value AS BIGINT) - $lo) div $w"))
-      .persist()
+    val bucketed = CacheScope.cached(hist
+      .withColumn("bk", expr(s"(CAST($value AS BIGINT) - $lo) div $w")))
     val totals = bucketed.groupBy(col("bk")).agg(sum(col("c")).as("t"))
       .collect().map(r => (r.getLong(0), r.getLong(1)))
       .sortBy(t => if (asc) t._1 else -t._1)
-    CacheScope.adopt(bucketed)
     val offsets = {
       var acc = 0L
       totals.map { case (bk, t) => val o = acc; acc += t; (bk, o) }
@@ -872,18 +870,16 @@ private[graft] trait QueriesAnalytics {
         count(lit(1)).as("n_lines")))
     val byCost = sup.groupBy(col("unit_mc")).agg(min(col("lag_md")).as("cmin"))
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val local = byCost.repartitionByRange(parts, col("unit_mc"))
+    val local = CacheScope.cached(byCost.repartitionByRange(parts, col("unit_mc"))
       .withColumn("pid", spark_partition_id())
       .withColumn("lmin", min(col("cmin")).over(
         Window.partitionBy(col("pid")).orderBy(col("unit_mc"))
-          .rowsBetween(Window.unboundedPreceding, -1)))
-    local.persist()
+          .rowsBetween(Window.unboundedPreceding, -1))))
     // one bounded row per range partition → driver prefix-min (the q73
     // offset-table contract: rows ∝ cluster config, not data)
     val pidMins = local.groupBy(col("pid")).agg(min(col("cmin")).as("pm"))
       .orderBy(col("pid")).collect()
       .map(r => (r.getInt(0), if (r.isNullAt(1)) Long.MaxValue else r.getLong(1)))
-    CacheScope.adopt(local)
     val prior = {
       var acc = Long.MaxValue
       pidMins.map { case (pid, pm) =>

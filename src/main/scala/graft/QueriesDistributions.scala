@@ -431,37 +431,33 @@ private[graft] trait QueriesDistributions {
     val H = LogRankHorizonDays
     val wOrd = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_orderdate"), col("o_orderkey"))
-    // Manual persist discipline (NOT CacheScope.cached): this operator
-    // runs TWO sequential driver actions on `base` (tot.head, then the
-    // event-day collect), and the CacheScope contract releases after the
-    // FIRST completed action — cached() here would silently recompute
-    // the full orders window scan for the second action. The returned
-    // DataFrame is driver-built, so `base` is unpersisted directly once
-    // both actions are done.
-    val base = (Tables.orders(spark, d)
-      .withColumn("rn", row_number().over(wOrd))
-      .withColumn("nxt", lead(col("o_orderdate"), 1).over(wOrd))
-      .filter(col("rn") === 1)
-      .select(
-        expr("CASE WHEN CAST(substring(o_orderpriority, 1, 1) AS INT) <= 2" +
-          " THEN 1L ELSE 0L END").as("g1"),
-        expr(s"CASE WHEN nxt IS NOT NULL AND" +
-          s" CAST(datediff(nxt, o_orderdate) AS BIGINT) <= $H" +
-          s" THEN CAST(datediff(nxt, o_orderdate) AS BIGINT) END").as("t")))
-      .persist()
-    val tot = base.agg(sum(col("g1")).as("n1"), count(lit(1)).as("n"),
-      sum(when(col("t").isNotNull, col("g1")).otherwise(0L)).as("ev1"),
-      sum(when(col("t").isNotNull, 1L).otherwise(0L)).as("ev"))
-      .head()
-    val (n1, n, ev1, ev) =
-      (tot.getLong(0), tot.getLong(1), tot.getLong(2), tot.getLong(3))
-    // event-day grid: ≤ horizon rows — bounded collect, driver fold
-    val days = base.filter(col("t").isNotNull)
-      .groupBy(col("t")).agg(sum(col("g1")).as("d1"),
-        count(lit(1)).as("dt"))
-      .orderBy(col("t")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    base.unpersist()
+    // `base` feeds TWO sequential driver actions (tot.head, then the
+    // event-day collect) and nothing else: the returned DataFrame is
+    // driver-built, so both actions run in the operator's own scope,
+    // which releases `base` once they are done or one has failed.
+    val ((n1, n, ev1, ev), days) = CacheScope.scope {
+      val base = CacheScope.cached(Tables.orders(spark, d)
+        .withColumn("rn", row_number().over(wOrd))
+        .withColumn("nxt", lead(col("o_orderdate"), 1).over(wOrd))
+        .filter(col("rn") === 1)
+        .select(
+          expr("CASE WHEN CAST(substring(o_orderpriority, 1, 1) AS INT) <= 2" +
+            " THEN 1L ELSE 0L END").as("g1"),
+          expr(s"CASE WHEN nxt IS NOT NULL AND" +
+            s" CAST(datediff(nxt, o_orderdate) AS BIGINT) <= $H" +
+            s" THEN CAST(datediff(nxt, o_orderdate) AS BIGINT) END").as("t")))
+      val tot = base.agg(sum(col("g1")).as("n1"), count(lit(1)).as("n"),
+        sum(when(col("t").isNotNull, col("g1")).otherwise(0L)).as("ev1"),
+        sum(when(col("t").isNotNull, 1L).otherwise(0L)).as("ev"))
+        .head()
+      // event-day grid: ≤ horizon rows — bounded collect, driver fold
+      val days = base.filter(col("t").isNotNull)
+        .groupBy(col("t")).agg(sum(col("g1")).as("d1"),
+          count(lit(1)).as("dt"))
+        .orderBy(col("t")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      ((tot.getLong(0), tot.getLong(1), tot.getLong(2), tot.getLong(3)), days)
+    }
     var cum1 = 0L
     var cum = 0L
     var e1mic = BigInt(0)

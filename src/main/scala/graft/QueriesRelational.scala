@@ -547,22 +547,20 @@ private[graft] trait QueriesRelational {
       .agg(sum(round(col("o_totalprice") * 100).cast("long")).as("cents"),
         count(lit(1)).as("n_orders"))
     val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // persisted across BOTH consumers (the offsets collect below and
-    // the caller's terminal action): pid/lrk must be computed exactly
-    // once — a recompute could re-plan the range exchange and assign
-    // different partition ids, silently colliding ranks. Direct persist
-    // + post-collect adopt (not cached()) so the internal collect can't
-    // claim the scope release before the caller's action runs.
-    val local = spend.repartitionByRange(parts, col("cents").desc, col("o_custkey"))
-      .withColumn("pid", spark_partition_id())
-      .withColumn("lrk", row_number().over(
-        Window.partitionBy(col("pid")).orderBy(col("cents").desc, col("o_custkey"))))
-    local.persist()
+    // cached across BOTH consumers (the offsets collect below and the
+    // caller's terminal action, which the caller's scope encloses):
+    // pid/lrk must be computed exactly once — a recompute could
+    // re-plan the range exchange and assign different partition ids,
+    // silently colliding ranks.
+    val local = CacheScope.cached(
+      spend.repartitionByRange(parts, col("cents").desc, col("o_custkey"))
+        .withColumn("pid", spark_partition_id())
+        .withColumn("lrk", row_number().over(
+          Window.partitionBy(col("pid")).orderBy(col("cents").desc, col("o_custkey")))))
     // one bounded row per range partition: local counts → cumulative
     // offsets (driver-side cumsum over ≤`parts` rows, no global window)
     val counts = local.groupBy(col("pid")).agg(count(lit(1)).as("n"))
       .orderBy(col("pid")).collect().map(r => (r.getInt(0), r.getLong(1)))
-    CacheScope.adopt(local)
     val n = counts.map(_._2).sum
     val offsets = {
       var acc = 0L
@@ -1149,8 +1147,8 @@ private[graft] trait QueriesRelational {
   def eventAnomalies(spark: SparkSession, d: String): DataFrame = {
     val DayNs = 86400000000000L
     // cached: both the output rows and the |types|-row stats re-aggregate
-    // consume it — one fact scan, not two (scope-released after the
-    // caller's terminal action)
+    // consume it — one fact scan, not two (released when the caller's
+    // scope ends)
     val cnt = CacheScope.cached(Tables.eventsNs(spark, d)
       .select(col("event_type"), expr(s"ts div $DayNs").as("day"))
       .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n")))
@@ -1402,17 +1400,15 @@ private[graft] trait QueriesRelational {
     // partitionless window (the sweep-banned one-task sort): the q73
     // two-pass — range-partition by value, pid-local running sum,
     // driver cumsum over ≤`parts` per-partition totals re-enters as a
-    // broadcast offset. persist + post-collect adopt per the q73 note:
-    // pid must be computed exactly once.
-    val local = hist.repartitionByRange(parts, col("dollars"))
+    // broadcast offset. Cached per the q73 note: pid must be computed
+    // exactly once.
+    val local = CacheScope.cached(hist.repartitionByRange(parts, col("dollars"))
       .withColumn("pid", spark_partition_id())
       .withColumn("lcum", sum(col("c")).over(
         Window.partitionBy(col("pid")).orderBy(col("dollars"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    local.persist()
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
     val totals = local.groupBy(col("pid")).agg(sum(col("c")).as("t"))
       .orderBy(col("pid")).collect().map(r => (r.getInt(0), r.getLong(1)))
-    CacheScope.adopt(local)
     val n = totals.map(_._2).sum
     val offsets = {
       var acc = 0L

@@ -54,11 +54,12 @@ object SaltedIndex {
     * already marked _SUCCESS over). Double-checked under one JVM-wide
     * lock — builds are rare, so coarse is fine; cross-PROCESS safety
     * rests on the content-addressed dir scheme (a production deployment
-    * would commit via write-to-temp + atomic rename). */
+    * would commit via write-to-temp + atomic rename). The build is one
+    * `CacheScope`: its caches are released when it has written. */
   private val buildLock = new Object
   def ensureBuilt(spark: SparkSession, p: String)(build: => Unit): Unit =
     if (!complete(spark, p)) buildLock.synchronized {
-      if (!complete(spark, p)) build
+      if (!complete(spark, p)) CacheScope.scope(build)
     }
 
   def markSuccess(spark: SparkSession, p: String): Unit =

@@ -20,7 +20,8 @@ package graft
   * is exactly the stock 0.6 (zero behavior change); at 96 GiB it is
   * ≈0.05 and the engine spills at the same points it would at 8 GiB.
   *
-  * Measured (IsoBench 3-pass min at sf0.1, SPARK_DRIVER_MEM=96g):
+  * Measured (3-pass min of an isolated per-query timing tool, since
+  * removed, at sf0.1, SPARK_DRIVER_MEM=96g):
   * stock G1+fraction = q192 10.9 s / q311 25.7 s with 189-215 s
   * outlier passes; G1 flags alone = 6.4 / 17.1; G1 flags + this pin =
   * 3.6 / 8.5 — equal to the same-hour 8 GiB control (4.7 / 8.8), with

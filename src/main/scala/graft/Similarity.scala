@@ -230,7 +230,7 @@ object Similarity {
   /** ANN top-k (k=5) for vec_id < 10: candidates = vectors sharing any
     * of the 4 LSH buckets with the query, ranked by exact cosine. */
   def lshTopK(spark: SparkSession, d: String): DataFrame = {
-    // released by the CacheScope listener after the caller's action
+    // cached until the caller's scope ends
     val e = CacheScope.cached(withNorm(Tables.embeddings(spark, d))
       .withColumn("buckets", lshBuckets(col("v"))))
     val b = e.select(col("vec_id"), posexplode(col("buckets")).as(Seq("t", "bucket")))
@@ -415,29 +415,29 @@ object Similarity {
     // corpus-wide relevance scan (broadcast join + window), the same
     // lazily-cached-multi-consumer recompute q192's cold pass exposed.
     // The operator is eager (both consumers are bounded collects), so
-    // a plain unpersist after the collects is the whole lifecycle —
-    // no CacheScope deferral needed.
-    val pool = scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= MmrPool)
-      .select(col("q_id"), col("vec_id"), col("q"), col("qn"), col("srel"))
-      .persist()
-    pool.count()
-    val pp = pool.select(col("q_id"), col("vec_id").as("aa"),
-        col("q").as("aq"), col("qn").as("an"))
-      .join(pool.select(col("q_id"), col("vec_id").as("bb"),
-        col("q").as("bq"), col("qn").as("bn")), "q_id")
-      .filter(col("aa") =!= col("bb"))
-      .withColumn("dt", dot(col("aq"), col("bq")).cast("long"))
-      .select(col("q_id"), col("aa"), col("bb"), expr(
-        "CASE WHEN dt >= 0 THEN (1000000 * dt * dt) div (an * bn)" +
-          " ELSE -((1000000 * dt * dt) div (an * bn)) END").as("ssim"))
-    // bounded collects: Q·12 pool rows, Q·12·11 pair rows
-    val poolRows = pool.select(col("q_id"), col("vec_id"), col("srel"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-    val simMap = pp.collect()
-      .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3)))
-      .toMap
-    pool.unpersist()
+    // its own scope around the collects is the whole lifecycle.
+    val (poolRows, simMap) = CacheScope.scope {
+      val pool = CacheScope.cached(scored.withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= MmrPool)
+        .select(col("q_id"), col("vec_id"), col("q"), col("qn"), col("srel")))
+      pool.count()
+      val pp = pool.select(col("q_id"), col("vec_id").as("aa"),
+          col("q").as("aq"), col("qn").as("an"))
+        .join(pool.select(col("q_id"), col("vec_id").as("bb"),
+          col("q").as("bq"), col("qn").as("bn")), "q_id")
+        .filter(col("aa") =!= col("bb"))
+        .withColumn("dt", dot(col("aq"), col("bq")).cast("long"))
+        .select(col("q_id"), col("aa"), col("bb"), expr(
+          "CASE WHEN dt >= 0 THEN (1000000 * dt * dt) div (an * bn)" +
+            " ELSE -((1000000 * dt * dt) div (an * bn)) END").as("ssim"))
+      // bounded collects: Q·12 pool rows, Q·12·11 pair rows
+      val poolRows = pool.select(col("q_id"), col("vec_id"), col("srel"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      val simMap = pp.collect()
+        .map(r => ((r.getLong(0), r.getLong(1), r.getLong(2)), r.getLong(3)))
+        .toMap
+      (poolRows, simMap)
+    }
     val out = poolRows.groupBy(_._1).toSeq.sortBy(_._1).flatMap {
       case (qid, rows) =>
         val cands = scala.collection.mutable.Map(
@@ -527,7 +527,7 @@ object Similarity {
       when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
         .otherwise(-floor(abs(x * col("sc")) + lit(0.5))).cast("double"))
     // the labeled quantized base feeds both aggs (|sources|·64 sums +
-    // per-source counts) — cached, released after the caller's action
+    // per-source counts) — cached until the caller's scope ends
     val base = CacheScope.cached(withNorm(Tables.embeddings(spark, d))
       .withColumn("ma", maxabs).filter(col("ma") > 0)
       .withColumn("sc", lit(127.0) / col("ma"))
@@ -876,10 +876,11 @@ object Similarity {
     *    fold in ONLY the newest pick each round — O(k·N·d), one
     *    corpus-keyed join per round against a ≤dim-row broadcast.
     *    The carried state is corpus-sized but one Long per vector,
-    *    CacheScope-scoped per round. IsoBench r9: 6.3 s → measured
-    *    against the from-scratch plan at sf0.1 after the isolated
-    *    drift probe confirmed the k² constant was real cost, not
-    *    suite pressure.
+    *    unpersisted as soon as the next round's state is
+    *    materialized. Round 9 timed it at 6.3 s against the
+    *    from-scratch plan at sf0.1 (an isolated per-query timing
+    *    tool, since removed), after the isolated drift probe
+    *    confirmed the k² constant was real cost, not suite pressure.
     *
     * At 100 TB the q160 sketch feeds the distance pass unchanged. */
   def coresetSelect(spark: SparkSession, d: String): DataFrame =
@@ -892,7 +893,7 @@ object Similarity {
   private[graft] def coresetSelectScratch(spark: SparkSession, d: String): DataFrame = {
     // referenced 2× per round (corpus distance side + selected-component
     // extraction) × k−1 rounds: cached so the posexplode fan-out
-    // computes once, not 14× (released after the caller's action)
+    // computes once, not 14× (released when the caller's scope ends)
     val q = CacheScope.cached(Tables.embeddings(spark, d)
       .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
       .select(col("vec_id"), col("pos").cast("long").as("pos"),
@@ -936,17 +937,17 @@ object Similarity {
     * doubles per round — 2^k plan nodes by round 8, which OOM'd AQE's
     * explain-string generation before a single task ran. Collecting
     * the 1-row pick makes the chain linear, gives every intermediate
-    * an explicit persist/unpersist lifecycle (no CacheScope timing
-    * dependence on internal actions), and returns the 8-row result as
-    * a literal frame. The from-scratch strategy remains the
-    * zero-driver-barrier alternative. */
-  private[graft] def coresetSelectRunning(spark: SparkSession, d: String): DataFrame = {
-    val q = Tables.embeddings(spark, d)
-      .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
-      .select(col("vec_id"), col("pos").cast("long").as("pos"),
-        floor(col("col") * lit(1000000.0d)).cast("long").as("vm"))
-      .persist()
-    try {
+    * an explicit lifecycle (the operator's own CacheScope, with each
+    * round's state unpersisted once its successor is materialized),
+    * and returns the 8-row result as a literal frame. The
+    * from-scratch strategy remains the zero-driver-barrier
+    * alternative. */
+  private[graft] def coresetSelectRunning(spark: SparkSession, d: String): DataFrame =
+    CacheScope.scope {
+      val q = CacheScope.cached(Tables.embeddings(spark, d)
+        .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
+        .select(col("vec_id"), col("pos").cast("long").as("pos"),
+          floor(col("col") * lit(1000000.0d)).cast("long").as("vm")))
       val seed = Tables.embeddings(spark, d)
         .agg(min(col("vec_id"))).head().getLong(0)
       val picks = scala.collection.mutable.ArrayBuffer((1L, seed, 0L))
@@ -958,11 +959,10 @@ object Similarity {
         val dNew = q.join(pickComp, "pos")
           .groupBy(col("vec_id"))
           .agg(sum((col("vm") - col("sm")) * (col("vm") - col("sm"))).as("dn"))
-        val next = (
+        val next = CacheScope.cached(
           if (state == null) dNew.select(col("vec_id"), col("dn").as("d2"))
           else state.join(dNew, "vec_id")
-            .select(col("vec_id"), least(col("d2"), col("dn")).as("d2"))
-        ).persist()
+            .select(col("vec_id"), least(col("d2"), col("dn")).as("d2")))
         // selected vectors carry state 0 (their self-distance entered
         // the min the round after they were picked) — same
         // can-never-win guarantee as the from-scratch strategy
@@ -974,12 +974,10 @@ object Similarity {
         lastId = m.getLong(1)
         picks += ((r.toLong, lastId, m.getLong(0)))
       }
-      if (state != null) state.unpersist()
       import spark.implicits._
       picks.toSeq.toDF("rank", "vec_id", "min_d2_micro")
         .orderBy(col("rank"))
-    } finally q.unpersist()
-  }
+    }
 
   /** q158: cluster PROTOTYPES — the 4 most-central vectors of every
     * q136 k-means cell (smallest exact integer d2 to their centroid,
@@ -1514,8 +1512,8 @@ object Similarity {
     // side) — uncached, the union+window+agg subtree computed twice
     // (r14; the phase probe measured ~2.4 s per copy at sf0.1). The
     // single terminal action populates the cache at first reference
-    // and reuses it at the second; CacheScope releases it after that
-    // action, the q192 one-action-many-consumers pattern.
+    // and reuses it at the second; the caller's scope releases it, the
+    // q192 one-action-many-consumers pattern.
     val hood = CacheScope.cached(nbrs.withColumn("rn", row_number().over(w))
       .filter(col("rn") <= BitextK)
       .groupBy(col("vid"))

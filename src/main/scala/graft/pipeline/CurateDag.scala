@@ -75,10 +75,6 @@ object CurateDag {
       val clusters = Dedup.nearDupClustersDf(docs, Dedup.minhashNearDupDf(docs))
       val canonical = clusters.filter(col("doc_id") === col("cluster_id")).select("doc_id")
       writeGz(ctx, docs.join(canonical, "doc_id"), outputDir(ctx).get)
-      // the composed operators cache corpus-sized intermediates (shingle
-      // sets, final labels) sized for a per-query session; release them
-      // so Mixture/Pack don't compete with pinned memory
-      ctx.spark.catalog.clearCache()
     }
   }
 

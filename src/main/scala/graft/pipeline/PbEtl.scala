@@ -162,15 +162,18 @@ object PbEtl {
         .na.fill(0.0, numCol)
       val Array(train, valid) = data.randomSplit(Array(0.8, 0.2), conf.seed)
       // train is consumed by the feature fits and the classifier's
-      // iterations — cache to avoid re-scanning the parquet per pass
-      train.cache()
+      // iterations — cache to avoid re-scanning the parquet per pass.
+      // Every cache here is released when the stage's scope exits,
+      // whether the fit succeeds or throws
+      graft.CacheScope.cached(train)
 
       // feature stages fit EXACTLY ONCE; the classifier then trains on
       // the already-transformed frame, and the final PipelineModel is
       // stitched from the fitted stages (Pipeline.fit over transformers
       // only copies them — zero extra passes over the data)
       val prep = new Pipeline().setStages(featureStages(conf.onlyHd)).fit(train)
-      val trainF = prep.transform(train).select(col("features"), col("TARGET")).cache()
+      val trainF = graft.CacheScope.cached(
+        prep.transform(train).select(col("features"), col("TARGET")))
       // layer-0 width from the assembled column's ML attribute metadata
       // (VectorAssembler always records it) — no extra action
       val d = org.apache.spark.ml.attribute.AttributeGroup
@@ -193,7 +196,7 @@ object PbEtl {
       // is recorded there rather than a fake number
       // scored holdout feeds two actions (count/classes agg + AUC):
       // cache so feature transform + scoring run once, not twice
-      val scoredVal = mlpModel.transform(prep.transform(valid)).cache()
+      val scoredVal = graft.CacheScope.cached(mlpModel.transform(prep.transform(valid)))
       val valAgg = scoredVal.agg(count(lit(1)), countDistinct(col("TARGET"))).head()
       val (valN, valClasses) = (valAgg.getLong(0), valAgg.getLong(1))
       val valAuc: Option[Double] =
@@ -206,9 +209,6 @@ object PbEtl {
       val model = new Pipeline()
         .setStages((prep.stages :+ mlpModel).map(_.asInstanceOf[PipelineStage]))
         .fit(train) // all stages are Transformers: copy-through, no refit
-      scoredVal.unpersist()
-      trainF.unpersist()
-      train.unpersist()
 
       val dir = outputDir(ctx).get
       model.write.overwrite().save(s"$dir/model")

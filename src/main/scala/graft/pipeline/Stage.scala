@@ -113,6 +113,9 @@ abstract class CsvSource(val sub: String) extends Stage {
   * equivalent of `luigi.build([task], local_scheduler=True)`
   * (pb_etl/cli.py:13-16). Sequential on purpose: each stage is itself a
   * distributed Spark job; inter-stage parallelism buys nothing here.
+  *
+  * Each `run` is one `CacheScope`: whatever the stage caches is released
+  * when it returns or throws, so no stage leaves memory to the next.
   */
 object Runner {
   def run(ctx: Ctx, target: Stage): Seq[String] = {
@@ -124,7 +127,7 @@ object Runner {
         done += key
         s.deps.foreach(go)
         if (!s.complete(ctx)) {
-          s.run(ctx)
+          graft.CacheScope.scope(s.run(ctx))
           executed += s.name
         }
       }

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Dedup, TextAnalysis, TextOps}
+import graft.CacheScope.{cached, scope}
 
 /** The curation funnel as a STREAM: every stage of CurateDag's
   * quality→decontaminate→dedup-canonical→redact chain applied
@@ -77,31 +78,30 @@ object CurateStream {
         .filter(col(part) < before).drop(part))
     }
 
-    def apply(batch: DataFrame, batchId: Long): Unit = {
+    /** One micro-batch, one `CacheScope`: the batch's multi-use
+      * caches are released when it commits or fails. */
+    def apply(batch: DataFrame, batchId: Long): Unit = scope {
       val spark = batch.sparkSession
-      var cached: List[DataFrame] = Nil
-      def hold(df: DataFrame): DataFrame = { // multi-use within this batch
-        df.persist(); cached = df :: cached; df
-      }
-      val b = hold(batch) // the source is not rescanned per counter/stage
+      // every cached frame below is multi-use within this batch
+      val b = cached(batch) // the source is not rescanned per counter/stage
       seen += b.count()
       // 1. row-local gates: quality cascade, eval-split removal, then
       // the broadcast benchmark-shingle probe (no corpus-side state)
       val keep = TextAnalysis.corpusFilterDf(b)
         .filter(col("verdict") === "keep").select("doc_id")
       // read by the counter, the decon probe, and the anti-join left side
-      val quality = hold(b.join(keep, "doc_id")
+      val quality = cached(b.join(keep, "doc_id")
         .filter(col("doc_id") % Dedup.EvalMod =!= 0))
       qualityKept += quality.count()
       val flagged = quality
         .select(col("doc_id"), explode(TextOps.shingleHashSet(col("text"), 4)).as("h"))
         .join(broadcast(evalHashes), "h")
         .select("doc_id").distinct()
-      val sb = hold(quality.join(flagged, Seq("doc_id"), "left_anti"))
+      val sb = cached(quality.join(flagged, Seq("doc_id"), "left_anti"))
       deconKept += sb.count()
       // 2. batch signatures, written to the append-only store FIRST so
       // the union below can read every batch ≤ this one uniformly
-      val sigB = hold(sb
+      val sigB = cached(sb
         .select(col("doc_id"), TextOps.shingleHashSet(col("text"), TextOps.NearDupShingleN).as("hs"))
         .filter(size(col("hs")) > 0)
         .withColumn("bands", TextOps.nearDupBandKeys(col("hs"))))
@@ -110,7 +110,7 @@ object CurateStream {
       // pair discovery vs (batch ∪ standing): band-key equi-join
       // candidates, exact Jaccard verify — the q23/q56 machinery
       val standing = committed(spark, s"$storeDir/state/sigs", "batch", batchId)
-      val sigU = hold(standing.fold(sigB)(s => s.unionByName(sigB)))
+      val sigU = cached(standing.fold(sigB)(s => s.unionByName(sigB)))
       def bandsOf(s: DataFrame) =
         s.select(col("doc_id"), posexplode(col("bands")).as(Seq("b", "key")))
       val cand = bandsOf(sigB).as("x")
@@ -137,7 +137,7 @@ object CurateStream {
       val base = graft.operators.MergeUpsert
         .latestGen(spark, s"$storeDir/state/labels", before = Some(batchId))
         .getOrElse(sb.select(col("doc_id"), col("doc_id").as("cluster_id")).limit(0))
-      val newLabels = hold(
+      val newLabels = cached(
         Dedup.incrementalClusters(base, sb.select("doc_id"), pairs)
           .select(col("doc_id"), col("cluster_id")))
       // markers written by the sink itself, not trusted from the
@@ -162,7 +162,6 @@ object CurateStream {
       TextAnalysis.redactDf(survU.join(canonical, "doc_id"))
         .write.mode("overwrite").parquet(genDir)
       markDone(genDir)
-      cached.foreach(_.unpersist())
     }
   }
 
@@ -185,16 +184,15 @@ object CurateStream {
     * snapshot is the newest `gen=` dir under `storeDir`. */
   def drain(stream: DataFrame, evalHashes: DataFrame, storeDir: String,
       checkpoint: String): Funnel = {
-    // the benchmark shingle set probes EVERY micro-batch: persist for
+    // the benchmark shingle set probes EVERY micro-batch: cached for
     // the run so its (possibly corpus-sized) derivation executes once,
     // not once per batch; released when the stream finishes
-    evalHashes.persist()
-    try {
-      val (q, funnel) = start(stream, evalHashes, storeDir, checkpoint,
+    scope {
+      val (q, funnel) = start(stream, cached(evalHashes), storeDir, checkpoint,
         Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
       q.awaitTermination()
       funnel
-    } finally evalHashes.unpersist()
+    }
   }
 
   /** Newest snapshot generation (the curated store). */

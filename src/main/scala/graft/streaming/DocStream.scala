@@ -57,11 +57,14 @@ object DocStream {
     * batch-boundary-independent (asserted ≡ batch q56 in
     * DocStreamSpec). At 100 TB this is the steady-state ingest path:
     * per trigger, O(batch) signature work + index probes, zero
-    * corpus-side recompute. */
+    * corpus-side recompute. Each batch is one `CacheScope`: the
+    * operator's caches are released once the batch is written. */
   def ingestSink(spark: org.apache.spark.sql.SparkSession, d: String,
       outDir: String)(batch: DataFrame, batchId: Long): Unit =
-    graft.Dedup.ingestDedupDf(batch, spark, d)
-      .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    graft.CacheScope.scope {
+      graft.Dedup.ingestDedupDf(batch, spark, d)
+        .write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
 
   /** One exploded (band, key) posting of a document's LSH signature. */
   final case class BandPosting(

@@ -11,20 +11,4 @@ object GraftShim {
   def ofRows(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** Briefly wait for the shared listener bus to deliver queued events
-    * (`private[spark]` API). CacheScope drains before registering a
-    * cache so the still-in-flight completion event of an action that
-    * finished moments ago cannot release the new registration before
-    * the caller's own action ever runs. The wait is BOUNDED tight
-    * (100 ms): the race window is the bus's normal microsecond-scale
-    * delivery lag, and a genuinely backlogged bus (busy streaming
-    * progress queues, slow user listeners) must not stall every
-    * operator construction — timing out just degrades to an early
-    * release, i.e. a recompute, never a wrong answer. */
-  def drainListenerBus(spark: SparkSession): Unit =
-    try spark.sparkContext.listenerBus.waitUntilEmpty(100L)
-    catch {
-      case _: java.util.concurrent.TimeoutException => ()
-    }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Storage-layout scale story, part 2 (part 1 = BucketingSpec): a fact
+/** Storage-layout scale story: a fact
   * table written partitioned by day answers day-filtered queries by
   * reading ONLY the matching directories — the plan must show the
   * partition filter with everything else pruned. At 100 TB this is the
