@@ -109,7 +109,6 @@ object Bpe {
       spark.createDataFrame(learnLocal(wc, NMerges))
         .toDF("rank", "lhs", "rhs", "merged", "pair_count")
         .coalesce(1).write.mode("overwrite").parquet(s"$p/merges")
-      SaltedIndex.markSuccess(spark, p)
     }
     spark.read.parquet(s"$p/merges")
   }

@@ -640,7 +640,6 @@ object Dedup {
       clusterLabels(Tables.documents(spark, d), minhashNearDup(spark, d))
         .write.mode("overwrite").parquet(s"$p/labels")
       clusterBuilds += 1
-      SaltedIndex.markSuccess(spark, p)
     }
     withSizes(spark.read.parquet(s"$p/labels"))
   }

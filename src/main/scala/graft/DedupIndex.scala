@@ -85,6 +85,5 @@ object DedupIndex {
     Dedup.chunkRows(corpus).select(col("h")).distinct()
       .write.mode("overwrite").parquet(s"$p/chunks")
     builds += 1
-    SaltedIndex.markSuccess(spark, p)
   }
 }

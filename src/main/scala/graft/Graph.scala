@@ -47,7 +47,6 @@ object Graph {
         .union(b.select(col("c").as("src"), col("s").as("dst")))
         .write.mode("overwrite").parquet(s"$p/arcs")
       arcBuilds += 1
-      SaltedIndex.markSuccess(spark, p)
     }
     spark.read.parquet(s"$p/arcs")
   }
@@ -150,7 +149,6 @@ object Graph {
         .select(col("a.pk").as("p1"), col("b.pk").as("p2")).distinct()
         .write.mode("overwrite").parquet(s"$p/edges")
       cpBuilds += 1
-      SaltedIndex.markSuccess(spark, p)
     }
     spark.read.parquet(s"$p/edges")
   }
@@ -961,7 +959,6 @@ object Graph {
         .select(col("c"), col("p")).distinct()
         .write.mode("overwrite").parquet(s"$p/edges")
       bipBuilds += 1
-      SaltedIndex.markSuccess(spark, p)
     }
     spark.read.parquet(s"$p/edges")
   }

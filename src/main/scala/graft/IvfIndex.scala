@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 
 /** Persisted IVF (inverted-file) ANN index — the build side of
   * Similarity.ivfTopK, factored into a salted build-once stage.
@@ -62,9 +61,6 @@ object IvfIndex {
     SaltedIndex.dir(spark, "ivf", Version, s"$d/embeddings.parquet",
       Seq("corpus" -> d, "nlist" -> nlist.toString))
 
-  def complete(spark: SparkSession, p: String): Boolean =
-    SaltedIndex.complete(spark, p)
-
   /** (micro-unit centroids, cell-assigned corpus): built once, then
     * loaded from the salted dir. The corpus is written partitioned by
     * cell id — at scale a probe with a pushed `cell` filter reads
@@ -94,6 +90,5 @@ object IvfIndex {
       .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), s -> s.cm)")
         .as("cv"))
       .coalesce(1).write.mode("overwrite").parquet(s"$p/centroids")
-    SaltedIndex.markSuccess(spark, p)
   }
 }

@@ -93,7 +93,7 @@ object PhraseIndex {
     flat.unionByName(packed)
   }
 
-  /** Build both tiers into `p` and mark complete. Factored on a docs
+  /** Build both tiers into `p`. Factored on a docs
     * DataFrame so the spec can drive a synthetic hot-term corpus
     * through the real build. */
   private[graft] def buildInto(spark: SparkSession, docs: DataFrame,
@@ -122,6 +122,5 @@ object PhraseIndex {
       .sortWithinPartitions(col("term"), col("doc_id"))
       .write.mode("overwrite").parquet(s"$p/postings_hot")
     builds += 1
-    SaltedIndex.markSuccess(spark, p)
   }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.hadoop.fs.Path
 
 /** Persisted product-quantization (PQ) index — the build side of
   * Similarity.pqTopK (q83), the memory-compression ANN path.
@@ -47,9 +46,6 @@ object PqIndex {
   def dir(spark: SparkSession, d: String): String =
     SaltedIndex.dir(spark, "pq", Version, s"$d/embeddings.parquet",
       Seq("corpus" -> d, "m" -> M.toString, "ksub" -> KSub.toString))
-
-  def complete(spark: SparkSession, p: String): Boolean =
-    SaltedIndex.complete(spark, p)
 
   /** (codebooks as (subspace, code, micro-unit centroid), encoded
     * corpus). Codebooks are tiny (M·KSub rows) — always broadcast. */
@@ -121,6 +117,5 @@ object PqIndex {
       .agg(expr("transform(array_sort(collect_list(struct(pos, cm))), x -> x.cm)")
         .as("cv"))
       .coalesce(1).write.mode("overwrite").parquet(s"$p/codebooks")
-    SaltedIndex.markSuccess(spark, p)
   }
 }

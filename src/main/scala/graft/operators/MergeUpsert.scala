@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.pipeline.Memo
 
 /** Keyed MERGE (upsert) — the "apply a change batch to a base table"
   * operator every incremental pipeline needs and vanilla Spark SQL
@@ -85,16 +86,9 @@ object MergeUpsert {
     val dir = s"$statePath/gen=$batchId"
     applyCdc(base, batch, keys, seqCol, opCol)
       .write.mode("overwrite").parquet(dir)
-    // the sink writes its OWN completeness marker rather than trusting
-    // the committer's: with marksuccessfuljobs=false (common on
-    // object-store committers) no _SUCCESS would ever appear, and the
-    // latestGen gate would silently treat every committed generation
-    // as torn — the next batch would then rebuild state from empty.
-    // Idempotent (create overwrites), ordered after the parquet job
-    // commit returns.
-    val fs = new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
+    // the sink commits the generation, so it marks it (an unmarked
+    // generation would make the next batch rebuild state from empty)
+    Memo.mark(spark, dir)
   }
 
   /** The ids of `<prefix>=<id>` children under `root` — the ONE
@@ -113,9 +107,9 @@ object MergeUpsert {
   /** Newest COMPLETE generation table (optionally among gens strictly
     * below `before`); None when no complete generation exists yet.
     *
-    * Completeness = the `_SUCCESS` marker Spark's file committer writes
-    * when the parquet job commits. A crash mid-write of `gen=N` leaves
-    * the dir without the marker: the sink's own replay heals it (the
+    * Completeness = the `Memo` flag `upsertSink` writes once the
+    * generation's parquet job commits. A crash mid-write of `gen=N`
+    * leaves the dir without the flag: the sink's own replay heals it (the
     * replayed batch re-reads the same complete parent and OVERWRITES
     * gen=N), but an EXTERNAL reader arriving between the crash and the
     * resume must not be handed the partial dir — it falls back to the
@@ -124,12 +118,9 @@ object MergeUpsert {
     * first, so a concurrent reader skips the in-flight rewrite). */
   def latestGen(spark: SparkSession, statePath: String,
       before: Option[Long] = None): Option[DataFrame] = {
-    val fs = new org.apache.hadoop.fs.Path(statePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    listIds(fs, statePath, "gen")
+    listIds(Memo.fs(spark, statePath), statePath, "gen")
       .filter(g => before.forall(g < _))
-      .filter(g => fs.exists(
-        new org.apache.hadoop.fs.Path(s"$statePath/gen=$g/_SUCCESS")))
+      .filter(g => Memo.done(spark, s"$statePath/gen=$g"))
       .maxOption
       .map(g => spark.read.parquet(s"$statePath/gen=$g"))
   }

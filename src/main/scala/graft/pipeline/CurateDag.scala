@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.{Curation, Dedup, TextAnalysis}
@@ -22,6 +21,7 @@ import graft.{Curation, Dedup, TextAnalysis}
   * `Mixture.version` and only Mixture/Pack re-run.
   */
 object CurateDag {
+  import Stage.writeGz
 
   /** External input: the documents table under `dataRoot`. */
   object RawDocs extends Stage {
@@ -35,9 +35,6 @@ object CurateDag {
       sys.error(s"external input missing: ${outputDir(ctx).get}")
   }
 
-  private def writeGz(ctx: Ctx, df: DataFrame, dir: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("compression", "gzip").parquet(dir)
-
   /** Drop documents failing the q57 rule cascade. */
   object QualityGate extends Stage {
     override def version = "1.0.0"
@@ -46,7 +43,7 @@ object CurateDag {
       val docs = RawDocs.read(ctx)
       val verdicts = TextAnalysis.corpusFilterDf(docs)
         .filter(col("verdict") === "keep").select("doc_id")
-      writeGz(ctx, docs.join(verdicts, "doc_id"), outputDir(ctx).get)
+      writeGz(docs.join(verdicts, "doc_id"), outputDir(ctx).get)
     }
   }
 
@@ -61,7 +58,7 @@ object CurateDag {
       val flagged = Dedup.decontaminateDf(corpus,
           docs.filter(col("doc_id") % Dedup.EvalMod === 0))
         .select("doc_id")
-      writeGz(ctx, corpus.join(flagged, Seq("doc_id"), "left_anti"), outputDir(ctx).get)
+      writeGz(corpus.join(flagged, Seq("doc_id"), "left_anti"), outputDir(ctx).get)
     }
   }
 
@@ -74,7 +71,7 @@ object CurateDag {
       val docs = Decontaminate.read(ctx)
       val clusters = Dedup.nearDupClustersDf(docs, Dedup.minhashNearDupDf(docs))
       val canonical = clusters.filter(col("doc_id") === col("cluster_id")).select("doc_id")
-      writeGz(ctx, docs.join(canonical, "doc_id"), outputDir(ctx).get)
+      writeGz(docs.join(canonical, "doc_id"), outputDir(ctx).get)
     }
   }
 
@@ -86,7 +83,7 @@ object CurateDag {
     override def version = "1.0.0"
     override def deps: Seq[Stage] = Seq(DedupCanonical)
     override def run(ctx: Ctx): Unit =
-      writeGz(ctx, TextAnalysis.redactDf(DedupCanonical.read(ctx)), outputDir(ctx).get)
+      writeGz(TextAnalysis.redactDf(DedupCanonical.read(ctx)), outputDir(ctx).get)
   }
 
   /** Rebalance the language mixture: content-keyed downsample (q50)
@@ -98,7 +95,7 @@ object CurateDag {
       val docs = Redact.read(ctx)
       val kept = Curation.sampleCut(docs).select("doc_id")
       val copies = Curation.upsampleCopies(docs.join(kept, "doc_id"))
-      writeGz(ctx, copies, outputDir(ctx).get)
+      writeGz(copies, outputDir(ctx).get)
     }
   }
 
@@ -117,7 +114,7 @@ object CurateDag {
         .join(docs, "doc_id")
         .withColumn("stream_id", col("doc_id") * 100 + col("copy_id"))
         .select(col("stream_id").as("doc_id"), col("lang"), col("text"))
-      writeGz(ctx, Curation.packAssign(mix), outputDir(ctx).get)
+      writeGz(Curation.packAssign(mix), outputDir(ctx).get)
     }
   }
 
@@ -129,7 +126,7 @@ object CurateDag {
     override def version = "1.0.0"
     override def deps: Seq[Stage] = Seq(Redact)
     override def run(ctx: Ctx): Unit =
-      writeGz(ctx, graft.Curation.chunkTokensDf(Redact.read(ctx)), outputDir(ctx).get)
+      writeGz(graft.Curation.chunkTokensDf(Redact.read(ctx)), outputDir(ctx).get)
   }
 
   /** The funnel in the order CurationReport prints it. */

@@ -24,21 +24,17 @@ import org.apache.spark.sql.functions._
   *                                               FinalResults
   * }}}
   *
-  * Every intermediate is gzip parquet + `_SUCCESS` in a salted dir,
-  * exactly the reference's storage contract (pb_etl/tasks.py:183,203,
-  * 232,392,425; target.py:15-19).
+  * Every intermediate is gzip parquet (`Stage.writeGz`) + the `_SUCCESS`
+  * flag `Runner` writes in a salted dir, exactly the reference's storage
+  * contract (pb_etl/tasks.py:183,203,232,392,425; target.py:15-19).
   */
 object PbEtl {
   import Schemas._
+  import Stage.writeGz
 
   private def csv(ctx: Ctx, sub: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
     ctx.spark.read.schema(schema).option("header", "true")
       .csv(s"${ctx.conf.dataRoot}/$sub")
-
-  private def writeGz(df: DataFrame, dir: String, coalesce1: Boolean = false): Unit = {
-    val d = if (coalesce1) df.coalesce(1) else df
-    d.write.mode(SaveMode.Overwrite).option("compression", "gzip").parquet(dir)
-  }
 
   // --- external inputs (S1/S2; reference tasks.py:89-149) ---------------
   object TrnAttr extends CsvSource("train/attr")
@@ -219,10 +215,8 @@ object PbEtl {
           s""""maxIter":${conf.epochs},"seed":${conf.seed},""" +
           s""""loss":[${losses.mkString(",")}],""" +
           s""""val_n":$valN,"val_auc":${valAuc.map(_.toString).getOrElse("null")}}"""
-      val fs = ctx.fs(dir)
-      val out = fs.create(new org.apache.hadoop.fs.Path(dir, "history.json"), true)
+      val out = ctx.fs(dir).create(new org.apache.hadoop.fs.Path(dir, "history.json"), true)
       out.write(hist.getBytes("UTF-8")); out.close()
-      fs.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
     }
 
     def load(ctx: Ctx): PipelineModel =

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.hadoop.fs.Path
 
 /** Pipeline configuration.
@@ -38,8 +38,31 @@ final case class PbConf(
     onlyHd: Boolean = false)
 
 final case class Ctx(spark: SparkSession, conf: PbConf) {
-  def fs(path: String): org.apache.hadoop.fs.FileSystem =
-    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  def fs(path: String): org.apache.hadoop.fs.FileSystem = Memo.fs(spark, path)
+}
+
+/** The one completion-flag protocol (O2, pb_etl/luigi/dask/target.py:
+  * 15-19,92-114), shared by pipeline stages (`Runner`), salted indexes
+  * (`graft.SaltedIndex.ensureBuilt`) and streaming generations
+  * (`MergeUpsert.upsertSink`, `CurateStream`): a unit of work is done
+  * when its dir carries a `_SUCCESS` flag, and whoever commits the unit
+  * marks it itself. */
+object Memo {
+  private[graft] val Flag = "_SUCCESS"
+
+  private[graft] def fs(spark: SparkSession, dir: String): org.apache.hadoop.fs.FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  def done(spark: SparkSession, dir: String): Boolean =
+    fs(spark, dir).exists(new Path(dir, Flag))
+
+  /** Flag `dir` complete; call only after its data is written. Nothing
+    * trusts the `_SUCCESS` Spark's file committer writes: with
+    * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` (common
+    * on object-store committers) it never appears, and every committed
+    * unit would read as torn. Idempotent (create overwrites). */
+  def mark(spark: SparkSession, dir: String): Unit =
+    fs(spark, dir).create(new Path(dir, Flag), true).close()
 }
 
 /** A node of the pipeline DAG with salted-path memoization.
@@ -53,9 +76,10 @@ final case class Ctx(spark: SparkSession, conf: PbConf) {
   *  - O5 stages without an output dir always re-run (FinalResults,
   *    pb_etl/tasks.py:428-444)
   *
-  * Spark writes the `_SUCCESS` marker natively on job commit, so sink +
-  * flag are one atomic-ish operation (the reference writes the flag
-  * manually after to_parquet, target.py:15-19).
+  * `run` only writes the data; `Runner` marks the output dir through
+  * `Memo` once `run` returns (the reference likewise writes the flag by
+  * hand after to_parquet, target.py:15-19). The flag is written after
+  * the data, not atomically with it.
   */
 trait Stage {
   def name: String = getClass.getSimpleName.stripSuffix("$")
@@ -70,9 +94,7 @@ trait Stage {
   def outputDir(ctx: Ctx): Option[String] =
     Some(s"${ctx.conf.workRoot}/$name-${salt(ctx.conf)}")
 
-  def complete(ctx: Ctx): Boolean = outputDir(ctx).exists { d =>
-    ctx.fs(d).exists(new Path(d, "_SUCCESS"))
-  }
+  def complete(ctx: Ctx): Boolean = outputDir(ctx).exists(Memo.done(ctx.spark, _))
 
   def run(ctx: Ctx): Unit
 
@@ -87,9 +109,17 @@ trait Stage {
   def readableDir(ctx: Ctx): String = {
     val d = outputDir(ctx).getOrElse(sys.error(s"stage $name has no output dir"))
     require(complete(ctx),
-      s"stage $name output at $d is incomplete (no _SUCCESS flag) — not reading a partial write")
+      s"stage $name output at $d is incomplete (no ${Memo.Flag} flag) — not reading a partial write")
     d
   }
+}
+
+object Stage {
+  /** The stages' storage contract: gzip parquet, overwriting a partial
+    * earlier attempt (pb_etl/tasks.py:183,203,232,392,425). */
+  def writeGz(df: DataFrame, dir: String, coalesce1: Boolean = false): Unit =
+    (if (coalesce1) df.coalesce(1) else df)
+      .write.mode(SaveMode.Overwrite).option("compression", "gzip").parquet(dir)
 }
 
 /** An external raw-CSV input (reference ExternalTask, tasks.py:89-149):
@@ -115,7 +145,9 @@ abstract class CsvSource(val sub: String) extends Stage {
   * distributed Spark job; inter-stage parallelism buys nothing here.
   *
   * Each `run` is one `CacheScope`: whatever the stage caches is released
-  * when it returns or throws, so no stage leaves memory to the next.
+  * when it returns or throws, so no stage leaves memory to the next. A
+  * run that returns has its output dir marked done (`Memo.mark`); one
+  * that throws leaves it unmarked, so the next walk re-runs it.
   */
 object Runner {
   def run(ctx: Ctx, target: Stage): Seq[String] = {
@@ -128,6 +160,7 @@ object Runner {
         s.deps.foreach(go)
         if (!s.complete(ctx)) {
           graft.CacheScope.scope(s.run(ctx))
+          s.outputDir(ctx).foreach(Memo.mark(ctx.spark, _))
           executed += s.name
         }
       }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Dedup, TextAnalysis, TextOps}
 import graft.CacheScope.{cached, scope}
+import graft.pipeline.Memo
 
 /** The curation funnel as a STREAM: every stage of CurateDag's
   * quality→decontaminate→dedup-canonical→redact chain applied
@@ -71,9 +72,8 @@ object CurateStream {
       * batch's own half-written dir is excluded by the id filter. */
     private def committed(spark: SparkSession, path: String, part: String,
         before: Long): Option[DataFrame] = {
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!graft.operators.MergeUpsert.listIds(fs, path, part).exists(_ < before)) None
+      if (!graft.operators.MergeUpsert.listIds(Memo.fs(spark, path), path, part)
+          .exists(_ < before)) None
       else Some(spark.read.option("basePath", path).parquet(path)
         .filter(col(part) < before).drop(part))
     }
@@ -140,17 +140,11 @@ object CurateStream {
       val newLabels = cached(
         Dedup.incrementalClusters(base, sb.select("doc_id"), pairs)
           .select(col("doc_id"), col("cluster_id")))
-      // markers written by the sink itself, not trusted from the
-      // committer (marksuccessfuljobs=false would otherwise make the
-      // latestGen completeness gate treat every generation as torn)
-      def markDone(dir: String): Unit = {
-        val f = new org.apache.hadoop.fs.Path(dir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        f.create(new org.apache.hadoop.fs.Path(dir, "_SUCCESS"), true).close()
-      }
+      // the batch commits each generation, so it marks it for the
+      // latestGen completeness gate
       val labelsDir = s"$storeDir/state/labels/gen=$batchId"
       newLabels.write.mode("overwrite").parquet(labelsDir)
-      markDone(labelsDir)
+      Memo.mark(spark, labelsDir)
       // 4. snapshot generation: canonical docs over ALL survivors so
       // far, redacted. A merged-cluster takeover simply drops the
       // de-throned doc from the new generation.
@@ -161,7 +155,7 @@ object CurateStream {
       val genDir = s"$storeDir/gen=$batchId"
       TextAnalysis.redactDf(survU.join(canonical, "doc_id"))
         .write.mode("overwrite").parquet(genDir)
-      markDone(genDir)
+      Memo.mark(spark, genDir)
     }
   }
 
@@ -216,7 +210,7 @@ object CurateStream {
     import graft.operators.MergeUpsert.listIds
     Seq("sigs", "surv").foreach { store =>
       val root = s"$storeDir/state/$store"
-      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fs = Memo.fs(spark, root)
       if (fs.exists(new Path(root))) {
         def renamed(a: Path, b: Path): Unit =
           require(fs.rename(a, b), s"compactState: rename $a -> $b failed")
@@ -274,8 +268,7 @@ object CurateStream {
     }
     // label generations: only the newest one below upTo is ever read
     val lroot = s"$storeDir/state/labels"
-    val lfs = new org.apache.hadoop.fs.Path(lroot)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lfs = Memo.fs(spark, lroot)
     graft.operators.MergeUpsert.listIds(lfs, lroot, "gen")
       .filter(_ < upTo).sorted.dropRight(1)
       .foreach(g => lfs.delete(new org.apache.hadoop.fs.Path(s"$lroot/gen=$g"), true))

@@ -10,18 +10,25 @@ import graft.pipeline.{CurateDag, Ctx, PbConf}
 class CurateDagSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
-  test("curation DAG runs, memoizes, and the funnel matches the operators") {
-    val work = Files.createTempDirectory("curate").toString
-    val ctx = Ctx(spark, PbConf(dataRoot = d, workRoot = work))
+  private val allStages = Seq("QualityGate", "Decontaminate", "DedupCanonical",
+    "Redact", "Mixture", "Pack", "ChunkManifest", "CurationReport")
 
+  /** One cold run under the default session conf: its ctx, the stages
+    * it executed and the funnel it reported. */
+  private lazy val (ctx, first, firstReport) = {
+    val work = Files.createTempDirectory("curate").toString
+    val c = Ctx(spark, PbConf(dataRoot = d, workRoot = work))
+    val ex = CurateDag.run(c)
+    (c, ex, CurateDag.CurationReport.last)
+  }
+
+  test("curation DAG runs, memoizes, and the funnel matches the operators") {
     // the report's one-aggregation funnel equals each stage's own count
     def stageCounts = CurateDag.funnelStages.map { case (k, s) => k -> s.read(ctx).count() }
 
-    val first = CurateDag.run(ctx)
-    assert(first == Seq("QualityGate", "Decontaminate", "DedupCanonical",
-      "Redact", "Mixture", "Pack", "ChunkManifest", "CurationReport"), first.toString)
+    assert(first == allStages, first.toString)
     val counts = stageCounts
-    assert(CurateDag.CurationReport.last.contains(counts), CurateDag.CurationReport.last.toString)
+    assert(firstReport.contains(counts), firstReport.toString)
     // memoization: everything but the always-rerun report skips
     CurateDag.CurationReport.last = None
     assert(CurateDag.run(ctx) == Seq("CurationReport"))
@@ -76,5 +83,19 @@ class CurateDagSpec extends SparkSpec {
     val expected = Curation.chunkTokensDf(redact)
     assert(chunks.except(expected).isEmpty && expected.except(chunks).isEmpty)
     assert(chunks.select("doc_id").distinct().count() == canon.count())
+  }
+
+  test("memo flags are the Runner's own: a committer writing no _SUCCESS still memoizes") {
+    val cold = Ctx(spark, ctx.conf.copy(workRoot = Files.createTempDirectory("curate-noflag").toString))
+    val report = firstReport
+    assert(report.isDefined)
+    withoutCommitterFlag {
+      CurateDag.CurationReport.last = None
+      assert(CurateDag.run(cold) == allStages)
+      assert(CurateDag.CurationReport.last == report)
+      CurateDag.CurationReport.last = None
+      assert(CurateDag.run(cold) == Seq("CurationReport"))
+      assert(CurateDag.CurationReport.last == report)
+    }
   }
 }

@@ -61,9 +61,11 @@ class PbEtlPipelineSpec extends SparkSpec {
     (c, ex)
   }
 
+  private val allStages = Seq("LoadData", "NormDenominators", "FitModel",
+    "LoadTest", "Predict", "BackTest", "FinalResults")
+
   test("full DAG executes every stage once, in dependency order") {
-    assert(executed == Seq("LoadData", "NormDenominators", "FitModel",
-      "LoadTest", "Predict", "BackTest", "FinalResults"))
+    assert(executed == allStages)
   }
 
   test("LoadData: 3 rows, 20 cols, traffic score joined with no nulls (tasks.py:181)") {
@@ -138,6 +140,21 @@ class PbEtlPipelineSpec extends SparkSpec {
       assert(e.getMessage.contains("_SUCCESS"))
     } finally fs.create(flag, true).close()
     assert(PbEtl.LoadData.read(ctx).count() == 3) // restored flag reads again
+  }
+
+  test("memo flags are the Runner's own: a committer writing no _SUCCESS still memoizes") {
+    PbEtl.runAll(ctx)
+    val report = PbEtl.FinalResults.last
+    assert(report.isDefined)
+    val cold = Ctx(spark, ctx.conf.copy(workRoot = Files.createTempDirectory("pbetl-noflag").toString))
+    withoutCommitterFlag {
+      PbEtl.FinalResults.last = None
+      assert(PbEtl.runAll(cold) == allStages)
+      assert(PbEtl.FinalResults.last == report)
+      PbEtl.FinalResults.last = None
+      assert(PbEtl.runAll(cold) == Seq("FinalResults"))
+      assert(PbEtl.FinalResults.last == report)
+    }
   }
 
   test("K5: optional JDBC sink appends the result row (embedded Derby)") {

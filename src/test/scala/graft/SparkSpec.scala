@@ -12,6 +12,23 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def withFixture(test: NoArgTest): Outcome =
     CacheScope.scope(super.withFixture(test))
+
+  /** Runs `body` with Spark's file committer writing no `_SUCCESS` (as on
+    * many object-store committers), first checking that a plain parquet
+    * write under that conf really leaves none; the conf is restored
+    * after. */
+  def withoutCommitterFlag[T](body: => T): T = {
+    val key = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try {
+      val probe = java.nio.file.Files.createTempDirectory("no-flag").resolve("t").toString
+      spark.range(1).write.parquet(probe)
+      assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(probe, "_SUCCESS")),
+        "the committer still writes _SUCCESS")
+      body
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
 }
 
 object SparkSpec {
