@@ -595,12 +595,90 @@ object Dedup {
       .orderBy(col("chunk_hash"))
   }
 
-  /** Near-dup cluster assignment: connected components over the
-    * MinHash/LSH pair graph (q23), labels = min doc_id of the
-    * component; singletons are their own cluster. This is the step a
-    * real pipeline runs after pair generation — "keep one canonical doc
-    * per duplicate cluster" needs components, not pairs (A~B, B~C must
-    * collapse to one cluster even when A~C was never emitted).
+  /** The corpus entry persists its labels as a salted stage (the
+    * IvfIndex/DedupIndex pattern): clustering is the most expensive
+    * recurring artifact in the dedup family, and THREE operators
+    * consume the same labels (q49 itself, q152's leakage-safe split,
+    * q154's canonical selection). Components run once per corpus
+    * version; warm consumers read one parquet relation (zero-rebuild
+    * pinned via `clusterBuilds` in DedupSpec). The Df-in variant below
+    * stays unpersisted — it serves arbitrary survivor sets (CurateDag)
+    * and the convergence specs. */
+  def nearDupClusters(spark: SparkSession, d: String): DataFrame = {
+    val p = SaltedIndex.dir(spark, "clusters", ClusterIdxVersion,
+      s"$d/documents.parquet",
+      Seq("corpus" -> d, "shingleN" -> NearDupShingleN.toString,
+        "jaccard" -> "0.5", "bands" -> s"$NearDupBands x $NearDupRows"))
+    SaltedIndex.ensureBuilt(spark, p) {
+      clusterLabels(Tables.documents(spark, d), minhashNearDup(spark, d))
+        .write.mode("overwrite").parquet(s"$p/labels")
+      clusterBuilds += 1
+    }
+    withSizes(spark.read.parquet(s"$p/labels"))
+  }
+
+  private val ClusterIdxVersion = "0.0.1"
+
+  /** Observability for specs: corpus-side cluster builds this JVM ran. */
+  @volatile var clusterBuilds: Int = 0
+
+  /** Observability for specs: star rounds (full LS+SS iterations) the
+    * last components call took to converge; 0 on the driver path. */
+  @volatile var lastClusterRounds: Int = 0
+
+  /** DataFrame-in variant: components of an arbitrary (doc_a, doc_b)
+    * pair graph over an arbitrary doc set (CurateDag runs it on the
+    * post-filter survivor set). */
+  private[graft] def nearDupClustersDf(docs: DataFrame, pairDf: DataFrame): DataFrame =
+    withSizes(clusterLabels(docs, pairDf))
+
+  /** The shared (doc_id, cluster_id, cluster_n) result epilogue. */
+  private def withSizes(labels: DataFrame): DataFrame = {
+    val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_n"))
+    labels.join(sizes, "cluster_id")
+      .select(col("doc_id"), col("cluster_id"), col("cluster_n"))
+      .orderBy(col("doc_id"))
+  }
+
+  /** Edge bound of the driver path in `clusterLabels` (and of q266's
+    * one-scan sweep): ≤100k edges is ≤1.6 MB of longs on the driver. */
+  val DriverCcMaxEdges = 100000L
+
+  /** Near-dup cluster assignment: connected components over a
+    * (doc_a, doc_b) pair graph, labels = min doc_id of the component;
+    * singletons are their own cluster. This is the step a real pipeline
+    * runs after pair generation — "keep one canonical doc per duplicate
+    * cluster" needs components, not pairs (A~B, B~C must collapse to
+    * one cluster even when A~C was never emitted). Returns
+    * (doc_id, cluster_id) alone, no size/order epilogue, for callers
+    * that only need the mapping (incrementalClusters' remap).
+    *
+    * The deduped edge count picks the path: at or under
+    * `DriverCcMaxEdges` the edges are collected (the count bounds the
+    * collect) into a driver union-find, milliseconds where the star
+    * rounds' driver-synchronized jobs take seconds on a small graph;
+    * above it the distributed `starLabels` rounds run. Both give the
+    * same labels (NewOpsRound9hSpec, GraphPropertySpec). */
+  private[graft] def clusterLabels(docs: DataFrame, pairDf: DataFrame): DataFrame = {
+    val (eP, eCount) = edgeSet(pairDf)
+    if (eCount > DriverCcMaxEdges) starRounds(docs, eP, eCount)
+    else {
+      val uf = new UnionFind
+      eP.collect().foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+      eP.unpersist()
+      lastClusterRounds = 0
+      val spark = docs.sparkSession
+      import spark.implicits._
+      val lab = uf.nodes.toSeq.map(n => (n, uf.find(n))).toDF("doc_id", "cid")
+      docs.select(col("doc_id"))
+        .join(broadcast(lab), Seq("doc_id"), "left")
+        .select(col("doc_id"),
+          coalesce(col("cid"), col("doc_id")).as("cluster_id"))
+    }
+  }
+
+  /** The distributed path of `clusterLabels` whatever the edge count,
+    * so specs can exercise it on small graphs.
     *
     * Algorithm: alternating large-star/small-star (Kiveris et al.,
     * "Connected Components in MapReduce and Beyond") — the edge set
@@ -622,77 +700,24 @@ object Dedup {
     * final edges directly. Each phase is materialized via persist +
     * full count (truncating recomputation); long jobs would
     * periodically checkpoint to cut lineage. */
-  /** The corpus entry persists its labels as a salted stage (the
-    * IvfIndex/DedupIndex pattern): clustering is the most expensive
-    * recurring artifact in the dedup family, and THREE operators
-    * consume the same labels (q49 itself, q152's leakage-safe split,
-    * q154's canonical selection). The star-CC rounds run once per
-    * corpus version; warm consumers read one parquet relation
-    * (zero-rebuild pinned via `clusterBuilds` in DedupSpec). The
-    * Df-in variant below stays unpersisted — it serves arbitrary
-    * survivor sets (CurateDag) and the convergence specs. */
-  def nearDupClusters(spark: SparkSession, d: String): DataFrame = {
-    val p = SaltedIndex.dir(spark, "clusters", ClusterIdxVersion,
-      s"$d/documents.parquet",
-      Seq("corpus" -> d, "shingleN" -> NearDupShingleN.toString,
-        "jaccard" -> "0.5", "bands" -> s"$NearDupBands x $NearDupRows"))
-    SaltedIndex.ensureBuilt(spark, p) {
-      clusterLabels(Tables.documents(spark, d), minhashNearDup(spark, d))
-        .write.mode("overwrite").parquet(s"$p/labels")
-      clusterBuilds += 1
-    }
-    withSizes(spark.read.parquet(s"$p/labels"))
+  private[graft] def starLabels(docs: DataFrame, pairDf: DataFrame): DataFrame = {
+    val (eP, eCount) = edgeSet(pairDf)
+    starRounds(docs, eP, eCount)
   }
 
-  private val ClusterIdxVersion = "0.0.1"
-
-  /** Observability for specs: corpus-side cluster builds this JVM ran. */
-  @volatile var clusterBuilds: Int = 0
-
-  /** Observability for specs: rounds (full LS+SS iterations) the last
-    * nearDupClustersDf call took to converge. */
-  @volatile var lastClusterRounds: Int = 0
-
-  /** DataFrame-in variant: components of an arbitrary (doc_a, doc_b)
-    * pair graph over an arbitrary doc set (CurateDag runs it on the
-    * post-filter survivor set). */
-  private[graft] def nearDupClustersDf(docs: DataFrame, pairDf: DataFrame): DataFrame =
-    withSizes(clusterLabels(docs, pairDf))
-
-  /** The shared (doc_id, cluster_id, cluster_n) result epilogue. */
-  private def withSizes(labels: DataFrame): DataFrame = {
-    val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_n"))
-    labels.join(sizes, "cluster_id")
-      .select(col("doc_id"), col("cluster_id"), col("cluster_n"))
-      .orderBy(col("doc_id"))
+  /** Canonical undirected edges (x, y) with y < x, deduped, cached and
+    * counted. count() computes EVERY partition, fully populating the
+    * cache before a predecessor is dropped (isEmpty would early-exit,
+    * leaving most partitions uncached and recomputing lineage). */
+  private def edgeSet(pairDf: DataFrame): (DataFrame, Long) = {
+    val e = CacheScope.cached(pairDf
+      .select(greatest(col("doc_a"), col("doc_b")).as("x"),
+        least(col("doc_a"), col("doc_b")).as("y"))
+      .filter(col("x") =!= col("y")).distinct())
+    (e, e.count())
   }
 
-  /** The label assignment alone — (doc_id, cluster_id), no size/order
-    * epilogue — for callers that only need the mapping
-    * (incrementalClusters' contracted-graph remap). */
-  /** Adaptive driver fast-path bound for `clusterLabels`: when the
-    * (already counted) edge relation is at or under this many edges,
-    * components collapse to a driver union-find over a
-    * RUNTIME-BOUNDED collect — on small graphs the star-CC rounds'
-    * driver-synchronized jobs dominate wall time (measured: q266's
-    * four ≤256-edge sweeps at sf0.1 spent ~17 s in round scheduling
-    * alone; the driver path is milliseconds). ≤100k edges is ≤1.6 MB
-    * of longs; above the bound the distributed star-CC runs
-    * unchanged, so the 100 TB path is untouched. Opt-in per call
-    * site (default 0 = always distributed): q49's persisted stage,
-    * q250 and the incremental remap keep their existing physics, and
-    * DedupSpec's diameter-chain round-bound pin still measures the
-    * distributed algorithm. q266's common path does NOT ride this —
-    * its one-scan sweep uses its own INCREMENTAL driver union-find
-    * (edges arrive across nested thresholds; this path re-solves from
-    * scratch) — but q266's >100k-edge distributed fallback passes the
-    * bound down so its small high-τ subgraphs do. Driver ≡
-    * distributed is spec-pinned. */
-  val DriverCcMaxEdges = 100000L
-
-  private[graft] def clusterLabels(docs: DataFrame, pairDf: DataFrame,
-      driverMaxEdges: Long = 0L): DataFrame = {
-    val spark = docs.sparkSession
+  private def starRounds(docs: DataFrame, cachedEdges: DataFrame, nEdges: Long): DataFrame = {
     // Lineage truncation: phase() references its input ~4× (symmetrized
     // union + per-node min + re-attach join), so building round N+1
     // directly on round N's DataFrame grows the LOGICAL plan ~16× per
@@ -701,46 +726,9 @@ object Dedup {
     // each round's plan start at a leaf (the round is already
     // materialized by the count below, so the RDD reads the cache).
     import CacheScope.truncate
-    // canonical undirected edges (x, y) with y < x, deduped
-    var eP = CacheScope.cached(pairDf
-      .select(greatest(col("doc_a"), col("doc_b")).as("x"),
-        least(col("doc_a"), col("doc_b")).as("y"))
-      .filter(col("x") =!= col("y")).distinct())
-    // count() computes EVERY partition, fully populating the cache
-    // before a predecessor is dropped (isEmpty would early-exit,
-    // leaving most partitions uncached and recomputing lineage)
-    var eCount = eP.count()
+    var eP = cachedEdges
+    var eCount = nEdges
     var e = truncate(eP)
-    if (eCount > 0L && eCount <= driverMaxEdges) {
-      // runtime-bounded collect: the count above IS the guard
-      val collected = e.select(col("x"), col("y")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      eP.unpersist()
-      val parent = scala.collection.mutable.Map.empty[Long, Long]
-      def find(x0: Long): Long = {
-        var r0 = x0
-        while (parent.getOrElse(r0, r0) != r0) r0 = parent(r0)
-        var c = x0
-        while (parent.getOrElse(c, c) != r0) {
-          val nx = parent(c); parent(c) = r0; c = nx
-        }
-        r0
-      }
-      // union-by-min: the root is always the component's smallest id,
-      // matching star-CC's min-label contract exactly
-      collected.foreach { case (x, y) =>
-        val rx = find(x); val ry = find(y)
-        if (rx != ry) parent(math.max(rx, ry)) = math.min(rx, ry)
-      }
-      lastClusterRounds = 0
-      import spark.implicits._
-      val lab = collected.flatMap { case (x, y) => Seq(x, y) }.distinct
-        .map(n => (n, find(n))).toSeq.toDF("doc_id", "cid")
-      return docs.select(col("doc_id"))
-        .join(broadcast(lab), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cid"), col("doc_id")).as("cluster_id"))
-    }
     var converged = eCount == 0L
     var rounds = 0
 
@@ -799,6 +787,42 @@ object Dedup {
       .select(col("doc_id"), coalesce(col("cid"), col("doc_id")).as("cluster_id"))
   }
 
+  /** Driver union-find over doc ids, union-by-min with path
+    * compression: a root is always its component's smallest id (the
+    * min-label contract the star rounds meet too), and `sizes` holds
+    * one member count per root. An id enters with its first edge. */
+  private final class UnionFind {
+    private val parent = scala.collection.mutable.Map.empty[Long, Long]
+    private val sizes = scala.collection.mutable.Map.empty[Long, Long]
+    def nodes: scala.collection.Set[Long] = parent.keySet
+    def components: Long = sizes.size.toLong
+    def size(root: Long): Long = sizes(root)
+
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
+      r
+    }
+
+    /** Joins the components of `a` and `b`; returns the merged root. */
+    def union(a: Long, b: Long): Long = {
+      add(a); add(b)
+      val (ra, rb) = (find(a), find(b))
+      if (ra == rb) ra
+      else {
+        val (lo, hi) = (math.min(ra, rb), math.max(ra, rb))
+        parent(hi) = lo
+        sizes(lo) += sizes.remove(hi).get
+        lo
+      }
+    }
+
+    private def add(x: Long): Unit =
+      if (!parent.contains(x)) { parent(x) = x; sizes(x) = 1L }
+  }
+
   /** Incremental cluster maintenance — the ingest-time companion of
     * `nearDupClustersDf`: a standing corpus already carries component
     * labels; a batch arrives with new documents and newly-discovered
@@ -815,10 +839,10 @@ object Dedup {
     * batch≪corpus assumption: broadcast) rewrites the standing labels
     * in one map-side join. Untouched components never shuffle. Labels
     * stay "min doc_id of the component": a contracted node IS the min
-    * of its old component, and star CC takes the min over contracted
-    * nodes. Equivalence with from-scratch clustering on the unioned
-    * graph is pinned in DedupSpec (including the two-old-components
-    * merge case).
+    * of its old component, and `clusterLabels` takes the min over
+    * contracted nodes. Equivalence with from-scratch clustering on the
+    * unioned graph is pinned in DedupSpec (including the
+    * two-old-components merge case).
     *
     * `labels`: (doc_id, cluster_id) standing assignment;
     * `newDocs`: (doc_id) arriving batch (e.g. q56's survivors);
@@ -835,7 +859,7 @@ object Dedup {
       .filter(col("doc_a") =!= col("doc_b"))
     val touched = contracted.select(col("doc_a").as("doc_id"))
       .union(contracted.select(col("doc_b").as("doc_id"))).distinct()
-    // star CC on the contracted graph only — its output maps an old
+    // components of the contracted graph only — its output maps an old
     // label to the merged component's label (labels alone: the size
     // epilogue would be discarded work here)
     val remap = clusterLabels(touched, contracted)
@@ -1630,54 +1654,29 @@ object Dedup {
         // constant time. Component sizes merge on union; every
         // touched node enters via an edge, so all roots are ≥2-doc
         // clusters and the summary fields fall out of running state.
-        val collected = tagged.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        val parent = scala.collection.mutable.Map.empty[Long, Long]
-        val size = scala.collection.mutable.Map.empty[Long, Long]
-        var nComp = 0L; var nDocs = 0L; var nEdges = 0L; var largest = 1L
-        def find(x0: Long): Long = {
-          var r0 = x0
-          while (parent.getOrElse(r0, r0) != r0) r0 = parent(r0)
-          var c = x0
-          while (parent.getOrElse(c, c) != r0) {
-            val nx = parent(c); parent(c) = r0; c = nx
-          }
-          r0
-        }
-        def add(x: Long): Unit =
-          if (!parent.contains(x)) {
-            parent(x) = x; size(x) = 1L; nComp += 1L; nDocs += 1L
-          }
-        val byTier = collected.groupBy(_._3)
-        val out = PercolationGridPm.sorted.reverse.map { tpm =>
+        val byTier = tagged.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).groupBy(_._3)
+        val uf = new UnionFind
+        var nEdges = 0L; var largest = 1L
+        PercolationGridPm.sorted.reverse.map { tpm =>
           byTier.getOrElse(tpm, Array.empty).foreach { case (a, b, _) =>
-            add(a); add(b); nEdges += 1L
-            val ra = find(a); val rb = find(b)
-            if (ra != rb) {
-              val (lo, hi) = (math.min(ra, rb), math.max(ra, rb))
-              parent(hi) = lo
-              size(lo) = size(lo) + size(hi); size.remove(hi)
-              nComp -= 1L
-              if (size(lo) > largest) largest = size(lo)
-            } else if (size(ra) > largest) largest = size(ra)
+            largest = math.max(largest, uf.size(uf.union(a, b)))
+            nEdges += 1L
           }
-          (tpm, nEdges, nComp, nDocs, if (nDocs == 0L) 1L else largest)
-        }
-        out.sortBy(_._1)
+          (tpm, nEdges, uf.components, uf.nodes.size.toLong, largest)
+        }.sortBy(_._1)
       } else {
-        // distributed fallback above the bound: per-τ star-CC over
-        // the touched subgraph (the 100 TB path, value-identical).
-        // Each per-τ subgraph still passes DriverCcMaxEdges down —
-        // the grids are nested, so the HIGH-τ sweeps can be far under
-        // the bound even when the τ=min base graph is far over it,
-        // and those small rounds ride clusterLabels' adaptive driver
-        // union-find instead of paying star-CC round scheduling.
+        // distributed fallback above the bound: per-τ components over
+        // the touched subgraph (the 100 TB path, value-identical). The
+        // grids are nested, so a high-τ subgraph can fall under
+        // DriverCcMaxEdges even when the τ=min base graph is far over
+        // it; clusterLabels then takes its driver path by itself.
         PercolationGridPm.map { tpm =>
           val pairsT = tagged.filter(col("tier") >= tpm)
             .select(col("doc_a"), col("doc_b"))
           val touched = pairsT.select(col("doc_a").as("doc_id"))
             .union(pairsT.select(col("doc_b").as("doc_id"))).distinct()
-          val sizes = clusterLabels(touched, pairsT, DriverCcMaxEdges)
+          val sizes = clusterLabels(touched, pairsT)
             .groupBy(col("cluster_id")).agg(count(lit(1)).as("n"))
           val nEdges = pairsT.count()
           val s = sizes.agg(

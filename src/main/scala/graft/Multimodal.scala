@@ -450,14 +450,7 @@ object Multimodal {
     val docs = Tables.documents(spark, d)
       .filter(length(col("text")) - 64L >= AHashBlocks.toLong)
       .select(col("doc_id"))
-    // runtime-bounded driver union-find below DriverCcMaxEdges edges
-    // (r14): the aHash pair graph is tiny relative to the corpus (67
-    // edges at sf0.1), and the distributed star loop's per-round
-    // persist+count driver barriers were the bulk of this query's time
-    // (~3 s of 3.8 measured). Above the bound it falls back to the
-    // same star-CC loop; NewOpsRound9hSpec pins the two paths
-    // label-identical.
-    val lbl = Dedup.clusterLabels(docs, pairs, Dedup.DriverCcMaxEdges)
+    val lbl = Dedup.clusterLabels(docs, pairs)
     val sizes = lbl.groupBy(col("cluster_id"))
       .agg(count(lit(1)).as("n_docs")).filter(col("n_docs") >= 2)
     // both endpoints share the cluster by construction — label via doc_a

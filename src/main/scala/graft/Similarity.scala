@@ -115,7 +115,8 @@ object Similarity {
     * exact-cosine ranking on candidates must agree with brute force,
     * with measured recall ≥ 0.6 at nlist=16/nprobe=4 on the test
     * corpus, and a second invocation runs zero KMeans iterations. */
-  def ivfTopK(spark: SparkSession, d: String, nlist: Int = 16, nprobe: Int = 4): DataFrame = {
+  def ivfTopK(spark: SparkSession, d: String, nprobe: Int = 4): DataFrame = {
+    val nlist = 16
     val (centroids, indexed) = IvfIndex.buildOrLoad(spark, d, nlist)
     val centDf = broadcast(spark.createDataFrame(centroids).toDF("cell", "cm"))
     val q = indexed.filter(col("vec_id") < 10)
@@ -151,7 +152,8 @@ object Similarity {
     * are small integers carried in doubles, so every product and sum is
     * EXACT — the coarse scores, the tie-breaks, and therefore the
     * candidate sets match the DuckDB oracle bit-for-bit (q48). */
-  def int8TopK(spark: SparkSession, d: String, coarseK: Int = 20): DataFrame = {
+  def int8TopK(spark: SparkSession, d: String): DataFrame = {
+    val coarseK = 20
     val maxabs = array_max(transform(col("v"), x => abs(x)))
     val quant = transform(col("v"), x =>
       when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
@@ -192,7 +194,8 @@ object Similarity {
     * Learned codebooks are not SQL-oracle-expressible (like q33):
     * rows-only check + DedupSpec (re-rank agreement with brute force,
     * measured recall, zero KMeans fits on the second invocation). */
-  def pqTopK(spark: SparkSession, d: String, coarseK: Int = 50): DataFrame = {
+  def pqTopK(spark: SparkSession, d: String): DataFrame = {
+    val coarseK = 50
     import org.apache.spark.sql.expressions.Window
     val (books, codes) = PqIndex.buildOrLoad(spark, d)
     val bookDf = broadcast(spark.createDataFrame(books).toDF("s", "c", "cm"))
@@ -2269,8 +2272,8 @@ object Similarity {
   /** q336: MUTUAL-NN COMPONENT AUDIT — does the high-precision pair
     * graph (q172's reciprocal nearest neighbors) organize into
     * label-coherent clusters or stay dust? Connected components over
-    * the mutual-NN edges (the q49 star-CC machinery with the same
-    * driver fast-path bound), then per label: corpus size, how many
+    * the mutual-NN edges (the q49 components routine, driver or
+    * star by edge count), then per label: corpus size, how many
     * vectors participate in ANY mutual pair, the component count and
     * the largest component's member count among that label's paired
     * vectors, and the isolated share. A label whose vectors are
@@ -2291,8 +2294,7 @@ object Similarity {
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val vecs = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("label")).filter(col("label").isNotNull)
-    val lbl = Dedup.clusterLabels(
-      vecs.select(col("vec_id").as("doc_id")), pairs, Dedup.DriverCcMaxEdges)
+    val lbl = Dedup.clusterLabels(vecs.select(col("vec_id").as("doc_id")), pairs)
     val paired = pairs
       .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
       .distinct().withColumn("in_pair", lit(1L))

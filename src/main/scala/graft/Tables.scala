@@ -50,10 +50,6 @@ object Tables {
   def eventsNs(spark: SparkSession, d: String): DataFrame =
     normalizeTsNs(spark.read.parquet(s"$d/events.parquet"))
 
-  /** The type dispatch above, reusable for ANY events relation —
-    * including streaming readers (`readStream.schema(raw).parquet(...)`),
-    * which must apply the same normalization so stream ≡ batch holds
-    * whatever vintage the files are. */
   /** One plausibility probe per distinct BIGINT-ts relation per JVM:
     * a BIGINT column holding epoch-MICROS (or millis) would pass the
     * type dispatch and silently misread 1000×, so the first use pays
@@ -82,6 +78,10 @@ object Tables {
     }
   }
 
+  /** The type dispatch of `eventsNs`, reusable for ANY events relation —
+    * including streaming readers (`readStream.schema(raw).parquet(...)`),
+    * which must apply the same normalization so stream ≡ batch holds
+    * whatever vintage the files are. */
   def normalizeTsNs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, unix_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}

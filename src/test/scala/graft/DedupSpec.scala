@@ -250,8 +250,31 @@ class DedupSpec extends SparkSpec {
       assert(r.getLong(1) == 0L, s"doc ${r.getLong(0)} not labeled 0")
       assert(r.getLong(2) == n + 1)
     }
-    assert(Dedup.lastClusterRounds <= 15,
+    // 400 edges take clusterLabels' driver path; the round bound is a
+    // property of the star rounds, so run them directly
+    val star = Dedup.starLabels(docs, pairs).collect()
+    assert(star.length == n + 1 && star.forall(_.getLong(1) == 0L))
+    assert(Dedup.lastClusterRounds >= 1 && Dedup.lastClusterRounds <= 15,
       s"${Dedup.lastClusterRounds} rounds on a diameter-$n chain — not logarithmic")
+  }
+
+  test("clusterLabels takes the driver path at DriverCcMaxEdges edges and the star rounds above") {
+    // a perfect matching {2i, 2i+1} plus two singletons: every label is
+    // the pair's even member, a singleton labels itself
+    val bound = Dedup.DriverCcMaxEdges
+    Seq(bound -> true, (bound + 1) -> false).foreach { case (m, driver) =>
+      val pairs = spark.range(m)
+        .select((col("id") * 2).as("doc_a"), (col("id") * 2 + 1).as("doc_b"))
+      val docs = spark.range(2 * m + 2).select(col("id").as("doc_id"))
+      val labels = Dedup.clusterLabels(docs, pairs)
+      val rounds = Dedup.lastClusterRounds
+      if (driver) assert(rounds == 0, s"$m edges: $rounds star rounds, expected the driver path")
+      else assert(rounds >= 1, s"$m edges: no star round ran")
+      val expected = when(col("doc_id") < 2 * m, col("doc_id") - col("doc_id") % 2)
+        .otherwise(col("doc_id"))
+      assert(labels.count() == 2 * m + 2)
+      assert(labels.filter(col("cluster_id") =!= expected).isEmpty, s"$m edges: wrong labels")
+    }
   }
 
   test("decontamination flags exactly the docs sharing a 4-gram with the eval set") {

@@ -2,7 +2,8 @@ package graft
 
 /** Property-style tests for the connected-components family: on RANDOM
   * (seeded, reproducible) graphs, the distributed star-contraction
-  * result must equal a local union-find, and the incremental label
+  * result and `clusterLabels` (which takes its driver path on graphs
+  * this small) must equal a local union-find, and the incremental label
   * update must equal clustering from scratch — the broad-case
   * guarantee the example-based specs can't give. Case counts are
   * bounded: each case is a full Spark job round-trip. */
@@ -37,9 +38,11 @@ class GraphPropertySpec extends SparkSpec {
       val docs = (0L until n).toDF("doc_id")
       val pairs = (if (edges.isEmpty) Seq((0L, 0L)) else edges) // self-loop is filtered inside
         .toDF("doc_a", "doc_b")
-      val got = Dedup.nearDupClustersDf(docs, pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == unionFind(n, edges), s"n=$n edges=$edges")
+      val expected = unionFind(n, edges)
+      Seq(Dedup.starLabels(docs, pairs), Dedup.clusterLabels(docs, pairs)).foreach { df =>
+        val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        assert(got == expected, s"n=$n edges=$edges")
+      }
     }
   }
 

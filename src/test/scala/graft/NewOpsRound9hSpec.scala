@@ -11,6 +11,23 @@ class NewOpsRound9hSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.01"
   private val P = 1000000007L
 
+  /** Union-find (union-by-min) over `ids`: each id's component min. */
+  private def unionFind(ids: Seq[Long], pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    pairs.foreach { case (a, b) =>
+      val ra = find(a); val rb = find(b)
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.map(i => i -> find(i)).toMap
+  }
+
   test("q266 percolation curve ≡ local minhash/union-find model") {
     def ph(s: String): Long =
       s.foldLeft(0L)((acc, c) => (acc * 131L + c.toLong) % P)
@@ -48,19 +65,8 @@ class NewOpsRound9hSpec extends SparkSpec {
     val exp = Dedup.PercolationGridPm.map { tpm =>
       val pairs = pcs.filter { case (_, _, cm, un) => 1000L * cm >= tpm * un }
       // union-find over all docs
-      val parent = scala.collection.mutable.Map(allIds.map(i => i -> i): _*)
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      pairs.foreach { case (a, b, _, _) =>
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val sizes = allIds.groupBy(find).map(_._2.length.toLong)
+      val label = unionFind(allIds.toSeq, pairs.map(p => (p._1, p._2)))
+      val sizes = allIds.groupBy(label).map(_._2.length.toLong)
       (tpm, pairs.size.toLong,
         sizes.count(_ >= 2).toLong,
         sizes.filter(_ >= 2).sum,
@@ -80,17 +86,21 @@ class NewOpsRound9hSpec extends SparkSpec {
   }
 
   test("clusterLabels adaptive driver fast-path ≡ distributed star-CC") {
-    // the same verified pair graph through both execution paths —
-    // the q266 sweep (and any future small-graph consumer) rides the
-    // driver union-find; the 100 TB path must produce the identical
-    // labeling
+    // the verified pair graph is far under DriverCcMaxEdges, so
+    // clusterLabels takes the driver union-find; starLabels runs the
+    // 100 TB path on the same graph
     val docs = spark.read.parquet(s"$d/documents.parquet").select("doc_id")
     val pairs = Dedup.minhashNearDup(spark, d).select("doc_a", "doc_b")
-    val distributed = Dedup.clusterLabels(docs, pairs).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    val driver = Dedup.clusterLabels(docs, pairs, Dedup.DriverCcMaxEdges)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(driver == distributed)
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val driver = labels(Dedup.clusterLabels(docs, pairs))
+    assert(Dedup.lastClusterRounds == 0, "the small graph must take the driver path")
+    val distributed = labels(Dedup.starLabels(docs, pairs))
+    assert(Dedup.lastClusterRounds >= 1)
+    val expected = unionFind(docs.collect().map(_.getLong(0)).toSeq,
+      pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq)
+    assert(driver == expected)
+    assert(distributed == expected)
     assert(driver.exists { case (id, cid) => id != cid },
       "the pinned graph must actually merge something")
   }
