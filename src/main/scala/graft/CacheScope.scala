@@ -19,8 +19,8 @@ import org.apache.spark.sql.DataFrame
   * (counts, driver collects) leave its caches in place.
   *
   * Who opens a scope: `pipeline.Runner` around each stage's `run`,
-  * `SaltedIndex.ensureBuilt` around each build, the streaming sinks
-  * around each micro-batch, and the specs around each test. Outside
+  * `SaltedIndex.ensureBuilt` around each build, q290 around each grid
+  * point it runs concurrently, and the specs around each test. Outside
   * any scope `cached` only persists and the caller releases, as Bench,
   * Verify, `tools.Explain` and the benchmark harness do with one
   * `clearCache()` per query.

@@ -709,9 +709,8 @@ object Curation {
     scrubCut(events).orderBy(col("event_id"))
 
   /** The stateless scrub core (no presentation sort): pure per-row
-    * regex columns, so it runs UNCHANGED on a streaming DataFrame —
-    * the ingest-time redaction deployment (CurateStreamSpec pins
-    * stream ≡ batch). */
+    * regex columns, so it runs UNCHANGED on a streaming DataFrame
+    * (CurationSpec pins stream ≡ batch on a memory stream). */
   private[graft] def scrubCut(events: DataFrame): DataFrame =
     events.select(col("event_id"), col("event_type"), col("props"))
       .withColumn("s1", regexp_replace(col("props"), PiiEmailRe, "<EMAIL>"))

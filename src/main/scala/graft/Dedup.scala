@@ -75,9 +75,9 @@ object Dedup {
 
   /** jaccard = |∩| / (|A| + |B| − |∩|), thresholded — the ONE
     * definition of the dedup family's similarity formula (q22/q46/q23,
-    * ingest dedup, the streaming funnel). `common` carries (doc_a,
-    * doc_b, cm); the size relations are (doc_id, sz) — ONE ROW PER
-    * DOCUMENT, i.e. corpus-cardinality, so they must NOT carry a
+    * ingest dedup). `common` carries (doc_a, doc_b, cm); the size
+    * relations are (doc_id, sz) — ONE ROW PER DOCUMENT, i.e.
+    * corpus-cardinality, so they must NOT carry a
     * forced broadcast() hint (an instruction, not a hint: at 100 TB
     * it would OOM the driver). Plain equi-joins on the doc key let
     * AQE broadcast at runtime exactly when the relation is genuinely
@@ -651,7 +651,7 @@ object Dedup {
     * cluster" needs components, not pairs (A~B, B~C must collapse to
     * one cluster even when A~C was never emitted). Returns
     * (doc_id, cluster_id) alone, no size/order epilogue, for callers
-    * that only need the mapping (incrementalClusters' remap).
+    * that only need the mapping (q49's persisted labels, q250, q336).
     *
     * The deduped edge count picks the path: at or under
     * `DriverCcMaxEdges` the edges are collected (the count bounds the
@@ -821,57 +821,6 @@ object Dedup {
 
     private def add(x: Long): Unit =
       if (!parent.contains(x)) { parent(x) = x; sizes(x) = 1L }
-  }
-
-  /** Incremental cluster maintenance — the ingest-time companion of
-    * `nearDupClustersDf`: a standing corpus already carries component
-    * labels; a batch arrives with new documents and newly-discovered
-    * near-dup edges (batch↔batch, batch↔corpus, or late corpus↔corpus
-    * pairs). Recomputing components from scratch rescans the corpus;
-    * this updates ONLY what the new edges touch.
-    *
-    * Correctness rests on contraction: an existing component is
-    * internally connected, so for connectivity it can collapse to its
-    * label node. Each new edge maps its endpoints to their current
-    * labels (new docs label themselves), components run on that
-    * contracted label graph — bounded by the new edges, independent of
-    * corpus size — and the resulting label→label remap (small, by the
-    * batch≪corpus assumption: broadcast) rewrites the standing labels
-    * in one map-side join. Untouched components never shuffle. Labels
-    * stay "min doc_id of the component": a contracted node IS the min
-    * of its old component, and `clusterLabels` takes the min over
-    * contracted nodes. Equivalence with from-scratch clustering on the
-    * unioned graph is pinned in DedupSpec (including the
-    * two-old-components merge case).
-    *
-    * `labels`: (doc_id, cluster_id) standing assignment;
-    * `newDocs`: (doc_id) arriving batch (e.g. q56's survivors);
-    * `newPairs`: (doc_a, doc_b) newly-discovered edges. */
-  def incrementalClusters(labels: DataFrame, newDocs: DataFrame,
-      newPairs: DataFrame): DataFrame = {
-    val all = labels.select(col("doc_id"), col("cluster_id"))
-      .union(newDocs.select(col("doc_id"), col("doc_id").as("cluster_id")))
-    // contract: each edge endpoint → its current label
-    val contracted = newPairs.select(col("doc_a"), col("doc_b"))
-      .join(all.select(col("doc_id").as("doc_a"), col("cluster_id").as("ca")), "doc_a")
-      .join(all.select(col("doc_id").as("doc_b"), col("cluster_id").as("cb")), "doc_b")
-      .select(col("ca").as("doc_a"), col("cb").as("doc_b"))
-      .filter(col("doc_a") =!= col("doc_b"))
-    val touched = contracted.select(col("doc_a").as("doc_id"))
-      .union(contracted.select(col("doc_b").as("doc_id"))).distinct()
-    // components of the contracted graph only — its output maps an old
-    // label to the merged component's label (labels alone: the size
-    // epilogue would be discarded work here)
-    val remap = clusterLabels(touched, contracted)
-      .select(col("doc_id").as("cluster_id"), col("cluster_id").as("merged"))
-    // referenced by both the size agg and the final join — cached so the
-    // standing-label scan + remap join runs once, released when the
-    // caller's scope ends
-    val updated = CacheScope.cached(
-      all.join(broadcast(remap), Seq("cluster_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("merged"), col("cluster_id")).as("cluster_id")))
-    withSizes(updated)
   }
 
   /** Eval-set decontamination: flag corpus documents sharing any
@@ -1201,9 +1150,7 @@ object Dedup {
     * ONLY compared to the corpus (never to itself — within-batch dups
     * are the upstream exact/near-dup stages' job), the operator is
     * embarrassingly parallel across batches: any partition of the
-    * arriving docs into micro-batches yields the same union of
-    * survivors, which is what makes the STREAMING twin (DocStream
-    * foreachBatch) trivially ≡ batch (DocStreamSpec). */
+    * arriving docs into batches yields the same union of survivors. */
   private[graft] def ingestDedupDf(fresh: DataFrame, spark: SparkSession,
       d: String): DataFrame = {
     val (corpusKeys, corpusSets, corpusBands) = DedupIndex.buildOrLoad(spark, d)
@@ -1211,7 +1158,7 @@ object Dedup {
     val s1 = fresh.join(corpusKeys, lower(fresh("text")) === col("k"), "left_anti")
     // 2. near-dup vs corpus: batch-side signatures only; read by the
     // band probe and the verify join; released when the caller's
-    // scope ends (a streaming sink's per-batch scope)
+    // scope ends
     val newSets = CacheScope.cached(fresh
       .select(col("doc_id"), shingleHashSet(col("text"), NearDupShingleN).as("hs"))
       .filter(size(col("hs")) > 0)
@@ -1812,10 +1759,10 @@ object Dedup {
     * stop-shingle argument). 2 one-row aggregates folded on the
     * driver (bounded collects). Output is |grid| = 3 rows. */
   def shingleSizeAblation(spark: SparkSession, d: String): DataFrame = {
-    // Each grid point is one CacheScope on its pool thread: the kernel
-    // shingle relation and the df relation are cached across the
-    // point's TWO internal actions (df stats, pair stats) and released
-    // when the point finishes or fails.
+    // Each grid point is one CacheScope on its pool thread
+    // (`concurrentPoints`): the kernel shingle relation and the df
+    // relation are cached across the point's TWO internal actions (df
+    // stats, pair stats) and released when the point finishes or fails.
     //
     // The grid points are INDEPENDENT (each reads only the corpus and
     // its own persists), so they run as concurrent driver-submitted
@@ -1826,7 +1773,7 @@ object Dedup {
     // back-fill the tail. |grid| = 3 bounds both the thread pool and
     // the peak persist footprint (3 shingle relations ≤ 3× the n=8
     // one the sequential form already held).
-    def gridPoint(n: Int): (Long, Long, Long, Long, Long, Long) = CacheScope.scope {
+    def gridPoint(n: Int): (Long, Long, Long, Long, Long, Long) = {
       val g = CacheScope.cached(Tables.documentsDist(spark, d)
         .select(col("doc_id"), col("source"),
           explode(graft.functions.GraftFunctions.shingleHashes(
@@ -1859,20 +1806,49 @@ object Dedup {
       (n.toLong, dfStats.getLong(0), dfStats.getLong(1), within, cross,
         if (within + cross == 0L) 0L else 1000L * cross / (within + cross))
     }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(AblationNs.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    val rows =
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(
-          AblationNs.map(n => scala.concurrent.Future(gridPoint(n)))),
-        scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
+    val rows = concurrentPoints(spark, AblationNs.map(n => () => gridPoint(n)))
     val s = spark
     import s.implicits._
     rows.toDF("n", "grams_distinct", "grams_dropped", "pairs_within",
         "pairs_cross", "cross_share_pm")
       .orderBy(col("n"))
+  }
+
+  /** Run `points` concurrently, one pool thread and one `CacheScope`
+    * each, every Spark job of the call under one job group. The first
+    * failure cancels the group's active and future jobs, interrupts
+    * the siblings (`shutdownNow`) and waits for their threads to exit,
+    * so when the call rethrows that failure no sibling job runs on and
+    * every sibling's scope has released its caches (DedupSpec plants a
+    * failing point). Results come back in `points` order. */
+  private[graft] def concurrentPoints[T](spark: SparkSession,
+      points: Seq[() => T]): Seq[T] = {
+    import java.util.concurrent.{Callable, ExecutionException,
+      ExecutorCompletionService, Executors, TimeUnit}
+    val sc = spark.sparkContext
+    val group = s"graft-points-${java.util.UUID.randomUUID}"
+    val pool = Executors.newFixedThreadPool(points.size)
+    val done = new ExecutorCompletionService[T](pool)
+    val futures = points.map(p => done.submit(new Callable[T] {
+      def call(): T = {
+        sc.setJobGroup(group, group, interruptOnCancel = true)
+        CacheScope.scope(p())
+      }
+    }))
+    try {
+      // in completion order, so the first failure surfaces at once
+      points.foreach(_ => done.take().get())
+      futures.map(_.get())
+    } catch {
+      case e: Throwable =>
+        sc.cancelJobGroupAndFutureJobs(group)
+        pool.shutdownNow()
+        pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
+        throw (e match {
+          case x: ExecutionException if x.getCause != null => x.getCause
+          case x => x
+        })
+    } finally pool.shutdown()
   }
 
   /** q318: DUPLICATION SIZE SPECTRUM — per near-dup cluster size k

@@ -948,15 +948,13 @@ private[graft] trait QueriesDistributions {
       .orderBy(col("col_a"), col("col_b"))
   }
 
-  /** q329 liveness window width (ns): the volumeMonitor deployment
-    * window — 10 minutes. */
+  /** q329 liveness window width (ns) — 10 minutes. */
   val LivenessWinNs = 600L * 1000000000L
 
-  /** q329: FEED-LIVENESS AUDIT — the batch operator the q305-family
-    * stream monitor CANNOT be (EventStream.volumeMonitor's documented
-    * blind spot): a completely dead feed emits NO rows, so deadness
-    * is only detectable by joining observed windows against the
-    * EXPECTED window spine. Build the full (event_type × 10-minute
+  /** q329: FEED-LIVENESS AUDIT — what a per-window volume monitor
+    * (q305's family) cannot see: a completely dead feed emits NO
+    * rows, so deadness is only detectable by joining observed windows
+    * against the EXPECTED window spine. Build the full (event_type × 10-minute
     * window) grid over the observed time range, left-join the
     * observed counts, and report per type the dead-window count,
     * dead share, and the LONGEST dead streak (gaps-and-islands via
@@ -1455,12 +1453,9 @@ private[graft] trait QueriesDistributions {
     * Reported per type: the late share, the worst lateness, and the
     * P99 WATERMARK — the smallest whole-minute delay that would have
     * admitted ≥ 99% of events (smallest bucket with 100·cum ≥ 99·n
-    * over the minute-bucket histogram). This is the measurement that
-    * JUSTIFIES the `withWatermark` delays hard-coded in
-    * streaming/DocStream and EventStream: a watermark below P99
-    * silently drops the tail, one far above it bloats state — the
-    * number every Structured Streaming deployment needs and almost
-    * none measures.
+    * over the minute-bucket histogram). This is the measurement a
+    * streaming watermark delay should rest on: a watermark below P99
+    * silently drops the tail, one far above it bloats state.
     *
     * Shape at 100 TB: one events scan → per-type running-max window
     * (keyed by event_type, never global) → minute-bucket histogram

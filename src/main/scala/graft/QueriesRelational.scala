@@ -449,9 +449,7 @@ private[graft] trait QueriesRelational {
     * gap is >= 30 min (interval-overlap semantics: [t, t+gap) windows
     * merge only while they overlap); session end = last event + gap.
     * Bounds emitted as exact epoch-micros longs so the gaps-and-islands
-    * oracle hash-matches. One shuffle on user_id; the same expression
-    * runs under `writeStream` with a watermark for streaming session
-    * analytics. */
+    * oracle hash-matches. One shuffle on user_id. */
   def sessionWindows(spark: SparkSession, d: String): DataFrame =
     eventsNs(spark, d)
       .select(col("user_id"), timestamp_micros(expr("ts div 1000")).as("mts"))

@@ -490,19 +490,24 @@ object Similarity {
     * Shape at 100 TB: both input paths are candidate-blocked
     * (bucket / coarse-rank); fusion itself is a union of two Q·5-row
     * relations, one (q, neighbor)-keyed agg, one bounded top-k. */
-  def rrfFusion(spark: SparkSession, d: String): DataFrame = {
+  def rrfFusion(spark: SparkSession, d: String): DataFrame =
+    rrfTop5(lshTopK(spark, d), int8TopK(spark, d))
+
+  /** Reciprocal-rank fusion of (q_id, neighbor_id, rank ∈ 1..5)
+    * channels — q251's and q265's: each channel votes
+    * `RrfDiscounts(rank)` for its neighbor, votes sum per (q,
+    * neighbor), and the fused top-5 re-ranks by (rrf desc, id).
+    * Returns (q_id, rank, neighbor_id, rrf_micro, n_paths). */
+  private def rrfTop5(channels: DataFrame*): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val disc = RrfDiscounts
-    def votes(df: DataFrame): DataFrame =
-      df.select(col("q_id"), col("neighbor_id"),
-        element_at(lit(disc.toArray), col("rank").cast("int")).as("v"))
-    val fused = votes(lshTopK(spark, d))
-      .unionAll(votes(int8TopK(spark, d)))
-      .groupBy(col("q_id"), col("neighbor_id"))
-      .agg(sum(col("v")).as("rrf_micro"), count(lit(1)).as("n_paths"))
+    val votes = channels.map(_.select(col("q_id"), col("neighbor_id"),
+      element_at(lit(RrfDiscounts.toArray), col("rank").cast("int")).as("v")))
     val w = Window.partitionBy(col("q_id"))
       .orderBy(col("rrf_micro").desc, col("neighbor_id"))
-    fused.withColumn("rank", row_number().over(w))
+    votes.reduce(_ unionAll _)
+      .groupBy(col("q_id"), col("neighbor_id"))
+      .agg(sum(col("v")).as("rrf_micro"), count(lit(1)).as("n_paths"))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= 5)
       .select(col("q_id"), col("rank").cast("long").as("rank"),
         col("neighbor_id"), col("rrf_micro"), col("n_paths"))
@@ -1190,6 +1195,15 @@ object Similarity {
     * recurrence is an exact integer program any engine replays. */
   val PowerRounds = 8
 
+  /** G·v in exact BigInt arithmetic for a d×d Gram `g` (row-major
+    * longs) — the matvec of [[powerIterate]] and [[deflatedIterate]]. */
+  private def matVec(g: Array[Long], dim: Int, v: Array[BigInt]): Array[BigInt] =
+    Array.tabulate(dim) { i =>
+      var acc = BigInt(0); var j = 0
+      while (j < dim) { acc += BigInt(g(i * dim + j)) * v(j); j += 1 }
+      acc
+    }
+
   /** The shared exact integer power iteration over a collected d×d
     * Gram (row-major longs): PowerRounds of v ← G·v with
     * sign-decomposed rescaling to max|v| = 1000, then the Rayleigh
@@ -1197,21 +1211,15 @@ object Similarity {
     * bounded collect — shared by q240 (global) and q242 (per source). */
   private[graft] def powerIterate(g: Array[Long], dim: Int)
       : (Array[BigInt], BigInt, BigInt) = {
-    def matVec(v: Array[BigInt]): Array[BigInt] =
-      Array.tabulate(dim) { i =>
-        var acc = BigInt(0); var j = 0
-        while (j < dim) { acc += BigInt(g(i * dim + j)) * v(j); j += 1 }
-        acc
-      }
     var v = Array.fill(dim)(BigInt(1000))
     for (_ <- 1 to PowerRounds) {
-      val w = matVec(v)
+      val w = matVec(g, dim, v)
       val m = w.map(_.abs).max
       v = w.map(x =>
         if (x.signum >= 0) (BigInt(1000) * x) / m
         else -((BigInt(1000) * -x) / m))
     }
-    val gv = matVec(v)
+    val gv = matVec(g, dim, v)
     val num = (0 until dim).map(i => v(i) * gv(i)).sum // vᵀGv ≥ 0 (PSD)
     val den = v.map(x => x * x).sum
     (v, num, den)
@@ -1231,12 +1239,6 @@ object Similarity {
     * engines. Returns (x, xᵀGx, xᵀx). Driver-side O(rounds·d²). */
   private[graft] def deflatedIterate(g: Array[Long], dim: Int,
       v1: Array[BigInt], den1: BigInt): (Array[BigInt], BigInt, BigInt) = {
-    def matVec(v: Array[BigInt]): Array[BigInt] =
-      Array.tabulate(dim) { i =>
-        var acc = BigInt(0); var j = 0
-        while (j < dim) { acc += BigInt(g(i * dim + j)) * v(j); j += 1 }
-        acc
-      }
     def projRescale(u: Array[BigInt]): Array[BigInt] = {
       val dot = (0 until dim).map(i => v1(i) * u(i)).sum
       val p = Array.tabulate(dim)(i => u(i) * den1 - dot * v1(i))
@@ -1246,8 +1248,8 @@ object Similarity {
         else -((BigInt(1000) * -x) / m))
     }
     var x = projRescale(Array.fill(dim)(BigInt(1000)))
-    for (_ <- 1 to PowerRounds) x = projRescale(matVec(x))
-    val gx = matVec(x)
+    for (_ <- 1 to PowerRounds) x = projRescale(matVec(g, dim, x))
+    val gx = matVec(g, dim, x)
     val num = (0 until dim).map(i => x(i) * gx(i)).sum
     val den = x.map(t => t * t).sum
     (x, num, den)
@@ -1607,24 +1609,8 @@ object Similarity {
       .withColumn("jac", col("cm") / (col("qsz") + col("dsz") - col("cm")))
       .withColumn("rnk", row_number().over(lexw))
       .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("doc_id").as("neighbor_id"), col("rnk"))
-    val dense = bruteForceTopK(spark, d)
-      .select(col("q_id"), col("neighbor_id"), col("rank").as("rnk"))
-    val disc = RrfDiscounts
-    def votes(df: DataFrame): DataFrame =
-      df.withColumn("v",
-        element_at(array(disc.map(lit): _*), col("rnk").cast("int")))
-        .select(col("q_id"), col("neighbor_id"), col("v"))
-    val fused = votes(lex).unionAll(votes(dense))
-      .groupBy(col("q_id"), col("neighbor_id"))
-      .agg(sum(col("v")).as("rrf_micro"), count(lit(1)).as("n_paths"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("rrf_micro").desc, col("neighbor_id"))
-    fused.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= 5)
-      .select(col("q_id"), col("rank"), col("neighbor_id"),
-        col("rrf_micro"), col("n_paths"))
-      .orderBy(col("q_id"), col("rank"))
+      .select(col("q_id"), col("doc_id").as("neighbor_id"), col("rnk").as("rank"))
+    rrfTop5(lex, bruteForceTopK(spark, d))
   }
 
   /** Fidelity floor for q269's "degraded vector" count: squared cosine

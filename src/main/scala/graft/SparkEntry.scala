@@ -155,8 +155,7 @@ object SparkEntry {
     "q70_grouping_sets" -> (Queries.ordersGroupingSets _),
     // correlated scalar subqueries, executed via Catalyst decorrelation
     "q71_above_cust_avg" -> (Queries.ordersAboveCustAvg _),
-    // row-level interval join (bucket-blocked); batch twin of the
-    // stream-stream attribution join (EventStreamSpec: stream ≡ batch)
+    // row-level interval join (bucket-blocked)
     "q72_interval_pairs" -> (operators.TemporalJoins.intervalPairs _),
     // ranking suite: ntile deciles + percent_rank + lead/lag
     "q73_customer_deciles" -> (Queries.customerDeciles _),
@@ -171,8 +170,7 @@ object SparkEntry {
     "q77_json_roundtrip" -> (Queries.jsonRoundTrip _),
     // posexplode generator (lateral-view unnest with ordinality)
     "q78_token_positions" -> (Queries.tokenPositions _),
-    // CDC apply: latest-wins collapse + upsert + delete anti-join;
-    // the batch twin of the streaming upsertSink (MergeUpsertSpec)
+    // CDC apply: latest-wins collapse + upsert + delete anti-join
     "q79_cdc_apply" -> (operators.MergeUpsert.cdcOrders _),
     // blocked fuzzy pairing with exact levenshtein verify
     "q80_fuzzy_pairs" -> (TextAnalysis.fuzzyPairs _),

@@ -55,8 +55,7 @@ object Tables {
     * type dispatch and silently misread 1000×, so the first use pays
     * one min/max aggregate and asserts the range reads as epoch-nanos.
     * 1e17 ns ≈ 1973 while 1e17 µs ≈ year 5138 — an unambiguous
-    * discriminator for any real event log. Streaming relations can't
-    * run the probe (no batch action) and trust the contract. */
+    * discriminator for any real event log. */
   private val tsProbed =
     java.util.Collections.newSetFromMap(
       new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]())
@@ -78,16 +77,15 @@ object Tables {
     }
   }
 
-  /** The type dispatch of `eventsNs`, reusable for ANY events relation —
-    * including streaming readers (`readStream.schema(raw).parquet(...)`),
-    * which must apply the same normalization so stream ≡ batch holds
-    * whatever vintage the files are. */
+  /** The type dispatch of `eventsNs`, reusable for ANY events relation,
+    * so every reader applies the same normalization whatever vintage
+    * the files are. */
   def normalizeTsNs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, unix_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {
       case LongType =>
-        if (!df.isStreaming) assertPlausibleNanos(df)
+        assertPlausibleNanos(df)
         df
       case TimestampType =>
         df.withColumn("ts", unix_micros(col("ts")) * 1000L)

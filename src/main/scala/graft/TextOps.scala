@@ -73,10 +73,10 @@ object TextOps {
         lit(0L), (acc, x) => (acc * 131L + x) % P))
 
   /** Canonical near-dup signature parameters — ONE definition shared by
-    * the batch operator (Dedup.minhashNearDup), the streaming candidate
-    * generator (DocStream.nearDupCandidates), their specs, and the q23
-    * oracle SQL. Parameter drift in any one site would silently
-    * desynchronize the stream ≡ batch ≡ oracle guarantees. */
+    * the near-dup operators (Dedup.minhashNearDup, the ingest dedup),
+    * their specs, and the q23 oracle SQL. Parameter drift in any one
+    * site would silently desynchronize the operator ≡ oracle
+    * guarantee. */
   val NearDupShingleN = 3
   val NearDupMinhashK = 16
   val NearDupBands = 4

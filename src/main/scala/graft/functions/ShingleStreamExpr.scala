@@ -59,15 +59,13 @@ case class ShingleStreamExpr(child: Expression, n: Int)
     copy(child = c)
 }
 
-/** Row-local winnowing fingerprint selection — the STREAMING-safe twin
-  * of the q118 window formulation: the whole MOSS selection for one
+/** Row-local winnowing fingerprint selection — the row-local twin of
+  * the q118 window formulation: the whole MOSS selection for one
   * document is a pure function of its text (shingle hashes → per-4-
   * window rightmost minimum → distinct), so it runs inside a single
-  * projection with no window operator — legal on a streaming DataFrame
-  * where multi-row windows are not. Returns
+  * projection with no window operator. Returns
   * array<struct<pos:bigint,h:bigint>> ordered by pos; DedupSpec pins
-  * exploded-expression ≡ q118 row-for-row, and DocStreamSpec runs it
-  * over a real micro-batch stream. */
+  * exploded-expression ≡ q118 row-for-row. */
 case class WinnowFpExpr(child: Expression)
     extends UnaryExpression {
   import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}

@@ -48,17 +48,6 @@ object IncrementalAgg {
     state.select(col("event_type"), col("hour"), col("n"), col("sum_micro"),
       floor(col("sum_micro") / col("n")).cast("long").as("avg_micro"))
 
-  /** Streaming ingest sink (`writeStream.foreachBatch`): aggregate
-    * each micro-batch ONCE into its partial state and persist it under
-    * `outDir/batch_<id>` — overwrite keyed by batch id makes retries
-    * idempotent (exactly-once state). Because the state is associative
-    * and order-independent, the view needs NO watermark or event-time
-    * finality: however late an event arrives, merging its batch's
-    * partial can only move the view closer to the direct answer —
-    * asserted stream ≡ batch in IncrementalAggSpec. */
-  def partialsSink(outDir: String)(batch: DataFrame, id: Long): Unit =
-    hourlyPartials(batch).write.mode("overwrite").parquet(s"$outDir/batch_$id")
-
   /** q65: the event stream split into three ingest shards, each
     * aggregated independently (ONE pass — the shard id is a partial
     * key), then merged and finalized. The oracle aggregates directly,

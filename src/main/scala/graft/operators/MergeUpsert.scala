@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.pipeline.Memo
 
 /** Keyed MERGE (upsert) — the "apply a change batch to a base table"
   * operator every incremental pipeline needs and vanilla Spark SQL
@@ -53,8 +52,7 @@ object MergeUpsert {
     * key — same shuffle the merge join needs anyway), then upserts
     * apply and deletes anti-join. The whole log need not be replayed:
     * at scale `changes` is one ingestion batch and `base` the previous
-    * snapshot, which is exactly how `upsertSink` maintains a streaming
-    * materialized table. */
+    * snapshot. */
   def applyCdc(base: DataFrame, changes: DataFrame, keys: Seq[String],
       seqCol: String, opCol: String): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
@@ -65,64 +63,6 @@ object MergeUpsert {
     val ups = latest.filter(col(opCol) === "U").drop(opCol, seqCol)
     val dels = latest.filter(col(opCol) === "D").select(keys.map(col): _*)
     applyDeletes(upsert(base, ups, keys), dels, keys)
-  }
-
-  /** foreachBatch sink: maintain a keyed table from a CDC stream with
-    * exactly-once semantics via GENERATION directories — batch N reads
-    * the newest generation `< N`, applies its changes, and writes
-    * `gen=N`. A replayed batch (failure before the checkpoint commit)
-    * re-reads the same parent and OVERWRITES its own generation —
-    * byte-identical state, no double-apply. Readers take `currentState`
-    * (max gen). Old generations are retention-pruned like any
-    * snapshot store (not done here).
-    *
-    * Usage: `stream.writeStream.foreachBatch(upsertSink(path, keys,
-    * "seq", "op") _)`. */
-  def upsertSink(statePath: String, keys: Seq[String], seqCol: String,
-      opCol: String)(batch: DataFrame, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val base = latestGen(spark, statePath, before = Some(batchId))
-      .getOrElse(batch.drop(opCol, seqCol).filter(lit(false)))
-    val dir = s"$statePath/gen=$batchId"
-    applyCdc(base, batch, keys, seqCol, opCol)
-      .write.mode("overwrite").parquet(dir)
-    // the sink commits the generation, so it marks it (an unmarked
-    // generation would make the next batch rebuild state from empty)
-    Memo.mark(spark, dir)
-  }
-
-  /** The ids of `<prefix>=<id>` children under `root` — the ONE
-    * definition of the generation/batch dir naming scheme (used by the
-    * upsert sink, the streaming funnel's state reads, and state
-    * compaction). */
-  private[graft] def listIds(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, prefix: String): Seq[Long] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith(s"$prefix=") =>
-        n.stripPrefix(s"$prefix=").toLong }
-  }
-
-  /** Newest COMPLETE generation table (optionally among gens strictly
-    * below `before`); None when no complete generation exists yet.
-    *
-    * Completeness = the `Memo` flag `upsertSink` writes once the
-    * generation's parquet job commits. A crash mid-write of `gen=N`
-    * leaves the dir without the flag: the sink's own replay heals it (the
-    * replayed batch re-reads the same complete parent and OVERWRITES
-    * gen=N), but an EXTERNAL reader arriving between the crash and the
-    * resume must not be handed the partial dir — it falls back to the
-    * newest generation that actually committed. The same gate covers
-    * the overwrite window itself (mode=overwrite deletes the marker
-    * first, so a concurrent reader skips the in-flight rewrite). */
-  def latestGen(spark: SparkSession, statePath: String,
-      before: Option[Long] = None): Option[DataFrame] = {
-    listIds(Memo.fs(spark, statePath), statePath, "gen")
-      .filter(g => before.forall(g < _))
-      .filter(g => Memo.done(spark, s"$statePath/gen=$g"))
-      .maxOption
-      .map(g => spark.read.parquet(s"$statePath/gen=$g"))
   }
 
   /** q79: CDC apply over a deterministic derived change log — three

@@ -128,10 +128,7 @@ object TemporalJoins {
   /** q72: the row-level interval join — every (click, view) pair of the
     * same user with the view in the 10 minutes up to the click. Same
     * bucket blocking as `rangeJoinAgg` (each qualifying pair meets in
-    * exactly one bucket — no dedup pass, no nested loop); inner join,
-    * so it is also the batch twin of the STREAMING stream-stream
-    * interval join (`streaming.EventStream.attribution`), asserted
-    * stream ≡ batch in EventStreamSpec. */
+    * exactly one bucket — no dedup pass, no nested loop); inner join. */
   def intervalPairs(spark: SparkSession, d: String): DataFrame = {
     val W = 600000000L // 10 min in µs
     val ev = graft.Tables.eventsNs(spark, d)

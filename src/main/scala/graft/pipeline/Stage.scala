@@ -42,11 +42,10 @@ final case class Ctx(spark: SparkSession, conf: PbConf) {
 }
 
 /** The one completion-flag protocol (O2, pb_etl/luigi/dask/target.py:
-  * 15-19,92-114), shared by pipeline stages (`Runner`), salted indexes
-  * (`graft.SaltedIndex.ensureBuilt`) and streaming generations
-  * (`MergeUpsert.upsertSink`, `CurateStream`): a unit of work is done
-  * when its dir carries a `_SUCCESS` flag, and whoever commits the unit
-  * marks it itself. */
+  * 15-19,92-114), shared by its two committers, pipeline stages
+  * (`Runner`) and salted indexes (`graft.SaltedIndex.ensureBuilt`): a
+  * unit of work is done when its dir carries a `_SUCCESS` flag, and
+  * whoever commits the unit marks it itself. */
 object Memo {
   private[graft] val Flag = "_SUCCESS"
 

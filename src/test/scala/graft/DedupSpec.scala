@@ -189,53 +189,6 @@ class DedupSpec extends SparkSpec {
     assert(got.nonEmpty, "corpus has exact dups — distance-0 pairs must exist")
   }
 
-  test("incremental cluster maintenance ≡ from-scratch on the unioned graph (synthetic merge case)") {
-    import spark.implicits._
-    // corpus components {1,2} and {3,4}, singletons 5,6; batch doc 10.
-    // New edges merge the two OLD components (2-3) and attach the new
-    // doc to a singleton (10-5) — the two update shapes that matter.
-    val corpusDocs = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")
-    val corpusPairs = Seq((1L, 2L), (3L, 4L)).toDF("doc_a", "doc_b")
-    val base = Dedup.nearDupClustersDf(corpusDocs, corpusPairs)
-      .select("doc_id", "cluster_id")
-    val newDocs = Seq(10L).toDF("doc_id")
-    val newPairs = Seq((2L, 3L), (10L, 5L)).toDF("doc_a", "doc_b")
-    val inc = Dedup.incrementalClusters(base, newDocs, newPairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val scratch = Dedup.nearDupClustersDf(
-      corpusDocs.union(newDocs), corpusPairs.union(newPairs))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(inc == scratch)
-    // the merge actually happened: {1,2}∪{3,4} share label 1
-    assert(inc.map(t => t._1 -> t._2).toMap.apply(4L) == 1L)
-  }
-
-  test("incremental cluster maintenance ≡ from-scratch on the real ingest split") {
-    // standing corpus = sources < 15 with labels from its own pair
-    // graph; the batch = q56's survivors; new edges = every near-dup
-    // pair of the union touching a new doc
-    val docs = Tables.documents(spark, d).select("doc_id", "source", "text")
-    val isNew = substring(col("source"), 4, 10).cast("int") >= 15
-    val corpusDocs = docs.filter(!isNew)
-    val survivors = Dedup.ingestDedup(spark, d).select("doc_id")
-    val unionDocs = corpusDocs.select("doc_id").union(survivors)
-    val unionTexts = docs.join(unionDocs, "doc_id").select("doc_id", "text")
-    val allPairs = Dedup.minhashNearDupDf(unionTexts)
-      .select("doc_a", "doc_b").persist()
-    val newIds = survivors.collect().map(_.getLong(0)).toSet
-    val isNewId = udf((x: Long) => newIds(x))
-    val corpusPairs = allPairs.filter(!isNewId(col("doc_a")) && !isNewId(col("doc_b")))
-    val newPairs = allPairs.filter(isNewId(col("doc_a")) || isNewId(col("doc_b")))
-    val base = Dedup.nearDupClustersDf(corpusDocs.select("doc_id"), corpusPairs)
-      .select("doc_id", "cluster_id")
-    val inc = Dedup.incrementalClusters(base, survivors, newPairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val scratch = Dedup.nearDupClustersDf(unionDocs, allPairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    allPairs.unpersist()
-    assert(inc == scratch)
-  }
-
   test("adversarial long-chain component converges in O(log n) star rounds, not diameter") {
     import spark.implicits._
     // a single path 0-1-2-…-400: diameter 400 — min-label propagation
@@ -1098,4 +1051,62 @@ class DedupSpec extends SparkSpec {
     assert(got.forall { case (id, n, e, c) =>
       !evalIds.contains(id) && evalIds.contains(e) && n >= 1 && c >= 0.4 })
   }
+
+  test("concurrentPoints: a failing point cancels its siblings' jobs and releases their caches") {
+    import org.apache.spark.JobExecutionStatus
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.storage.StorageLevel
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e.jobId)
+    }
+    val caches = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.DataFrame]()
+    // a sibling caches a relation in its scope, then runs one task that
+    // would sleep far past the failure
+    def sibling(): Long = {
+      val df = CacheScope.cached(spark.range(1).toDF("x"))
+      caches.add(df)
+      df.rdd.map { r =>
+        PlantedTasks.running.incrementAndGet()
+        try Thread.sleep(120000) finally PlantedTasks.running.decrementAndGet()
+        r
+      }.count()
+    }
+    // the planted failure: a task that throws while both siblings run
+    def failing(): Long = {
+      while (PlantedTasks.running.get < 2) Thread.sleep(10)
+      spark.range(1).rdd.map[Long](_ => throw new IllegalStateException("planted failure"))
+        .count()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val t0 = System.nanoTime()
+      val e = intercept[Exception] {
+        Dedup.concurrentPoints(spark, Seq(() => sibling(), () => failing(), () => sibling()))
+      }
+      assert(e.getMessage.contains("planted failure"))
+      assert(System.nanoTime() - t0 < 60000000000L,
+        "the call waited out its siblings' tasks instead of cancelling them")
+      assert(caches.size == 2)
+      caches.forEach(df => assert(df.storageLevel == StorageLevel.NONE,
+        "a sibling's cache outlived the call"))
+      // the status tracker follows the asynchronous listener bus, so it
+      // may trail the scheduler's cancellation by a moment; uncancelled,
+      // the sibling tasks would run for two minutes
+      eventually(timeout(30.seconds)) {
+        jobs.forEach(id => assert(!sc.statusTracker.getJobInfo(id)
+          .exists(_.status == JobExecutionStatus.RUNNING), s"job $id still running"))
+        assert(PlantedTasks.running.get == 0, "a sibling task still runs")
+      }
+    } finally sc.removeSparkListener(listener)
+  }
+}
+
+/** Task-side state of the planted concurrentPoints tasks (local mode:
+  * the tasks run in the spec's JVM). */
+private object PlantedTasks {
+  val running = new java.util.concurrent.atomic.AtomicInteger()
 }

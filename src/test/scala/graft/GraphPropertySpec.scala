@@ -3,8 +3,7 @@ package graft
 /** Property-style tests for the connected-components family: on RANDOM
   * (seeded, reproducible) graphs, the distributed star-contraction
   * result and `clusterLabels` (which takes its driver path on graphs
-  * this small) must equal a local union-find, and the incremental label
-  * update must equal clustering from scratch — the broad-case
+  * this small) must equal a local union-find — the broad-case
   * guarantee the example-based specs can't give. Case counts are
   * bounded: each case is a full Spark job round-trip. */
 class GraphPropertySpec extends SparkSpec {
@@ -43,29 +42,6 @@ class GraphPropertySpec extends SparkSpec {
         val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         assert(got == expected, s"n=$n edges=$edges")
       }
-    }
-  }
-
-  test("incremental label update ≡ from-scratch on random graph + random new edges") {
-    import spark.implicits._
-    val rng = new scala.util.Random(7)
-    (1 to 6).foreach { _ =>
-      val n = 2L + rng.nextLong(40L)
-      val base = randomEdges(rng, n, rng.nextInt(50))
-      val extra = rng.nextLong(10L) // new docs n .. n+extra-1
-      val neu = randomEdges(rng, n + extra, 1 + rng.nextInt(25))
-      val corpusDocs = (0L until n).toDF("doc_id")
-      val basePairs = (if (base.isEmpty) Seq((0L, 0L)) else base).toDF("doc_a", "doc_b")
-      val labels = Dedup.nearDupClustersDf(corpusDocs, basePairs)
-        .select("doc_id", "cluster_id")
-      val newDocs = (n until n + extra).toDF("doc_id")
-      val newPairs = (if (neu.isEmpty) Seq((0L, 0L)) else neu).toDF("doc_a", "doc_b")
-      val inc = Dedup.incrementalClusters(labels, newDocs, newPairs).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      val scratch = Dedup.nearDupClustersDf(
-        corpusDocs.union(newDocs), basePairs.union(newPairs)).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1).toSeq
-      assert(inc == scratch, s"n=$n extra=$extra base=$base neu=$neu")
     }
   }
 }

@@ -6,8 +6,6 @@ import graft.operators.IncrementalAgg._
 /** Incremental view maintenance (q65): the properties that make the
   * partial-state relation a durable cross-run artifact, beyond the
   * DuckDB parity gate's merge-≡-direct check. */
-case class NsEvent(event_id: Long, ts: Long, event_type: String, value: Double)
-
 class IncrementalAggSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
@@ -43,31 +41,6 @@ class IncrementalAggSpec extends SparkSpec {
     assert(rows(nested) == rows(flat))
     val q65 = operators.IncrementalAgg.incrementalHourly(spark, d)
     assert(rows(flat) == rows(q65))
-  }
-
-  test("streaming ingest via foreachBatch partials == direct aggregation, no watermark") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val tmp = java.nio.file.Files.createTempDirectory("inc_stream").toString
-    val evs = Tables.eventsNs(spark, d)
-      .select("event_id", "ts", "event_type", "value").as[NsEvent].collect().toSeq
-    val mem = MemoryStream[NsEvent]
-    val q = mem.toDF().writeStream
-      .foreachBatch(operators.IncrementalAgg.partialsSink(tmp) _)
-      .option("checkpointLocation", s"$tmp/_ckpt").start()
-    try {
-      // deliberately out-of-order arrival: reversed thirds
-      evs.reverse.grouped(evs.size / 3 + 1).foreach { chunk =>
-        mem.addData(chunk: _*); q.processAllAvailable()
-      }
-    } finally q.stop()
-    val parts = new java.io.File(tmp).listFiles().filter(_.getName.startsWith("batch_"))
-      .map(f => spark.read.parquet(f.getPath)).toSeq
-    assert(parts.size >= 2, "expected multiple micro-batch partials")
-    val merged = finalizeStats(mergePartials(parts: _*))
-      .orderBy(col("event_type"), col("hour"))
-    assert(rows(merged) == rows(direct()))
   }
 
   test("a new batch refreshes the view by touching only its own events") {

@@ -51,69 +51,6 @@ class MergeUpsertSpec extends SparkSpec {
     assert(out == Set((1L, 12.0), (3L, 30.0), (4L, 40.0)))
   }
 
-  test("upsertSink: generation-per-batch state is exactly-once under batch replay") {
-    val dir = java.nio.file.Files.createTempDirectory("upsert_sink").toString
-    val sink = MergeUpsert.upsertSink(dir, Seq("k"), "seq", "op") _
-    val b1 = Seq((1L, Some(10.0), "U", 1L), (2L, Some(20.0), "U", 2L))
-      .toDF("k", "v", "op", "seq")
-    val b2 = Seq((1L, Some(11.0), "U", 3L), (3L, Some(30.0), "U", 4L),
-      (2L, Option.empty[Double], "D", 5L)).toDF("k", "v", "op", "seq")
-    sink(b1, 0L)
-    sink(b2, 1L)
-    def state() = MergeUpsert.latestGen(spark, dir).get
-      .as[(Long, Double)].collect().toSet
-    val want = Set((1L, 11.0), (3L, 30.0))
-    assert(state() == want)
-    // duplicate delivery of batch 1 (restart before checkpoint commit):
-    // the sink re-reads gen=0 and overwrites gen=1 — no double-apply
-    sink(b2, 1L)
-    assert(state() == want)
-    // and the maintained state equals a from-scratch CDC apply
-    val direct = MergeUpsert.applyCdc(
-      b1.drop("op", "seq").filter(lit(false)), b1.union(b2), Seq("k"), "seq", "op")
-      .as[(Long, Double)].collect().toSet
-    assert(direct == want)
-  }
-
-  test("latestGen skips a partial generation (crash mid-write, no _SUCCESS)") {
-    val dir = java.nio.file.Files.createTempDirectory("gen_partial").toString
-    val sink = MergeUpsert.upsertSink(dir, Seq("k"), "seq", "op") _
-    sink(Seq((1L, Some(10.0), "U", 1L)).toDF("k", "v", "op", "seq"), 0L)
-    // simulate a crash mid-write of gen=1: data files land, the
-    // committer's _SUCCESS marker does not
-    Seq((1L, 99.0)).toDF("k", "v").write.parquet(s"$dir/gen=1")
-    java.nio.file.Files.delete(java.nio.file.Paths.get(s"$dir/gen=1/_SUCCESS"))
-    // an external reader between the crash and the stream's resume gets
-    // the newest COMPLETE snapshot, not the torn one
-    assert(MergeUpsert.latestGen(spark, dir).get
-      .as[(Long, Double)].collect().toSet == Set((1L, 10.0)))
-    // the resumed stream replays batch 1: it reads the same complete
-    // parent (gen=0), overwrites the torn dir, and the new gen commits
-    sink(Seq((2L, Some(20.0), "U", 2L)).toDF("k", "v", "op", "seq"), 1L)
-    assert(MergeUpsert.latestGen(spark, dir).get
-      .as[(Long, Double)].collect().toSet == Set((1L, 10.0), (2L, 20.0)))
-  }
-
-  test("upsertSink maintains state from a real stream via foreachBatch") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sc = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("upsert_stream").toString
-    val mem = MemoryStream[(Long, Double, String, Long)]
-    val q = mem.toDF().toDF("k", "v", "op", "seq")
-      .writeStream
-      .foreachBatch(MergeUpsert.upsertSink(dir, Seq("k"), "seq", "op") _)
-      .start()
-    try {
-      mem.addData((1L, 1.0, "U", 1L), (2L, 2.0, "U", 2L))
-      q.processAllAvailable()
-      mem.addData((1L, 9.0, "U", 3L), (2L, 0.0, "D", 4L), (7L, 7.0, "U", 5L))
-      q.processAllAvailable()
-      val state = MergeUpsert.latestGen(spark, dir).get
-        .as[(Long, Double)].collect().toSet
-      assert(state == Set((1L, 9.0), (7L, 7.0)))
-    } finally q.stop()
-  }
-
   test("mergeOrders: row accounting and merged values at sf0.001") {
     val d = "/root/testdata/sf0.001"
     val base = Tables.orders(spark, d)
