@@ -20,7 +20,8 @@ import org.apache.spark.sql.functions._
   *    scheduling than the loop itself). The learned merge table is a
   *    persisted salted stage (content-addressed by corpus stamp +
   *    params + version, `_SUCCESS`-memoized), so any session reuses
-  *    it with ZERO relearning — asserted via `learns` in BpeSpec.
+  *    it with ZERO relearning — asserted via `SaltedIndex.builds("bpe")`
+  *    in BpeSpec.
   *  - Encoding (q117) never touches the corpus with per-row loops:
   *    each DISTINCT word is encoded once (vocab-sized mapPartitions
   *    with the merge ranks in the task closure), and the corpus joins
@@ -37,18 +38,9 @@ import org.apache.spark.sql.functions._
 object Bpe {
   import TextOps._
 
-  /** Observability for specs: merge-learn runs in this JVM. */
-  @volatile var learns: Int = 0
-
   private val Version = "0.0.1"
   val NMerges = 40
   val MaxWords = 50000
-
-  /** Content-addressed stage dir: corpus stamp + params + version. */
-  def dir(spark: SparkSession, d: String): String =
-    SaltedIndex.dir(spark, "bpe", Version, s"$d/documents.parquet",
-      Seq("corpus" -> d, "nMerges" -> NMerges.toString,
-        "maxWords" -> MaxWords.toString))
 
   /** One merge applied left-to-right, non-overlapping ("aaaa" under
     * a+a → [aa, aa]). */
@@ -92,10 +84,12 @@ object Bpe {
     merges.toSeq
   }
 
-  /** Build-once-or-load of the persisted merge table. */
+  /** Build-once-or-load of the persisted merge table, in a
+    * content-addressed dir: corpus stamp + params + version. */
   def buildOrLoad(spark: SparkSession, d: String): DataFrame = {
-    val p = dir(spark, d)
-    SaltedIndex.ensureBuilt(spark, p) {
+    val dir = SaltedIndex.build(spark, "bpe", Version, s"$d/documents.parquet",
+      Seq("corpus" -> d, "nMerges" -> NMerges.toString,
+        "maxWords" -> MaxWords.toString)) { p =>
       // THE corpus pass: one linear hash-agg; the top-MaxWords cut is
       // a TakeOrdered (per-partition heaps), deterministic by the
       // (count, word) tie-break
@@ -105,12 +99,11 @@ object Bpe {
         .orderBy(col("c").desc, col("word"))
         .limit(MaxWords)
         .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      learns += 1
       spark.createDataFrame(learnLocal(wc, NMerges))
         .toDF("rank", "lhs", "rhs", "merged", "pair_count")
         .coalesce(1).write.mode("overwrite").parquet(s"$p/merges")
     }
-    spark.read.parquet(s"$p/merges")
+    spark.read.parquet(s"$dir/merges")
   }
 
   /** q116: the learned merge table, rank-ordered. */

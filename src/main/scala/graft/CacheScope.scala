@@ -18,9 +18,10 @@ import org.apache.spark.sql.DataFrame
   * a cache. Internal actions an operator runs inside the scope
   * (counts, driver collects) leave its caches in place.
   *
-  * Who opens a scope: `pipeline.Runner` around each stage's `run`,
-  * `SaltedIndex.ensureBuilt` around each build, q290 around each grid
-  * point it runs concurrently, and the specs around each test. Outside
+  * Who opens a scope: `pipeline.Memo.commit` around each unit it
+  * writes (a stage's `run` or a salted index build), `pipeline.Runner`
+  * around each run of a stage with no output dir, q290 around each
+  * grid point it runs concurrently, and the specs around each test. Outside
   * any scope `cached` only persists and the caller releases, as Bench,
   * Verify, `tools.Explain` and the benchmark harness do with one
   * `clearCache()` per query.

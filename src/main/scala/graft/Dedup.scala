@@ -601,26 +601,21 @@ object Dedup {
     * consume the same labels (q49 itself, q152's leakage-safe split,
     * q154's canonical selection). Components run once per corpus
     * version; warm consumers read one parquet relation (zero-rebuild
-    * pinned via `clusterBuilds` in DedupSpec). The Df-in variant below
-    * stays unpersisted — it serves arbitrary survivor sets (CurateDag)
-    * and the convergence specs. */
+    * pinned via `SaltedIndex.builds("clusters")` in DedupSpec). The
+    * Df-in variant below stays unpersisted — it serves arbitrary
+    * survivor sets (CurateDag) and the convergence specs. */
   def nearDupClusters(spark: SparkSession, d: String): DataFrame = {
-    val p = SaltedIndex.dir(spark, "clusters", ClusterIdxVersion,
+    val dir = SaltedIndex.build(spark, "clusters", ClusterIdxVersion,
       s"$d/documents.parquet",
       Seq("corpus" -> d, "shingleN" -> NearDupShingleN.toString,
-        "jaccard" -> "0.5", "bands" -> s"$NearDupBands x $NearDupRows"))
-    SaltedIndex.ensureBuilt(spark, p) {
+        "jaccard" -> "0.5", "bands" -> s"$NearDupBands x $NearDupRows")) { p =>
       clusterLabels(Tables.documents(spark, d), minhashNearDup(spark, d))
         .write.mode("overwrite").parquet(s"$p/labels")
-      clusterBuilds += 1
     }
-    withSizes(spark.read.parquet(s"$p/labels"))
+    withSizes(spark.read.parquet(s"$dir/labels"))
   }
 
   private val ClusterIdxVersion = "0.0.1"
-
-  /** Observability for specs: corpus-side cluster builds this JVM ran. */
-  @volatile var clusterBuilds: Int = 0
 
   /** Observability for specs: star rounds (full LS+SS iterations) the
     * last components call took to converge; 0 on the driver path. */
@@ -1138,21 +1133,17 @@ object Dedup {
     * the persisted salted DedupIndex stage, paid once per corpus
     * version — an ingest invocation scans only the batch, computes only
     * the batch's signatures, and probes (zero corpus-side shingle work
-    * when the index is warm; asserted via `DedupIndex.builds` in
-    * DedupSpec). Both sides are blocked by band keys (the corpus never
-    * self-joins), and the exact-text pass catches sub-shingle-length
-    * docs the MinHash path can't see. */
-  def ingestDedup(spark: SparkSession, d: String): DataFrame =
-    ingestDedupDf(Tables.documentsDist(spark, d).filter(!DedupIndex.isCorpus), spark, d)
-
-  /** Batch-in variant: dedup an arriving (doc_id, lang, …, text) batch
-    * against the persisted standing-corpus index. Because the batch is
-    * ONLY compared to the corpus (never to itself — within-batch dups
-    * are the upstream exact/near-dup stages' job), the operator is
-    * embarrassingly parallel across batches: any partition of the
-    * arriving docs into batches yields the same union of survivors. */
-  private[graft] def ingestDedupDf(fresh: DataFrame, spark: SparkSession,
-      d: String): DataFrame = {
+    * when the index is warm; asserted via `SaltedIndex.builds("dedup")`
+    * in DedupSpec). Both sides are blocked by band keys (the corpus
+    * never self-joins), and the exact-text pass catches
+    * sub-shingle-length docs the MinHash path can't see. Because the
+    * batch is ONLY compared to the corpus (never to itself —
+    * within-batch dups are the upstream exact/near-dup stages' job),
+    * the operator is embarrassingly parallel across batches: any
+    * partition of the arriving docs into batches yields the same union
+    * of survivors. */
+  def ingestDedup(spark: SparkSession, d: String): DataFrame = {
+    val fresh = Tables.documentsDist(spark, d).filter(!DedupIndex.isCorpus)
     val (corpusKeys, corpusSets, corpusBands) = DedupIndex.buildOrLoad(spark, d)
     // 1. exact text match against the persisted corpus keys (anti-join)
     val s1 = fresh.join(corpusKeys, lower(fresh("text")) === col("k"), "left_anti")
@@ -1275,7 +1266,8 @@ object Dedup {
     *
     * Shape at 100 TB: the corpus side is ONE distinct chunk-hash
     * relation from the salted DedupIndex stage, paid once per corpus
-    * version (warm = zero corpus work, pinned via DedupIndex.builds);
+    * version (warm = zero corpus work, pinned via
+    * `SaltedIndex.builds("dedup")`);
     * an ingest chunk-hashes only the batch and probes with one
     * hash-equi-join. */
   def ingestChunkDedup(spark: SparkSession, d: String): DataFrame = {

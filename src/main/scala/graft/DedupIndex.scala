@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Persisted standing-corpus dedup index — the build side of
   * Dedup.ingestDedup, factored into a salted build-once stage (the
-  * IvfIndex pattern: content-addressed dir, `_SUCCESS` memo, build
-  * counter for specs).
+  * IvfIndex pattern: content-addressed dir, `_SUCCESS` memo, a build
+  * count per prefix for specs).
   *
   * Incremental ingest dedup is the steady-state operation of a real
   * 100 TB pipeline: every arriving batch must be checked against the
@@ -32,9 +32,6 @@ import org.apache.spark.sql.functions._
 object DedupIndex {
   import TextOps._
 
-  /** Observability for specs: corpus-side builds this JVM has run. */
-  @volatile var builds: Int = 0
-
   // 0.0.2: adds the distinct chunk-hash relation (q155 ingest-time
   // paragraph dedup) — the bump relocates and rebuilds old indexes
   private val Version = "0.0.2"
@@ -43,16 +40,21 @@ object DedupIndex {
     * source index < 15 is corpus, >= 15 is the arriving batch. */
   private[graft] def isCorpus = substring(col("source"), 4, 10).cast("int") < 15
 
+  private def params(d: String) =
+    Seq("corpus" -> d, "shingleN" -> NearDupShingleN.toString, "split" -> "srcIdx<15")
+
   def dir(spark: SparkSession, d: String): String =
-    SaltedIndex.dir(spark, "dedup", Version, s"$d/documents.parquet",
-      Seq("corpus" -> d, "shingleN" -> NearDupShingleN.toString,
-        "split" -> "srcIdx<15"))
+    SaltedIndex.dir(spark, "dedup", Version, s"$d/documents.parquet", params(d))
+
+  /** The index dir, built once. */
+  private def built(spark: SparkSession, d: String): String =
+    SaltedIndex.build(spark, "dedup", Version, s"$d/documents.parquet", params(d))(
+      build(spark, d, _))
 
   /** (exact keys, shingle sets, band keys) of the standing corpus —
     * built once, then loaded from the salted dir. */
   def buildOrLoad(spark: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
-    val p = dir(spark, d)
-    SaltedIndex.ensureBuilt(spark, p)(build(spark, d, p))
+    val p = built(spark, d)
     (spark.read.parquet(s"$p/keys"),
       spark.read.parquet(s"$p/sets"),
       spark.read.parquet(s"$p/bands"))
@@ -61,11 +63,8 @@ object DedupIndex {
   /** The distinct 16-token chunk hashes of the standing corpus — the
     * membership side of q155's ingest-time paragraph dedup. Same
     * salted dir, so a warm corpus version pays zero chunk work. */
-  def buildOrLoadChunks(spark: SparkSession, d: String): DataFrame = {
-    val p = dir(spark, d)
-    SaltedIndex.ensureBuilt(spark, p)(build(spark, d, p))
-    spark.read.parquet(s"$p/chunks")
-  }
+  def buildOrLoadChunks(spark: SparkSession, d: String): DataFrame =
+    spark.read.parquet(s"${built(spark, d)}/chunks")
 
   private def build(spark: SparkSession, d: String, p: String): Unit = {
     val corpus = Tables.documentsDist(spark, d).filter(isCorpus)
@@ -84,6 +83,5 @@ object DedupIndex {
     // distinct chunk membership for sub-document ingest dedup (q155)
     Dedup.chunkRows(corpus).select(col("h")).distinct()
       .write.mode("overwrite").parquet(s"$p/chunks")
-    builds += 1
   }
 }

@@ -32,11 +32,10 @@ object Graph {
     * per data version and warm consumers (q126 PageRank, q131 BFS)
     * scan one parquet relation. */
   private[graft] def tradeArcs(spark: SparkSession, d: String): DataFrame = {
-    val p = SaltedIndex.dir(spark, "tradearcs", ArcIdxVersion,
+    val dir = SaltedIndex.build(spark, "tradearcs", ArcIdxVersion,
       s"$d/lineitem.parquet",
       Seq("corpus" -> d,
-        "orders" -> SaltedIndex.stamp(spark, s"$d/orders.parquet")))
-    SaltedIndex.ensureBuilt(spark, p) {
+        "orders" -> SaltedIndex.stamp(spark, s"$d/orders.parquet"))) { p =>
       val li = Tables.lineitem(spark, d)
         .select(col("l_orderkey").as("ok"), (col("l_suppkey") * 2).as("s"))
       val os = Tables.orders(spark, d)
@@ -46,15 +45,11 @@ object Graph {
       b.select(col("s").as("src"), col("c").as("dst"))
         .union(b.select(col("c").as("src"), col("s").as("dst")))
         .write.mode("overwrite").parquet(s"$p/arcs")
-      arcBuilds += 1
     }
-    spark.read.parquet(s"$p/arcs")
+    spark.read.parquet(s"$dir/arcs")
   }
 
   private val ArcIdxVersion = "0.0.1"
-
-  /** Observability for specs: arc-extraction builds this JVM ran. */
-  @volatile var arcBuilds: Int = 0
 
   /** PageRank iterations per the fixed-round contract below. */
   val PageRankIters = 5
@@ -134,9 +129,8 @@ object Graph {
     * corpus version; every triangle/truss consumer reads one parquet
     * relation warm. */
   private[graft] def coPurchaseEdges(spark: SparkSession, d: String): DataFrame = {
-    val p = SaltedIndex.dir(spark, "copurchase", CpIdxVersion,
-      s"$d/lineitem.parquet", Seq("corpus" -> d))
-    SaltedIndex.ensureBuilt(spark, p) {
+    val dir = SaltedIndex.build(spark, "copurchase", CpIdxVersion,
+      s"$d/lineitem.parquet", Seq("corpus" -> d)) { p =>
       import org.apache.spark.sql.expressions.Window
       val items = Tables.lineitem(spark, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
@@ -148,15 +142,11 @@ object Graph {
           col("a.ok") === col("b.ok") && col("a.pk") < col("b.pk"))
         .select(col("a.pk").as("p1"), col("b.pk").as("p2")).distinct()
         .write.mode("overwrite").parquet(s"$p/edges")
-      cpBuilds += 1
     }
-    spark.read.parquet(s"$p/edges")
+    spark.read.parquet(s"$dir/edges")
   }
 
   private val CpIdxVersion = "0.0.1"
-
-  /** Observability for specs: co-purchase edge-stage builds this JVM ran. */
-  @volatile var cpBuilds: Int = 0
 
   /** Oriented triangle enumeration by ADJACENCY-ARRAY INTERSECTION —
     * the same (deg,id)-oriented triangle set the wedge join emits
@@ -946,11 +936,10 @@ object Graph {
     * size from AQE's join-strategy switch and pays a columnar build
     * for a ~6 MB re-scan. */
   private[graft] def custPartEdges(spark: SparkSession, d: String): DataFrame = {
-    val p = SaltedIndex.dir(spark, "custpart", BipIdxVersion,
+    val dir = SaltedIndex.build(spark, "custpart", BipIdxVersion,
       s"$d/lineitem.parquet",
       Seq("corpus" -> d,
-        "orders" -> SaltedIndex.stamp(spark, s"$d/orders.parquet")))
-    SaltedIndex.ensureBuilt(spark, p) {
+        "orders" -> SaltedIndex.stamp(spark, s"$d/orders.parquet"))) { p =>
       val li = Tables.lineitem(spark, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
       val os = Tables.orders(spark, d)
@@ -958,16 +947,11 @@ object Graph {
       li.join(os, col("ok") === col("ok2"))
         .select(col("c"), col("p")).distinct()
         .write.mode("overwrite").parquet(s"$p/edges")
-      bipBuilds += 1
     }
-    spark.read.parquet(s"$p/edges")
+    spark.read.parquet(s"$dir/edges")
   }
 
   private val BipIdxVersion = "0.0.1"
-
-  /** Observability for specs: customer-part edge-stage builds this
-    * JVM ran. */
-  @volatile var bipBuilds: Int = 0
 
   /** Full a→h HITS rounds (q303). Three is the contract: scores after
     * round k are exact integers bounded by (max degree)^(2k), so

@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * path, nlist, seed, version) via the same lineage-salt scheme the
   * pb-etl stages use (pipeline.Salt), memoized by a `_SUCCESS` flag, so
   * a second invocation in any session runs ZERO clustering iterations
-  * (asserted in DedupSpec via `kmeansFits`).
+  * (asserted in DedupSpec via `SaltedIndex.builds("ivf")`).
   *
   * Clustering is the DETERMINISTIC fixed-round integer Lloyd of q136
   * (Similarity.lloyd): first-nlist init, exact integer micro-unit
@@ -24,10 +24,6 @@ import org.apache.spark.sql.functions._
   * which no seeded MLlib KMeans (k-means||, float accumulation order)
   * can offer. Centroids persist in exact micro-units (array<long>). */
 object IvfIndex {
-
-  /** Observability for specs: number of clustering fits this JVM has
-    * run (name kept from the MLlim-KMeans era for spec stability). */
-  @volatile var kmeansFits: Int = 0
 
   /** Lloyd assignment rounds (see Similarity.lloyd) — part of the
     * oracle contract: q33's oracle SQL chains exactly this many. */
@@ -58,8 +54,9 @@ object IvfIndex {
   /** Content-addressed index dir (SaltedIndex): corpus file stamps +
     * nlist + version — any change relocates the index. */
   def dir(spark: SparkSession, d: String, nlist: Int): String =
-    SaltedIndex.dir(spark, "ivf", Version, s"$d/embeddings.parquet",
-      Seq("corpus" -> d, "nlist" -> nlist.toString))
+    SaltedIndex.dir(spark, "ivf", Version, s"$d/embeddings.parquet", params(d, nlist))
+
+  private def params(d: String, nlist: Int) = Seq("corpus" -> d, "nlist" -> nlist.toString)
 
   /** (micro-unit centroids, cell-assigned corpus): built once, then
     * loaded from the salted dir. The corpus is written partitioned by
@@ -67,8 +64,8 @@ object IvfIndex {
     * nprobe/nlist of the data. */
   def buildOrLoad(spark: SparkSession, d: String, nlist: Int)
       : (Seq[(Int, Array[Long])], DataFrame) = {
-    val p = dir(spark, d, nlist)
-    SaltedIndex.ensureBuilt(spark, p)(build(spark, d, nlist, p))
+    val p = SaltedIndex.build(spark, "ivf", Version, s"$d/embeddings.parquet",
+      params(d, nlist))(build(spark, d, nlist, _))
     val centroids = spark.read.parquet(s"$p/centroids")
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
@@ -80,7 +77,6 @@ object IvfIndex {
       p: String): Unit = {
     val e0 = Tables.embeddings(spark, d)
     val (cent, asg) = Similarity.lloyd(e0, nlist, Rounds)
-    kmeansFits += 1
     Similarity.withNorm(e0)
       .join(asg.select(col("vec_id"), col("cid").cast("int").as("cell")), "vec_id")
       .select(col("vec_id"), col("v"), col("nn"), col("cell"))

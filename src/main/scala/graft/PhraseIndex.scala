@@ -47,9 +47,6 @@ import org.apache.spark.sql.functions._
 object PhraseIndex {
   import TextOps._
 
-  /** Observability for specs: postings builds this JVM has run. */
-  @volatile var builds: Int = 0
-
   /** Document-frequency threshold above which a term's postings go to
     * the packed tier. 1000 keeps the driver-SF corpora (≤ ~6k docs at
     * sf0.1) split realistically — true stop terms ("the", "of") tier,
@@ -60,20 +57,18 @@ object PhraseIndex {
   private val Version = "0.0.2"
 
   def dir(spark: SparkSession, d: String): String =
-    SaltedIndex.dir(spark, "postings", Version, s"$d/documents.parquet",
-      Seq("corpus" -> d, "tok" -> "space", "hotdf" -> HotDf.toString))
+    SaltedIndex.dir(spark, "postings", Version, s"$d/documents.parquet", params(d))
+
+  private def params(d: String) = Seq("corpus" -> d, "tok" -> "space", "hotdf" -> HotDf.toString)
 
   /** (term, doc_id, pos) postings of the corpus — built once, then
     * loaded from the salted dir. pos is 0-based token position. The
     * relation is the UNION of the flat tier and the exploded packed
     * tier; Catalyst pushes a probe's term filter into both scans, so
     * the packed-tier explode is df-bounded per probed term. */
-  def buildOrLoad(spark: SparkSession, d: String): DataFrame = {
-    val p = dir(spark, d)
-    SaltedIndex.ensureBuilt(spark, p)(
-      buildInto(spark, Tables.documentsDist(spark, d), p, HotDf))
-    postingsAt(spark, p)
-  }
+  def buildOrLoad(spark: SparkSession, d: String): DataFrame =
+    postingsAt(spark, SaltedIndex.build(spark, "postings", Version, s"$d/documents.parquet",
+      params(d))(buildInto(spark, Tables.documentsDist(spark, d), _, HotDf)))
 
   private[graft] def postingsAt(spark: SparkSession, p: String): DataFrame = {
     // explicit schemas: a tier can be EMPTY (no hot terms at small SFs
@@ -121,6 +116,5 @@ object PhraseIndex {
       .repartition(col("term"))
       .sortWithinPartitions(col("term"), col("doc_id"))
       .write.mode("overwrite").parquet(s"$p/postings_hot")
-    builds += 1
   }
 }

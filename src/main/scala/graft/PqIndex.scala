@@ -18,7 +18,8 @@ import org.apache.spark.sql.functions._
   * a content-addressed salted stage paid once: the directory key covers
   * the corpus file stamps, (m, ksub, seed), and the index version, and
   * a `_SUCCESS` flag memoizes completion — a second invocation in any
-  * session runs ZERO KMeans iterations (spec: `kmeansFits`).
+  * session runs ZERO KMeans iterations (spec:
+  * `SaltedIndex.builds("pq")`).
   *
   * The codes table here also carries the raw vector and its norm so the
   * exact re-rank needs no second corpus join at this test scale; a
@@ -26,10 +27,6 @@ import org.apache.spark.sql.functions._
   * fetches raw vectors for re-rank candidates only.
   */
 object PqIndex {
-
-  /** Observability for specs: number of clustering fits this JVM has
-    * run (name kept from the MLlib-KMeans era for spec stability). */
-  @volatile var kmeansFits: Int = 0
 
   // 0.0.3: dropped the vestigial `seed` cache-key salt (deterministic
   // first-KSub Lloyd has no randomization knob); the bump relocates
@@ -44,15 +41,16 @@ object PqIndex {
   /** Content-addressed index dir (SaltedIndex): corpus file stamps +
     * (m, ksub) + version — any change relocates the index. */
   def dir(spark: SparkSession, d: String): String =
-    SaltedIndex.dir(spark, "pq", Version, s"$d/embeddings.parquet",
-      Seq("corpus" -> d, "m" -> M.toString, "ksub" -> KSub.toString))
+    SaltedIndex.dir(spark, "pq", Version, s"$d/embeddings.parquet", params(d))
+
+  private def params(d: String) = Seq("corpus" -> d, "m" -> M.toString, "ksub" -> KSub.toString)
 
   /** (codebooks as (subspace, code, micro-unit centroid), encoded
     * corpus). Codebooks are tiny (M·KSub rows) — always broadcast. */
   def buildOrLoad(spark: SparkSession, d: String)
       : (Seq[(Int, Int, Array[Long])], DataFrame) = {
-    val p = dir(spark, d)
-    SaltedIndex.ensureBuilt(spark, p)(build(spark, d, p))
+    val p = SaltedIndex.build(spark, "pq", Version, s"$d/embeddings.parquet", params(d))(
+      build(spark, d, _))
     val books = spark.read.parquet(s"$p/codebooks")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
@@ -69,8 +67,8 @@ object PqIndex {
   private def build(spark: SparkSession, d: String, p: String): Unit = {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, d)
-    // cached for the whole (eager) build, whose scope is
-    // SaltedIndex.ensureBuilt's: every Lloyd round and the final encode
+    // cached for the whole (eager) build, whose scope is the one
+    // Memo.commit opens around it: every Lloyd round and the final encode
     // re-consume the exploded component relation — without the cache
     // each round would re-run the full posexplode chain
     val q = CacheScope.cached(emb
@@ -104,7 +102,6 @@ object PqIndex {
         .agg(floor(sum(col("vm")) / count(lit(1))).cast("long").as("cm"))
       asg = assign(cent)
     }
-    kmeansFits += 1
     val codes = asg
       .groupBy(col("vec_id"))
       .agg(expr("transform(array_sort(collect_list(struct(sub, cid))), s -> cast(s.cid as int))")

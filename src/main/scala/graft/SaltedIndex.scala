@@ -8,9 +8,9 @@ import graft.pipeline.Memo
   * DedupIndex, IvfIndex, PqIndex, PhraseIndex, Bpe, the near-dup cluster
   * labels (`Dedup.nearDupClusters`) and the Graph edge relations
   * (tradeArcs, coPurchaseEdges, custPartEdges): the salted directory
-  * scheme, build-once under the `Memo` completion flag, and the
-  * corpus file stamp that invalidates an index when its source data
-  * changes.
+  * scheme, build-once through `Memo.commit` (the committer pipeline
+  * stages use), and the corpus file stamp that invalidates an index
+  * when its source data changes.
   *
   * The directory key covers the corpus FILE STAMPS (names + lengths +
   * modification times), the build parameters, and the index version —
@@ -46,22 +46,18 @@ object SaltedIndex {
     s"$root/$prefix-${pipeline.Salt.of(Nil, prefix, version,
       ("stamp" -> stamp(spark, src)) +: params)}"
 
-  /** Check-then-build with in-JVM serialization: two concurrent cold
-    * callers must not overwrite each other's half-written index (the
-    * loser of the race would mode("overwrite")-delete files the winner
-    * already marked done). Double-checked under one JVM-wide lock —
-    * builds are rare, so coarse is fine; cross-PROCESS safety rests on
-    * the content-addressed dir scheme (a production deployment would
-    * commit via write-to-temp + atomic rename). The build is one
-    * `CacheScope`: its caches are released when it has written. `build`
-    * only writes under `p`; the dir is marked done here once it
-    * returns, and a build that throws leaves it unmarked. */
-  private val buildLock = new Object
-  def ensureBuilt(spark: SparkSession, p: String)(build: => Unit): Unit =
-    if (!Memo.done(spark, p)) buildLock.synchronized {
-      if (!Memo.done(spark, p)) {
-        CacheScope.scope(build)
-        Memo.mark(spark, p)
-      }
-    }
+  private val built = new java.util.concurrent.ConcurrentHashMap[String, Integer]
+
+  /** Observability for specs: builds of `prefix` this JVM has written. */
+  def builds(prefix: String): Int = built.getOrDefault(prefix, 0)
+
+  /** The index dir `dir(...)`, committed once through `Memo.commit`:
+    * `write` writes the index under the dir it is given. A warm call
+    * pays one stamp and one flag check, and takes no lock. */
+  def build(spark: SparkSession, prefix: String, version: String, src: String,
+      params: Seq[(String, String)])(write: String => Unit): String = {
+    val p = dir(spark, prefix, version, src, params)
+    if (Memo.commit(spark, p)(write(p))) built.merge(prefix, 1, (a, b) => a + b)
+    p
+  }
 }

@@ -850,8 +850,8 @@ object Similarity {
       .orderBy(col("vec_id"), col("pdim"))
   }
 
-  /** Selection size for q161 — fixed rounds keep the whole traversal
-    * one lazy plan and the oracle a fixed CTE chain (q126/q136). */
+  /** Selection size for q161 — fixed rounds keep the oracle a fixed
+    * CTE chain (q126/q136). */
   val CoresetK = 8
 
   /** q161: farthest-point CORESET — GREEDY k-center traversal (Gonzalez
@@ -867,90 +867,27 @@ object Similarity {
     *
     * Determinism: exact integer micro-unit squared L2 (the Lloyd
     * arithmetic), argmax ties to the SMALLEST vec_id via
-    * max(struct(d2, −vec_id)). Shape per round: the ≤k·dim selected
-    * components BROADCAST (bounded by k, never the corpus), one
-    * component join + (vec, sel) partial agg + per-vec min + ONE
-    * global argmax hash-agg producing a 1-row relation that re-enters
-    * broadcast — k−1 chained rounds in ONE lazy plan, no driver
-    * barrier (each 1-row pick is CacheScope-memoized so the chain's
-    * reuse of earlier picks can never re-run their corpus pass).
+    * max(struct(d2, −vec_id)).
     *
-    * Two value-identical evaluation strategies behind [[runningMin]]
-    * (CoresetVariantSpec pins their equality):
-    *
-    *  - from-scratch (the r6 original): each round recomputes min-d2
-    *    over the WHOLE selection — O(k²·N·d), no carried state.
-    *  - running-min (default since r9): carry per-vector min-d2 and
-    *    fold in ONLY the newest pick each round — O(k·N·d), one
-    *    corpus-keyed join per round against a ≤dim-row broadcast.
-    *    The carried state is corpus-sized but one Long per vector,
-    *    unpersisted as soon as the next round's state is
-    *    materialized. Round 9 timed it at 6.3 s against the
-    *    from-scratch plan at sf0.1 (an isolated per-query timing
-    *    tool, since removed), after the isolated drift probe
-    *    confirmed the k² constant was real cost, not suite pressure.
-    *
-    * At 100 TB the q160 sketch feeds the distance pass unchanged. */
-  def coresetSelect(spark: SparkSession, d: String): DataFrame =
-    if (runningMin) coresetSelectRunning(spark, d)
-    else coresetSelectScratch(spark, d)
-
-  /** Strategy knob for q161 (see [[coresetSelect]]). */
-  @volatile var runningMin: Boolean = true
-
-  private[graft] def coresetSelectScratch(spark: SparkSession, d: String): DataFrame = {
-    // referenced 2× per round (corpus distance side + selected-component
-    // extraction) × k−1 rounds: cached so the posexplode fan-out
-    // computes once, not 14× (released when the caller's scope ends)
-    val q = CacheScope.cached(Tables.embeddings(spark, d)
-      .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
-      .select(col("vec_id"), col("pos").cast("long").as("pos"),
-        floor(col("col") * lit(1000000.0d)).cast("long").as("vm")))
-    val seedId = Tables.embeddings(spark, d)
-      .agg(min(col("vec_id")).as("vec_id"))
-    // selected relation: (rank, vec_id, d2 to prior selection)
-    var sel = seedId.select(lit(1L).as("rank"), col("vec_id"), lit(0L).as("d2"))
-    for (r <- 2 to CoresetK) {
-      // min over the current selection of exact squared L2, per vector
-      val selComp = broadcast(q.join(sel.select(col("vec_id")), "vec_id")
-        .select(col("vec_id").as("sid"), col("pos"), col("vm").as("sm")))
-      val minD2 = q.join(selComp, "pos")
-        .groupBy(col("vec_id"), col("sid"))
-        .agg(sum((col("vm") - col("sm")) * (col("vm") - col("sm"))).as("d2"))
-        .groupBy(col("vec_id")).agg(min(col("d2")).as("d2"))
-      // the farthest unselected vector (ties -> smallest id); selected
-      // vectors have d2 = 0 and can never win while any vector remains
-      val pick = CacheScope.cached(minD2
-        .agg(max(struct(col("d2"), (-col("vec_id")).as("nid"))).as("m"))
-        .select(lit(r.toLong).as("rank"), (-col("m.nid")).as("vec_id"),
-          col("m.d2").as("d2")))
-      sel = sel.unionAll(pick)
-    }
-    sel.select(col("rank"), col("vec_id"), col("d2").as("min_d2_micro"))
-      .orderBy(col("rank"))
-  }
-
-  /** The O(k·N·d) running-min strategy for q161: per-vector min-d2
-    * state folds in only the NEWEST pick each round — one corpus
-    * component join against a ≤dim-row broadcast (the new pick's
-    * components), one vec-keyed agg, one `least` fold. Value-identical
-    * to the from-scratch strategy: min over the selection IS the
-    * running min, in the same exact integers with the same
-    * max(struct(d2, −vec_id)) tie-break.
+    * Each round folds ONLY the newest pick into a per-vector running
+    * min-d2 — O(k·N·d): one corpus component join against a ≤dim-row
+    * broadcast (the new pick's components), one vec-keyed agg, one
+    * `least` fold. The carried state is corpus-sized but one Long per
+    * vector, unpersisted as soon as the next round's state is
+    * materialized.
     *
     * Execution is EAGER, one job per round, each pick a 1-ROW collect
-    * (the IvfIndex bounded-collect contract): the lazy formulation
+    * (the IvfIndex bounded-collect contract): a lazy formulation
     * references each round's state twice (once via the fold, once via
     * the pick that selects the next broadcast), so its logical plan
     * doubles per round — 2^k plan nodes by round 8, which OOM'd AQE's
     * explain-string generation before a single task ran. Collecting
     * the 1-row pick makes the chain linear, gives every intermediate
-    * an explicit lifecycle (the operator's own CacheScope, with each
-    * round's state unpersisted once its successor is materialized),
-    * and returns the 8-row result as a literal frame. The
-    * from-scratch strategy remains the zero-driver-barrier
-    * alternative. */
-  private[graft] def coresetSelectRunning(spark: SparkSession, d: String): DataFrame =
+    * an explicit lifecycle (the operator's own CacheScope), and
+    * returns the 8-row result as a literal frame.
+    *
+    * At 100 TB the q160 sketch feeds the distance pass unchanged. */
+  def coresetSelect(spark: SparkSession, d: String): DataFrame =
     CacheScope.scope {
       val q = CacheScope.cached(Tables.embeddings(spark, d)
         .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
@@ -972,8 +909,8 @@ object Similarity {
           else state.join(dNew, "vec_id")
             .select(col("vec_id"), least(col("d2"), col("dn")).as("d2")))
         // selected vectors carry state 0 (their self-distance entered
-        // the min the round after they were picked) — same
-        // can-never-win guarantee as the from-scratch strategy
+        // the min the round after they were picked), so they can never
+        // win while any unselected vector remains
         val m = next
           .agg(max(struct(col("d2"), (-col("vec_id")).as("nid"))).as("m"))
           .select(col("m.d2"), (-col("m.nid")).as("vec_id")).head()

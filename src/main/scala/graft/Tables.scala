@@ -47,8 +47,25 @@ object Tables {
     * Anything else fails loudly with the loaded type named, rather than
     * letting a downstream `ts div N` die with an opaque
     * DATATYPE_MISMATCH (the round-4 failure mode). */
-  def eventsNs(spark: SparkSession, d: String): DataFrame =
-    normalizeTsNs(spark.read.parquet(s"$d/events.parquet"))
+  def eventsNs(spark: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.functions.{col, unix_micros}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+    val df = spark.read.parquet(s"$d/events.parquet")
+    df.schema("ts").dataType match {
+      case LongType =>
+        assertPlausibleNanos(df)
+        df
+      case TimestampType =>
+        df.withColumn("ts", unix_micros(col("ts")) * 1000L)
+      case TimestampNTZType =>
+        df.withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
+      case other =>
+        throw new IllegalStateException(
+          s"events ts loaded as $other; expected BIGINT (epoch nanos), " +
+            "TIMESTAMP, or TIMESTAMP_NTZ. If the data is TIMESTAMP(NANOS) parquet, " +
+            "build the session with spark.sql.legacy.parquet.nanosAsLong=true.")
+    }
+  }
 
   /** One plausibility probe per distinct BIGINT-ts relation per JVM:
     * a BIGINT column holding epoch-MICROS (or millis) would pass the
@@ -74,28 +91,6 @@ object Tables {
               "epoch-NANOS (epoch-micros/millis vintage?). The engine contract " +
               "is nanos; convert upstream or load as TIMESTAMP.")
       }
-    }
-  }
-
-  /** The type dispatch of `eventsNs`, reusable for ANY events relation,
-    * so every reader applies the same normalization whatever vintage
-    * the files are. */
-  def normalizeTsNs(df: DataFrame): DataFrame = {
-    import org.apache.spark.sql.functions.{col, unix_micros}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    df.schema("ts").dataType match {
-      case LongType =>
-        assertPlausibleNanos(df)
-        df
-      case TimestampType =>
-        df.withColumn("ts", unix_micros(col("ts")) * 1000L)
-      case TimestampNTZType =>
-        df.withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * 1000L)
-      case other =>
-        throw new IllegalStateException(
-          s"events ts loaded as $other; expected BIGINT (epoch nanos), " +
-            "TIMESTAMP, or TIMESTAMP_NTZ. If the data is TIMESTAMP(NANOS) parquet, " +
-            "build the session with spark.sql.legacy.parquet.nanosAsLong=true.")
     }
   }
 

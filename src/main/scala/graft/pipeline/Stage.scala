@@ -42,10 +42,10 @@ final case class Ctx(spark: SparkSession, conf: PbConf) {
 }
 
 /** The one completion-flag protocol (O2, pb_etl/luigi/dask/target.py:
-  * 15-19,92-114), shared by its two committers, pipeline stages
-  * (`Runner`) and salted indexes (`graft.SaltedIndex.ensureBuilt`): a
-  * unit of work is done when its dir carries a `_SUCCESS` flag, and
-  * whoever commits the unit marks it itself. */
+  * 15-19,92-114) and its one committer, shared by pipeline stages
+  * (`Runner`) and salted indexes (`graft.SaltedIndex.build`): a unit of
+  * work is done when its dir carries a `_SUCCESS` flag, and only
+  * `commit` writes that flag. */
 object Memo {
   private[graft] val Flag = "_SUCCESS"
 
@@ -55,12 +55,36 @@ object Memo {
   def done(spark: SparkSession, dir: String): Boolean =
     fs(spark, dir).exists(new Path(dir, Flag))
 
-  /** Flag `dir` complete; call only after its data is written. Nothing
-    * trusts the `_SUCCESS` Spark's file committer writes: with
+  private val locks = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
+
+  /** Commit the unit at `dir` once: a done dir returns at once, with no
+    * lock taken; otherwise, under a lock keyed by `dir`, re-check the
+    * flag, run `write` in one `CacheScope` and mark the dir done.
+    * Returns whether this call wrote. A `write` that throws leaves the
+    * dir unmarked, so the next commit writes again.
+    *
+    * The lock makes concurrent callers in one JVM write a cold dir
+    * once: the loser would otherwise overwrite (mode("overwrite")
+    * deletes) data the winner had already flagged. It is per dir, so
+    * unrelated units never wait on each other; locks nest only stage →
+    * index, so a stage whose run builds an index, on its own thread or
+    * a worker's, cannot deadlock. Across processes the write is not
+    * atomic: the flag lands after the data, in the final dir. */
+  def commit(spark: SparkSession, dir: String)(write: => Unit): Boolean =
+    !done(spark, dir) && locks.computeIfAbsent(dir, _ => new Object).synchronized {
+      !done(spark, dir) && {
+        graft.CacheScope.scope(write)
+        mark(spark, dir)
+        true
+      }
+    }
+
+  /** Flag `dir` complete, once its data is written. Nothing trusts the
+    * `_SUCCESS` Spark's file committer writes: with
     * `mapreduce.fileoutputcommitter.marksuccessfuljobs=false` (common
     * on object-store committers) it never appears, and every committed
-    * unit would read as torn. Idempotent (create overwrites). */
-  def mark(spark: SparkSession, dir: String): Unit =
+    * unit would read as torn. */
+  private def mark(spark: SparkSession, dir: String): Unit =
     fs(spark, dir).create(new Path(dir, Flag), true).close()
 }
 
@@ -75,10 +99,11 @@ object Memo {
   *  - O5 stages without an output dir always re-run (FinalResults,
   *    pb_etl/tasks.py:428-444)
   *
-  * `run` only writes the data; `Runner` marks the output dir through
-  * `Memo` once `run` returns (the reference likewise writes the flag by
-  * hand after to_parquet, target.py:15-19). The flag is written after
-  * the data, not atomically with it.
+  * `run` only writes the data into `outputDir`; `Runner` commits it
+  * through `Memo.commit`, which flags the dir once `run` returns (the
+  * reference likewise writes the flag by hand after to_parquet,
+  * target.py:15-19). The flag is written after the data, not
+  * atomically with it.
   */
 trait Stage {
   def name: String = getClass.getSimpleName.stripSuffix("$")
@@ -143,10 +168,12 @@ abstract class CsvSource(val sub: String) extends Stage {
   * (pb_etl/cli.py:13-16). Sequential on purpose: each stage is itself a
   * distributed Spark job; inter-stage parallelism buys nothing here.
   *
-  * Each `run` is one `CacheScope`: whatever the stage caches is released
-  * when it returns or throws, so no stage leaves memory to the next. A
-  * run that returns has its output dir marked done (`Memo.mark`); one
-  * that throws leaves it unmarked, so the next walk re-runs it.
+  * A stage whose `complete` holds is skipped. Any other stage with an
+  * output dir runs through `Memo.commit`: one `CacheScope`, the flag
+  * written once `run` returns, none if it throws; it is listed as
+  * executed only when this walk wrote it, so two walks racing on one
+  * work root run it once. A stage with no output dir runs in its own
+  * `CacheScope` on every walk.
   */
 object Runner {
   def run(ctx: Ctx, target: Stage): Seq[String] = {
@@ -158,9 +185,11 @@ object Runner {
         done += key
         s.deps.foreach(go)
         if (!s.complete(ctx)) {
-          graft.CacheScope.scope(s.run(ctx))
-          s.outputDir(ctx).foreach(Memo.mark(ctx.spark, _))
-          executed += s.name
+          val wrote = s.outputDir(ctx) match {
+            case Some(dir) => Memo.commit(ctx.spark, dir)(s.run(ctx))
+            case None => graft.CacheScope.scope(s.run(ctx)); true
+          }
+          if (wrote) executed += s.name
         }
       }
     }

@@ -9,11 +9,11 @@ class CustPartStageSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
   test("custpart edge stage builds once per corpus version (q303)") {
-    val before = Graph.bipBuilds
+    val before = SaltedIndex.builds("custpart")
     Graph.custPartEdges(spark, d).count()
-    val afterFirst = Graph.bipBuilds
+    val afterFirst = SaltedIndex.builds("custpart")
     Graph.custPartEdges(spark, d).count()
-    assert(Graph.bipBuilds == afterFirst,
+    assert(SaltedIndex.builds("custpart") == afterFirst,
       "warm read must not rebuild the persisted stage")
     assert(afterFirst - before <= 1)
   }

@@ -261,13 +261,13 @@ class DedupSpec extends SparkSpec {
     // force a cold start — the salted dir may survive from an earlier JVM
     val p = new org.apache.hadoop.fs.Path(DedupIndex.dir(spark, d))
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    val before = DedupIndex.builds
+    val before = SaltedIndex.builds("dedup")
     val r1 = Dedup.ingestDedup(spark, d).collect().toSeq
-    assert(DedupIndex.builds == before + 1, "cold ingest must build the index once")
+    assert(SaltedIndex.builds("dedup") == before + 1, "cold ingest must build the index once")
     val r2 = Dedup.ingestDedup(spark, d).collect().toSeq
     // zero corpus-side shingle/band/key computation on the warm path —
     // the batch scans itself and probes the persisted index
-    assert(DedupIndex.builds == before + 1, "warm ingest rebuilt the corpus index")
+    assert(SaltedIndex.builds("dedup") == before + 1, "warm ingest rebuilt the corpus index")
     assert(r1 == r2)
   }
 
@@ -452,9 +452,9 @@ class DedupSpec extends SparkSpec {
     val hits = pq.count(r => bf.contains((r.getLong(0), r.getLong(1))))
     assert(hits >= bf.size / 2, s"recall ${hits.toDouble / bf.size}")
     // warm-index invariant: a second invocation runs zero KMeans fits
-    val fitsBefore = PqIndex.kmeansFits
+    val fitsBefore = SaltedIndex.builds("pq")
     assert(Similarity.pqTopK(spark, d).count() > 0)
-    assert(PqIndex.kmeansFits == fitsBefore, "KMeans re-fit on a warm index")
+    assert(SaltedIndex.builds("pq") == fitsBefore, "KMeans re-fit on a warm index")
     // salting: a different corpus relocates the index (no seed knob —
     // the deterministic first-KSub Lloyd has no randomization to salt)
     assert(PqIndex.dir(spark, d) != PqIndex.dir(spark, "/root/testdata/sf0.01"))
@@ -462,10 +462,10 @@ class DedupSpec extends SparkSpec {
 
   test("IVF index is a persisted salted stage: second invocation refits nothing") {
     Similarity.ivfTopK(spark, d).count() // ensure built (may hit an existing index)
-    val fitsBefore = IvfIndex.kmeansFits
+    val fitsBefore = SaltedIndex.builds("ivf")
     val again = Similarity.ivfTopK(spark, d).count()
     assert(again > 0)
-    assert(IvfIndex.kmeansFits == fitsBefore, "KMeans re-fit on a warm index")
+    assert(SaltedIndex.builds("ivf") == fitsBefore, "KMeans re-fit on a warm index")
     // salting: different nlist relocates the index
     assert(IvfIndex.dir(spark, d, 16) != IvfIndex.dir(spark, d, 32))
   }
@@ -542,10 +542,10 @@ class DedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(got.nonEmpty)
     // the warm path must not refit KMeans (index already persisted)
-    val fits = IvfIndex.kmeansFits
+    val fits = SaltedIndex.builds("ivf")
     val again = Dedup.semDedup(spark, d).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
-    assert(IvfIndex.kmeansFits == fits, "warm semDedup refit KMeans")
+    assert(SaltedIndex.builds("ivf") == fits, "warm semDedup refit KMeans")
     assert(again.toSeq == got.toSeq, "semDedup not deterministic across calls")
     // local exact recompute from the SAME persisted cells: sequential
     // double fold mirrors DotProductExpr's evaluation order
@@ -879,11 +879,11 @@ class DedupSpec extends SparkSpec {
 
   test("cluster labels are a persisted stage: warm q49/q152/q154 rebuild nothing, labels identical") {
     val first = Dedup.nearDupClusters(spark, d).collect().map(_.toString).toSeq
-    val b = Dedup.clusterBuilds
+    val b = SaltedIndex.builds("clusters")
     val again = Dedup.nearDupClusters(spark, d).collect().map(_.toString).toSeq
     Curation.leakSafeSplit(spark, d).count()
     Curation.canonicalDocs(spark, d).count()
-    assert(Dedup.clusterBuilds == b, "warm consumers re-ran the star-CC build")
+    assert(SaltedIndex.builds("clusters") == b, "warm consumers re-ran the star-CC build")
     assert(again == first && first.nonEmpty)
   }
 
@@ -909,9 +909,9 @@ class DedupSpec extends SparkSpec {
     assert(got.exists(_._3 > 0)) // the batch DOES carry corpus-known chunks
     // a second ingest against the same corpus version probes only —
     // zero corpus-side rebuilds
-    val b = DedupIndex.builds
+    val b = SaltedIndex.builds("dedup")
     val again = Dedup.ingestChunkDedup(spark, d).collect()
-    assert(DedupIndex.builds == b && again.length == got.length)
+    assert(SaltedIndex.builds("dedup") == b && again.length == got.length)
   }
 
   test("q146 quant recall ≡ local intersection of the gated top-k outputs; int8 near-exact") {

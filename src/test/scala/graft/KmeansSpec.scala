@@ -147,34 +147,38 @@ class KmeansSpec extends SparkSpec {
     assert(inBand >= 0.8, s"only ${inBand * 100}%% of JL ratios inside [m/4, 4m]")
   }
 
+  // at two SFs, so a divergence that needs corpus mass to surface (a
+  // tie, a selected-vector re-pick) is exercised
   test("q161 coreset ≡ local greedy farthest-point; radius certificate holds") {
-    val vecs = Tables.embeddings(spark, d).select("vec_id", "embedding").collect()
-      .map(r => (r.getLong(0),
-        r.getSeq[Float](1).map(v => math.floor(v.toDouble * 1e6).toLong).toArray))
-      .sortBy(_._1)
-    def d2(a: Array[Long], b: Array[Long]): Long =
-      a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
-    val byId = vecs.toMap
-    var sel = Vector((1L, vecs.head._1, 0L))
-    for (r <- 2 to Similarity.CoresetK) {
-      val (pid, pd2) = vecs.map { case (id, v) =>
-        (id, sel.map(s => d2(v, byId(s._2))).min)
-      }.maxBy { case (id, dd) => (dd, -id) }
-      sel :+= ((r.toLong, pid, pd2))
+    for (d <- Seq(d, "/root/testdata/sf0.01")) {
+      val vecs = Tables.embeddings(spark, d).select("vec_id", "embedding").collect()
+        .map(r => (r.getLong(0),
+          r.getSeq[Float](1).map(v => math.floor(v.toDouble * 1e6).toLong).toArray))
+        .sortBy(_._1)
+      def d2(a: Array[Long], b: Array[Long]): Long =
+        a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+      val byId = vecs.toMap
+      var sel = Vector((1L, vecs.head._1, 0L))
+      for (r <- 2 to Similarity.CoresetK) {
+        val (pid, pd2) = vecs.map { case (id, v) =>
+          (id, sel.map(s => d2(v, byId(s._2))).min)
+        }.maxBy { case (id, dd) => (dd, -id) }
+        sel :+= ((r.toLong, pid, pd2))
+      }
+      val got = Similarity.coresetSelect(spark, d).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(got == sel && got.size == Similarity.CoresetK, s"diverged at $d")
+      // greedy invariants: picks distinct; the radius sequence is
+      // non-increasing from round 2 on; and the final selection COVERS:
+      // no corpus vector sits farther from it than the last radius
+      assert(got.map(_._2).distinct.size == got.size)
+      val radii = got.drop(1).map(_._3)
+      assert(radii == radii.sorted.reverse)
+      val selIds = got.map(_._2).toSet
+      val worst = vecs.map { case (_, v) =>
+        selIds.map(s => d2(v, byId(s))).min }.max
+      assert(worst <= radii.last)
     }
-    val got = Similarity.coresetSelect(spark, d).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(got == sel && got.size == Similarity.CoresetK)
-    // greedy invariants: picks distinct; the radius sequence is
-    // non-increasing from round 2 on; and the final selection COVERS:
-    // no corpus vector sits farther from it than the last radius
-    assert(got.map(_._2).distinct.size == got.size)
-    val radii = got.drop(1).map(_._3)
-    assert(radii == radii.sorted.reverse)
-    val selIds = got.map(_._2).toSet
-    val worst = vecs.map { case (_, v) =>
-      selIds.map(s => d2(v, byId(s))).min }.max
-    assert(worst <= radii.last)
   }
 
   test("q158 cluster prototypes ≡ top-4 of the gated assignment; heap order matches") {

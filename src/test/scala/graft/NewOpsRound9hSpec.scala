@@ -106,11 +106,11 @@ class NewOpsRound9hSpec extends SparkSpec {
   }
 
   test("co-purchase edge stage builds once per corpus version (q127/q258 shared)") {
-    val before = Graph.cpBuilds
+    val before = SaltedIndex.builds("copurchase")
     Graph.coPurchaseEdges(spark, d).count()
-    val afterFirst = Graph.cpBuilds
+    val afterFirst = SaltedIndex.builds("copurchase")
     Graph.coPurchaseEdges(spark, d).count()
-    assert(Graph.cpBuilds == afterFirst,
+    assert(SaltedIndex.builds("copurchase") == afterFirst,
       "warm read must not rebuild the persisted stage")
     assert(afterFirst - before <= 1)
   }
