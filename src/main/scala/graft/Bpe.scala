@@ -87,9 +87,9 @@ object Bpe {
   /** Build-once-or-load of the persisted merge table, in a
     * content-addressed dir: corpus stamp + params + version. */
   def buildOrLoad(spark: SparkSession, d: String): DataFrame = {
-    val dir = SaltedIndex.build(spark, "bpe", Version, s"$d/documents.parquet",
-      Seq("corpus" -> d, "nMerges" -> NMerges.toString,
-        "maxWords" -> MaxWords.toString)) { p =>
+    val dir = SaltedIndex.build(spark, SaltedIndex.dir(spark, "bpe", Version,
+      s"$d/documents.parquet", Seq("corpus" -> d, "nMerges" -> NMerges.toString,
+        "maxWords" -> MaxWords.toString))) { p =>
       // THE corpus pass: one linear hash-agg; the top-MaxWords cut is
       // a TakeOrdered (per-partition heaps), deterministic by the
       // (count, word) tie-break

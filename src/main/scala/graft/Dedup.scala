@@ -116,8 +116,8 @@ object Dedup {
     * instances per shingle at cap². The price, stated exactly: a pair's
     * |∩| undercounts by its corpus-ubiquitous shingles, so a containment
     * hit is missed only when ≥20% of the smaller doc's shingles are
-    * ubiquitous — boilerplate mass that exact dedup (q21) or the
-    * minhash hot-bucket cap already owns. q138 runs uncapped (exact);
+    * ubiquitous — boilerplate mass that exact dedup (q21) already
+    * owns. q138 runs uncapped (exact);
     * q142 runs the cap REAL and is hash-checked under it. */
   def containmentPairs(spark: SparkSession, d: String): DataFrame =
     containmentPairsDf(Tables.documents(spark, d)
@@ -236,23 +236,8 @@ object Dedup {
   private[graft] def minhashNearDupDf(docs: DataFrame): DataFrame =
     minhashNearDupFromSets(shingleSetsDf(docs))
 
-  /** Hot-bucket-capped variant — the skew knob for a real corpus. A
-    * "stop band" (a band key shared by B documents — boilerplate
-    * headers, templated pages) contributes C(B,2) candidate pairs; one
-    * viral template can dominate the whole join. Dropping buckets with
-    * more than `maxBucket` members bounds per-bucket work at
-    * C(maxBucket,2) and keeps the join linear-ish under adversarial
-    * skew. Cost, stated honestly: a pair visible ONLY through hot
-    * buckets is lost — for near-identical template docs that mass
-    * belongs to exact dedup (q21) upstream anyway. DedupSpec pins
-    * capped ≡ uncapped whenever no bucket exceeds the cap, and bounded
-    * candidate work on an adversarial hot-bucket corpus. */
-  private[graft] def minhashNearDupDfCapped(docs: DataFrame, maxBucket: Int): DataFrame =
-    minhashNearDupFromSets(shingleSetsDf(docs), Some(maxBucket))
-
-  private def minhashNearDupFromSets(shingled: DataFrame,
-      maxBucket: Option[Int] = None): DataFrame = {
-    val (common, sz) = minhashCommonSz(shingled, maxBucket)
+  private def minhashNearDupFromSets(shingled: DataFrame): DataFrame = {
+    val (common, sz) = minhashCommonSz(shingled)
     pairJaccard(common, sz, 0.5)
   }
 
@@ -261,18 +246,10 @@ object Dedup {
     * sizes). Factored so q266's threshold sweep can filter in exact
     * integer arithmetic (10·cm ≥ t10·union) over the same verified
     * relation the driver checks. */
-  private[graft] def minhashCommonSz(shingled: DataFrame,
-      maxBucket: Option[Int] = None): (DataFrame, DataFrame) = {
+  private[graft] def minhashCommonSz(shingled: DataFrame): (DataFrame, DataFrame) = {
     val sets = CacheScope.cached(shingled
       .select(col("doc_id"), col("hs"), nearDupBandKeys(col("hs")).as("bands")))
-    val allBands = sets.select(col("doc_id"), posexplode(col("bands")).as(Seq("b", "key")))
-    val bands = maxBucket.fold(allBands) { cap =>
-      // one partial-agg count per bucket; hot buckets leave the index
-      val hot = allBands.groupBy(col("b"), col("key"))
-        .agg(count(lit(1)).as("n")).filter(col("n") > cap)
-        .select(col("b"), col("key"))
-      allBands.join(hot, Seq("b", "key"), "left_anti")
-    }
+    val bands = sets.select(col("doc_id"), posexplode(col("bands")).as(Seq("b", "key")))
     val cand = bands.as("x")
       .join(bands.as("y"),
         col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
@@ -605,10 +582,10 @@ object Dedup {
     * Df-in variant below stays unpersisted — it serves arbitrary
     * survivor sets (CurateDag) and the convergence specs. */
   def nearDupClusters(spark: SparkSession, d: String): DataFrame = {
-    val dir = SaltedIndex.build(spark, "clusters", ClusterIdxVersion,
+    val dir = SaltedIndex.build(spark, SaltedIndex.dir(spark, "clusters", ClusterIdxVersion,
       s"$d/documents.parquet",
       Seq("corpus" -> d, "shingleN" -> NearDupShingleN.toString,
-        "jaccard" -> "0.5", "bands" -> s"$NearDupBands x $NearDupRows")) { p =>
+        "jaccard" -> "0.5", "bands" -> s"$NearDupBands x $NearDupRows"))) { p =>
       clusterLabels(Tables.documents(spark, d), minhashNearDup(spark, d))
         .write.mode("overwrite").parquet(s"$p/labels")
     }
@@ -1441,8 +1418,8 @@ object Dedup {
     * contributes to the q23 join. This is the direct COST MODEL of
     * LSH dedup — the number that says whether a banding choice (or a
     * boilerplate-polluted corpus) is about to quadratically explode
-    * the candidate join, and the evidence behind the q23 hot-bucket
-    * cap. Read BEFORE running dedup at 100 TB, the same way q200 is
+    * the candidate join, and the evidence a hot-bucket cap would rest
+    * on. Read BEFORE running dedup at 100 TB, the same way q200 is
     * read before a skewed join.
     *
     * Shape at 100 TB: one (band, key) count agg (map-side partials),

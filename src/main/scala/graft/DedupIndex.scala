@@ -40,16 +40,13 @@ object DedupIndex {
     * source index < 15 is corpus, >= 15 is the arriving batch. */
   private[graft] def isCorpus = substring(col("source"), 4, 10).cast("int") < 15
 
-  private def params(d: String) =
-    Seq("corpus" -> d, "shingleN" -> NearDupShingleN.toString, "split" -> "srcIdx<15")
-
   def dir(spark: SparkSession, d: String): String =
-    SaltedIndex.dir(spark, "dedup", Version, s"$d/documents.parquet", params(d))
+    SaltedIndex.dir(spark, "dedup", Version, s"$d/documents.parquet",
+      Seq("corpus" -> d, "shingleN" -> NearDupShingleN.toString, "split" -> "srcIdx<15"))
 
   /** The index dir, built once. */
   private def built(spark: SparkSession, d: String): String =
-    SaltedIndex.build(spark, "dedup", Version, s"$d/documents.parquet", params(d))(
-      build(spark, d, _))
+    SaltedIndex.build(spark, dir(spark, d))(build(spark, d, _))
 
   /** (exact keys, shingle sets, band keys) of the standing corpus —
     * built once, then loaded from the salted dir. */

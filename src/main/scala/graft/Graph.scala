@@ -32,10 +32,10 @@ object Graph {
     * per data version and warm consumers (q126 PageRank, q131 BFS)
     * scan one parquet relation. */
   private[graft] def tradeArcs(spark: SparkSession, d: String): DataFrame = {
-    val dir = SaltedIndex.build(spark, "tradearcs", ArcIdxVersion,
+    val dir = SaltedIndex.build(spark, SaltedIndex.dir(spark, "tradearcs", ArcIdxVersion,
       s"$d/lineitem.parquet",
       Seq("corpus" -> d,
-        "orders" -> SaltedIndex.stamp(spark, s"$d/orders.parquet"))) { p =>
+        "orders" -> SaltedIndex.stamp(spark, s"$d/orders.parquet")))) { p =>
       val li = Tables.lineitem(spark, d)
         .select(col("l_orderkey").as("ok"), (col("l_suppkey") * 2).as("s"))
       val os = Tables.orders(spark, d)
@@ -129,8 +129,8 @@ object Graph {
     * corpus version; every triangle/truss consumer reads one parquet
     * relation warm. */
   private[graft] def coPurchaseEdges(spark: SparkSession, d: String): DataFrame = {
-    val dir = SaltedIndex.build(spark, "copurchase", CpIdxVersion,
-      s"$d/lineitem.parquet", Seq("corpus" -> d)) { p =>
+    val dir = SaltedIndex.build(spark, SaltedIndex.dir(spark, "copurchase", CpIdxVersion,
+      s"$d/lineitem.parquet", Seq("corpus" -> d))) { p =>
       import org.apache.spark.sql.expressions.Window
       val items = Tables.lineitem(spark, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
@@ -936,10 +936,10 @@ object Graph {
     * size from AQE's join-strategy switch and pays a columnar build
     * for a ~6 MB re-scan. */
   private[graft] def custPartEdges(spark: SparkSession, d: String): DataFrame = {
-    val dir = SaltedIndex.build(spark, "custpart", BipIdxVersion,
+    val dir = SaltedIndex.build(spark, SaltedIndex.dir(spark, "custpart", BipIdxVersion,
       s"$d/lineitem.parquet",
       Seq("corpus" -> d,
-        "orders" -> SaltedIndex.stamp(spark, s"$d/orders.parquet"))) { p =>
+        "orders" -> SaltedIndex.stamp(spark, s"$d/orders.parquet")))) { p =>
       val li = Tables.lineitem(spark, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
       val os = Tables.orders(spark, d)

@@ -54,9 +54,8 @@ object IvfIndex {
   /** Content-addressed index dir (SaltedIndex): corpus file stamps +
     * nlist + version — any change relocates the index. */
   def dir(spark: SparkSession, d: String, nlist: Int): String =
-    SaltedIndex.dir(spark, "ivf", Version, s"$d/embeddings.parquet", params(d, nlist))
-
-  private def params(d: String, nlist: Int) = Seq("corpus" -> d, "nlist" -> nlist.toString)
+    SaltedIndex.dir(spark, "ivf", Version, s"$d/embeddings.parquet",
+      Seq("corpus" -> d, "nlist" -> nlist.toString))
 
   /** (micro-unit centroids, cell-assigned corpus): built once, then
     * loaded from the salted dir. The corpus is written partitioned by
@@ -64,8 +63,7 @@ object IvfIndex {
     * nprobe/nlist of the data. */
   def buildOrLoad(spark: SparkSession, d: String, nlist: Int)
       : (Seq[(Int, Array[Long])], DataFrame) = {
-    val p = SaltedIndex.build(spark, "ivf", Version, s"$d/embeddings.parquet",
-      params(d, nlist))(build(spark, d, nlist, _))
+    val p = SaltedIndex.build(spark, dir(spark, d, nlist))(build(spark, d, nlist, _))
     val centroids = spark.read.parquet(s"$p/centroids")
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))

@@ -1,197 +1,28 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video payloads ride as opaque
-  * `binary` columns with typed metadata, processed per-partition in
-  * batches (north-star extension, SURVEY.md §2.9).
+  * `binary` columns (north-star extension, SURVEY.md §2.9).
   *
-  * The decode is REAL for the container formats whose headers are
-  * public byte layouts: PNG (IHDR chunk), JPEG (SOF marker scan), and
-  * WAV (RIFF fmt/data chunks) are parsed directly from the payload
-  * bytes inside the per-partition codec boundary — dimensions, sample
-  * rate, channel count, and frame counts come from the actual header
-  * fields (MultimodalSpec feeds hand-built fixture bytes and checks the
-  * parsed values). Payloads that are not recognizable media (the test
-  * corpus reinterprets `documents.text` as bytes) fall back to the
-  * deterministic pseudo-decode, which keeps the operator total and the
-  * q32 oracle exact — and the typed path carries a `decode_status`
-  * column ("ok" / "corrupt:<fmt>" / "fallback") so a real-media payload
-  * whose header fails to parse is a visible decode problem, never
-  * silently indistinguishable from a text payload. Pixel/sample
-  * decoding (the libraries for which are not in this container) would
-  * slot in behind the same boundary.
+  * The test corpus reinterprets `documents.text` as the payload bytes.
+  * `mediaMetadata` (q32) derives each item's metadata from them with a
+  * deterministic pseudo-decode: a pure column projection in whole-stage
+  * codegen that the DuckDB oracle replays exactly. The planning queries
+  * (q166, q225, q226) and the perceptual-hash families read the payload
+  * under a virtual layout: a 64-byte header, then raw pixels or PCM
+  * samples. A real codec would replace the pseudo-decode with parsed
+  * container headers and decoded pixels or samples.
   */
 object Multimodal {
   import TextOps._
 
-  /** An opaque media payload + its envelope. */
-  final case class MediaFile(doc_id: Long, payload: Array[Byte], source: String)
-
-  /** Decoded features: image-shaped fields carry 0 sample_rate /
-    * n_channels; audio-shaped fields carry 0 width/height.
-    * `decode_status` surfaces what the codec actually did instead of
-    * silently falling back: "ok" (a real container header parsed),
-    * "corrupt:<fmt>" (the payload bears that format's magic but the
-    * header walk failed — a decode PROBLEM, not a non-media payload),
-    * or "fallback" (no recognizable magic; pseudo-decode). */
-  final case class MediaMeta(
-      doc_id: Long, byte_len: Long, format: String,
-      width: Long, height: Long, n_frames: Long,
-      sample_rate: Long, n_channels: Long,
-      decode_status: String = "ok")
-
-  /** Real header parsers for the public container formats. Each returns
-    * None unless the magic matches AND the needed header fields are in
-    * bounds — a truncated/corrupt header falls through to the caller. */
-  object Codec {
-    private def u8(p: Array[Byte], i: Int): Int = p(i) & 0xff
-    private def be16(p: Array[Byte], i: Int): Int = (u8(p, i) << 8) | u8(p, i + 1)
-    private def be32(p: Array[Byte], i: Int): Long =
-      (u8(p, i).toLong << 24) | (u8(p, i + 1) << 16) | (u8(p, i + 2) << 8) | u8(p, i + 3)
-    private def le16(p: Array[Byte], i: Int): Int = u8(p, i) | (u8(p, i + 1) << 8)
-    private def le32(p: Array[Byte], i: Int): Long =
-      u8(p, i).toLong | (u8(p, i + 1).toLong << 8) |
-        (u8(p, i + 2).toLong << 16) | (u8(p, i + 3).toLong << 24)
-    private def ascii(p: Array[Byte], i: Int, s: String): Boolean =
-      i + s.length <= p.length && s.indices.forall(k => p(i + k) == s.charAt(k).toByte)
-
-    /** Does the payload bear this format's magic? Magic-sniffing is
-      * separate from parsing so the caller can tell "not this format"
-      * from "this format, but the header is corrupt". */
-    private val pngSig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
-    def pngMagic(p: Array[Byte]): Boolean = p.length >= 8 && p.startsWith(pngSig)
-    def jpegMagic(p: Array[Byte]): Boolean =
-      p.length >= 2 && u8(p, 0) == 0xff && u8(p, 1) == 0xd8
-    def wavMagic(p: Array[Byte]): Boolean =
-      p.length >= 12 && ascii(p, 0, "RIFF") && ascii(p, 8, "WAVE")
-
-    /** PNG: 8-byte signature, then the IHDR chunk (always first):
-      * 4-byte length, "IHDR", width/height as big-endian u32. */
-    def png(p: Array[Byte]): Option[MediaMeta] = {
-      if (p.length < 24 || !pngMagic(p) || !ascii(p, 12, "IHDR")) None
-      else Some(MediaMeta(0L, p.length.toLong, "png",
-        be32(p, 16), be32(p, 20), 1L, 0L, 0L))
-    }
-
-    /** JPEG: SOI marker, then a marker-segment walk to the first SOF
-      * (C0-C3, C5-C7, C9-CB, CD-CF): precision u8, height/width u16. */
-    def jpeg(p: Array[Byte]): Option[MediaMeta] = {
-      if (p.length < 4 || !jpegMagic(p)) return None
-      var i = 2
-      while (i + 3 < p.length) {
-        if (u8(p, i) != 0xff) return None // marker misalignment: corrupt
-        var m = u8(p, i + 1)
-        while (m == 0xff && i + 2 < p.length) { i += 1; m = u8(p, i + 1) } // fill bytes
-        // standalone markers carry no length word: TEM (0x01), RSTn
-        // (D0-D7), and a stray SOI — skipping 2 bytes is the whole walk
-        if (m == 0x01 || m == 0xd8 || (m >= 0xd0 && m <= 0xd7)) { i += 2 }
-        else if (m == 0xd9 || m == 0xda) return None // EOI/SOS before any SOF
-        else {
-          if (i + 3 >= p.length) return None
-          val len = be16(p, i + 2)
-          if (len < 2 || i + 2 + len > p.length) return None
-          val isSof = (m >= 0xc0 && m <= 0xcf) && m != 0xc4 && m != 0xc8 && m != 0xcc
-          if (isSof) {
-            if (len < 7) return None
-            return Some(MediaMeta(0L, p.length.toLong, "jpeg",
-              be16(p, i + 7), be16(p, i + 5), 1L, 0L, 0L))
-          }
-          i += 2 + len
-        }
-      }
-      None
-    }
-
-    /** WAV: RIFF/WAVE container; the "fmt " chunk carries channels and
-      * sample rate (little-endian), "data" size / block align gives the
-      * sample-frame count. */
-    def wav(p: Array[Byte]): Option[MediaMeta] = {
-      if (!wavMagic(p)) return None
-      var i = 12
-      var rate = 0L; var ch = 0L; var block = 0; var frames = 0L; var gotFmt = false
-      while (i + 8 <= p.length) {
-        val size = le32(p, i + 4) // unsigned u32 as Long — never .toInt raw
-        if (ascii(p, i, "fmt ") && i + 8 + 16 <= p.length && size >= 16) {
-          ch = le16(p, i + 10).toLong
-          rate = le32(p, i + 12)
-          block = le16(p, i + 20)
-          gotFmt = true
-        } else if (ascii(p, i, "data") && gotFmt && block > 0) {
-          // a data chunk may legitimately declare MORE than the payload
-          // holds (file truncated mid-download): clamp, don't reject —
-          // the header metadata is still real
-          frames = math.min(size, (p.length - i - 8).toLong) / block
-          return Some(MediaMeta(0L, p.length.toLong, "wav", 0L, 0L, frames, rate, ch))
-        }
-        // advance in Long: a bogus u32 size (e.g. 0xFFFFFFF8) must not
-        // overflow Int into a stalled walk or a negative index; walking
-        // past the last complete chunk header falls back
-        val next = i.toLong + 8L + size + (size & 1L) // chunks are word-aligned
-        if (next + 8L > p.length.toLong) return None
-        i = next.toInt
-      }
-      None
-    }
-
-    /** Sniff-and-parse; None when the payload is no recognizable media. */
-    def decode(p: Array[Byte]): Option[MediaMeta] =
-      png(p).orElse(jpeg(p)).orElse(wav(p))
-
-    /** Parse or explain: Right(meta) on a real parse, Left(status) with
-      * "corrupt:<fmt>" when a format's magic matched but its header walk
-      * failed, "fallback" when nothing recognizable was sniffed. */
-    def decodeOrStatus(p: Array[Byte]): Either[String, MediaMeta] =
-      decode(p).toRight(
-        if (pngMagic(p)) "corrupt:png"
-        else if (jpegMagic(p)) "corrupt:jpeg"
-        else if (wavMagic(p)) "corrupt:wav"
-        else "fallback")
-  }
-
-  /** Deterministic pseudo-decode for unrecognized payloads (the test
-    * corpus's text bytes): keeps the operator total and exactly matches
-    * the q32 SQL oracle's arithmetic. */
+  /** The pseudo-decode's format names (q32's `format` column): the
+    * payload hash mod 3 picks one, and the DuckDB oracle replays the
+    * same arithmetic. */
   object FakeCodec {
     val formats = Array("jpeg", "png", "webp")
-    def decode(doc_id: Long, payload: Array[Byte]): MediaMeta = {
-      // polynomial byte hash (same constants as TextOps.polyHash)
-      val h = payload.foldLeft(0L)((acc, b) => (acc * 131L + (b & 0xff)) % TextOps.P)
-      MediaMeta(doc_id, payload.length.toLong, formats((h % 3L).toInt),
-        320L + (h % 8L) * 160L, 240L + (h % 6L) * 120L, 1L + payload.length % 24L,
-        0L, 0L, decode_status = "fallback")
-    }
-  }
-
-  /** documents.text reinterpreted as a binary payload column — the test
-    * corpus stand-in for real media bytes. */
-  def mediaFiles(spark: SparkSession, d: String): Dataset[MediaFile] = {
-    import spark.implicits._
-    Tables.documents(spark, d)
-      .select(col("doc_id"), col("text").cast("binary").as("payload"), col("source"))
-      .as[MediaFile]
-  }
-
-  /** Typed per-partition decode: the batch boundary a real codec needs
-    * (decoder init once per partition, rows streamed through it). Real
-    * PNG/JPEG/WAV headers parse for real; anything else pseudo-decodes. */
-  def decodeAll(files: Dataset[MediaFile]): Dataset[MediaMeta] = {
-    import files.sparkSession.implicits._
-    files.mapPartitions { it =>
-      // per-partition decoder setup would happen here (open codec ctx)
-      it.map { f =>
-        Codec.decodeOrStatus(f.payload) match {
-          case Right(meta) => meta.copy(doc_id = f.doc_id)
-          // non-ok rows still pseudo-decode (the operator stays total),
-          // but the status says so — a corrupt real-media payload is a
-          // decode problem a pipeline owner filters on, not silently
-          // indistinguishable from a text payload
-          case Left(status) =>
-            FakeCodec.decode(f.doc_id, f.payload).copy(decode_status = status)
-        }
-      }
-    }
   }
 
   /** Samples per media item for q166 — fixed, so the output is
@@ -208,8 +39,8 @@ object Multimodal {
     * (header 64 + idx·width·height·3). This is the planning half of
     * the video/frame pipeline: the SCHEDULE is exact relational
     * arithmetic over the decoded metadata (oracle-checked); the pixel
-    * decode it drives is the partition-local codec boundary
-    * (`decodeAll`), stubbed by contract in this container.
+    * decode it drives needs a real codec, which this engine does not
+    * carry.
     *
     * Shape: q32's row-local metadata projection + one sequence/explode
     * fan-out of exactly k rows per item — map-only, no shuffle but the
@@ -230,10 +61,11 @@ object Multimodal {
       .orderBy(col("doc_id"), col("slot"))
   }
 
-  /** The same metadata as a pure-column projection — whole-stage
-    * codegen, no object round-trip — used for the oracle query. On the
-    * text-byte corpus every payload takes the pseudo-decode path, so
-    * the two paths must agree exactly (asserted in MultimodalSpec). */
+  /** q32: per-item media metadata as a pure-column projection —
+    * whole-stage codegen, no object round-trip. The pseudo-decode
+    * hashes the payload with the polynomial hash (`TextOps.polyHash`)
+    * to pick a format and the image dimensions; the byte length gives
+    * the frame count. */
   def mediaMetadata(spark: SparkSession, d: String): DataFrame = {
     val payload = col("text").cast("binary")
     val h = polyHash(col("text")) // ASCII corpus: byte hash == char hash
@@ -261,8 +93,8 @@ object Multimodal {
     * budget (tiles·224²·3) — the numbers a multimodal batch planner
     * packs GPU batches and shard budgets with (the image-side analogue
     * of q213's token packing). Pure row-local integer arithmetic over
-    * the decoded metadata; the pixel work it schedules lives behind
-    * the `decodeAll` partition-local codec boundary.
+    * the decoded metadata; the pixel work it schedules needs a real
+    * codec.
     *
     * Shape at 100 TB: map-only — one metadata projection, zero
     * shuffles but the presentation sort. */
@@ -292,13 +124,12 @@ object Multimodal {
   /** q226: AUDIO SEGMENTATION PLAN — for every audio item, the
     * overlapping-window transcription schedule (the Whisper-style
     * chunking pass): per chunk its time span and the byte range to
-    * hand the sample decoder. Parsed WAV metadata (sample rate,
-    * channels) is used when the real header decoded; payloads without
-    * one take the documented virtual-PCM contract (s16le mono 16 kHz,
-    * 64-byte header) so the operator is total and the oracle exact —
-    * on the text-byte corpus every row takes the virtual path, and
-    * MultimodalSpec drives a real WAV fixture through the same
-    * arithmetic.
+    * hand the sample decoder. A metadata row with a sample rate and
+    * channel count uses them; a row without (every row of the q32
+    * pseudo-decode) takes the documented virtual-PCM contract (s16le
+    * mono 16 kHz, 64-byte header), so the operator is total and the
+    * oracle exact. MultimodalSpec drives a 44.1 kHz stereo row through
+    * the same arithmetic.
     *
     * Shape at 100 TB: row-local arithmetic + a sequence/explode
     * fan-out of n_chunks rows per item (duration-bounded), no shuffle
@@ -359,9 +190,8 @@ object Multimodal {
     * lightly edited images keep their brightness geometry while every
     * container byte changes.
     *
-    * Pixel source: the decoded grid behind the `decodeAll` partition
-    * boundary for real payloads; on this corpus the VIRTUAL layout the
-    * multimodal family pins everywhere (q166/q226): payload bytes
+    * Pixel source: the VIRTUAL layout the multimodal family pins
+    * everywhere (q166/q226): payload bytes
     * after the 64-byte virtual header ARE the row-major grayscale
     * pixels (text corpus: byte == ASCII char). Items with fewer than
     * 64 virtual pixels cannot fill the grid and are excluded (a real
@@ -671,9 +501,8 @@ object Multimodal {
     * container byte changes — the same argument as q245's brightness
     * grid, in the time domain.
     *
-    * Sample source: parsed WAV data when the real header decodes
-    * (s16le is THE WAV wire format); on this corpus the q226 virtual-
-    * PCM contract — s16le mono after the 64-byte header, sample k =
+    * Sample source: the q226 virtual-PCM contract (s16le, the WAV
+    * wire format) — s16le mono after the 64-byte header, sample k =
     * signed16(byte[64+2k] | byte[64+2k+1] << 8). The signed decode is
     * total (two's complement via the v ≥ 32768 branch) even though
     * ASCII payloads never exercise it — the spec drives it with

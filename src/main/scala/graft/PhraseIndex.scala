@@ -57,9 +57,8 @@ object PhraseIndex {
   private val Version = "0.0.2"
 
   def dir(spark: SparkSession, d: String): String =
-    SaltedIndex.dir(spark, "postings", Version, s"$d/documents.parquet", params(d))
-
-  private def params(d: String) = Seq("corpus" -> d, "tok" -> "space", "hotdf" -> HotDf.toString)
+    SaltedIndex.dir(spark, "postings", Version, s"$d/documents.parquet",
+      Seq("corpus" -> d, "tok" -> "space", "hotdf" -> HotDf.toString))
 
   /** (term, doc_id, pos) postings of the corpus — built once, then
     * loaded from the salted dir. pos is 0-based token position. The
@@ -67,8 +66,8 @@ object PhraseIndex {
     * tier; Catalyst pushes a probe's term filter into both scans, so
     * the packed-tier explode is df-bounded per probed term. */
   def buildOrLoad(spark: SparkSession, d: String): DataFrame =
-    postingsAt(spark, SaltedIndex.build(spark, "postings", Version, s"$d/documents.parquet",
-      params(d))(buildInto(spark, Tables.documentsDist(spark, d), _, HotDf)))
+    postingsAt(spark, SaltedIndex.build(spark, dir(spark, d))(
+      buildInto(spark, Tables.documentsDist(spark, d), _, HotDf)))
 
   private[graft] def postingsAt(spark: SparkSession, p: String): DataFrame = {
     // explicit schemas: a tier can be EMPTY (no hot terms at small SFs

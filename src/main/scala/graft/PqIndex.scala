@@ -41,16 +41,14 @@ object PqIndex {
   /** Content-addressed index dir (SaltedIndex): corpus file stamps +
     * (m, ksub) + version — any change relocates the index. */
   def dir(spark: SparkSession, d: String): String =
-    SaltedIndex.dir(spark, "pq", Version, s"$d/embeddings.parquet", params(d))
-
-  private def params(d: String) = Seq("corpus" -> d, "m" -> M.toString, "ksub" -> KSub.toString)
+    SaltedIndex.dir(spark, "pq", Version, s"$d/embeddings.parquet",
+      Seq("corpus" -> d, "m" -> M.toString, "ksub" -> KSub.toString))
 
   /** (codebooks as (subspace, code, micro-unit centroid), encoded
     * corpus). Codebooks are tiny (M·KSub rows) — always broadcast. */
   def buildOrLoad(spark: SparkSession, d: String)
       : (Seq[(Int, Int, Array[Long])], DataFrame) = {
-    val p = SaltedIndex.build(spark, "pq", Version, s"$d/embeddings.parquet", params(d))(
-      build(spark, d, _))
+    val p = SaltedIndex.build(spark, dir(spark, d))(build(spark, d, _))
     val books = spark.read.parquet(s"$p/codebooks")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))

@@ -51,13 +51,15 @@ object SaltedIndex {
   /** Observability for specs: builds of `prefix` this JVM has written. */
   def builds(prefix: String): Int = built.getOrDefault(prefix, 0)
 
-  /** The index dir `dir(...)`, committed once through `Memo.commit`:
-    * `write` writes the index under the dir it is given. A warm call
-    * pays one stamp and one flag check, and takes no lock. */
-  def build(spark: SparkSession, prefix: String, version: String, src: String,
-      params: Seq[(String, String)])(write: String => Unit): String = {
-    val p = dir(spark, prefix, version, src, params)
-    if (Memo.commit(spark, p)(write(p))) built.merge(prefix, 1, (a, b) => a + b)
+  /** Commit the index dir `p` (a `dir(...)`) once through `Memo.commit`
+    * and return it: `write` writes the index under `p`. A build counts
+    * under the prefix of `p`'s `<prefix>-<salt>` name. A warm call pays
+    * one flag check and takes no lock. */
+  def build(spark: SparkSession, p: String)(write: String => Unit): String = {
+    if (Memo.commit(spark, p)(write(p))) {
+      val name = new Path(p).getName
+      built.merge(name.substring(0, name.lastIndexOf('-')), 1, (a, b) => a + b)
+    }
     p
   }
 }

@@ -1350,7 +1350,7 @@ object Similarity {
   val BitextK = 4
   val BitextMarginMilli = 1050L
 
-  /** q257 hot-bucket cap (the q23/q142 skew knob on the vector side):
+  /** q257 hot-bucket cap (the q142 skew knob on the vector side):
     * a sign-plane bucket holding B vectors contributes C(B,2)
     * candidate pairs, so bucket work is QUADRATIC in duplication
     * level — the 10× replica probe measured exactly that (≈100×
@@ -1403,7 +1403,7 @@ object Similarity {
     val ball = e.select(col("vec_id"), col("lang"),
       posexplode(col("buckets")).as(Seq("t", "bucket")))
     // hot buckets leave the index BEFORE the pair join (one partial-agg
-    // count per bucket — the q23 capped-index shape)
+    // count per bucket, then an anti-join)
     val hot = ball.groupBy(col("t"), col("bucket"))
       .agg(count(lit(1)).as("n")).filter(col("n") > bucketCap)
       .select(col("t"), col("bucket"))

@@ -1,13 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, GraftShim, SparkSession}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.{Column, GraftShim}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native Catalyst expression for the engine's polynomial rolling hash
   * (TextOps.polyHash): h = fold(codepoints, 0, (acc,c) => (acc·131 + c)
@@ -71,9 +69,7 @@ object PolyHashExpr {
   }
 }
 
-/** Engine function surface: Column builders for direct use plus SQL
-  * registration (both per-session and via the
-  * `spark.sql.extensions=graft.functions.GraftExtensions` config). */
+/** Engine function surface: the Column builders queries call. */
 object GraftFunctions {
   def polyhash(c: Column): Column =
     GraftShim.column(PolyHashExpr(GraftShim.expression(c)))
@@ -89,8 +85,6 @@ object GraftFunctions {
     GraftShim.column(ShingleHashesExpr(GraftShim.expression(c), n))
   def shingleStream(c: Column, n: Int): Column =
     GraftShim.column(ShingleStreamExpr(GraftShim.expression(c), n))
-  def winnow(c: Column): Column =
-    GraftShim.column(WinnowFpExpr(GraftShim.expression(c)))
   def ahash64(c: Column): Column =
     GraftShim.column(AHash64Expr(GraftShim.expression(c)))
   def energyhash32(c: Column): Column =
@@ -99,111 +93,4 @@ object GraftFunctions {
     GraftShim.column(PcmStatsExpr(GraftShim.expression(c)))
   def bowcounts(c: Column, dim: Int, cap: Long): Column =
     GraftShim.column(BowCountsExpr(GraftShim.expression(c), dim, cap))
-
-  /** Constant-int argument of a SQL builder (k of minhashes, n of
-    * shinglehashes) — the kernels specialize on it at plan time. */
-  private def intArg(e: Expression, fn: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-        org.apache.spark.sql.types.IntegerType) => v
-    case other => throw new IllegalArgumentException(
-      s"$fn expects a constant INT argument, got $other")
-  }
-
-  /** SQL builders, shared by per-session registration and the
-    * extensions hook: every kernel is SQL-callable. Each entry carries
-    * its own implementing class for honest DESCRIBE FUNCTION metadata. */
-  val sqlBuilders: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
-    ("graft_polyhash", classOf[PolyHashExpr],
-      (args: Seq[Expression]) => PolyHashExpr(args.head)),
-    ("graft_dot", classOf[DotProductExpr],
-      (args: Seq[Expression]) => DotProductExpr(args(0), args(1))),
-    ("graft_bitvote32", classOf[BitVote32Expr],
-      (args: Seq[Expression]) => BitVote32Expr(args.head)),
-    ("graft_bitvote64", classOf[BitVote64Expr],
-      (args: Seq[Expression]) => BitVote64Expr(args.head)),
-    ("graft_minhashes", classOf[MinHashesExpr],
-      (args: Seq[Expression]) => MinHashesExpr(args.head, intArg(args(1), "graft_minhashes"))),
-    ("graft_shinglehashes", classOf[ShingleHashesExpr],
-      (args: Seq[Expression]) => ShingleHashesExpr(args.head, intArg(args(1), "graft_shinglehashes"))),
-    // a GENERATOR registers like any expression: the analyzer's
-    // ExtractGenerators wraps it in Generate when it appears in a
-    // projection (the engine's UDTF surface)
-    ("graft_shingle_stream", classOf[ShingleStreamExpr],
-      (args: Seq[Expression]) => ShingleStreamExpr(args.head, intArg(args(1), "graft_shingle_stream"))),
-    // row-local winnowing: the streaming-safe scalar twin of the
-    // generator + window formulation
-    ("graft_winnow", classOf[WinnowFpExpr],
-      (args: Seq[Expression]) => WinnowFpExpr(args.head)),
-    // the q245/q246 perceptual hashes as one-pass byte loops
-    ("graft_ahash64", classOf[AHash64Expr],
-      (args: Seq[Expression]) => AHash64Expr(args.head)),
-    ("graft_energyhash32", classOf[EnergyHash32Expr],
-      (args: Seq[Expression]) => EnergyHash32Expr(args.head)),
-    // q281's one-pass loudness statistics over the same decode
-    ("graft_pcmstats", classOf[PcmStatsExpr],
-      (args: Seq[Expression]) => PcmStatsExpr(args.head)),
-    // q282's hashed bag-of-words bucket counts
-    ("graft_bowcounts", classOf[BowCountsExpr],
-      (args: Seq[Expression]) => BowCountsExpr(args(0),
-        intArg(args(1), "graft_bowcounts"),
-        intArg(args(2), "graft_bowcounts").toLong)),
-    // aggregates register the same way: the analyzer wraps a bare
-    // AggregateFunction into its AggregateExpression
-    ("graft_topk", classOf[TopKByScore],
-      (args: Seq[Expression]) => TopKByScore(args(0), args(1), intArg(args(2), "graft_topk"))),
-    ("graft_cms", classOf[CountMinAgg],
-      (args: Seq[Expression]) => CountMinAgg(args(0),
-        intArg(args(1), "graft_cms"), intArg(args(2), "graft_cms"))),
-    ("graft_cms_estimate", classOf[CmsEstimateExpr],
-      (args: Seq[Expression]) => CmsEstimateExpr(args(0), args(1),
-        intArg(args(2), "graft_cms_estimate"), intArg(args(3), "graft_cms_estimate"))),
-    // Spark's own bloom machinery surfaced as SQL (it has no public SQL
-    // name upstream); the probe takes the filter via scalar subquery
-    ("graft_bloom",
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate],
-      (args: Seq[Expression]) => {
-        arity(args, 3, "graft_bloom(col, expectedItems, numBits)")
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          args(0), args(1), args(2))
-      }),
-    ("graft_might_contain",
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain],
-      (args: Seq[Expression]) => {
-        arity(args, 2, "graft_might_contain(filter, value)")
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          args(0), args(1))
-      }),
-  )
-
-  /** Named arity error instead of a bare IndexOutOfBoundsException —
-    * these SQL names exist only in this library, so the message is the
-    * user's only documentation of the expected form. */
-  private def arity(args: Seq[Expression], n: Int, usage: String): Unit =
-    if (args.length != n)
-      throw new IllegalArgumentException(
-        s"$usage expects $n arguments, got ${args.length}")
-
-  /** Register SQL-callable functions on an existing session. */
-  def register(spark: SparkSession): Unit =
-    sqlBuilders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        name, builder, "built-in")
-    }
-}
-
-/** `SparkSessionExtensions` hook: makes every graft kernel a
-  * first-class SQL function and installs the HOF-dot-product rewrite in
-  * any session created with
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.sqlBuilders.foreach { case (name, cls, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo(cls.getName, name),
-        builder))
-    }
-    ext.injectOptimizerRule(_ => graft.plans.RewriteHofDotProduct)
-    ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-  }
 }

@@ -9,10 +9,10 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Custom Catalyst GENERATOR (the "UDTF" rung of the extension ladder,
-  * SURVEY.md §2.9): `graft_shingle_stream(text, n)` emits one
+  * SURVEY.md §2.9): `GraftFunctions.shingleStream(text, n)` emits one
   * (pos, h) row per n-token shingle of a document, POSITIONAL and
   * streamed — `h` is the identical space-joined polynomial hash the
-  * `graft_shinglehashes` kernel computes, so the DuckDB oracle's
+  * `shingleHashes` kernel computes, so the DuckDB oracle's
   * `H(array_to_string(tk[i:i+n-1], ' '))` replays it exactly.
   *
   * Why a generator and not `posexplode(array)`: the array formulation
@@ -59,63 +59,8 @@ case class ShingleStreamExpr(child: Expression, n: Int)
     copy(child = c)
 }
 
-/** Row-local winnowing fingerprint selection — the row-local twin of
-  * the q118 window formulation: the whole MOSS selection for one
-  * document is a pure function of its text (shingle hashes → per-4-
-  * window rightmost minimum → distinct), so it runs inside a single
-  * projection with no window operator. Returns
-  * array<struct<pos:bigint,h:bigint>> ordered by pos; DedupSpec pins
-  * exploded-expression ≡ q118 row-for-row. */
-case class WinnowFpExpr(child: Expression)
-    extends UnaryExpression {
-  import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("pos", LongType, nullable = false),
-    StructField("h", LongType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_winnow"
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"graft_winnow requires STRING, got ${child.dataType.catalogString}")
-  protected override def nullSafeEval(input: Any): Any =
-    ShingleStreamExpr.winnow(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.ShingleStreamExpr.winnow($c)")
-  override protected def withNewChildInternal(c: Expression): WinnowFpExpr =
-    copy(child = c)
-}
-
 object ShingleStreamExpr {
   import PolyHashExpr.P
-
-  /** q118's selection, row-locally: 3-gram hashes, rightmost minimum
-    * per 4-window (full windows only), distinct (pos, h) ordered by
-    * pos. Must stay value-identical to the windowed formulation —
-    * DedupSpec asserts it. */
-  def winnow(u: UTF8String): org.apache.spark.sql.catalyst.util.ArrayData = {
-    val toks = u.toString.split(" ", -1)
-    val m = toks.length - 2 // 3-gram positions
-    val out = new scala.collection.mutable.ArrayBuffer[InternalRow]()
-    if (m >= 4) {
-      val hs = new Array[Long](m)
-      var i = 0
-      while (i < m) { hs(i) = hashWindow(toks, i, 3); i += 1 }
-      var lastPos = -1L
-      var p = 3
-      while (p < m) {
-        var sel = p - 3
-        var q = p - 2
-        while (q <= p) { if (hs(q) <= hs(sel)) sel = q; q += 1 } // rightmost min
-        if (sel.toLong != lastPos) {
-          out += new GenericInternalRow(Array[Any](sel.toLong, hs(sel)))
-          lastPos = sel.toLong
-        }
-        p += 1
-      }
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out.toArray[Any])
-  }
 
   /** Polyhash of toks[i..i+n) joined with ' ' — byte-for-byte the
     * NativeVec.shingleHashes window hash, on JVM Strings. */

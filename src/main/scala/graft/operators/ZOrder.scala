@@ -12,7 +12,8 @@ import graft.Tables
   * the interleaved key gives files whose bounding boxes are tight in
   * BOTH dimensions — parquet min/max stats then skip most files for a
   * 2-D box predicate. Same idea as Delta/Iceberg Z-ORDER, expressed as
-  * a plain column + `repartitionByRange` write, no table format needed.
+  * a plain integer column (q60) that a `repartitionByRange` write can
+  * cluster on, no table format needed.
   */
 object ZOrder {
 
@@ -27,17 +28,6 @@ object ZOrder {
         shiftright(y, i).bitwiseAND(lit(1L)) * lit(1L << (2 * i + 1))
     }
 
-  /** Scale a numeric dimension into [0, 2^bits) by linear min/max
-    * bucketing, so dimensions of unequal cardinality contribute equal
-    * bit-entropy to the interleave (raw interleave of a 150-value key
-    * with a 2400-value key is dominated by the wider key's high bits).
-    * Production layouts derive lo/hi from table stats or
-    * `approxQuantile`; any monotone bucketing preserves locality, so
-    * exact bounds are not required. */
-  def scaled(c: Column, lo: Double, hi: Double, bits: Int): Column =
-    least(lit((1L << bits) - 1), greatest(lit(0L),
-      ((c.cast("double") - lo) / (hi - lo) * (1L << bits)).cast("long")))
-
   /** q60: the clustering key for orders on (custkey, order day). */
   def zorderKeys(spark: SparkSession, d: String): DataFrame = {
     val x = col("o_custkey") % 65536L
@@ -47,12 +37,4 @@ object ZOrder {
       .withColumn("zkey", morton16(col("cust_bits"), col("day_bits")))
       .orderBy(col("o_orderkey"))
   }
-
-  /** Write `df` clustered by the given key into `nFiles` range
-    * partitions, one file each, sorted within — the layout that makes
-    * parquet min/max stats selective. */
-  def writeClustered(df: DataFrame, key: Column, nFiles: Int, dir: String): Unit =
-    df.repartitionByRange(nFiles, key)
-      .sortWithinPartitions(key)
-      .write.mode("overwrite").parquet(dir)
 }

@@ -114,20 +114,17 @@ object PbEtl {
     * all 10 categoricals encoded (SURVEY.md §7.4.1). Unseen categories at
     * predict time map to the reserved "keep" bucket, matching TF's
     * all-zero indicator behavior closely enough for rate parity. */
-  def featureStages(onlyHd: Boolean = false): Array[PipelineStage] = {
-    // strict-compat mode (M4): reproduce the reference's literal
-    // behavior — only `HD` one-hot encoded (pb_etl/tasks.py:285-286)
-    val cats = if (onlyHd) Seq("HD") else catCol
+  def featureStages(): Array[PipelineStage] = {
     val indexer = new StringIndexer()
-      .setInputCols(cats.map(c => s"${c}_str").toArray)
-      .setOutputCols(cats.map(c => s"${c}_idx").toArray)
+      .setInputCols(catCol.map(c => s"${c}_str").toArray)
+      .setOutputCols(catCol.map(c => s"${c}_idx").toArray)
       .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
     val ohe = new OneHotEncoder()
-      .setInputCols(cats.map(c => s"${c}_idx").toArray)
-      .setOutputCols(cats.map(c => s"${c}_vec").toArray)
+      .setInputCols(catCol.map(c => s"${c}_idx").toArray)
+      .setOutputCols(catCol.map(c => s"${c}_vec").toArray)
       .setHandleInvalid("keep")
     val assembler = new VectorAssembler()
-      .setInputCols((numCol ++ cats.map(c => s"${c}_vec")).toArray)
+      .setInputCols((numCol ++ catCol.map(c => s"${c}_vec")).toArray)
       .setOutputCol("features")
     Array(indexer, ohe, assembler)
   }
@@ -147,8 +144,7 @@ object PbEtl {
     override def params(conf: PbConf): Seq[(String, String)] = Seq(
       "epochs" -> conf.epochs.toString,
       "hidden" -> conf.hidden.mkString("-"),
-      "seed" -> conf.seed.toString,
-      "onlyHd" -> conf.onlyHd.toString)
+      "seed" -> conf.seed.toString)
 
     def run(ctx: Ctx): Unit = {
       val conf = ctx.conf
@@ -167,7 +163,7 @@ object PbEtl {
       // the already-transformed frame, and the final PipelineModel is
       // stitched from the fitted stages (Pipeline.fit over transformers
       // only copies them — zero extra passes over the data)
-      val prep = new Pipeline().setStages(featureStages(conf.onlyHd)).fit(train)
+      val prep = new Pipeline().setStages(featureStages()).fit(train)
       val trainF = graft.CacheScope.cached(
         prep.transform(train).select(col("features"), col("TARGET")))
       // layer-0 width from the assembled column's ML attribute metadata

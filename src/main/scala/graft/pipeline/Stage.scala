@@ -21,11 +21,6 @@ import org.apache.hadoop.fs.Path
   *                  (the reference persists via the Django ORM,
   *                  pb_etl_app/management/commands/etl.py:33-39)
   * @param jdbcTable target table name for the JDBC sink
-  * @param onlyHd    strict-compat mode for the reference's one-hot bug:
-  *                  its `indicator_column` sits outside the vocab loop so
-  *                  only `HD` is actually encoded (pb_etl/tasks.py:278-286).
-  *                  false (default) = intended semantics, all 10
-  *                  categoricals encoded (SURVEY.md §7.4.1).
   */
 final case class PbConf(
     dataRoot: String,
@@ -34,8 +29,7 @@ final case class PbConf(
     hidden: Seq[Int] = Seq(1024, 512, 256, 128, 64, 32),
     seed: Long = 42L,
     jdbcUrl: Option[String] = None,
-    jdbcTable: String = "final_results",
-    onlyHd: Boolean = false)
+    jdbcTable: String = "final_results")
 
 final case class Ctx(spark: SparkSession, conf: PbConf) {
   def fs(path: String): org.apache.hadoop.fs.FileSystem = Memo.fs(spark, path)

@@ -179,12 +179,10 @@ object AsOfJoin {
       s"as-of key types differ: ${lkE.dataType} vs ${rkE.dataType}")
     require(ltE.dataType == rtE.dataType,
       s"as-of time types differ: ${ltE.dataType} vs ${rtE.dataType}")
-    // planner.strategies covers both extension-injected strategies and
-    // experimental ones, so a GraftExtensions session is not
-    // double-registered; synchronize the check-then-act (the
-    // experimental list is a shared session var)
+    // register the strategy once per session; synchronize the
+    // check-then-act (the experimental list is a shared session var)
     spark.synchronized {
-      if (!spark.sessionState.planner.strategies.contains(AsOfJoinStrategy))
+      if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy))
         spark.experimental.extraStrategies =
           AsOfJoinStrategy +: spark.experimental.extraStrategies
     }

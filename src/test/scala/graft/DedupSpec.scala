@@ -313,35 +313,6 @@ class DedupSpec extends SparkSpec {
     assert(got == expected)
   }
 
-  test("hot-bucket cap: ≡ uncapped when no bucket is hot, bounded under adversarial skew") {
-    import spark.implicits._
-    val docsDf = Tables.documents(spark, d).select("doc_id", "text")
-    // the standard corpus has no bucket over 50 members: the cap must
-    // be a pure no-op there
-    val plain = Dedup.minhashNearDupDf(docsDf).collect().map(_.toSeq).toSeq
-    val capped = Dedup.minhashNearDupDfCapped(docsDf, 50).collect().map(_.toSeq).toSeq
-    assert(plain == capped)
-    // adversarial corpus: 60 copies of one template (every band hot) +
-    // a pair of genuine near-dups that must survive the cap
-    val words = (1 to 40).map(i => s"t$i").mkString(" ")
-    // disjoint vocabulary: the pair's buckets share nothing with the
-    // hot template buckets
-    val base = (1 to 40).map(i => s"u$i").mkString(" ")
-    val near = (1 to 40).map(i => if (i == 40) "zz" else s"u$i").mkString(" ")
-    val hotCorpus = ((1 to 60).map(i => (1000L + i, words)) ++
-      Seq((1L, base), (2L, near)))
-      .toDF("doc_id", "text")
-    val uncapped = Dedup.minhashNearDupDf(hotCorpus).count()
-    val cappedHot = Dedup.minhashNearDupDfCapped(hotCorpus, 50).collect()
-    // the template clique (C(60+,2) pairs) is the blow-up the cap removes
-    assert(uncapped > 1500, s"adversarial corpus should explode uncapped: $uncapped")
-    assert(cappedHot.length < 100,
-      s"cap failed to bound the hot-bucket candidates: ${cappedHot.length}")
-    // the genuine near-dup pair rides its own (cold) buckets: survives
-    assert(cappedHot.exists(r => r.getLong(0) == 1L && r.getLong(1) == 2L),
-      "the cold-bucket near-dup pair was lost by the cap")
-  }
-
   test("verbatim overlap equals a local longest-common-substring recompute") {
     val docs = Tables.documents(spark, d).select("doc_id", "text").collect()
       .map(r => r.getLong(0) -> r.getString(1).split(" ").toVector).toMap
@@ -673,19 +644,6 @@ class DedupSpec extends SparkSpec {
       .toMap.filter(_._2._2 >= 2)
     val gotMap = got.map(x => x._1 -> (x._2, x._4)).toMap
     assert(gotMap == expect)
-  }
-
-  test("row-local graft_winnow is value-identical to the windowed q118 formulation") {
-    // the scalar kernel must reproduce the generator+window selection
-    // row-for-row — this is what makes it a legal streaming stand-in
-    val viaExpr = Tables.documents(spark, d)
-      .select(col("doc_id"),
-        explode(graft.functions.GraftFunctions.winnow(col("text"))).as("fp"))
-      .select(col("doc_id"), col("fp.pos"), col("fp.h"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val viaWindow = TextAnalysis.winnowFingerprints(spark, d)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(viaExpr == viaWindow && viaExpr.nonEmpty)
   }
 
   test("winnow overlap recovers the high-jaccard planted pairs") {

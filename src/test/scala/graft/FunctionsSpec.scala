@@ -6,8 +6,9 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
-/** Native PolyHashExpr ≡ the higher-order-function spec, on real data,
-  * on generated strings, and through the SQL registration path. */
+/** The native kernels ≡ their higher-order-function twins and
+  * independent recomputes, on real data and on generated inputs, through
+  * the Column builders queries call. */
 class FunctionsSpec extends SparkSpec {
 
   test("native polyhash equals the HOF formulation on the corpus") {
@@ -66,79 +67,56 @@ class FunctionsSpec extends SparkSpec {
     }
   }
 
-  test("SQL registration: graft_polyhash callable from spark.sql") {
-    GraftFunctions.register(spark)
-    val r = spark.sql("SELECT graft_polyhash('ab') h").head().getLong(0)
-    assert(r == 97L * 131 + 98) // matches DuckDB list_reduce oracle value
-  }
-
-  test("SQL registration: the whole kernel family is SQL-callable") {
-    GraftFunctions.register(spark)
-    val r = spark.sql("""
-      SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d,
-             graft_bitvote32(array(3L)) AS bv,
-             graft_minhashes(array(10L, 3L), 2) AS mh,
-             graft_shinglehashes(array('ab', 'c', 'ab'), 2) AS sh
-    """).head()
-    assert(r.getDouble(0) == 11.0)
-    assert(r.getLong(1) == 3L) // single hash: its set bits win the vote
+  test("kernel family values through the Column API") {
+    import graft.functions.GraftFunctions._
+    def longs(xs: Long*) = array(xs.map(lit): _*)
+    val r = spark.range(1).select(
+      polyhash(lit("ab")).as("ph"),
+      dot(array(lit(1.0d), lit(2.0d)), array(lit(3.0d), lit(4.0d))).as("d"),
+      bitvote32(longs(3L)).as("bv"),
+      minhashes(longs(10L, 3L), 2).as("mh"),
+      shingleHashes(array(lit("ab"), lit("c"), lit("ab")), 2).as("sh")).head()
+    assert(r.getLong(0) == 97L * 131 + 98) // matches DuckDB list_reduce oracle value
+    assert(r.getDouble(1) == 11.0)
+    assert(r.getLong(2) == 3L) // single hash: its set bits win the vote
     // mh_j = min((2j+1)h + 12345 + 7919j) mod P over {10, 3}
-    assert(r.getSeq[Long](2) == Seq(
+    assert(r.getSeq[Long](3) == Seq(
       Seq(10L, 3L).map(h => (h + 12345L) % PolyHashExpr.P).min,
       Seq(10L, 3L).map(h => (3 * h + 12345L + 7919L) % PolyHashExpr.P).min))
     // 2-gram shingles of [ab, c, ab]: "ab c", "c ab" — distinct, in order
     def ph(s: String) = s.foldLeft(0L)((a, c) => (a * 131 + c.toInt) % PolyHashExpr.P)
-    assert(r.getSeq[Long](3) == Seq(ph("ab c"), ph("c ab")))
-    // non-constant k is rejected, not silently mis-planned
-    val err = intercept[Exception](
-      spark.sql("SELECT graft_minhashes(array(1L), CAST(rand() * 4 AS INT))").head())
-    assert(err.getMessage.toLowerCase.contains("constant"))
+    assert(r.getSeq[Long](4) == Seq(ph("ab c"), ph("c ab")))
   }
 
-  test("SQL registration: the custom AGGREGATES are SQL-callable too") {
-    GraftFunctions.register(spark)
+  test("dot ≡ dotHof on ragged, null-element and null arrays") {
     import spark.implicits._
-    Seq((1L, 5.0, 10L), (1L, 9.0, 11L), (1L, 9.0, 7L), (2L, 1.0, 20L))
-      .toDF("g", "score", "id").createOrReplaceTempView("agg_in")
-    // graft_topk: top-2 by score desc, id asc on ties
-    val tk = spark.sql(
-      "SELECT g, graft_topk(score, id, 2) t FROM agg_in GROUP BY g ORDER BY g")
-      .collect().map(r => r.getLong(0) ->
-        r.getSeq[org.apache.spark.sql.Row](1).map(x => (x.getDouble(0), x.getLong(1))))
-    assert(tk.toSeq == Seq(1L -> Seq((9.0, 7L), (9.0, 11L)), 2L -> Seq((1.0, 20L))))
-    // graft_cms + graft_cms_estimate round-trip: exact at this scale
-    val est = spark.sql("""
-      WITH sk AS (SELECT graft_cms(g, 64, 4) s FROM agg_in)
-      SELECT graft_cms_estimate(s, 1L, 64, 4) e1,
-             graft_cms_estimate(s, 2L, 64, 4) e2 FROM sk""").head()
-    assert(est.getLong(0) == 3L && est.getLong(1) == 1L)
-  }
-
-  test("SQL graft_bloom/graft_might_contain: scalar-subquery probe is membership-correct") {
-    GraftFunctions.register(spark)
-    import spark.implicits._
-    Seq(1L, 2L, 3L).toDF("h").createOrReplaceTempView("bloom_in")
-    Seq(1L, 2L, 4L, 9L).toDF("x").createOrReplaceTempView("bloom_probe")
-    val out = spark.sql("""
-      SELECT x, graft_might_contain(
-        (SELECT graft_bloom(h, 100L, 8000L) FROM bloom_in), x) AS m
-      FROM bloom_probe ORDER BY x""")
-      .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-    // members always hit (no false negatives)
-    assert(out(1L) && out(2L))
-    // at 8000 bits over 3 items the FP probability is ~1e-10: assert
-    // the non-members miss
-    assert(!out(4L) && !out(9L))
+    // (equal, ragged, null-element, null-array) cases
+    val df = Seq(
+      (Some(Seq[java.lang.Double](1.0, 2.0)), Some(Seq[java.lang.Double](3.0, 4.0))),
+      (Some(Seq[java.lang.Double](1.0, 2.0, 5.0)), Some(Seq[java.lang.Double](3.0, 4.0))),
+      (Some(Seq[java.lang.Double](1.0, null)), Some(Seq[java.lang.Double](3.0, 4.0))),
+      (None, Some(Seq[java.lang.Double](3.0, 4.0)))
+    ).toDF("a", "b")
+    def vals(c: org.apache.spark.sql.Column): Seq[Any] =
+      df.select(c.as("s")).collect().toSeq
+        .map(r => if (r.isNullAt(0)) null else r.getDouble(0))
+    val hof = vals(Similarity.dotHof(col("a"), col("b")))
+    val native = vals(Similarity.dot(col("a"), col("b")))
+    assert(native == hof)
+    assert(hof(0) == 11.0)
+    assert(hof(1) == null) // ragged → null, never a garbage read
+    assert(hof(2) == null) // null element poisons the sum
+    assert(hof(3) == null) // null array propagates
   }
 
   test("works inside higher-order lambdas (shingle hashing path)") {
-    GraftFunctions.register(spark)
-    val r = spark.sql(
-      "SELECT transform(array('ab','c'), s -> graft_polyhash(s)) h").head().getSeq[Long](0)
+    val r = spark.range(1)
+      .select(transform(array(lit("ab"), lit("c")), s => GraftFunctions.polyhash(s)))
+      .head().getSeq[Long](0)
     assert(r == Seq(97L * 131 + 98, 99L))
   }
 
-  test("generator graft_shingle_stream: positional rows ≡ the array twin, SQL ≡ Column") {
+  test("generator graft_shingle_stream: positional rows ≡ the array twin") {
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
       .filter(col("doc_id") < 50)
     // in-Spark twin built from existing pieces: slice the token array
@@ -155,13 +133,6 @@ class FunctionsSpec extends SparkSpec {
         GraftFunctions.shingleStream(col("text"), 3).as(Seq("pos", "h")))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(viaColumn == twin && viaColumn.nonEmpty)
-    // the SQL registration path plans the same Generate
-    GraftFunctions.register(spark)
-    docs.createOrReplaceTempView("fs_docs")
-    val viaSql = spark.sql(
-      "SELECT doc_id, graft_shingle_stream(text, 3) FROM fs_docs")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(viaSql == twin)
     // docs shorter than the window emit nothing, not an error
     import spark.implicits._
     assert(Seq("a b").toDF("text")

@@ -1,135 +1,8 @@
 package graft
 
-/** Multimodal plumbing: the typed mapPartitions decode path and the
-  * columnar metadata projection must agree row-for-row. */
+/** The multimodal planning queries (q166, q225, q226) ≡ local
+  * recomputes over the q32 metadata projection. */
 class MultimodalSpec extends SparkSpec {
-  private val d = "/root/testdata/sf0.001"
-
-  test("typed decode path matches the columnar metadata projection") {
-    import spark.implicits._
-    val typed = Multimodal.decodeAll(Multimodal.mediaFiles(spark, d))
-      .collect().map(m => (m.doc_id, m.byte_len, m.format, m.width, m.height,
-        m.n_frames, m.sample_rate, m.n_channels))
-      .sortBy(_._1)
-    val columnar = Multimodal.mediaMetadata(spark, d)
-      .as[(Long, Long, String, Long, Long, Long, Long, Long)].collect().sortBy(_._1)
-    assert(typed.toSeq == columnar.toSeq)
-  }
-
-  // --- real container headers, hand-built byte-for-byte ---
-
-  private def be16(v: Int) = Array((v >> 8).toByte, v.toByte)
-  private def be32(v: Long) = Array((v >> 24).toByte, (v >> 16).toByte, (v >> 8).toByte, v.toByte)
-  private def le16(v: Int) = Array(v.toByte, (v >> 8).toByte)
-  private def le32(v: Long) = Array(v.toByte, (v >> 8).toByte, (v >> 16).toByte, (v >> 24).toByte)
-
-  private def pngBytes(w: Long, h: Long): Array[Byte] =
-    Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte) ++
-      be32(13L) ++ "IHDR".getBytes ++ be32(w) ++ be32(h) ++
-      Array[Byte](8, 6, 0, 0, 0) ++ be32(0L) // bit depth…interlace + (unvalidated) CRC
-
-  private def jpegBytes(w: Int, h: Int): Array[Byte] =
-    Array(0xff, 0xd8).map(_.toByte) ++ // SOI
-      Array(0xff, 0xe0).map(_.toByte) ++ be16(16) ++ // APP0, 14 payload bytes
-      ("JFIF".getBytes :+ 0.toByte) ++ Array.fill[Byte](9)(0) ++
-      Array(0xff, 0xc0).map(_.toByte) ++ be16(17) ++ Array[Byte](8) ++ // SOF0, 3 components
-      be16(h) ++ be16(w) ++ Array[Byte](3) ++ Array.fill[Byte](9)(1) ++
-      Array(0xff, 0xd9).map(_.toByte) // EOI
-
-  private def wavBytes(rate: Long, channels: Int, dataBytes: Int): Array[Byte] = {
-    val block = channels * 2 // 16-bit samples
-    "RIFF".getBytes ++ le32(36L + dataBytes) ++ "WAVE".getBytes ++
-      "fmt ".getBytes ++ le32(16L) ++ le16(1) ++ le16(channels) ++
-      le32(rate) ++ le32(rate * block) ++ le16(block) ++ le16(16) ++
-      "data".getBytes ++ le32(dataBytes.toLong) ++ Array.fill[Byte](dataBytes)(0)
-  }
-
-  test("real PNG/JPEG/WAV headers decode for real: dimensions and sample rate from the bytes") {
-    import spark.implicits._
-    val files = Seq(
-      Multimodal.MediaFile(1L, pngBytes(640L, 480L), "fixture"),
-      Multimodal.MediaFile(2L, jpegBytes(1920, 1080), "fixture"),
-      Multimodal.MediaFile(3L, wavBytes(44100L, 2, 4 * 100), "fixture"),
-      Multimodal.MediaFile(4L, "not media at all".getBytes, "fixture"))
-    val out = Multimodal.decodeAll(files.toDS().repartition(2))
-      .collect().map(m => m.doc_id -> m).toMap
-    assert(out(1L).format == "png" && out(1L).width == 640L && out(1L).height == 480L)
-    assert(out(2L).format == "jpeg" && out(2L).width == 1920L && out(2L).height == 1080L)
-    assert(out(3L).format == "wav" && out(3L).sample_rate == 44100L &&
-      out(3L).n_channels == 2L && out(3L).n_frames == 100L)
-    Seq(1L, 2L, 3L).foreach(id => assert(out(id).decode_status == "ok"))
-    // unrecognized payloads fall back to the deterministic pseudo-decode
-    assert(out(4L) == Multimodal.FakeCodec.decode(4L, "not media at all".getBytes))
-    assert(out(4L).decode_status == "fallback")
-  }
-
-  test("a JPEG with a standalone TEM marker (0x01) before SOF still parses") {
-    import spark.implicits._
-    // SOI, TEM (standalone — NO length word follows), then SOF0
-    val tem = Array(0xff, 0xd8).map(_.toByte) ++
-      Array(0xff, 0x01).map(_.toByte) ++
-      Array(0xff, 0xc0).map(_.toByte) ++ be16(17) ++ Array[Byte](8) ++
-      be16(77) ++ be16(99) ++ Array[Byte](3) ++ Array.fill[Byte](9)(1) ++
-      Array(0xff, 0xd9).map(_.toByte)
-    val out = Multimodal.decodeAll(Seq(Multimodal.MediaFile(1L, tem, "f")).toDS())
-      .collect().head
-    assert(out.format == "jpeg" && out.width == 99L && out.height == 77L &&
-      out.decode_status == "ok",
-      s"TEM mis-parsed as a length-prefixed segment: $out")
-  }
-
-  test("a WAV truncated mid-data keeps its real header metadata, frames clamped") {
-    import spark.implicits._
-    // declared data size 1000, only 40 bytes actually present (block=2)
-    val full = wavBytes(16000L, 1, 1000)
-    val cut = full.take(44 + 40)
-    val out = Multimodal.decodeAll(Seq(Multimodal.MediaFile(1L, cut, "f")).toDS())
-      .collect().head
-    assert(out.format == "wav" && out.sample_rate == 16000L && out.n_channels == 1L)
-    assert(out.n_frames == 40L / 2L) // clamped to the bytes that exist
-  }
-
-  test("truncated or corrupt media headers fall back instead of throwing") {
-    import spark.implicits._
-    // adversarial chunk size: 0xFFFFFFF8 as u32 would overflow Int and
-    // stall the chunk walk (or index negatively) if not range-checked
-    val bogusWav = "RIFF".getBytes ++ le32(36L) ++ "WAVE".getBytes ++
-      "fmt ".getBytes ++ Array(0xf8, 0xff, 0xff, 0xff).map(_.toByte) ++
-      Array.fill[Byte](16)(0)
-    val files = Seq(
-      Multimodal.MediaFile(1L, pngBytes(640L, 480L).take(12), "fixture"), // cut inside IHDR
-      Multimodal.MediaFile(2L, jpegBytes(10, 10).take(3), "fixture"),
-      Multimodal.MediaFile(3L, wavBytes(8000L, 1, 16).take(20), "fixture"),
-      Multimodal.MediaFile(4L, Array[Byte](), "fixture"),
-      Multimodal.MediaFile(5L, bogusWav, "fixture"))
-    val out = Multimodal.decodeAll(files.toDS()).collect()
-    assert(out.length == 5) // total, no exceptions, no hang
-    out.foreach(m => assert(m.sample_rate == 0L || m.format == "wav"))
-    // a payload bearing real-media magic whose header fails surfaces as
-    // corrupt:<fmt> — a decode PROBLEM — while no-magic payloads are a
-    // plain fallback
-    val st = out.map(m => m.doc_id -> m.decode_status).toMap
-    assert(st(1L) == "corrupt:png" && st(2L) == "corrupt:jpeg" &&
-      st(3L) == "corrupt:wav" && st(4L) == "fallback" && st(5L) == "corrupt:wav", st)
-  }
-
-  test("payloads survive the binary round-trip intact") {
-    import spark.implicits._
-    val back = Multimodal.mediaFiles(spark, d)
-      .map(f => (f.doc_id, new String(f.payload, "UTF-8")))
-      .toDF("doc_id", "text2")
-    val bad = back.join(Tables.documents(spark, d), "doc_id")
-      .filter(org.apache.spark.sql.functions.col("text2") =!=
-        org.apache.spark.sql.functions.col("text")).count()
-    assert(bad == 0)
-  }
-
-  test("decode is distributed: runs once per row across partitions") {
-    val files = Multimodal.mediaFiles(spark, d).repartition(8)
-    val metas = Multimodal.decodeAll(files)
-    assert(metas.rdd.getNumPartitions == 8)
-    assert(metas.count() == Tables.documents(spark, d).count())
-  }
 
   test("q166 frame-sample plan ≡ local schedule recompute; uniform-sampling laws hold") {
     val d = "/root/testdata/sf0.001"

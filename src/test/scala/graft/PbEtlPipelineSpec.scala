@@ -177,24 +177,6 @@ class PbEtlPipelineSpec extends SparkSpec {
       d.withColumn(s"${c}_str", d(c).cast("string"))).na.fill(0.0, Schemas.numCol)
   }
 
-  test("M4 strict-compat: onlyHd assembles numeric + single HD indicator only") {
-    val withStrings = featureInput
-    def width(onlyHd: Boolean): Int = {
-      val out = new Pipeline().setStages(PbEtl.featureStages(onlyHd))
-        .fit(withStrings).transform(withStrings)
-      AttributeGroup.fromStructField(out.schema("features")).size
-    }
-    val (intended, strict) = (width(onlyHd = false), width(onlyHd = true))
-    // 8 numerics in both; strict mode carries ONLY the HD indicator
-    // (fixture HD has 1 distinct value; ±1 slot for the keep/dropLast
-    // bucket interplay)
-    assert(strict >= Schemas.numCol.length + 1 && strict <= Schemas.numCol.length + 2,
-      s"strict width $strict")
-    assert(intended > strict) // all 10 categoricals encoded
-    // and the fitted salt distinguishes the modes (different model dirs)
-    assert(PbEtl.FitModel.salt(ctx.conf) != PbEtl.FitModel.salt(ctx.conf.copy(onlyHd = true)))
-  }
-
   test("feature prep: the multi-column indexer equals one indexer per categorical") {
     // the fixture repeats one value per categorical: vary it per row and
     // null one row per column, then score the fit rows plus a copy whose
@@ -207,24 +189,21 @@ class PbEtlPipelineSpec extends SparkSpec {
     val score = fit.withColumn("probe", lit(0)).unionByName(
       Schemas.catCol.foldLeft(fit)((d, c) => d.withColumn(s"${c}_str", lit("unseen")))
         .withColumn("probe", lit(1)))
-    for (onlyHd <- Seq(false, true)) {
-      val cats = if (onlyHd) Seq("HD") else Schemas.catCol
-      val stages = PbEtl.featureStages(onlyHd)
-      val reference = cats.map { c =>
-        new StringIndexer().setInputCol(s"${c}_str").setOutputCol(s"${c}_idx")
-          .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
-      } ++ stages.drop(1)
-      def features(ps: Seq[PipelineStage]): (Int, Seq[(Long, Int, Vector)]) = {
-        val out = new Pipeline().setStages(ps.toArray).fit(fit).transform(score)
-        val rows = out.select(id, col("probe"), col("features")).collect()
-          .map(r => (r.getLong(0), r.getInt(1), r.getAs[Vector](2))).sortBy(r => (r._1, r._2))
-        (AttributeGroup.fromStructField(out.schema("features")).size, rows.toSeq)
-      }
-      val (size, rows) = features(stages.toSeq)
-      assert(stages.length == 3, s"onlyHd=$onlyHd")
-      assert((size, rows) == features(reference), s"onlyHd=$onlyHd")
-      assert(size > Schemas.numCol.length && rows.length == 6, s"onlyHd=$onlyHd")
+    val stages = PbEtl.featureStages()
+    val reference = Schemas.catCol.map { c =>
+      new StringIndexer().setInputCol(s"${c}_str").setOutputCol(s"${c}_idx")
+        .setHandleInvalid("keep").setStringOrderType("alphabetAsc")
+    } ++ stages.drop(1)
+    def features(ps: Seq[PipelineStage]): (Int, Seq[(Long, Int, Vector)]) = {
+      val out = new Pipeline().setStages(ps.toArray).fit(fit).transform(score)
+      val rows = out.select(id, col("probe"), col("features")).collect()
+        .map(r => (r.getLong(0), r.getInt(1), r.getAs[Vector](2))).sortBy(r => (r._1, r._2))
+      (AttributeGroup.fromStructField(out.schema("features")).size, rows.toSeq)
     }
+    val (size, rows) = features(stages.toSeq)
+    assert(stages.length == 3)
+    assert((size, rows) == features(reference))
+    assert(size > Schemas.numCol.length && rows.length == 6)
     // the persisted model: indexer, encoder, assembler, classifier
     val fitted = PbEtl.FitModel.load(ctx).stages
     assert(fitted.map(_.getClass.getSimpleName).toSeq == Seq("StringIndexerModel",

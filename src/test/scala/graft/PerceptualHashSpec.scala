@@ -93,12 +93,11 @@ class PerceptualHashSpec extends SparkSpec {
     assert(eh(t) == localEnergy(t))
   }
 
-  test("SQL surface + codegen: graft_ahash64/graft_energyhash32 registered") {
+  test("Column surface + codegen: ahash64/energyhash32") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     val t = ("H" * 64) + ("z" * 320) + ("!" * 320)
     val row = Seq(t).toDF("t")
-      .selectExpr("graft_ahash64(t) ah", "graft_energyhash32(t) eh")
+      .select(GraftFunctions.ahash64(col("t")), GraftFunctions.energyhash32(col("t")))
       .head()
     assert(row.getLong(0) == ah(t) && row.getLong(1) == eh(t))
     // both kernels implement doGenCode (not CodegenFallback) — the

@@ -1,10 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import graft.operators.ZOrder
-import java.nio.file.Files
-
 class ZOrderSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
@@ -37,55 +32,5 @@ class ZOrderSpec extends SparkSpec {
     assert(!plan.contains("CodegenFallback"), plan.take(2000))
     // "*(n)" is the compact WholeStageCodegen marker in plan strings
     assert(plan.contains("*(1)"), plan.take(2000))
-  }
-
-  test("z-order layout bounds both dimensions; single-key layout only one") {
-    // Per-file (cust, day) bounding boxes stand in for the parquet
-    // footer min/max stats a scan would use for file skipping. At this
-    // SF custkey spans ~150 values vs ~2400 days, so the dimensions
-    // must be entropy-balanced (`scaled`) before interleaving — the
-    // same reason production Z-order buckets on per-column range IDs.
-    val keyed = SparkEntry.queries("q60_zorder_keys")(spark, d)
-      .select(col("cust_bits"), col("day_bits"),
-        ZOrder.morton16(
-          ZOrder.scaled(col("cust_bits"), 0, 150, 8),
-          ZOrder.scaled(col("day_bits"), 0, 2500, 8)).as("zkey"))
-    val tmp = Files.createTempDirectory("zorder").toFile
-    try {
-      val byDay = s"${tmp.getPath}/by_day"
-      val byZ = s"${tmp.getPath}/by_z"
-      ZOrder.writeClustered(keyed, col("day_bits"), 16, byDay)
-      ZOrder.writeClustered(keyed, col("zkey"), 16, byZ)
-      def boxes(dir: String): Array[(Long, Long, Long, Long)] =
-        spark.read.parquet(dir)
-          .groupBy(input_file_name())
-          .agg(min("cust_bits").as("c0"), max("cust_bits").as("c1"),
-            min("day_bits").as("d0"), max("day_bits").as("d1"))
-          .collect()
-          .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      val dayBoxes = boxes(byDay)
-      val zBoxes = boxes(byZ)
-      assert(dayBoxes.length >= 8 && zBoxes.length >= 8)
-      // a query selective on customer alone (bottom quarter of the key
-      // range): the day-ranged layout has no customer locality (every
-      // file intersects); z-order bounds customer too
-      def custHits(bs: Array[(Long, Long, Long, Long)]): Int =
-        bs.count { case (c0, _, _, _) => c0 <= 37L } // intersects cust in [0, 37]
-      assert(custHits(dayBoxes) == dayBoxes.length, "expected zero cust locality by day")
-      assert(custHits(zBoxes) <= zBoxes.length * 3 / 4,
-        s"z-order should skip files on a cust-only box: " +
-          s"${custHits(zBoxes)}/${zBoxes.length}")
-      // and it still retains day locality: a day box hits fewer than all
-      def dayHits(bs: Array[(Long, Long, Long, Long)]): Int =
-        bs.count { case (_, _, d0, d1) => d0 <= 150L && d1 >= 0L }
-      assert(dayHits(zBoxes) < zBoxes.length,
-        s"z-order should retain some day locality: ${dayHits(zBoxes)}/${zBoxes.length}")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(tmp)
-    }
   }
 }
