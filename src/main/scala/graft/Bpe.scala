@@ -103,7 +103,7 @@ object Bpe {
         .toDF("rank", "lhs", "rhs", "merged", "pair_count")
         .coalesce(1).write.mode("overwrite").parquet(s"$p/merges")
     }
-    spark.read.parquet(s"$dir/merges")
+    Tables.parquet(spark, s"$dir/merges")
   }
 
   /** q116: the learned merge table, rank-ordered. */

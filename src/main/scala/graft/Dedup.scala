@@ -589,7 +589,7 @@ object Dedup {
       clusterLabels(Tables.documents(spark, d), minhashNearDup(spark, d))
         .write.mode("overwrite").parquet(s"$p/labels")
     }
-    withSizes(spark.read.parquet(s"$dir/labels"))
+    withSizes(Tables.parquet(spark, s"$dir/labels"))
   }
 
   private val ClusterIdxVersion = "0.0.1"

@@ -52,16 +52,16 @@ object DedupIndex {
     * built once, then loaded from the salted dir. */
   def buildOrLoad(spark: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     val p = built(spark, d)
-    (spark.read.parquet(s"$p/keys"),
-      spark.read.parquet(s"$p/sets"),
-      spark.read.parquet(s"$p/bands"))
+    (Tables.parquet(spark, s"$p/keys"),
+      Tables.parquet(spark, s"$p/sets"),
+      Tables.parquet(spark, s"$p/bands"))
   }
 
   /** The distinct 16-token chunk hashes of the standing corpus — the
     * membership side of q155's ingest-time paragraph dedup. Same
     * salted dir, so a warm corpus version pays zero chunk work. */
   def buildOrLoadChunks(spark: SparkSession, d: String): DataFrame =
-    spark.read.parquet(s"${built(spark, d)}/chunks")
+    Tables.parquet(spark, s"${built(spark, d)}/chunks")
 
   private def build(spark: SparkSession, d: String, p: String): Unit = {
     val corpus = Tables.documentsDist(spark, d).filter(isCorpus)
@@ -73,7 +73,7 @@ object DedupIndex {
       .write.mode("overwrite").parquet(s"$p/sets")
     // band keys from the persisted sets — the corpus text is shingled
     // exactly once, even inside the build
-    spark.read.parquet(s"$p/sets")
+    Tables.parquet(spark, s"$p/sets")
       .select(col("doc_id"),
         posexplode(nearDupBandKeys(col("hs"))).as(Seq("b", "key")))
       .write.mode("overwrite").parquet(s"$p/bands")

@@ -46,7 +46,7 @@ object Graph {
         .union(b.select(col("c").as("src"), col("s").as("dst")))
         .write.mode("overwrite").parquet(s"$p/arcs")
     }
-    spark.read.parquet(s"$dir/arcs")
+    Tables.parquet(spark, s"$dir/arcs")
   }
 
   private val ArcIdxVersion = "0.0.1"
@@ -143,7 +143,7 @@ object Graph {
         .select(col("a.pk").as("p1"), col("b.pk").as("p2")).distinct()
         .write.mode("overwrite").parquet(s"$p/edges")
     }
-    spark.read.parquet(s"$dir/edges")
+    Tables.parquet(spark, s"$dir/edges")
   }
 
   private val CpIdxVersion = "0.0.1"
@@ -948,7 +948,7 @@ object Graph {
         .select(col("c"), col("p")).distinct()
         .write.mode("overwrite").parquet(s"$p/edges")
     }
-    spark.read.parquet(s"$dir/edges")
+    Tables.parquet(spark, s"$dir/edges")
   }
 
   private val BipIdxVersion = "0.0.1"

@@ -64,11 +64,11 @@ object IvfIndex {
   def buildOrLoad(spark: SparkSession, d: String, nlist: Int)
       : (Seq[(Int, Array[Long])], DataFrame) = {
     val p = SaltedIndex.build(spark, dir(spark, d, nlist))(build(spark, d, nlist, _))
-    val centroids = spark.read.parquet(s"$p/centroids")
+    val centroids = Tables.parquet(spark, s"$p/centroids")
       .collect()
       .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
       .sortBy(_._1).toSeq
-    (centroids, spark.read.parquet(s"$p/corpus"))
+    (centroids, Tables.parquet(spark, s"$p/corpus"))
   }
 
   private def build(spark: SparkSession, d: String, nlist: Int,

@@ -49,11 +49,11 @@ object PqIndex {
   def buildOrLoad(spark: SparkSession, d: String)
       : (Seq[(Int, Int, Array[Long])], DataFrame) = {
     val p = SaltedIndex.build(spark, dir(spark, d))(build(spark, d, _))
-    val books = spark.read.parquet(s"$p/codebooks")
+    val books = Tables.parquet(spark, s"$p/codebooks")
       .collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Long](2).toArray))
       .sortBy(t => (t._1, t._2)).toSeq
-    (books, spark.read.parquet(s"$p/codes"))
+    (books, Tables.parquet(spark, s"$p/codes"))
   }
 
   /** Per-subspace fixed-round integer Lloyd — the q136 recurrence with

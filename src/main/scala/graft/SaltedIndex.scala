@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.hadoop.fs.Path
+import scala.util.control.NonFatal
 import graft.pipeline.Memo
 
 /** Shared machinery for the persisted content-addressed indexes —
@@ -25,8 +26,11 @@ object SaltedIndex {
       s"${sys.props("java.io.tmpdir")}/graft-ivf")
 
   /** Stable stamp of the file(s) behind `src` (a parquet file or a
-    * directory of parts); "absent" when unreadable so dir() still
-    * resolves and the build fails with the real read error. */
+    * directory of parts); it also keys `Tables.parquet`'s schema memo.
+    * "absent" when missing or unreadable, so dir() still resolves and
+    * the build fails with the real read error. Only non-fatal errors
+    * read as "absent": an interrupt (a cancelled job group's thread) or
+    * an OOM propagates. */
   def stamp(spark: SparkSession, src: String): String =
     try {
       val f = Memo.fs(spark, src)
@@ -38,7 +42,7 @@ object SaltedIndex {
             .sortBy(_._1)
         else Seq((st.getPath.getName, st.getLen, st.getModificationTime))
       parts.map { case (n, l, m) => s"$n:$l:$m" }.mkString(",")
-    } catch { case _: Throwable => "absent" }
+    } catch { case NonFatal(_) => "absent" }
 
   /** Content-addressed index dir `<root>/<prefix>-<salt>`. */
   def dir(spark: SparkSession, prefix: String, version: String, src: String,

@@ -1,13 +1,17 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
-/** Loaders for the driver-generated test tables (TESTDATA.md).
+/** Loaders for the driver-generated test tables (TESTDATA.md), and the
+  * one parquet read path of the engine (`parquet`).
   *
   * All queries receive a scale-factor directory and read the parquet
-  * directly — schema comes from parquet footers (explicit-at-scan, never
-  * inferred from data; mirrors the reference's dtype discipline,
-  * reference pb_etl/tasks.py:21-43).
+  * directly — schema comes from parquet footers, never inferred from
+  * data, and the footers are read once per data version, not on every
+  * read: later reads scan with the schema resolved then (the
+  * reference likewise reads every table with a declared schema,
+  * pb_etl/tasks.py:21-43).
   *
   * Scale notes: `lineitem`/`orders`/`events` are the fact tables (grow
   * with sf). Of the dimensions, only `region`/`nation` have FIXED
@@ -23,7 +27,39 @@ object Tables {
   val all: Seq[String] = factTables ++ dimTables
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** (path, parquet conf fingerprint) → (file stamp, schema inferred there). */
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[(String, String), (String, StructType)]
+
+  /** Read the parquet at `path`, resolving its schema once per data
+    * version. Inference (`spark.read.parquet`) runs one Spark job to
+    * read the footers; a path whose `SaltedIndex.stamp` (file names,
+    * lengths, mtimes) and parquet confs match the last inference there
+    * reads with that schema instead and runs none. The stored schema is
+    * exactly what inference returned, field metadata included (ML
+    * vector attributes). A changed stamp re-infers and replaces the
+    * path's entry; an unreadable path is never stored, so the read
+    * fails with Spark's own error. */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val key = (path, parquetConfs(spark))
+    val stamp = SaltedIndex.stamp(spark, path)
+    Option(schemas.get(key)).filter(_._1 == stamp) match {
+      case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        if (stamp != "absent") schemas.put(key, (stamp, df.schema))
+        df
+    }
+  }
+
+  /** Every session conf that can change what parquet inference returns
+    * (e.g. `nanosAsLong`, `inferTimestampNTZ`, `binaryAsString`). */
+  private def parquetConfs(spark: SparkSession): String =
+    spark.conf.getAll.toSeq
+      .filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.") }
+      .sorted.mkString(",")
 
   /** Events with `ts` normalized to a LongType of epoch-NANOSECONDS —
     * the engine-wide event-time contract. Integer nanos keep event-time
@@ -50,7 +86,7 @@ object Tables {
   def eventsNs(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, unix_micros}
     import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-    val df = spark.read.parquet(s"$d/events.parquet")
+    val df = parquet(spark, s"$d/events.parquet")
     df.schema("ts").dataType match {
       case LongType =>
         assertPlausibleNanos(df)

@@ -116,12 +116,14 @@ trait Stage {
 
   def run(ctx: Ctx): Unit
 
-  /** Convenience: this stage's materialized output as a DataFrame.
+  /** Convenience: this stage's materialized output as a DataFrame,
+    * read through `graft.Tables.parquet` (schema inferred once per
+    * committed version of the dir).
     *
     * S4 read gate: refuses to read an incomplete target — a dir without
     * its `_SUCCESS` flag is a partial/failed write (the reference's
     * read_dask raises the same way, pb_etl/luigi/dask/target.py:139-148). */
-  def read(ctx: Ctx): DataFrame = ctx.spark.read.parquet(readableDir(ctx))
+  def read(ctx: Ctx): DataFrame = graft.Tables.parquet(ctx.spark, readableDir(ctx))
 
   /** The output dir, once it has passed the S4 read gate. */
   def readableDir(ctx: Ctx): String = {
