@@ -54,17 +54,6 @@ object Bench {
         name -> (if (oks.nonEmpty) Right(oks.min)
                  else Left(rs.map(_._2).collectFirst { case Left(m) => m }.get))
       }
-    // JSON string escape incl. ALL control chars — exception messages
-    // routinely contain newlines and the output must stay one line
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // The driver captures only the LAST ~2000 characters of stdout and
     // parses the JSON line out of that window (BENCH_r{1,2,3}.json all
     // record tail=2000 and parsed=null: the full-name + pass-array line
@@ -78,14 +67,8 @@ object Bench {
     def short(name: String): String = name.takeWhile(_ != '_')
     def sec3(t: Double): String = // Locale.ROOT: a comma decimal point would break the JSON
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(t))
-    // stdout per-query precision is 2 decimals: 10 ms resolution is
-    // plenty for the gate's profile, and the saved byte per query is
-    // real window headroom (full precision lives in bench_detail.json)
     def sec2(t: Double): String =
       String.format(java.util.Locale.ROOT, "%.2f", Double.box(t))
-    val qs = results.map { case (k, v) =>
-      s"\"" + short(k) + "\":" + v.fold(_ => "null", sec2)
-    }.mkString("{", ",", "}")
     // every pass time, in run order (crashed pass = null): min-of-2 hides
     // a contended pass; the raw pair makes a contention artifact
     // self-diagnosing in the recorded detail file (pass1 >> pass2 or
@@ -100,10 +83,10 @@ object Bench {
     // capture window and erase the whole bench record. Full messages live
     // in bench_detail.json.
     val failures = results.collect { case (k, Left(m)) => (k, m) }
-    val fj = failures.map { case (k, m) => s"\"" + short(k) + "\":" + jstr(m.take(40)) }
+    val fj = failures.map { case (k, m) => s"\"" + short(k) + "\":" + Verify.jstr(m.take(40)) }
       .mkString("{", ",", "}")
     val fullQs = results.map { case (k, v) =>
-      s"\"" + k + "\":" + v.fold(jstr, _.toString)
+      s"\"" + k + "\":" + v.fold(Verify.jstr, _.toString)
     }.mkString("{", ",", "}")
     // Cold-pass truth: "value" is the min-of-passes total (robust to
     // host contention) but at 100 TB every pass is a cold pass, so the
@@ -176,22 +159,13 @@ object Bench {
     // something to say.
     def line(qj: String, fjx: String, extra: String = "", cold: String = coldJson) =
       s"""{"metric":"total","value":${sec3(total)}$calAdjJson,"unit":"sec","queries":$qj,"failures":$fjx$extra$cold$envJson,"sf":"$sfDir"}"""
-    // 1-decimal rung: past ~155 queries the 2-decimal map alone
-    // overflows the window (159 × ~12 B > 1900), and whole seconds
-    // flatten every sub-second query to 0 — 100 ms resolution keeps
-    // the gate's profile readable for ~175 queries before the int rung
     def sec1(t: Double): String =
       String.format(java.util.Locale.ROOT, "%.1f", Double.box(t))
-    def qs1 = results.map { case (k, v) =>
-      s"\"" + short(k) + "\":" + v.fold(_ => "null", sec1)
-    }.mkString("{", ",", "}")
-    def qsInt = results.map { case (k, v) => // whole seconds, floor
-      s"\"" + short(k) + "\":" + v.fold(_ => "null", t => t.toLong.toString)
-    }.mkString("{", ",", "}")
     val fjCount = s"""{"count":${failures.size}}"""
-    // Nonzero-only rung: past ~210 queries even the whole-second map
-    // overflows the window while carrying almost no information (a
-    // healthy profile is mostly "q..":0). Keeping only queries ≥ 0.95 s
+    // Nonzero-only rung (the first): a map of every query cannot fit —
+    // with 350 registered queries even whole seconds ("q..":0) need
+    // over 3 KB — and would carry almost no information (a healthy
+    // profile is mostly "q..":0). Keeping only queries ≥ 0.95 s
     // at 1-decimal precision preserves exactly the entries the gate's
     // profile can read, scales with the EXPENSIVE-query count instead
     // of the registry size, and says how many sub-second queries were
@@ -224,8 +198,7 @@ object Bench {
     val (top40, top40x) = qsTop(40)
     val (top20, top20x) = qsTop(20)
     val lastRung = line("{}", fjCount, cold = "")
-    val out = Seq(line(qs, fj), line(qs1, fj), line(qsInt, fj),
-        line(qsNz, fj, nzExtra), line(qsNz, fjCount, nzExtra),
+    val out = Seq(line(qsNz, fj, nzExtra), line(qsNz, fjCount, nzExtra),
         line(top40, fjCount, top40x), line(top20, fjCount, top20x),
         lastRung)
       .find(_.length <= 1900).getOrElse(lastRung)

@@ -821,24 +821,38 @@ object Curation {
     * bounded by |langs|·max_len rows, and the cumulative windows run
     * over that bounded relation only (the q113 justified-bounded
     * idiom). */
-  def lengthPercentiles(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hist = Tables.documentsDist(spark, d)
-      .select(col("lang"), size(toks(col("text"))).cast("long").as("n_tok"))
-      .groupBy(col("lang"), col("n_tok")).agg(count(lit(1)).as("c"))
-    val byLang = Window.partitionBy(col("lang"))
-    val cum = hist
-      .withColumn("cum", sum(col("c")).over(byLang.orderBy(col("n_tok"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("n", sum(col("c")).over(byLang))
-    cum.groupBy(col("lang"))
+  def lengthPercentiles(spark: SparkSession, d: String): DataFrame =
+    cumulative(tokLengthHist(spark, d), "lang", "n_tok")
+      .groupBy(col("lang"))
       .agg(max(col("n")).as("n_docs"),
         min(col("n_tok")).as("min_tok"), max(col("n_tok")).as("max_tok"),
-        min(when(col("cum") >= expr("(n * 50 + 99) div 100"), col("n_tok"))).as("p50_tok"),
-        min(when(col("cum") >= expr("(n * 90 + 99) div 100"), col("n_tok"))).as("p90_tok"),
-        min(when(col("cum") >= expr("(n * 99 + 99) div 100"), col("n_tok"))).as("p99_tok"))
+        pctl(50, "n_tok").as("p50_tok"), pctl(90, "n_tok").as("p90_tok"),
+        pctl(99, "n_tok").as("p99_tok"))
       .orderBy(col("lang"))
+
+  /** The (lang, n_tok, c) token-length histogram: one corpus scan
+    * collapsed to |langs|·max_len rows. */
+  private[graft] def tokLengthHist(spark: SparkSession, d: String): DataFrame =
+    Tables.documentsDist(spark, d)
+      .select(col("lang"), size(toks(col("text"))).cast("long").as("n_tok"))
+      .groupBy(col("lang"), col("n_tok")).agg(count(lit(1)).as("c"))
+
+  /** A (key, value, c) histogram plus, per `key`, the running count
+    * `cum` in `value` order and the total `n` — the cumulative windows
+    * run over the bounded histogram, never the corpus. */
+  private[graft] def cumulative(hist: DataFrame, key: String, value: String): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val byKey = Window.partitionBy(col(key))
+    hist
+      .withColumn("cum", sum(col("c")).over(byKey.orderBy(col(value))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+      .withColumn("n", sum(col("c")).over(byKey))
   }
+
+  /** Exact rank percentile `p` over [[cumulative]] rows: the least
+    * `value` whose running count reaches ⌈p·n/100⌉. */
+  private[graft] def pctl(p: Int, value: String): Column =
+    min(when(col("cum") >= expr(s"(n * $p + 99) div 100"), col(value)))
 
   /** q152: leakage-safe train/val/test split — the q111 content-hash
     * split made consistent with q49's near-dup clusters, so two
@@ -1217,19 +1231,10 @@ object Curation {
     * corpus — so the winsorized sum is Σ c·clip(value), one more
     * agg over bounded rows. The corpus is scanned exactly once. */
   def winsorizedStats(spark: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val hist = Tables.documentsDist(spark, d)
-      .select(col("lang"), size(toks(col("text"))).cast("long").as("n_tok"))
-      .groupBy(col("lang"), col("n_tok")).agg(count(lit(1)).as("c"))
-    val byLang = Window.partitionBy(col("lang"))
-    val cum = hist
-      .withColumn("cum", sum(col("c")).over(byLang.orderBy(col("n_tok"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("n", sum(col("c")).over(byLang))
-    val bounds = cum.groupBy(col("lang"))
+    val hist = tokLengthHist(spark, d)
+    val bounds = cumulative(hist, "lang", "n_tok").groupBy(col("lang"))
       .agg(max(col("n")).as("n_docs"),
-        min(when(col("cum") >= expr("(n * 5 + 99) div 100"), col("n_tok"))).as("lo"),
-        min(when(col("cum") >= expr("(n * 95 + 99) div 100"), col("n_tok"))).as("hi"))
+        pctl(5, "n_tok").as("lo"), pctl(95, "n_tok").as("hi"))
     hist.join(bounds, "lang")
       .withColumn("w_tok", greatest(col("lo"), least(col("hi"), col("n_tok"))))
       .groupBy(col("lang"))

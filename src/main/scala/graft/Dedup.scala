@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for a training-data pipeline, over the
@@ -65,13 +65,28 @@ object Dedup {
   def ngramJaccard(spark: SparkSession, d: String): DataFrame = {
     val sets = CacheScope.cached(shingleSets(spark, d))
     val sh = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val common = sh.as("a")
-      .join(sh.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("cm"))
+    val common = sharedCounts(sh)
     val sz = sets.select(col("doc_id"), size(col("hs")).as("sz"))
     pairJaccard(common, sz, 0.6)
   }
+
+  /** All i < j element pairs of each row's array `ds`, as (a, b) —
+    * generated in place by posexplode × slice (C(|ds|, 2) rows per
+    * row, no self-join shuffle). A sorted `ds` makes `a` precede `b`. */
+  private[graft] def arrayPairs(byKey: DataFrame): DataFrame =
+    byKey
+      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
+      .select(col("a"),
+        explode(slice(col("ds"), col("i") + lit(2),
+          size(col("ds")) - col("i") - lit(1))).as("b"))
+
+  /** The shingle inverted-index self-join over `sh` (doc_id, h): per
+    * pair (doc_a < doc_b) sharing a hash, the shared count `cm`. */
+  private[graft] def sharedCounts(sh: DataFrame): DataFrame =
+    sh.as("a")
+      .join(sh.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
+      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("cm"))
 
   /** jaccard = |∩| / (|A| + |B| − |∩|), thresholded — the ONE
     * definition of the dedup family's similarity formula (q22/q46/q23,
@@ -145,10 +160,7 @@ object Dedup {
         .filter(col("df") <= cap).select(col("h"))
       CacheScope.cached(allSh.join(keep, "h"))
     }
-    val common = sh.as("a")
-      .join(sh.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("cm"))
+    val common = sharedCounts(sh)
     val sz = sets.select(col("doc_id"), size(col("hs")).cast("long").as("sz"))
     common
       .join(sz.toDF("doc_a", "sa"), "doc_a")
@@ -249,13 +261,26 @@ object Dedup {
   private[graft] def minhashCommonSz(shingled: DataFrame): (DataFrame, DataFrame) = {
     val sets = CacheScope.cached(shingled
       .select(col("doc_id"), col("hs"), nearDupBandKeys(col("hs")).as("bands")))
+    candidateCommonSz(sets, bandCandidates(sets))
+  }
+
+  /** q23's band candidates over `sets` (doc_id, bands): distinct
+    * (doc_a < doc_b) pairs that share a (band, key). */
+  private[graft] def bandCandidates(sets: DataFrame): DataFrame = {
     val bands = sets.select(col("doc_id"), posexplode(col("bands")).as(Seq("b", "key")))
-    val cand = bands.as("x")
+    bands.as("x")
       .join(bands.as("y"),
         col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
+  }
+
+  /** q23's verify relations over `sets` (doc_id, hs): (common = per
+    * candidate pair the shared shingle count `cm`, sz = per-doc set
+    * size). The intersection joins only candidate pairs. */
+  private[graft] def candidateCommonSz(sets: DataFrame, cand: DataFrame)
+      : (DataFrame, DataFrame) = {
     val h = sets.select(col("doc_id"), explode(col("hs")).as("h"))
     val common = cand
       .join(h.as("p"), col("doc_a") === col("p.doc_id"))
@@ -284,18 +309,9 @@ object Dedup {
   def lshEval(spark: SparkSession, d: String): DataFrame = {
     val sets = CacheScope.cached(shingleSets(spark, d)
       .select(col("doc_id"), col("hs"), nearDupBandKeys(col("hs")).as("bands")))
-    val bands = sets.select(col("doc_id"), posexplode(col("bands")).as(Seq("b", "key")))
-    val cand = CacheScope.cached(bands.as("x")
-      .join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct())
+    val cand = CacheScope.cached(bandCandidates(sets))
     val sh = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val common = sh.as("a")
-      .join(sh.as("b"), col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-      .agg(count(lit(1)).as("cm"))
+    val common = sharedCounts(sh)
     val sz = sets.select(col("doc_id"), size(col("hs")).as("sz"))
     val exact = CacheScope.cached(
       jaccardPairs(common, sz, sz, 0.5).select(col("doc_a"), col("doc_b")))
@@ -330,19 +346,8 @@ object Dedup {
       .select(col("doc_id"), col("hs"),
         graft.functions.GraftFunctions.minhashes(col("hs"), K).as("mh"),
         nearDupBandKeys(col("hs")).as("bands")))
-    val bands = sets.select(col("doc_id"), posexplode(col("bands")).as(Seq("b", "key")))
-    val cand = bands.as("x")
-      .join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.key") === col("y.key") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    val sh = sets.select(col("doc_id"), explode(col("hs")).as("h"))
-    val common = cand
-      .join(sh.as("p"), col("doc_a") === col("p.doc_id"))
-      .join(sh.as("q"), col("doc_b") === col("q.doc_id") && col("p.h") === col("q.h"))
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("cm"))
-    val sz = sets.select(col("doc_id"), size(col("hs")).as("sz"))
+    val cand = bandCandidates(sets)
+    val (common, sz) = candidateCommonSz(sets, cand)
     val mh = sets.select(col("doc_id"), col("mh"))
     val scored = cand
       .join(mh.toDF("doc_a", "mha"), "doc_a")
@@ -391,22 +396,36 @@ object Dedup {
       .select(col("doc_id"),
         graft.functions.GraftFunctions.bitvote32(th).as("simhash"))
     // 7 chunks: 4×5 bits + 3×4 bits (shift, mask)
-    val chunkDefs = Seq((0, 31L), (5, 31L), (10, 31L), (15, 31L),
-      (20, 15L), (24, 15L), (28, 15L))
-    val chunks = sig.select(col("doc_id"), col("simhash"),
-      posexplode(array(chunkDefs.map { case (sh, m) =>
-        shiftright(col("simhash"), sh).bitwiseAND(lit(m))
-      }: _*)).as(Seq("c", "v")))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
+    hammingPairs(sig, Seq("simhash"), bitChunks(col("simhash"),
+        Seq((0, 31L), (5, 31L), (10, 31L), (15, 31L), (20, 15L), (24, 15L), (28, 15L))),
+        "v", lit(6))
+      .orderBy(col("doc_a"), col("doc_b"))
+  }
+
+  /** `h`'s bit fields (h >> shift) & mask, one per (shift, mask). */
+  private[graft] def bitChunks(h: Column, defs: Seq[(Int, Long)]): Seq[Column] =
+    defs.map { case (sh, m) => shiftright(h, sh).bitwiseAND(lit(m)) }
+
+  /** Chunk-blocked Hamming self-join over `sig` (doc_id, `hashes`…):
+    * docs that share any chunk value (the `chunks` of a row, exploded
+    * as (c, `cv`)) are candidates, and a candidate pair is kept when
+    * Σ popcount(a xor b) over `hashes` is ≤ `radius`. By pigeonhole a
+    * radius below the chunk count loses no pair, so the result equals
+    * all-pairs. Returns distinct (doc_a < doc_b, dist). */
+  private[graft] def hammingPairs(sig: DataFrame, hashes: Seq[String],
+      chunks: Seq[Column], cv: String, radius: Column): DataFrame = {
+    val exploded = sig.select((col("doc_id") +: hashes.map(col)) :+
+      posexplode(array(chunks: _*)).as(Seq("c", cv)): _*)
+    exploded.as("a")
+      .join(exploded.as("b"),
+        col("a.c") === col("b.c") && col(s"a.$cv") === col(s"b.$cv") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("dist"))
-      .filter(col("dist") <= 6)
+        hashes.map(h => bit_count(col(s"a.$h").bitwiseXOR(col(s"b.$h"))))
+          .reduce(_ + _).cast("long").as("dist"))
+      .filter(col("dist") <= radius)
       // a qualifying pair collides in every equal chunk — dedup candidates
       .distinct()
-      .orderBy(col("doc_a"), col("doc_b"))
   }
 
   /** 64-bit SimHash near-dup — the production-width variant of q24.
@@ -431,20 +450,10 @@ object Dedup {
     val sig = docs.select(col("doc_id"),
       graft.functions.GraftFunctions.bitvote64(th).as("simhash"))
     // 7 chunks: 1×10 bits + 6×9 bits (shift, mask) = 64
-    val chunkDefs = Seq((0, 1023L), (10, 511L), (19, 511L), (28, 511L),
-      (37, 511L), (46, 511L), (55, 511L))
-    val chunks = sig.select(col("doc_id"), col("simhash"),
-      posexplode(array(chunkDefs.map { case (sh, m) =>
-        shiftright(col("simhash"), sh).bitwiseAND(lit(m))
-      }: _*)).as(Seq("c", "v")))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.c") === col("b.c") && col("a.v") === col("b.v") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash"))).cast("long").as("dist"))
-      .filter(col("dist") <= 6)
-      .distinct()
+    hammingPairs(sig, Seq("simhash"), bitChunks(col("simhash"),
+        Seq((0, 1023L), (10, 511L), (19, 511L), (28, 511L), (37, 511L), (46, 511L),
+          (55, 511L))),
+        "v", lit(6))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -1760,11 +1769,7 @@ object Dedup {
         .agg(sort_array(collect_list(struct(col("doc_id"), col("source"))))
           .as("ds"))
         .filter(size(col("ds")) >= 2)
-      val pairStats = byGram
-        .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-        .select(col("a"),
-          explode(slice(col("ds"), col("i") + lit(2),
-            size(col("ds")) - col("i") - lit(1))).as("b"))
+      val pairStats = arrayPairs(byGram)
         .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
           (col("a.source") === col("b.source")).as("same"))
         .distinct()

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph analytics over relations the engine already stores — the
@@ -651,15 +651,16 @@ object Graph {
     ktRebuildRounds = 0
     ktDeltaRounds = 0
     import CacheScope.truncate
-    // triangle triple → its three canonical (p1 < p2) edges; corner
+    // triangle triple → its three canonical (p1 < p2) edges `e`; corner
     // ids are arbitrary order under (deg,id) orientation, so each
     // edge is re-sorted — the triple itself stays the identity key
-    def incidence(t: DataFrame): DataFrame =
-      t.select(col("a"), col("b"), col("c"), explode(array(
+    def triEdges: Column = explode(array(
         struct(least(col("a"), col("b")).as("p1"), greatest(col("a"), col("b")).as("p2")),
         struct(least(col("b"), col("c")).as("p1"), greatest(col("b"), col("c")).as("p2")),
         struct(least(col("a"), col("c")).as("p1"), greatest(col("a"), col("c")).as("p2"))))
-        .as("e"))
+      .as("e")
+    def incidence(t: DataFrame): DataFrame =
+      t.select(col("a"), col("b"), col("c"), triEdges)
         .select(col("a"), col("b"), col("c"), col("e.p1"), col("e.p2"))
     def degreesOf(edges: DataFrame): DataFrame =
       edges.select(col("p1").as("node"))
@@ -669,11 +670,7 @@ object Graph {
     // explode-to-edges + hash-agg + one left join, all ONE lazy plan
     def supportOf(edges: DataFrame, tris: DataFrame): DataFrame =
       edges.join(
-        tris.select(explode(array(
-            struct(least(col("a"), col("b")).as("p1"), greatest(col("a"), col("b")).as("p2")),
-            struct(least(col("b"), col("c")).as("p1"), greatest(col("b"), col("c")).as("p2")),
-            struct(least(col("a"), col("c")).as("p1"), greatest(col("a"), col("c")).as("p2"))))
-            .as("e"))
+        tris.select(triEdges)
           .groupBy(col("e.p1").as("p1"), col("e.p2").as("p2"))
           .agg(count(lit(1)).as("s0")),
         Seq("p1", "p2"), "left")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * once, not per query: queries only load centroids (tiny, broadcast)
   * and probe the cell-partitioned corpus. This object gives q33 exactly
   * that shape — the index directory is content-addressed by (corpus
-  * path, nlist, seed, version) via the same lineage-salt scheme the
+  * path and file stamps, nlist, version) via the same lineage-salt scheme the
   * pb-etl stages use (pipeline.Salt), memoized by a `_SUCCESS` flag, so
   * a second invocation in any session runs ZERO clustering iterations
   * (asserted in DedupSpec via `SaltedIndex.builds("ivf")`).

@@ -176,8 +176,9 @@ object Multimodal {
   val AHashBlocks = 64
   val AHashRadius = 9L
 
-  /** The 10-chunk split of one 32-bit half: (shift, mask). */
-  private[graft] val AHashChunks: Seq[(Int, Long)] =
+  /** The 5-chunk split (2×7 + 3×6 bits) of a 32-bit hash, as (shift,
+    * mask): each aHash half and the q246 energy hash block on it. */
+  private[graft] val Chunks32: Seq[(Int, Long)] =
     Seq((0, 127L), (7, 127L), (14, 63L), (20, 63L), (26, 63L))
 
   /** q245: IMAGE PERCEPTUAL-HASH (aHash) NEAR-DUP — content-level
@@ -237,22 +238,9 @@ object Multimodal {
         shiftrightunsigned(col("h"), 32).as("hi"),
         col("h").bitwiseAND(lit(0xFFFFFFFFL)).as("lo"))
     // 10 chunks (2×7 + 3×6 bits per half), 5 from each 32-bit half
-    val chunks = sig.select(col("doc_id"), col("lo"), col("hi"),
-      posexplode(array((0 until 10).map { c =>
-        val half = if (c < 5) col("lo") else col("hi")
-        val (sh, m) = AHashChunks(c % 5)
-        shiftright(half, sh).bitwiseAND(lit(m))
-      }: _*)).as(Seq("c", "cv")))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.c") === col("b.c") && col("a.cv") === col("b.cv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        (bit_count(col("a.lo").bitwiseXOR(col("b.lo"))) +
-          bit_count(col("a.hi").bitwiseXOR(col("b.hi"))))
-          .cast("long").as("dist"))
-      .filter(col("dist") <= AHashRadius)
-      .distinct()
+    Dedup.hammingPairs(sig, Seq("lo", "hi"),
+      Dedup.bitChunks(col("lo"), Chunks32) ++ Dedup.bitChunks(col("hi"), Chunks32),
+      "cv", lit(AHashRadius))
   }
 
   /** q250: MEDIA NEAR-DUP CLUSTERS — connected components over the
@@ -531,20 +519,8 @@ object Multimodal {
       .filter(expr("greatest(length(text) - 64, 0) div 2") >= nb)
       .select(col("doc_id"),
         graft.functions.GraftFunctions.energyhash32(col("text")).as("s"))
-    // 5 chunks: 2×7 + 3×6 bits = 32
-    val chunkDefs = Seq((0, 127L), (7, 127L), (14, 63L), (20, 63L), (26, 63L))
-    val chunks = sig.select(col("doc_id"), col("s"),
-      posexplode(array(chunkDefs.map { case (sh, m) =>
-        shiftright(col("s"), sh).bitwiseAND(lit(m))
-      }: _*)).as(Seq("c", "cv")))
-    chunks.as("a")
-      .join(chunks.as("b"),
-        col("a.c") === col("b.c") && col("a.cv") === col("b.cv") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        bit_count(col("a.s").bitwiseXOR(col("b.s"))).cast("long").as("dist"))
-      .filter(col("dist") <= EnergyRadius)
-      .distinct()
+    Dedup.hammingPairs(sig, Seq("s"), Dedup.bitChunks(col("s"), Chunks32),
+        "cv", lit(EnergyRadius))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 

@@ -14,9 +14,10 @@ import org.apache.spark.sql.functions._
   * broadcast everywhere — the corpus bytes the ADC pass reads shrink by
   * the same factor the int8 path (q48) shrinks them by 4.
   *
-  * Like IvfIndex, the build (8 seeded KMeans fits + one encode pass) is
-  * a content-addressed salted stage paid once: the directory key covers
-  * the corpus file stamps, (m, ksub, seed), and the index version, and
+  * Like IvfIndex, the build (one per-subspace Lloyd run that learns all
+  * 8 codebooks in the same jobs, plus one encode pass) is a
+  * content-addressed salted stage paid once: the directory key covers
+  * the corpus file stamps, (m, ksub), and the index version, and
   * a `_SUCCESS` flag memoizes completion — a second invocation in any
   * session runs ZERO KMeans iterations (spec:
   * `SaltedIndex.builds("pq")`).
@@ -56,50 +57,21 @@ object PqIndex {
     (books, Tables.parquet(spark, s"$p/codes"))
   }
 
-  /** Per-subspace fixed-round integer Lloyd — the q136 recurrence with
-    * `sub = pos div DSub` folded into every key, so all M codebooks
+  /** Per-subspace fixed-round integer Lloyd — Similarity.lloyd with
+    * `sub = pos div DSub` as its extra key, so all M codebooks
     * learn in ONE set of jobs (not M sequential fits). Same
     * determinism argument as IvfIndex: first-KSub init, exact integer
     * micro-unit argmin, floor-mean update — which is what upgrades
     * q83 from rows-only to fully oracle-checked. */
   private def build(spark: SparkSession, d: String, p: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(spark, d)
     // cached for the whole (eager) build, whose scope is the one
     // Memo.commit opens around it: every Lloyd round and the final encode
     // re-consume the exploded component relation — without the cache
     // each round would re-run the full posexplode chain
-    val q = CacheScope.cached(emb
-      .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
-      .select(col("vec_id"), expr(s"cast(pos as bigint) div $DSub").as("sub"),
-        col("pos").cast("long").as("pos"),
-        floor(col("col") * lit(1000000.0d)).cast("long").as("vm")))
-    // first-KSub seeds numbered 0..KSub-1 via a bounded collect (the
-    // IVF-centroid idiom) — a no-partition row_number window would
-    // plan the banned single-partition sort
-    val seedIds = emb.select(col("vec_id")).orderBy(col("vec_id")).limit(KSub)
-      .collect().map(_.getLong(0))
-    val seeds = spark.createDataFrame(
-        seedIds.zipWithIndex.toIndexedSeq.map { case (v, i) => (v, i.toLong) })
-      .toDF("vec_id", "cid")
-    var cent = q.join(broadcast(seeds), "vec_id")
-      .select(col("sub"), col("cid"), col("pos"), col("vm").as("cm"))
-    def assign(c: DataFrame): DataFrame = {
-      val d2 = q.join(broadcast(c), Seq("sub", "pos"))
-        .groupBy(col("vec_id"), col("sub"), col("cid"))
-        .agg(sum((col("vm") - col("cm")) * (col("vm") - col("cm"))).as("d2"))
-      d2.withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id"), col("sub")).orderBy(col("d2"), col("cid"))))
-        .filter(col("rn") === 1)
-        .select(col("vec_id"), col("sub"), col("cid"))
-    }
-    var asg = assign(cent)
-    for (_ <- 2 to Rounds) {
-      cent = q.join(asg, Seq("vec_id", "sub"))
-        .groupBy(col("sub"), col("cid"), col("pos"))
-        .agg(floor(sum(col("vm")) / count(lit(1))).cast("long").as("cm"))
-      asg = assign(cent)
-    }
+    val q = CacheScope.cached(Similarity.microComponents(emb,
+      expr(s"cast(pos as bigint) div $DSub").as("sub")))
+    val (cent, asg) = Similarity.lloyd(emb, q, Seq("sub"), KSub, Rounds)
     val codes = asg
       .groupBy(col("vec_id"))
       .agg(expr("transform(array_sort(collect_list(struct(sub, cid))), s -> cast(s.cid as int))")

@@ -312,10 +312,7 @@ private[graft] trait QueriesAnalytics {
     * Fresh toDF aliases on every self-join leg (the q196 lineage
     * discipline). */
   def recEval(spark: SparkSession, d: String): DataFrame = {
-    val items = CacheScope.cached(
-      Tables.lineitem(spark, d)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        .distinct())
+    val items = Queries.basketItems(spark, d)
     val train = items.filter(col("ok") % 5 =!= 0L)
     val test = items.filter(col("ok") % 5 === 0L)
     val pairs = train.toDF("ok", "pa").join(train.toDF("ok", "pb"), "ok")
@@ -577,10 +574,7 @@ private[graft] trait QueriesAnalytics {
     * here and CoPurchaseCap-boundable for power-law baskets (q127's
     * knob); counts agg map-side. Support floor bounds the output. */
   def copurchaseTriples(spark: SparkSession, d: String): DataFrame = {
-    val items = CacheScope.cached(
-      Tables.lineitem(spark, d)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        .distinct())
+    val items = Queries.basketItems(spark, d)
     val freq = items.groupBy(col("p")).agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2).select(col("p"))
     val fi = CacheScope.cached(items.join(freq, Seq("p")).select(col("ok"), col("p")))
@@ -642,31 +636,18 @@ private[graft] trait QueriesAnalytics {
     * count — the q151 bounded-window argument); percentile = min
     * value with cum ≥ ceil(p·n/100), q151's exact formula. */
   def funnelLatency(spark: SparkSession, d: String): DataFrame = {
-    val ev = eventsNs(spark, d).withColumn("tus", expr("ts div 1000"))
-    def stage(tpe: String) = ev.filter(col("event_type") === tpe)
-    val v = stage("view").groupBy(col("user_id")).agg(min(col("tus")).as("view_us"))
-    val c = stage("click").join(v, "user_id")
-      .filter(col("tus") >= col("view_us"))
-      .groupBy(col("user_id"), col("view_us")).agg(min(col("tus")).as("click_us"))
-    val p = stage("purchase").join(c.select(col("user_id"), col("click_us")), "user_id")
-      .filter(col("tus") >= col("click_us"))
-      .groupBy(col("user_id"), col("click_us")).agg(min(col("tus")).as("purchase_us"))
+    val (_, c, pc) = Queries.funnelStages(spark, d)
+    val p = pc.groupBy(col("user_id"), col("click_us")).agg(min(col("tus")).as("purchase_us"))
     val lat = c.select(lit("1_view_to_click").as("stage"),
         expr("(click_us - view_us) div 1000000").as("lat_s"))
       .unionByName(p.select(lit("2_click_to_purchase").as("stage"),
         expr("(purchase_us - click_us) div 1000000").as("lat_s")))
     val hist = lat.groupBy(col("stage"), col("lat_s")).agg(count(lit(1)).as("c"))
-    val byStage = Window.partitionBy(col("stage"))
-    val cum = hist
-      .withColumn("cum", sum(col("c")).over(byStage.orderBy(col("lat_s"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-      .withColumn("n", sum(col("c")).over(byStage))
-    cum.groupBy(col("stage"))
+    Curation.cumulative(hist, "stage", "lat_s").groupBy(col("stage"))
       .agg(max(col("n")).as("n_conversions"),
         min(col("lat_s")).as("min_s"), max(col("lat_s")).as("max_s"),
-        min(when(col("cum") >= expr("(n * 50 + 99) div 100"), col("lat_s"))).as("p50_s"),
-        min(when(col("cum") >= expr("(n * 90 + 99) div 100"), col("lat_s"))).as("p90_s"),
-        min(when(col("cum") >= expr("(n * 99 + 99) div 100"), col("lat_s"))).as("p99_s"))
+        Curation.pctl(50, "lat_s").as("p50_s"), Curation.pctl(90, "lat_s").as("p90_s"),
+        Curation.pctl(99, "lat_s").as("p99_s"))
       .orderBy(col("stage"))
   }
 
@@ -1232,20 +1213,11 @@ private[graft] trait QueriesAnalytics {
     * relation, nothing else. DECIMAL(38,0) products throughout (t and
     * the counts are corpus-scale). */
   def associationRules(spark: SparkSession, d: String): DataFrame = {
-    val items = CacheScope.cached(
-      Tables.lineitem(spark, d)
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
-        .distinct())
-    val pairs = items.toDF("ok", "pa").join(items.toDF("ok", "pb"), "ok")
-      .filter(col("pa") < col("pb"))
-      .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("c_ab"))
-      .filter(col("c_ab") >= 3)
+    val (pairs, freq, baskets) = Queries.basketCounts(spark, d)
     val directed = pairs.select(col("pa").as("ante"), col("pb").as("cons"),
         col("c_ab"))
       .unionAll(pairs.select(col("pb").as("ante"), col("pa").as("cons"),
         col("c_ab")))
-    val freq = items.groupBy(col("p")).agg(count(lit(1)).as("c"))
-    val baskets = items.agg(countDistinct(col("ok")).as("t"))
     directed
       .join(freq.toDF("ante", "c_a"), "ante")
       .join(freq.toDF("cons", "c_b"), "cons")
@@ -1320,6 +1292,33 @@ private[graft] trait QueriesAnalytics {
     * next day (diurnal rhythm). */
   val AcfLags: Seq[Long] = Seq(1L, 24L)
 
+  /** Exact OLS moments of (x, y) per group: the row count named `n`,
+    * Σx, Σy, Σxy, Σx², Σy² (products in DECIMAL(38,0)), then the
+    * cross-multiplied `num` = n·Σxy − Σx·Σy, `dx` = n·Σx² − (Σx)² and
+    * `dy` = n·Σy² − (Σy)². */
+  private[graft] def olsMoments(g: org.apache.spark.sql.RelationalGroupedDataset,
+      n: String): DataFrame =
+    g.agg(count(lit(1)).as(n),
+        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
+        sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"),
+        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"),
+        sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"))
+      .withColumn("num", expr(
+        s"CAST($n AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy"))
+      .withColumn("dx", expr(
+        s"CAST($n AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"))
+      .withColumn("dy", expr(
+        s"CAST($n AS DECIMAL(38,0)) * syy - CAST(sy AS DECIMAL(38,0)) * sy"))
+
+  /** Signed r² in ppm over [[olsMoments]]: sign(num)·⌊10⁶·num²/(dx·dy)⌋,
+    * 0 when either variance is 0. */
+  private[graft] def r2SignedPpm: Column =
+    when(expr("dx = 0 OR dy = 0"), lit(0L)).otherwise(expr(
+      """CAST(CASE WHEN num >= 0
+        |  THEN (1000000 * num * num) div (dx * dy)
+        |  ELSE -((1000000 * num * num) div (dx * dy))
+        |END AS BIGINT)""".stripMargin.replace("\n", " ")))
+
   /** q284: HOURLY-SERIES AUTOCORRELATION — per event type, the exact
     * signed lag-1 and lag-24 Pearson r² (in ppm, sign carried
     * separately from the square) of the zero-filled hourly event-count
@@ -1359,25 +1358,9 @@ private[graft] trait QueriesAnalytics {
         .select(col("event_type"), lit(l).as("lag_h"),
           col("c").as("x"), col("y"))
     }.reduce(_ unionAll _)
-    lagged.groupBy(col("event_type"), col("lag_h"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"),
-        sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"))
-      .withColumn("num", expr(
-        "CAST(n_pairs AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy"))
-      .withColumn("dx", expr(
-        "CAST(n_pairs AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"))
-      .withColumn("dy", expr(
-        "CAST(n_pairs AS DECIMAL(38,0)) * syy - CAST(sy AS DECIMAL(38,0)) * sy"))
+    olsMoments(lagged.groupBy(col("event_type"), col("lag_h")), "n_pairs")
       .select(col("event_type"), col("lag_h"), col("n_pairs"),
-        when(expr("dx = 0 OR dy = 0"), lit(0L)).otherwise(expr(
-          """CAST(CASE WHEN num >= 0
-            |  THEN (1000000 * num * num) div (dx * dy)
-            |  ELSE -((1000000 * num * num) div (dx * dy))
-            |END AS BIGINT)""".stripMargin.replace("\n", " ")))
-          .as("r2_signed_ppm"))
+        r2SignedPpm.as("r2_signed_ppm"))
       .orderBy(col("event_type"), col("lag_h"))
   }
 
@@ -1411,29 +1394,13 @@ private[graft] trait QueriesAnalytics {
       .agg(sum(col("cents")).as("rev_cents"), sum(col("qty")).as("qty"))
       .select(col("brand"), col("m"),
         expr("rev_cents div qty").as("x"), col("qty").as("y"))
-    bm.groupBy(col("brand"))
-      .agg(count(lit(1)).as("n_months"),
-        sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * y")).as("sxy"),
-        sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("sxx"),
-        sum(expr("CAST(y AS DECIMAL(38,0)) * y")).as("syy"))
-      .withColumn("num", expr(
-        "CAST(n_months AS DECIMAL(38,0)) * sxy - CAST(sx AS DECIMAL(38,0)) * sy"))
-      .withColumn("dx", expr(
-        "CAST(n_months AS DECIMAL(38,0)) * sxx - CAST(sx AS DECIMAL(38,0)) * sx"))
-      .withColumn("dy", expr(
-        "CAST(n_months AS DECIMAL(38,0)) * syy - CAST(sy AS DECIMAL(38,0)) * sy"))
+    olsMoments(bm.groupBy(col("brand")), "n_months")
       .select(col("brand"), col("n_months"),
         when(expr("dx = 0"), lit(0L)).otherwise(expr(
           """CAST(CASE WHEN num >= 0 THEN (1000000 * num) div dx
             |  ELSE -((1000000 * (-num)) div dx) END AS BIGINT)"""
             .stripMargin.replace("\n", " "))).as("slope_micro"),
-        when(expr("dx = 0 OR dy = 0"), lit(0L)).otherwise(expr(
-          """CAST(CASE WHEN num >= 0
-            |  THEN (1000000 * num * num) div (dx * dy)
-            |  ELSE -((1000000 * num * num) div (dx * dy))
-            |END AS BIGINT)""".stripMargin.replace("\n", " ")))
-          .as("r2_signed_ppm"))
+        r2SignedPpm.as("r2_signed_ppm"))
       .orderBy(col("brand"))
   }
 
@@ -1549,16 +1516,9 @@ private[graft] trait QueriesAnalytics {
     * everything after is alphabet-bounded. Σc² exact in BIGINT to
     * ~3·10⁹ transitions per pair — DECIMAL(38,0) past that (q91). */
   def transitionImpurity(spark: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val ws = Window.partitionBy(col("user_id"), col("sid"))
       .orderBy(col("ts"), col("event_id"))
-    val counts = eventsNs(spark, d)
-      .withColumn("prev_ns", lag(col("ts"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ns").isNull ||
-          col("ts") - col("prev_ns") > 1800000000000L, 1L).otherwise(0L))
-      .withColumn("sid", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val counts = Queries.sessionIds(eventsNs(spark, d))
       .withColumn("nxt", lead(col("event_type"), 1).over(ws))
       .filter(col("nxt").isNotNull)
       .groupBy(col("event_type").as("ante"), col("nxt"))

@@ -12,6 +12,18 @@ import org.apache.spark.sql.expressions.Window
   * cut are `private[graft]`. */
 private[graft] trait QueriesDistributions {
   import Tables._
+
+  /** lineitem ⋈ orders on the order key, carrying `o_orderkey` and the
+    * named order columns (the order side is projected before the join). */
+  private[graft] def linesWithOrder(spark: SparkSession, d: String,
+      orderCols: String*): DataFrame =
+    Tables.lineitem(spark, d)
+      .join(Tables.orders(spark, d).select(("o_orderkey" +: orderCols).map(col): _*),
+        col("l_orderkey") === col("o_orderkey"))
+
+  /** Days from order to shipment, as BIGINT. */
+  private[graft] def shipLagDays: Column =
+    expr("CAST(datediff(l_shipdate, o_orderdate) AS BIGINT)")
   /** q297 resample count — 32 deterministic pseudo-replicas; the
     * 2nd/31st order statistics bracket ≈ 94 % of the resample mass. */
   val BootstrapB = 32
@@ -195,12 +207,9 @@ private[graft] trait QueriesDistributions {
     * group the z² ceiling argument is moot anyway (any nonzero effect
     * is significant). */
   def rankSumShipLag(spark: SparkSession, d: String): DataFrame = {
-    val lg = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val lg = linesWithOrder(spark, d, "o_orderpriority", "o_orderdate")
       .select(col("o_orderpriority").as("priority"),
-        expr("CAST(datediff(l_shipdate, o_orderdate) AS BIGINT)").as("lag"),
+        shipLagDays.as("lag"),
         when(col("l_returnflag") === "R", 1L).otherwise(0L).as("ret"))
     val h = lg.groupBy(col("priority"), col("lag"))
       .agg(sum(col("ret")).as("a"), sum(lit(1L) - col("ret")).as("b"))
@@ -249,10 +258,7 @@ private[graft] trait QueriesDistributions {
   def chisqIndependence(spark: SparkSession, d: String): DataFrame = {
     // cached: four consumers (both margins, the total, the cell join)
     // — one fact scan, not four
-    val cells = CacheScope.cached(Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
+    val cells = CacheScope.cached(linesWithOrder(spark, d, "o_orderpriority")
       .groupBy(col("o_orderpriority").as("priority"),
         col("l_returnflag").as("returnflag"))
       .agg(count(lit(1)).as("o")))
@@ -560,10 +566,7 @@ private[graft] trait QueriesDistributions {
     * hash-agg → |priorities| rollup; the squared numerator runs in
     * DECIMAL(38,0)/HUGEINT. */
   def returnRateDrift(spark: SparkSession, d: String): DataFrame = {
-    Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
+    linesWithOrder(spark, d, "o_orderpriority")
       .select(col("o_orderpriority").as("priority"),
         (col("l_shipdate") < lit(PeriodSplitDate).cast("timestamp"))
           .cast("long").as("early"),
@@ -648,12 +651,9 @@ private[graft] trait QueriesDistributions {
     * past that N any nonzero effect is significant anyway (the q302
     * ceiling argument). */
   def kruskalWallisLag(spark: SparkSession, d: String): DataFrame = {
-    val grid = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val grid = linesWithOrder(spark, d, "o_orderpriority", "o_orderdate")
       .groupBy(col("o_orderpriority").as("priority"),
-        expr("CAST(datediff(l_shipdate, o_orderdate) AS BIGINT)").as("lag"))
+        shipLagDays.as("lag"))
       .agg(count(lit(1)).as("c"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     // pooled doubled ranks over the lag value grid
@@ -764,10 +764,7 @@ private[graft] trait QueriesDistributions {
     * replay caps near SF30 (Var_cross ~ 25N⁴); same ceiling argument
     * as q302. */
   def trendTestReturns(spark: SparkSession, d: String): DataFrame = {
-    val g = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
+    val g = linesWithOrder(spark, d, "o_orderpriority")
       .groupBy(col("o_orderpriority").as("priority"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("l_returnflag") === "R", 1L).otherwise(0L)).as("x"))
@@ -906,11 +903,7 @@ private[graft] trait QueriesDistributions {
     * BigInt (the q308 bounded-collect discipline) — 6 pairwise
     * audits for one scan, never 6. */
   def cramersVMatrix(spark: SparkSession, d: String): DataFrame = {
-    val cells = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_custkey"),
-            col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
+    val cells = linesWithOrder(spark, d, "o_custkey", "o_orderpriority")
       .join(Tables.customer(spark, d)
           .select(col("c_custkey"), col("c_mktsegment")),
         col("o_custkey") === col("c_custkey"))
@@ -1022,10 +1015,7 @@ private[graft] trait QueriesDistributions {
     * DECIMAL(38,0)/HUGEINT; the variance product caps exact oracle
     * replay near SF100. */
   def mantelHaenszel(spark: SparkSession, d: String): DataFrame = {
-    val s = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
+    val s = linesWithOrder(spark, d, "o_orderpriority")
       .select(col("o_orderpriority").as("priority"),
         (col("l_quantity") >= MhQtyCut).cast("long").as("hi"),
         (col("l_returnflag") === "R").cast("long").as("ret"))
@@ -1086,12 +1076,9 @@ private[graft] trait QueriesDistributions {
     * sums in DECIMAL(38,0); everything after is row-local arithmetic
     * on 5 rows. */
   def lagMoments(spark: SparkSession, d: String): DataFrame =
-    Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    linesWithOrder(spark, d, "o_orderpriority", "o_orderdate")
       .select(col("o_orderpriority").as("priority"),
-        expr("CAST(datediff(l_shipdate, o_orderdate) AS BIGINT)").as("x"))
+        shipLagDays.as("x"))
       .groupBy(col("priority"))
       .agg(count(lit(1)).as("n"), sum(col("x")).as("s"),
         sum(expr("CAST(x AS DECIMAL(38,0)) * x")).as("p2"),
@@ -1192,10 +1179,7 @@ private[graft] trait QueriesDistributions {
     * grid → row-local arithmetic on 4 rows + a one-row scalar
     * broadcast back onto the cells. */
   def didReturns(spark: SparkSession, d: String): DataFrame = {
-    val cells = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
+    val cells = linesWithOrder(spark, d, "o_orderpriority")
       .select(
         expr("CASE WHEN CAST(substring(o_orderpriority, 1, 1) AS INT) <= 2" +
           " THEN 1L ELSE 0L END").as("grp"),
@@ -1256,10 +1240,7 @@ private[graft] trait QueriesDistributions {
     * adjacent-pair rows of row-local arithmetic (a self-join on the
     * tiny grid). */
   def powerSampleSize(spark: SparkSession, d: String): DataFrame = {
-    val g = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority")),
-        col("l_orderkey") === col("o_orderkey"))
+    val g = linesWithOrder(spark, d, "o_orderpriority")
       .groupBy(expr("CAST(substring(o_orderpriority, 1, 1) AS BIGINT)")
         .as("w"))
       .agg(count(lit(1)).as("n"),
@@ -1317,12 +1298,9 @@ private[graft] trait QueriesDistributions {
     * ppm-scaled square caps exact HUGEINT replay near SF50 (the q302
     * ceiling argument). */
   def cvmLag(spark: SparkSession, d: String): DataFrame = {
-    val h = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderpriority"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val h = linesWithOrder(spark, d, "o_orderpriority", "o_orderdate")
       .groupBy(col("o_orderpriority").as("priority"),
-        expr("CAST(datediff(l_shipdate, o_orderdate) AS BIGINT)").as("lag"))
+        shipLagDays.as("lag"))
       .agg(sum(expr("CASE WHEN l_returnflag = 'R' THEN 1L ELSE 0L END"))
         .as("a"),
         sum(expr("CASE WHEN l_returnflag = 'R' THEN 0L ELSE 1L END"))
@@ -1370,10 +1348,7 @@ private[graft] trait QueriesDistributions {
     * is a prefix sum over ≤ a few thousand days, never a global
     * window over rows). */
   def littleLawAudit(spark: SparkSession, d: String): DataFrame = {
-    val li = Tables.lineitem(spark, d)
-      .join(Tables.orders(spark, d)
-          .select(col("o_orderkey"), col("o_orderdate")),
-        col("l_orderkey") === col("o_orderkey"))
+    val li = linesWithOrder(spark, d, "o_orderdate")
       .select(
         expr("CAST(datediff(o_orderdate, DATE '1970-01-01') AS BIGINT)")
           .as("od"),

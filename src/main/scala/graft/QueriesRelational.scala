@@ -209,20 +209,37 @@ private[graft] trait QueriesRelational {
         round(sum(col("value")), 2).as("total_value"))
       .orderBy(col("event_type"), col("hour"))
 
+  /** The session gap: an event more than 30 minutes (in epoch-nanos)
+    * after the user's previous one starts a new session. */
+  private[graft] val SessionGapNs = 1800000000000L
+
+  /** Per-user event order, (ts, event_id) — the session window. */
+  private def userTimeline = Window.partitionBy(col("user_id"))
+    .orderBy(col("ts"), col("event_id"))
+
+  /** q19's session rule over eventsNs rows: `prev_ns` (the user's
+    * previous event) and `new_sess` = 1 on a user's first event or after
+    * a gap > SessionGapNs, else 0. */
+  private[graft] def sessionStarts(ev: DataFrame): DataFrame =
+    ev.withColumn("prev_ns", lag(col("ts"), 1).over(userTimeline))
+      .withColumn("new_sess",
+        when(col("prev_ns").isNull || col("ts") - col("prev_ns") > SessionGapNs, 1L)
+          .otherwise(0L))
+
+  /** [[sessionStarts]] plus `sid`, the user's running session number
+    * (1-based) — one user-keyed window pass for both. */
+  private[graft] def sessionIds(ev: DataFrame): DataFrame =
+    sessionStarts(ev).withColumn("sid", sum(col("new_sess"))
+      .over(userTimeline.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
   /** Sessionization via window lag: a new session starts after a >30 min
     * gap per user. Gap arithmetic on integer epoch-nanos — exact, and
     * identical to the oracle's epoch_ns(). */
-  def eventsSessionize(spark: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    eventsNs(spark, d)
-      .withColumn("prev_ns", lag(col("ts"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ns").isNull || col("ts") - col("prev_ns") > 1800000000000L, 1L)
-          .otherwise(0L))
+  def eventsSessionize(spark: SparkSession, d: String): DataFrame =
+    sessionStarts(eventsNs(spark, d))
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), sum(col("new_sess")).as("n_sessions"))
       .orderBy(col("user_id"))
-  }
 
   /** q141: session-level event-type ASSOCIATION RULES — the
     * market-basket statistics (support, both-direction confidence,
@@ -242,14 +259,7 @@ private[graft] trait QueriesRelational {
     * guards the lift product at stream scale (n_both · n_sess
     * overflows Long at ~10⁹ sessions). */
   def sessionAssociations(spark: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    val sess = eventsNs(spark, d)
-      .withColumn("prev_ns", lag(col("ts"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ns").isNull || col("ts") - col("prev_ns") > 1800000000000L, 1L)
-          .otherwise(0L))
-      .withColumn("sid", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    val sess = sessionIds(eventsNs(spark, d))
       .select(col("user_id"), col("sid"), col("event_type")).distinct()
     val u = CacheScope.cached(sess)
     val tot = u.select(col("user_id"), col("sid")).distinct()
@@ -274,6 +284,11 @@ private[graft] trait QueriesRelational {
       .orderBy(col("type_a"), col("type_b"))
   }
 
+  /** Order count and total price (2 dp) — the measures of q34's
+    * rollup and q70's grouping sets. */
+  private def orderTotals: Seq[Column] =
+    Seq(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("total"))
+
   /** Hierarchical aggregate: ROLLUP(month, status) with subtotal and
     * grand-total rows disambiguated by grouping_id — one shuffle, all
     * grouping sets computed in the same hash aggregate. */
@@ -281,9 +296,7 @@ private[graft] trait QueriesRelational {
     orders(spark, d)
       .rollup(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
         col("o_orderstatus"))
-      .agg(grouping_id().cast("long").as("gid"),
-        count(lit(1)).as("n_orders"),
-        round(sum(col("o_totalprice")), 2).as("total"))
+      .agg(grouping_id().cast("long").as("gid"), orderTotals: _*)
       .orderBy(col("gid"), col("month"), col("o_orderstatus"))
 
   /** Scalar string-function suite over the documents table: substring /
@@ -472,9 +485,7 @@ private[graft] trait QueriesRelational {
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
         col("o_orderstatus"), col("o_totalprice"))
       .groupingSets(Seq(Seq(m), Seq(s), Seq()), m, s)
-      .agg(grouping_id().cast("long").as("gid"),
-        count(lit(1)).as("n_orders"),
-        round(sum(col("o_totalprice")), 2).as("total"))
+      .agg(grouping_id().cast("long").as("gid"), orderTotals: _*)
       .orderBy(col("gid"), col("month"), col("o_orderstatus"))
   }
 
@@ -1046,6 +1057,26 @@ private[graft] trait QueriesRelational {
         round(max(col("v")), 2).as("max_v"))
       .orderBy(col("col_name"))
 
+  /** q124's strictly ordered stages: (v = per-user first view
+    * `view_us`, c = the first click at or after it `click_us` keyed by
+    * (user_id, view_us), the purchase rows at or after that click with
+    * their `tus` and `click_us`). Micros, not nanos: the portable
+    * cross-engine resolution (the oracle's TIMESTAMP reads at us
+    * precision; same as the as-of family) — `div` keeps the floor
+    * exact. */
+  private[graft] def funnelStages(spark: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val ev = eventsNs(spark, d).withColumn("tus", expr("ts div 1000"))
+    def stage(tpe: String) = ev.filter(col("event_type") === tpe)
+    val v = stage("view").groupBy(col("user_id")).agg(min(col("tus")).as("view_us"))
+    val c = stage("click").join(v, "user_id")
+      .filter(col("tus") >= col("view_us"))
+      .groupBy(col("user_id"), col("view_us")).agg(min(col("tus")).as("click_us"))
+    val pc = stage("purchase").join(c.select(col("user_id"), col("click_us")), "user_id")
+      .filter(col("tus") >= col("click_us"))
+    (v, c, pc)
+  }
+
   /** q124: ordered funnel analysis (the MATCH_RECOGNIZE-class query a
     * product-analytics warehouse runs daily): per user, the first
     * `view`, the first `click` AT OR AFTER that view, and the first
@@ -1060,18 +1091,8 @@ private[graft] trait QueriesRelational {
     * chain never re-scans events. Exact integer epoch-nanos throughout
     * (`min` on Long, no timestamp arithmetic). */
   def eventFunnel(spark: SparkSession, d: String): DataFrame = {
-    // micros, not nanos: the portable cross-engine resolution (the
-    // oracle's TIMESTAMP reads at us precision; same as the as-of
-    // family) — `div` keeps the floor exact
-    val ev = eventsNs(spark, d).withColumn("tus", expr("ts div 1000"))
-    def stage(tpe: String) = ev.filter(col("event_type") === tpe)
-    val v = stage("view").groupBy(col("user_id")).agg(min(col("tus")).as("view_us"))
-    val c = stage("click").join(v, "user_id")
-      .filter(col("tus") >= col("view_us"))
-      .groupBy(col("user_id"), col("view_us")).agg(min(col("tus")).as("click_us"))
-    val p = stage("purchase").join(c.select(col("user_id"), col("click_us")), "user_id")
-      .filter(col("tus") >= col("click_us"))
-      .groupBy(col("user_id")).agg(min(col("tus")).as("purchase_us"))
+    val (v, c, pc) = funnelStages(spark, d)
+    val p = pc.groupBy(col("user_id")).agg(min(col("tus")).as("purchase_us"))
     v.join(c.select(col("user_id"), col("click_us")), Seq("user_id"), "left")
       .join(p, Seq("user_id"), "left")
       .select(col("user_id"), col("view_us"), col("click_us"), col("purchase_us"),
@@ -1267,16 +1288,9 @@ private[graft] trait QueriesRelational {
     * top-20 is TakeOrderedAndProject on that alphabet-bounded
     * relation. No corpus-wide sort anywhere. */
   def sessionPaths(spark: SparkSession, d: String): DataFrame = {
-    val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val ws = Window.partitionBy(col("user_id"), col("sid"))
       .orderBy(col("ts"), col("event_id"))
-    eventsNs(spark, d)
-      .withColumn("prev_ns", lag(col("ts"), 1).over(w))
-      .withColumn("new_sess",
-        when(col("prev_ns").isNull || col("ts") - col("prev_ns") > 1800000000000L, 1L)
-          .otherwise(0L))
-      .withColumn("sid", sum(col("new_sess"))
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+    sessionIds(eventsNs(spark, d))
       .withColumn("t2", lead(col("event_type"), 1).over(ws))
       .withColumn("t3", lead(col("event_type"), 2).over(ws))
       .filter(col("t2").isNotNull && col("t3").isNotNull)
@@ -1575,17 +1589,31 @@ private[graft] trait QueriesRelational {
     * size (single-digit), never corpus². Pair counts agg map-side;
     * the part-frequency joins are vocabulary(part)-keyed; T is a
     * one-row scalar broadcast. */
-  def copurchasePairs(spark: SparkSession, d: String): DataFrame = {
-    val items = CacheScope.cached(
+  /** The distinct (ok = order, p = part) basket items, cached until
+    * the caller's scope ends. */
+  private[graft] def basketItems(spark: SparkSession, d: String): DataFrame =
+    CacheScope.cached(
       Tables.lineitem(spark, d)
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("p"))
         .distinct())
+
+  /** q198's basket counts over the distinct (order, part) items:
+    * (pairs = (pa < pb, c_ab) bought together in ≥ 3 orders,
+    * freq = (p, c) orders per part, baskets = one row `t` of orders). */
+  private[graft] def basketCounts(spark: SparkSession, d: String)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val items = basketItems(spark, d)
     val pairs = items.toDF("ok", "pa").join(items.toDF("ok", "pb"), "ok")
       .filter(col("pa") < col("pb"))
       .groupBy(col("pa"), col("pb")).agg(count(lit(1)).as("c_ab"))
       .filter(col("c_ab") >= 3)
     val freq = items.groupBy(col("p")).agg(count(lit(1)).as("c"))
     val baskets = items.agg(countDistinct(col("ok")).as("t"))
+    (pairs, freq, baskets)
+  }
+
+  def copurchasePairs(spark: SparkSession, d: String): DataFrame = {
+    val (pairs, freq, baskets) = basketCounts(spark, d)
     pairs
       .join(freq.toDF("pa", "c_a"), "pa")
       .join(freq.toDF("pb", "c_b"), "pb")

@@ -39,6 +39,32 @@ object Similarity {
   def cosine(av: Column, bv: Column, an: Column, bn: Column): Column =
     dot(av, bv) / sqrt(an * bn)
 
+  /** q48's per-vector int8 scale over `v`: drops all-zero vectors and
+    * adds `ma` = max|vᵢ| and `sc` = 127/ma. */
+  private[graft] def int8Scaled(e: DataFrame): DataFrame =
+    e.withColumn("ma", array_max(transform(col("v"), x => abs(x))))
+      .filter(col("ma") > 0)
+      .withColumn("sc", lit(127.0) / col("ma"))
+
+  /** One int8 component: sign-aware floor(|x·sc| + 0.5), a long — floor
+    * is bit-exact cross-engine where round() on binary halves is not. */
+  private def int8Round(x: Column): Column =
+    when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
+      .otherwise(-floor(abs(x * col("sc")) + lit(0.5)))
+
+  /** The int8 vector of [[int8Scaled]]'s `v` as doubles (exact small
+    * integers, so every product and sum over them is exact). */
+  private[graft] def int8Doubles: Column =
+    transform(col("v"), x => int8Round(x).cast("double"))
+
+  /** [[int8Scaled]] plus `q` ([[int8Doubles]]) and its squared norm `qn`
+    * cast to `qnType`; vectors that quantize to zero are dropped. */
+  private[graft] def int8Quantized(e: DataFrame, qnType: String): DataFrame =
+    int8Scaled(e)
+      .withColumn("q", int8Doubles)
+      .withColumn("qn", dot(col("q"), col("q")).cast(qnType))
+      .filter(col("qn") > 0)
+
   /** Exact top-k neighbors (k=5) for each query vector (vec_id < 10). */
   def bruteForceTopK(spark: SparkSession, d: String): DataFrame = {
     val e = withNorm(Tables.embeddings(spark, d))
@@ -59,16 +85,26 @@ object Similarity {
     val e = withNorm(Tables.embeddings(spark, d))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nn").as("qn"))
-    broadcast(q).join(e, col("q_id") =!= col("vec_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn"), col("nn")))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.TopKByScore.topk(col("cos"), col("vec_id"), 5).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("q_id"), col("s.id").as("neighbor_id"),
-        round(col("s.score"), 6).as("cosine"),
-        (col("pos") + 1).cast("long").as("rank"))
+    top5Rows(broadcast(q).join(e, col("q_id") =!= col("vec_id")), col("q_id"))
       .orderBy(col("q_id"), col("rank"))
   }
+
+  /** Exact cosine over candidate pairs (`qv`/`qn` query side, `v`/`nn`
+    * corpus side), then the q38 bounded-heap top-5 of `vec_id` per
+    * `keys`, as the array column `top` of (score, id). */
+  private[graft] def cosineTop5(pairs: DataFrame, keys: Column*): DataFrame =
+    pairs.withColumn("cos", cosine(col("qv"), col("v"), col("qn"), col("nn")))
+      .groupBy(keys: _*)
+      .agg(graft.functions.TopKByScore.topk(col("cos"), col("vec_id"), 5).as("top"))
+
+  /** [[cosineTop5]] exploded to one row per slot: `keys`, then
+    * `neighbor_id`, `cosine` (6 dp) and the 1-based `rank`. */
+  private[graft] def top5Rows(pairs: DataFrame, keys: Column*): DataFrame =
+    cosineTop5(pairs, keys: _*)
+      .select(keys :+ posexplode(col("top")).as(Seq("pos", "s")): _*)
+      .select(keys ++ Seq(col("s.id").as("neighbor_id"),
+        round(col("s.score"), 6).as("cosine"),
+        (col("pos") + 1).cast("long").as("rank")): _*)
 
   private def rankTopK(scored: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -154,16 +190,7 @@ object Similarity {
     * candidate sets match the DuckDB oracle bit-for-bit (q48). */
   def int8TopK(spark: SparkSession, d: String): DataFrame = {
     val coarseK = 20
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
-    val quant = transform(col("v"), x =>
-      when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
-        .otherwise(-floor(abs(x * col("sc")) + lit(0.5))).cast("double"))
-    val e = withNorm(Tables.embeddings(spark, d))
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
-      .withColumn("q", quant)
-      .withColumn("qn", dot(col("q"), col("q")))
-      .filter(col("qn") > 0)
+    val e = int8Quantized(withNorm(Tables.embeddings(spark, d)), "double")
       .select(col("vec_id"), col("v"), col("nn"), col("q"), col("qn"))
     val qs = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nn").as("qvn"),
@@ -230,6 +257,16 @@ object Similarity {
     rankTopK(scored, k = 5)
   }
 
+  /** The q27 bucket equi-join over `b` (vec_id, t, bucket, …): every
+    * (q, c) pair of distinct vectors that share a table's bucket, for
+    * the queries q.vec_id < 10 (duplicates kept; callers pick columns
+    * and dedup). */
+  private[graft] def bucketPairs(b: DataFrame): DataFrame =
+    b.as("q").join(b.as("c"),
+        col("q.t") === col("c.t") && col("q.bucket") === col("c.bucket") &&
+          col("q.vec_id") =!= col("c.vec_id"))
+      .filter(col("q.vec_id") < 10)
+
   /** ANN top-k (k=5) for vec_id < 10: candidates = vectors sharing any
     * of the 4 LSH buckets with the query, ranked by exact cosine. */
   def lshTopK(spark: SparkSession, d: String): DataFrame = {
@@ -237,10 +274,7 @@ object Similarity {
     val e = CacheScope.cached(withNorm(Tables.embeddings(spark, d))
       .withColumn("buckets", lshBuckets(col("v"))))
     val b = e.select(col("vec_id"), posexplode(col("buckets")).as(Seq("t", "bucket")))
-    val cand = b.as("q").join(b.as("c"),
-        col("q.t") === col("c.t") && col("q.bucket") === col("c.bucket") &&
-          col("q.vec_id") =!= col("c.vec_id"))
-      .filter(col("q.vec_id") < 10)
+    val cand = bucketPairs(b)
       .select(col("q.vec_id").as("q_id"), col("c.vec_id").as("vec_id"))
       .distinct()
     val scored = cand
@@ -275,15 +309,8 @@ object Similarity {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nn").as("qn"), col("source").as("q_src"))
-    broadcast(q).join(e,
-        col("q_id") =!= col("vec_id") && col("source") =!= col("q_src"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn"), col("nn")))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.TopKByScore.topk(col("cos"), col("vec_id"), 5).as("top"))
-      .select(col("q_id"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("q_id"), col("s.id").as("neighbor_id"),
-        round(col("s.score"), 6).as("cosine"),
-        (col("pos") + 1).cast("long").as("rank"))
+    top5Rows(broadcast(q).join(e,
+        col("q_id") =!= col("vec_id") && col("source") =!= col("q_src")), col("q_id"))
       .orderBy(col("q_id"), col("rank"))
   }
 
@@ -311,10 +338,7 @@ object Similarity {
       .join(src, col("vec_id") === col("doc_id")).drop("doc_id"))
     val b = e.select(col("vec_id"), col("source"),
       posexplode(col("buckets")).as(Seq("t", "bucket")))
-    val cand = b.as("q").join(b.as("c"),
-        col("q.t") === col("c.t") && col("q.bucket") === col("c.bucket") &&
-          col("q.vec_id") =!= col("c.vec_id"))
-      .filter(col("q.vec_id") < 10)
+    val cand = bucketPairs(b)
       .select(col("q.vec_id").as("q_id"), col("q.source").as("q_src"),
         col("c.vec_id").as("vec_id"), col("c.source").as("n_src"))
       .distinct()
@@ -322,13 +346,10 @@ object Similarity {
       .agg(count(lit(1)).as("n_cand"),
         sum(when(col("n_src") =!= col("q_src"), 1L).otherwise(0L))
           .as("n_cand_filtered"))
-    val lshTop = cand.filter(col("n_src") =!= col("q_src"))
+    val lshTop = cosineTop5(cand.filter(col("n_src") =!= col("q_src"))
       .join(e.select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nn").as("qn")), "q_id")
-      .join(e.select(col("vec_id"), col("v"), col("nn")), "vec_id")
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn"), col("nn")))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.TopKByScore.topk(col("cos"), col("vec_id"), 5).as("top"))
+      .join(e.select(col("vec_id"), col("v"), col("nn")), "vec_id"), col("q_id"))
       .select(col("q_id"), explode(col("top.id")).as("neighbor_id"))
     // Cached: two consumers below (hits and the per-query exact-list
     // size) would otherwise recompute the q247 corpus scan twice.
@@ -392,16 +413,7 @@ object Similarity {
     * and the result is a literal Q·k frame. */
   def mmrDiversified(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
-    val quant = transform(col("v"), x =>
-      when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
-        .otherwise(-floor(abs(x * col("sc")) + lit(0.5))).cast("double"))
-    val e = withNorm(Tables.embeddings(spark, d))
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
-      .withColumn("q", quant)
-      .withColumn("qn", dot(col("q"), col("q")).cast("long"))
-      .filter(col("qn") > 0)
+    val e = int8Quantized(withNorm(Tables.embeddings(spark, d)), "long")
       .select(col("vec_id"), col("q"), col("qn"))
     val qs = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("q").as("qq"), col("qn").as("qqn"))
@@ -530,18 +542,12 @@ object Similarity {
     * |sources|·64 rows total — then an alphabet-bounded pair join on
     * dim. Nothing downstream scales with the corpus. */
   def sourceEmbeddingDrift(spark: SparkSession, d: String): DataFrame = {
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
-    val quant = transform(col("v"), x =>
-      when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
-        .otherwise(-floor(abs(x * col("sc")) + lit(0.5))).cast("double"))
     // the labeled quantized base feeds both aggs (|sources|·64 sums +
     // per-source counts) — cached until the caller's scope ends
-    val base = CacheScope.cached(withNorm(Tables.embeddings(spark, d))
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
+    val base = CacheScope.cached(int8Scaled(withNorm(Tables.embeddings(spark, d)))
       .join(Tables.documents(spark, d).select(col("doc_id"), col("source")),
         col("vec_id") === col("doc_id"))
-      .select(col("source"), quant.as("q")))
+      .select(col("source"), int8Doubles.as("q")))
     val sums = base
       .select(col("source"), posexplode(col("q")).as(Seq("pos", "qv")))
       .groupBy(col("source"), col("pos"))
@@ -666,14 +672,9 @@ object Similarity {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),
         col("v").as("qv"), col("nn").as("qn"))
-    broadcast(q).join(e, col("q_id") =!= col("vec_id") && col("q_label") =!= col("label"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn"), col("nn")))
-      .groupBy(col("q_id"), col("q_label"))
-      .agg(graft.functions.TopKByScore.topk(col("cos"), col("vec_id"), 5).as("top"))
-      .select(col("q_id"), col("q_label"), posexplode(col("top")).as(Seq("pos", "s")))
-      .select(col("q_id"), col("q_label"), col("s.id").as("neighbor_id"),
-        round(col("s.score"), 6).as("cosine"),
-        (col("pos") + 1).cast("long").as("rank"))
+    top5Rows(
+        broadcast(q).join(e, col("q_id") =!= col("vec_id") && col("q_label") =!= col("label")),
+        col("q_id"), col("q_label"))
       .join(lbl, "neighbor_id")
       .select(col("q_id"), col("q_label"), col("neighbor_id"), col("n_label"),
         col("cosine"), col("rank"))
@@ -723,13 +724,25 @@ object Similarity {
     * to the first-k seed vectors, each later round re-centers
     * (floor-mean) and re-assigns. */
   private[graft] def lloyd(emb: DataFrame, k: Int, rounds: Int)
-      : (DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame) =
+    lloyd(emb, microComponents(emb), Nil, k, rounds)
+
+  /** The (vec_id, `keys`…, pos, vm) component relation Lloyd runs on:
+    * one row per embedding dimension, `vm` = floor(10⁶·x). */
+  private[graft] def microComponents(emb: DataFrame, keys: Column*): DataFrame =
+    emb.select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
+      .select(col("vec_id") +: keys ++: Seq(col("pos").cast("long").as("pos"),
+        floor(col("col") * lit(1000000.0d)).cast("long").as("vm")): _*)
+
+  /** Lloyd over a [[microComponents]] relation `q` whose extra `keys`
+    * (e.g. PQ's subspace) split every vector into independent
+    * clusterings, all learned in the same jobs: every centroid,
+    * distance and argmin is keyed by `keys` too. */
+  private[graft] def lloyd(emb: DataFrame, q: DataFrame, keys: Seq[String],
+      k: Int, rounds: Int): (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val spark = emb.sparkSession
-    val q = emb
-      .select(col("vec_id"), posexplode(col("embedding").cast("array<double>")))
-      .select(col("vec_id"), col("pos").cast("long").as("pos"),
-        floor(col("col") * lit(1000000.0d)).cast("long").as("vm"))
+    val kc = keys.map(col)
     // first-k seeds numbered 0..k-1: a k-row bounded collect (the
     // IVF-centroid idiom) — numbering k rows with a no-partition
     // row_number window would plan the banned single-partition sort
@@ -739,20 +752,20 @@ object Similarity {
         seedIds.zipWithIndex.toIndexedSeq.map { case (v, i) => (v, i.toLong) })
       .toDF("vec_id", "cid")
     var cent = q.join(broadcast(seeds), "vec_id")
-      .select(col("cid"), col("pos"), col("vm").as("cm"))
+      .select(kc ++ Seq(col("cid"), col("pos"), col("vm").as("cm")): _*)
     def assign(c: DataFrame): DataFrame = {
-      val d2 = q.join(broadcast(c), "pos")
-        .groupBy(col("vec_id"), col("cid"))
+      val d2 = q.join(broadcast(c), keys :+ "pos")
+        .groupBy((col("vec_id") +: kc) :+ col("cid"): _*)
         .agg(sum((col("vm") - col("cm")) * (col("vm") - col("cm"))).as("d2"))
       d2.withColumn("rn", row_number().over(
-          Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("cid"))))
+          Window.partitionBy(col("vec_id") +: kc: _*).orderBy(col("d2"), col("cid"))))
         .filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid"), col("d2"))
+        .select(col("vec_id") +: kc ++: Seq(col("cid"), col("d2")): _*)
     }
     var asg = assign(cent)
     for (_ <- 2 to rounds) {
-      cent = q.join(asg.select(col("vec_id"), col("cid")), "vec_id")
-        .groupBy(col("cid"), col("pos"))
+      cent = q.join(asg.select((col("vec_id") +: kc) :+ col("cid"): _*), "vec_id" +: keys)
+        .groupBy(kc ++ Seq(col("cid"), col("pos")): _*)
         .agg(floor(sum(col("vm")) / count(lit(1))).cast("long").as("cm"))
       asg = assign(cent)
     }
@@ -1151,15 +1164,25 @@ object Similarity {
     var v = Array.fill(dim)(BigInt(1000))
     for (_ <- 1 to PowerRounds) {
       val w = matVec(g, dim, v)
-      val m = w.map(_.abs).max
-      v = w.map(x =>
-        if (x.signum >= 0) (BigInt(1000) * x) / m
-        else -((BigInt(1000) * -x) / m))
+      v = milliRescale(w, w.map(_.abs).max)
     }
-    val gv = matVec(g, dim, v)
-    val num = (0 until dim).map(i => v(i) * gv(i)).sum // vᵀGv ≥ 0 (PSD)
-    val den = v.map(x => x * x).sum
-    (v, num, den)
+    rayleigh(g, dim, v) // vᵀGv ≥ 0 (PSD)
+  }
+
+  /** `u` scaled by 1000/m with sign-decomposed floors (the oracle's
+    * integer division truncates toward zero on the magnitude). */
+  private def milliRescale(u: Array[BigInt], m: BigInt): Array[BigInt] =
+    u.map(x =>
+      if (x.signum >= 0) (BigInt(1000) * x) / m
+      else -((BigInt(1000) * -x) / m))
+
+  /** (x, xᵀGx, xᵀx): the Rayleigh-quotient pieces of `x` over `g`. */
+  private def rayleigh(g: Array[Long], dim: Int, x: Array[BigInt])
+      : (Array[BigInt], BigInt, BigInt) = {
+    val gx = matVec(g, dim, x)
+    val num = (0 until dim).map(i => x(i) * gx(i)).sum
+    val den = x.map(t => t * t).sum
+    (x, num, den)
   }
 
   /** One deflation round for q244: the largest eigenvalue of G
@@ -1179,26 +1202,17 @@ object Similarity {
     def projRescale(u: Array[BigInt]): Array[BigInt] = {
       val dot = (0 until dim).map(i => v1(i) * u(i)).sum
       val p = Array.tabulate(dim)(i => u(i) * den1 - dot * v1(i))
-      val m = p.map(_.abs).max.max(BigInt(1))
-      p.map(x =>
-        if (x.signum >= 0) (BigInt(1000) * x) / m
-        else -((BigInt(1000) * -x) / m))
+      milliRescale(p, p.map(_.abs).max.max(BigInt(1)))
     }
     var x = projRescale(Array.fill(dim)(BigInt(1000)))
     for (_ <- 1 to PowerRounds) x = projRescale(matVec(g, dim, x))
-    val gx = matVec(g, dim, x)
-    val num = (0 until dim).map(i => x(i) * gx(i)).sum
-    val den = x.map(t => t * t).sum
-    (x, num, den)
+    rayleigh(g, dim, x)
   }
 
   /** q48's int8 quantization as an array<long> column (exact small
     * integers) — the GramAgg input for q240/q242. Expects `v`/`sc`. */
   private def quantCol: Column =
-    transform(col("v"), x =>
-      when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
-        .otherwise(-floor(abs(x * col("sc")) + lit(0.5))))
-      .cast("array<long>")
+    transform(col("v"), x => int8Round(x)).cast("array<long>")
 
   /** q240: PRINCIPAL DIRECTION of the corpus embedding cloud — the top
     * eigenvector of the exact int8 Gram matrix Σ q·qᵀ (q48's
@@ -1223,10 +1237,7 @@ object Similarity {
     * by q240 and q244. */
   private def corpusGram(spark: SparkSession, d: String, dim: Int): Array[Long] = {
     import graft.functions.GramAgg
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
-    withNorm(Tables.embeddings(spark, d))
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
+    int8Scaled(withNorm(Tables.embeddings(spark, d)))
       .select(GramAgg.gram(quantCol, dim).as("g"))
       .head().getSeq[Long](0).toArray
   }
@@ -1262,10 +1273,7 @@ object Similarity {
   def sourceAnisotropy(spark: SparkSession, d: String): DataFrame = {
     import graft.functions.GramAgg
     val dim = 64
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
-    val grams = withNorm(Tables.embeddings(spark, d))
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
+    val grams = int8Scaled(withNorm(Tables.embeddings(spark, d)))
       .join(Tables.documents(spark, d).select(col("doc_id"), col("source")),
         col("vec_id") === col("doc_id"))
       .groupBy(col("source"))
@@ -1587,21 +1595,12 @@ object Similarity {
     * fits), one |sources|-key hash-agg with map-side partials. No
     * self-join, no window, nothing quadratic. */
   def quantFidelity(spark: SparkSession, d: String): DataFrame = {
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
-    val quant = transform(col("v"), x =>
-      when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
-        .otherwise(-floor(abs(x * col("sc")) + lit(0.5))).cast("double"))
     val fid = when(col("dt") >= 0,
         floor(lit(1000000.0) * col("dt") * col("dt") / (col("nn") * col("qn"))))
       .otherwise(
         -floor(lit(1000000.0) * col("dt") * col("dt") / (col("nn") * col("qn"))))
       .cast("long")
-    val e = withNorm(Tables.embeddings(spark, d))
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
-      .withColumn("q", quant)
-      .withColumn("qn", dot(col("q"), col("q")).cast("long"))
-      .filter(col("qn") > 0)
+    val e = int8Quantized(withNorm(Tables.embeddings(spark, d)), "long")
       .withColumn("dt", dot(col("v"), col("q")))
       .select(col("vec_id"), fid.as("fid"))
     val src = Tables.documents(spark, d).select(col("doc_id"), col("source"))
@@ -1651,19 +1650,13 @@ object Similarity {
     val g = corpusGram(spark, d, dim)
     val (v1, _, den1) = powerIterate(g, dim)
     val (x2, _, den2) = deflatedIterate(g, dim, v1, den1)
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
     def dsq(dir: Array[BigInt], name: String): Column = {
       val arr = lit(dir.map(_.toDouble))
       val dt = dot(col("q").cast("array<double>"), arr)
       (dt * dt).cast("long").as(name)
     }
-    val e = withNorm(Tables.embeddings(spark, d))
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
-      .withColumn("q", transform(col("v"), x =>
-        when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
-          .otherwise(-floor(abs(x * col("sc")) + lit(0.5))))
-        .cast("array<long>"))
+    val e = int8Scaled(withNorm(Tables.embeddings(spark, d)))
+      .withColumn("q", quantCol)
       .select(col("vec_id"),
         dot(col("q").cast("array<double>"), col("q").cast("array<double>"))
           .cast("long").as("qn"),
@@ -1783,10 +1776,7 @@ object Similarity {
     val e = withNorm(Tables.embeddings(spark, d))
     val q = e.filter(col("vec_id") % stride === 0L)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nn").as("qn"))
-    val top = broadcast(q).join(e, col("q_id") =!= col("vec_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn"), col("nn")))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.TopKByScore.topk(col("cos"), col("vec_id"), 5).as("top"))
+    val top = cosineTop5(broadcast(q).join(e, col("q_id") =!= col("vec_id")), col("q_id"))
       .select(col("q_id"), explode(col("top")).as("s"))
       .select(col("q_id"), col("s.id").as("neighbor_id"))
     val matches = top
@@ -1852,12 +1842,9 @@ object Similarity {
     import graft.functions.{GramAgg, GraftFunctions}
     val dim = ReprDim
     val adim = dim + 1
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
     val docs = Tables.documents(spark, d)
       .select(col("doc_id"), col("source"), col("text"))
-    val base = withNorm(Tables.embeddings(spark, d))
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
+    val base = int8Scaled(withNorm(Tables.embeddings(spark, d)))
       .join(docs, col("vec_id") === col("doc_id"))
       .select(col("source"),
         concat(GraftFunctions.bowcounts(split(col("text"), " "), dim, BowCap),
@@ -2005,10 +1992,7 @@ object Similarity {
     val e = withNorm(Tables.embeddings(spark, d))
     val q = e.filter(col("vec_id") % PurityStride === 0L)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nn").as("qn"))
-    val top = broadcast(q).join(e, col("q_id") =!= col("vec_id"))
-      .withColumn("cos", cosine(col("qv"), col("v"), col("qn"), col("nn")))
-      .groupBy(col("q_id"))
-      .agg(graft.functions.TopKByScore.topk(col("cos"), col("vec_id"), 5).as("top"))
+    val top = cosineTop5(broadcast(q).join(e, col("q_id") =!= col("vec_id")), col("q_id"))
       .select(col("q_id"), explode(col("top")).as("s"))
       .select(col("s.id").as("neighbor_id"))
     val indeg = top.groupBy(col("neighbor_id")).agg(count(lit(1)).as("indeg"))
@@ -2066,24 +2050,15 @@ object Similarity {
     * HUGEINT (pair masses are quadratic in the sample). */
   def embeddingLabelAuc(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val maxabs = array_max(transform(col("v"), x => abs(x)))
-    val quant = transform(col("v"), x =>
-      when(x >= 0, floor(abs(x * col("sc")) + lit(0.5)))
-        .otherwise(-floor(abs(x * col("sc")) + lit(0.5))).cast("double"))
     // cached: the broadcast sample and the candidate side both scan it
-    val e = CacheScope.cached(Tables.embeddings(spark, d)
+    val e = CacheScope.cached(int8Quantized(Tables.embeddings(spark, d)
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
       // null labels excluded EXPLICITLY on both engines: without this,
       // Spark's sum(1 - same) drops NULL comparisons while a DuckDB
       // CASE WHEN same would count them as 'different' — a latent
       // cross-engine divergence if label is ever NULL
-      .filter(col("label").isNotNull)
-      .withColumn("ma", maxabs).filter(col("ma") > 0)
-      .withColumn("sc", lit(127.0) / col("ma"))
-      .withColumn("q", quant)
-      .withColumn("qn", dot(col("q"), col("q")).cast("long"))
-      .filter(col("qn") > 0)
+      .filter(col("label").isNotNull), "long")
       .select(col("vec_id"), col("label"), col("q"), col("qn")))
     val qs = e.filter(col("vec_id") % PurityStride === 0L)
       .select(col("vec_id").as("q_id"), col("label").as("q_label"),

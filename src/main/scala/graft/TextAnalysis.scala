@@ -22,6 +22,13 @@ object TextAnalysis {
   private def countIn(t: Column, words: Seq[String]): Column =
     size(filter(t, x => x.isInCollection(words)))
 
+  /** The language whose stopword count (`s_en`, `s_de`, `s_es`) is
+    * largest; ties prefer en, then de. */
+  private[graft] def stopwordLang: Column =
+    when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es"), "en")
+      .when(col("s_de") >= col("s_es"), "de")
+      .otherwise("es")
+
   /** n-gram/stopword language-ID heuristic: count stopword hits per
     * language profile, predict the argmax (ties break en < de < es —
     * the CASE chain is mirrored verbatim in the oracle). The synthetic
@@ -34,10 +41,7 @@ object TextAnalysis {
         countIn(t, stopEn).cast("long").as("s_en"),
         countIn(t, stopDe).cast("long").as("s_de"),
         countIn(t, stopEs).cast("long").as("s_es"))
-      .withColumn("pred",
-        when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es"), "en")
-          .when(col("s_de") >= col("s_es"), "de")
-          .otherwise("es"))
+      .withColumn("pred", stopwordLang)
       .orderBy(col("doc_id"))
   }
 
@@ -400,31 +404,49 @@ object TextAnalysis {
     * a maintained vocabulary stage (q65's partial-state shape) rather
     * than a rescan; the scoring scan is unchanged. */
   def bm25Search(spark: SparkSession, d: String): DataFrame = {
-    val terms = Seq("hash", "join", "vector")
-    val t = toks(col("text"))
-    val perDoc = Tables.documentsDist(spark, d)
-      .select(col("doc_id") +: size(t).cast("long").as("dl") +:
-        terms.map(w => size(filter(t, x => x === w)).cast("long").as(s"tf_$w")): _*)
+    val perDoc = bm25TermFreqs(spark, d)
     val stats = perDoc.agg(
       count(lit(1)).as("n_docs"),
       sum(col("dl")).as("n_tokens") +:
-        terms.map(w => count(when(col(s"tf_$w") > 0, 1)).as(s"df_$w")): _*)
-    val termScore = terms.map { w =>
-      expr(s"""(((1000 * (2 * (n_docs - df_$w) + 1)) div (2 * df_$w + 1)) *
+        Bm25Terms.map(w => count(when(col(s"tf_$w") > 0, 1)).as(s"df_$w")): _*)
+    bm25Normed(perDoc, stats)
+      .withColumn("score_micro", bm25Score("n_docs", "df"))
+      .filter(col("score_micro") > 0)
+      .select(Seq(col("doc_id"), col("dl")) ++
+        Bm25Terms.map(w => col(s"tf_$w")) :+ col("score_micro"): _*)
+      .orderBy(col("score_micro").desc, col("doc_id"))
+      .limit(10)
+  }
+
+  /** The query terms q114 and its dedup-corrected twin score. */
+  private[graft] val Bm25Terms = Seq("hash", "join", "vector")
+
+  /** Per doc: `doc_id`, token length `dl` and `tf_<term>` per Bm25Terms
+    * term — pure row arithmetic, zero shuffle. */
+  private[graft] def bm25TermFreqs(spark: SparkSession, d: String): DataFrame = {
+    val t = toks(col("text"))
+    Tables.documentsDist(spark, d)
+      .select(col("doc_id") +: size(t).cast("long").as("dl") +:
+        Bm25Terms.map(w => size(filter(t, x => x === w)).cast("long").as(s"tf_$w")): _*)
+  }
+
+  /** `perDoc` with the one-row corpus `stats` broadcast in, plus the
+    * length normalizer `norm_milli` = 1000·(1 − b + b·dl/avgdl), b = ¾. */
+  private[graft] def bm25Normed(perDoc: DataFrame, stats: DataFrame): DataFrame =
+    perDoc.crossJoin(broadcast(stats))
+      .withColumn("avgdl_milli", expr("(1000 * n_tokens) div n_docs"))
+      .withColumn("norm_milli", expr("250 + (750000 * dl) div avgdl_milli"))
+
+  /** Σ over Bm25Terms of the micro BM25 term score (k1 = 1.2) with the
+    * rational Robertson idf over corpus size `nCol` and per-term
+    * document frequencies `<dfPrefix>_<term>`. */
+  private[graft] def bm25Score(nCol: String, dfPrefix: String): Column =
+    Bm25Terms.map { w =>
+      expr(s"""(((1000 * (2 * ($nCol - ${dfPrefix}_$w) + 1)) div (2 * ${dfPrefix}_$w + 1)) *
               |((tf_$w * 2200000000) div
               |  (tf_$w * 1000 + (1200 * norm_milli) div 1000))) div 1000"""
         .stripMargin.replace("\n", " "))
     }.reduce(_ + _)
-    perDoc.crossJoin(broadcast(stats))
-      .withColumn("avgdl_milli", expr("(1000 * n_tokens) div n_docs"))
-      .withColumn("norm_milli", expr("250 + (750000 * dl) div avgdl_milli"))
-      .withColumn("score_micro", termScore)
-      .filter(col("score_micro") > 0)
-      .select(Seq(col("doc_id"), col("dl")) ++
-        terms.map(w => col(s"tf_$w")) :+ col("score_micro"): _*)
-      .orderBy(col("score_micro").desc, col("doc_id"))
-      .limit(10)
-  }
 
   /** q118: winnowing fingerprint selection (Schleimer et al., SIGMOD
     * 2003 — the MOSS algorithm): over the POSITIONAL 3-gram shingle
@@ -790,13 +812,7 @@ object TextAnalysis {
     val post = PhraseIndex.buildOrLoad(spark, d)
     def terms(ph: String) = ph.split(' ').toSeq
     val allTerms = SearchPhrases.flatMap(terms).distinct
-    // document frequency of each QUERY term (never the full vocab):
-    // the isin filter prunes to the queried terms' row groups, and the
-    // collect is bounded by the query set, not the data
-    val dfs: Map[String, Long] = post
-      .filter(col("term").isin(allTerms: _*))
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfs = termDfs(post, allTerms)
     val perPhrase = SearchPhrases.map { ph =>
       val start = phraseStarts(post, terms(ph), dfs)
       val perDoc = start.groupBy(col("doc_id")).agg(count(lit(1)).as("c"))
@@ -817,6 +833,16 @@ object TextAnalysis {
   private[graft] def chainOrder(
       dfs: Map[String, Long], ws: Seq[String]): Seq[(String, Int)] =
     ws.zipWithIndex.sortBy { case (w, i) => (dfs.getOrElse(w, 0L), i) }
+
+  /** Posting count of each of `terms` in `post` (never the full
+    * vocabulary): the isin filter prunes to the queried terms' row
+    * groups, and the collect is bounded by the query set, not the
+    * data. */
+  private[graft] def termDfs(post: DataFrame, terms: Seq[String]): Map[String, Long] =
+    post
+      .filter(col("term").isin(terms: _*))
+      .groupBy(col("term")).agg(count(lit(1)).as("df"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
   /** (doc_id, start) rows where the full phrase `ws` begins, built as
     * a rarest-first intersection chain over the postings relation.
@@ -857,10 +883,7 @@ object TextAnalysis {
   def proximitySearch(spark: SparkSession, d: String): DataFrame = {
     val post = PhraseIndex.buildOrLoad(spark, d)
     val allTerms = ProximityPairs.flatMap { case (a, b, _) => Seq(a, b) }.distinct
-    val dfs: Map[String, Long] = post
-      .filter(col("term").isin(allTerms: _*))
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val dfs = termDfs(post, allTerms)
     val perPair = ProximityPairs.map { case (ta, tb, w) =>
       // fan out the RARER side: its postings emit every position the
       // partner may occupy, the denser list is probed by equi-join
@@ -981,12 +1004,8 @@ object TextAnalysis {
     // products are the same addends in the same (doc_a, doc_b) groups,
     // and DECIMAL integer addition is exactly associative — bit-equal
     // dot sums.
-    w.groupBy(col("g"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("wt")))).as("ds"))
-      .select(col("ds"), posexplode(col("ds")).as(Seq("i", "a")))
-      .select(col("a"),
-        explode(slice(col("ds"), col("i") + lit(2),
-          size(col("ds")) - col("i") - lit(1))).as("b"))
+    Dedup.arrayPairs(w.groupBy(col("g"))
+        .agg(sort_array(collect_list(struct(col("doc_id"), col("wt")))).as("ds")))
       .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .agg(sum(expr("CAST(a.wt AS DECIMAL(38,0)) * b.wt")).as("dot"))
       .join(norms.toDF("doc_a", "n2_a"), "doc_a")
@@ -1051,6 +1070,14 @@ object TextAnalysis {
     * model's context length. */
   val PackChunkTokens = 128L
 
+  /** Per doc its token count `c` and `before`, the tokens of every
+    * doc_id before it — the q213 global packing offset. */
+  private[graft] def packOffsets(spark: SparkSession, d: String): DataFrame = {
+    val hist = Tables.documentsDist(spark, d)
+      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("c"))
+    Queries.histCumBefore(spark, hist, "doc_id", asc = true)._1
+  }
+
   /** q213: CONTEXT-WINDOW PACKING PLAN — the GPT-style concat-and-chunk
     * layout every pretraining run computes before writing token shards:
     * documents are concatenated in doc_id order and cut into fixed
@@ -1068,9 +1095,7 @@ object TextAnalysis {
     * integer arithmetic. */
   def contextPacking(spark: SparkSession, d: String): DataFrame = {
     val c = PackChunkTokens
-    val hist = Tables.documentsDist(spark, d)
-      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("c"))
-    val (cum, _) = Queries.histCumBefore(spark, hist, "doc_id", asc = true)
+    val cum = packOffsets(spark, d)
     cum.select(col("doc_id"), col("c").as("n_tok"),
         col("before").as("tok_offset"),
         expr(s"before div $c").as("first_chunk"),
@@ -1091,9 +1116,7 @@ object TextAnalysis {
     * hash-agg. */
   def chunkManifest(spark: SparkSession, d: String): DataFrame = {
     val c = PackChunkTokens
-    val hist = Tables.documentsDist(spark, d)
-      .select(col("doc_id"), size(toks(col("text"))).cast("long").as("c"))
-    val (cum, _) = Queries.histCumBefore(spark, hist, "doc_id", asc = true)
+    val cum = packOffsets(spark, d)
     cum.select(col("doc_id"), col("c").as("n_tok"), col("before"),
         explode(sequence(expr(s"before div $c"),
           expr(s"(before + c - 1) div $c"))).as("chunk_id"))
@@ -1264,10 +1287,7 @@ object TextAnalysis {
         sum(when(col("tk").isin(stopEn: _*), 1L).otherwise(0L)).as("s_en"),
         sum(when(col("tk").isin(stopDe: _*), 1L).otherwise(0L)).as("s_de"),
         sum(when(col("tk").isin(stopEs: _*), 1L).otherwise(0L)).as("s_es"))
-      .withColumn("pred",
-        when(col("s_en") >= col("s_de") && col("s_en") >= col("s_es"), "en")
-          .when(col("s_de") >= col("s_es"), "de")
-          .otherwise("es"))
+      .withColumn("pred", stopwordLang)
     val preds = CacheScope.cached(
       chunks.select(col("doc_id"), col("chunk"), col("pred")))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("chunk"))
@@ -1658,15 +1678,10 @@ object TextAnalysis {
     * same narrow projection), re-entering as a one-row broadcast;
     * top-10 is TakeOrderedAndProject. */
   def bm25DedupCorrected(spark: SparkSession, d: String): DataFrame = {
-    val terms = Seq("hash", "join", "vector")
-    val t = toks(col("text"))
+    val terms = Bm25Terms
     val labels = Dedup.nearDupClusters(spark, d)
       .select(col("doc_id"), col("cluster_id"))
-    val perDoc = CacheScope.cached(Tables.documentsDist(spark, d)
-      .select(col("doc_id") +: size(t).cast("long").as("dl") +:
-        terms.map(w => size(filter(t, x => x === w)).cast("long")
-          .as(s"tf_$w")): _*)
-      .join(labels, "doc_id"))
+    val perDoc = CacheScope.cached(bm25TermFreqs(spark, d).join(labels, "doc_id"))
     val aggs = Seq(count(lit(1)).as("n_docs"),
       countDistinct(col("cluster_id")).as("n_clusters"),
       sum(col("dl")).as("n_tokens")) ++
@@ -1674,17 +1689,9 @@ object TextAnalysis {
       terms.map(w => countDistinct(
         when(col(s"tf_$w") > 0, col("cluster_id"))).as(s"dfc_$w"))
     val stats = perDoc.agg(aggs.head, aggs.tail: _*)
-    def score(nCol: String, dfPrefix: String) = terms.map { w =>
-      expr(s"""(((1000 * (2 * ($nCol - ${dfPrefix}_$w) + 1)) div (2 * ${dfPrefix}_$w + 1)) *
-              |((tf_$w * 2200000000) div
-              |  (tf_$w * 1000 + (1200 * norm_milli) div 1000))) div 1000"""
-        .stripMargin.replace("\n", " "))
-    }.reduce(_ + _)
-    perDoc.crossJoin(broadcast(stats))
-      .withColumn("avgdl_milli", expr("(1000 * n_tokens) div n_docs"))
-      .withColumn("norm_milli", expr("250 + (750000 * dl) div avgdl_milli"))
-      .withColumn("score_raw_micro", score("n_docs", "dfr"))
-      .withColumn("score_dedup_micro", score("n_clusters", "dfc"))
+    bm25Normed(perDoc, stats)
+      .withColumn("score_raw_micro", bm25Score("n_docs", "dfr"))
+      .withColumn("score_dedup_micro", bm25Score("n_clusters", "dfc"))
       .filter(col("score_dedup_micro") > 0)
       .select(col("doc_id"), col("cluster_id"), col("dl"),
         col("score_raw_micro"), col("score_dedup_micro"),

@@ -3,6 +3,20 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal of `s`: escapes backslash, quote and ALL
+    * control chars (< 0x20) — a tab or CR in the oracle SQL or a
+    * newline in an exception message would otherwise break the one
+    * JSON document (or line) a reader parses. */
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional third arg: comma-separated query-name substrings, dev-only
@@ -23,20 +37,8 @@ object Verify {
         // etc.) must not pin executor memory across the whole run
         spark.catalog.clearCache()
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Gate-visible bounds for the rowsOnly queries (full runs only —
     // the dev-time `only` filter iterates single queries): the DuckDB
@@ -53,7 +55,7 @@ object Verify {
       }
       if (bounds.nonEmpty) {
         val bj = bounds.map { case (name, pass, detail) =>
-          s"${q(name)}: {\"pass\": $pass, \"detail\": ${q(detail)}}"
+          s"${jstr(name)}: {\"pass\": $pass, \"detail\": ${jstr(detail)}}"
         }.mkString("{", ",", "}")
         Files.writeString(Paths.get(s"$outDir/rowsonly_bounds.json"), bj)
         bounds.foreach { case (name, pass, detail) =>

@@ -1,12 +1,10 @@
 package graft.functions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -33,14 +31,12 @@ case class CountMinAgg(
     depth: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySumAgg {
 
   override def children: Seq[Expression] = Seq(key)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_cms"
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](depth * width)
+  override protected def nCounters: Int = depth * width
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val k = key.eval(input)
@@ -55,28 +51,7 @@ case class CountMinAgg(
     buf
   }
 
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < b1.length) { b1(i) += b2(i); i += 1 }
-    b1
-  }
-
   override def eval(buf: Array[Long]): Any = new GenericArrayData(buf)
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.length)
-    buf.foreach(out.writeLong)
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    Array.fill(n)(in.readLong())
-  }
 
   override def withNewMutableAggBufferOffset(o: Int): CountMinAgg =
     copy(mutableAggBufferOffset = o)

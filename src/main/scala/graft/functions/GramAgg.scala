@@ -9,6 +9,40 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
+/** A TypedImperativeAggregate whose buffer is one flat array of `nCounters`
+  * long counters: partials merge by elementwise addition, a non-null
+  * array<bigint> comes out, and the wire format is the length then the
+  * longs. Subclasses keep `update` and `eval`. */
+private[graft] abstract class LongArraySumAgg extends TypedImperativeAggregate[Array[Long]] {
+  protected def nCounters: Int
+
+  override def nullable: Boolean = false
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+
+  override def createAggregationBuffer(): Array[Long] = new Array[Long](nCounters)
+
+  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
+    var i = 0
+    while (i < b1.length) { b1(i) += b2(i); i += 1 }
+    b1
+  }
+
+  override def serialize(buf: Array[Long]): Array[Byte] = {
+    val bos = new ByteArrayOutputStream()
+    val out = new DataOutputStream(bos)
+    out.writeInt(buf.length)
+    buf.foreach(out.writeLong)
+    out.flush()
+    bos.toByteArray
+  }
+
+  override def deserialize(bytes: Array[Byte]): Array[Long] = {
+    val in = new DataInputStream(new ByteArrayInputStream(bytes))
+    val n = in.readInt()
+    Array.fill(n)(in.readLong())
+  }
+}
+
 /** Exact d×d Gram matrix Σ q·qᵀ over int8-quantized vectors as ONE
   * TypedImperativeAggregate — the covariance-shaped statistic every
   * spectral corpus diagnostic (principal direction, whitening prep,
@@ -33,14 +67,12 @@ case class GramAgg(
     dim: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySumAgg {
 
   override def children: Seq[Expression] = Seq(vec)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_gram"
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](dim * dim)
+  override protected def nCounters: Int = dim * dim
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val v = vec.eval(input)
@@ -62,12 +94,6 @@ case class GramAgg(
     buf
   }
 
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < b1.length) { b1(i) += b2(i); i += 1 }
-    b1
-  }
-
   /** Mirror the accumulated upper triangle into the lower on the final
     * single row — d² work once, not per input row. */
   override def eval(buf: Array[Long]): Any = {
@@ -84,21 +110,6 @@ case class GramAgg(
       i += 1
     }
     new GenericArrayData(out)
-  }
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.length)
-    buf.foreach(out.writeLong)
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    Array.fill(n)(in.readLong())
   }
 
   override def withNewMutableAggBufferOffset(o: Int): GramAgg =
@@ -143,14 +154,12 @@ case class CrossGramAgg(
     dim: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[Array[Long]] {
+  extends LongArraySumAgg {
 
   override def children: Seq[Expression] = Seq(x, y)
-  override def nullable: Boolean = false
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "graft_crossgram"
 
-  override def createAggregationBuffer(): Array[Long] = new Array[Long](dim * dim)
+  override protected def nCounters: Int = dim * dim
 
   override def update(buf: Array[Long], input: InternalRow): Array[Long] = {
     val xv = x.eval(input)
@@ -174,28 +183,7 @@ case class CrossGramAgg(
     buf
   }
 
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    var i = 0
-    while (i < b1.length) { b1(i) += b2(i); i += 1 }
-    b1
-  }
-
   override def eval(buf: Array[Long]): Any = new GenericArrayData(buf.clone())
-
-  override def serialize(buf: Array[Long]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(buf.length)
-    buf.foreach(out.writeLong)
-    out.flush()
-    bos.toByteArray
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    Array.fill(n)(in.readLong())
-  }
 
   override def withNewMutableAggBufferOffset(o: Int): CrossGramAgg =
     copy(mutableAggBufferOffset = o)

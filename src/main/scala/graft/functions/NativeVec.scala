@@ -41,16 +41,19 @@ object NativeVec {
     java.lang.Double.valueOf(s)
   }
 
-  /** 32-bit SimHash pack: each hash votes ±1 per bit; bit i of the
-    * result is set iff the vote sum is positive. */
-  def bitVote32(hs: ArrayData): Long = {
-    val votes = new Array[Int](32)
+  /** `width`-bit SimHash pack: each hash (splitmix64-mixed first when
+    * `mixed`) votes ±1 per bit; bit i of the result is set iff the
+    * vote sum is positive. Width 32 unmixed is q24's signature; width
+    * 64 mixed is the production-width variant (the raw hashes carry
+    * only ~30 bits of entropy). */
+  def bitVote(hs: ArrayData, width: Int, mixed: Boolean): Long = {
+    val votes = new Array[Int](width)
     val n = hs.numElements()
     var i = 0
     while (i < n) {
-      val h = hs.getLong(i)
+      val h = if (mixed) mix64(hs.getLong(i)) else hs.getLong(i)
       var b = 0
-      while (b < 32) {
+      while (b < width) {
         votes(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1)
         b += 1
       }
@@ -58,7 +61,7 @@ object NativeVec {
     }
     var sig = 0L
     var b = 0
-    while (b < 32) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
+    while (b < width) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
     sig
   }
 
@@ -72,27 +75,6 @@ object NativeVec {
     z ^ (z >>> 31)
   }
 
-  /** 64-bit SimHash pack — the production-width variant of bitVote32:
-    * each token hash is splitmix64-mixed (the raw hashes carry only
-    * ~30 bits of entropy), then votes ±1 per output bit. */
-  def bitVote64(hs: ArrayData): Long = {
-    val votes = new Array[Int](64)
-    val n = hs.numElements()
-    var i = 0
-    while (i < n) {
-      val h = mix64(hs.getLong(i))
-      var b = 0
-      while (b < 64) {
-        votes(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1)
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) { if (votes(b) > 0) sig |= (1L << b); b += 1 }
-    sig
-  }
 
   /** k MinHash values over a hash set: mh_j = min_h ((2j+1)·h + 12345 +
     * 7919·j) mod P — identical permutation family to the oracle SQL. */
@@ -221,9 +203,9 @@ case class BitVote32Expr(child: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     requireArrayOf(child, LongType, prettyName)
   protected override def nullSafeEval(a: Any): Any =
-    NativeVec.bitVote32(a.asInstanceOf[ArrayData])
+    NativeVec.bitVote(a.asInstanceOf[ArrayData], 32, mixed = false)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.NativeVec.bitVote32($a)")
+    defineCodeGen(ctx, ev, a => s"graft.functions.NativeVec.bitVote($a, 32, false)")
   override protected def withNewChildInternal(c: Expression): BitVote32Expr = copy(child = c)
 }
 
@@ -235,9 +217,9 @@ case class BitVote64Expr(child: Expression)
   override def checkInputDataTypes(): TypeCheckResult =
     requireArrayOf(child, LongType, prettyName)
   protected override def nullSafeEval(a: Any): Any =
-    NativeVec.bitVote64(a.asInstanceOf[ArrayData])
+    NativeVec.bitVote(a.asInstanceOf[ArrayData], 64, mixed = true)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.NativeVec.bitVote64($a)")
+    defineCodeGen(ctx, ev, a => s"graft.functions.NativeVec.bitVote($a, 64, true)")
   override protected def withNewChildInternal(c: Expression): BitVote64Expr = copy(child = c)
 }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -34,10 +34,20 @@ object TemporalJoins {
   /** For each `click`, the most recent `view` of the same user at or
     * before it (ties: greatest view event_id). Left-outer semantics:
     * clicks with no prior view keep null view columns. */
-  def asofJoin(spark: SparkSession, d: String): DataFrame = {
+  def asofJoin(spark: SparkSession, d: String): DataFrame =
+    lastViews(spark, d)
+      .select(col("event_id").as("click_id"), col("user_id"),
+        col("tus").as("click_ts"), col("view_id"), col("view_ts"),
+        (col("tus") - col("view_ts")).as("gap_us"))
+      .orderBy(col("click_id"))
+
+  /** The union-tag window of q44: every click (user_id, tus, event_id)
+    * with the latest view at or before it (`view_ts`, `view_id`; null
+    * when the user has none). Side 0 = view (right), side 1 = click
+    * (left): at equal ts the view sorts first, so an
+    * exactly-simultaneous view matches. */
+  private[graft] def lastViews(spark: SparkSession, d: String): DataFrame = {
     val ev = graft.Tables.eventsNs(spark, d)
-    // side 0 = view (right), side 1 = click (left): at equal ts the
-    // view sorts first, so an exactly-simultaneous view matches
     val tagged = ev
       .filter(col("event_type").isin("click", "view"))
       .select(col("user_id"), expr("ts div 1000").as("tus"), col("event_id"),
@@ -51,10 +61,6 @@ object TemporalJoins {
       .withColumn("view_id",
         last(when(col("side") === 0, col("event_id")), ignoreNulls = true).over(w))
       .filter(col("side") === 1)
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("tus").as("click_ts"), col("view_id"), col("view_ts"),
-        (col("tus") - col("view_ts")).as("gap_us"))
-      .orderBy(col("click_id"))
   }
 
   /** q334 staleness bound: an as-of match older than this many
@@ -74,21 +80,8 @@ object TemporalJoins {
     *
     * Shape at 100 TB: identical to q44 — keyed window, no NLJ; the
     * TTL never changes the plan, only the emitted columns. */
-  def asofJoinTolerance(spark: SparkSession, d: String): DataFrame = {
-    val ev = graft.Tables.eventsNs(spark, d)
-    val tagged = ev
-      .filter(col("event_type").isin("click", "view"))
-      .select(col("user_id"), expr("ts div 1000").as("tus"), col("event_id"),
-        when(col("event_type") === "view", 0).otherwise(1).as("side"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("tus"), col("side"), col("event_id"))
-      .rowsBetween(Window.unboundedPreceding, 0)
-    tagged
-      .withColumn("view_ts",
-        last(when(col("side") === 0, col("tus")), ignoreNulls = true).over(w))
-      .withColumn("view_id",
-        last(when(col("side") === 0, col("event_id")), ignoreNulls = true).over(w))
-      .filter(col("side") === 1)
+  def asofJoinTolerance(spark: SparkSession, d: String): DataFrame =
+    lastViews(spark, d)
       .withColumn("gap_us", col("tus") - col("view_ts"))
       .select(col("event_id").as("click_id"), col("user_id"),
         col("tus").as("click_ts"),
@@ -100,7 +93,6 @@ object TemporalJoins {
                  ELSE 0 END""".stripMargin.replace("\n", " "))
           .cast("long").as("matched"))
       .orderBy(col("click_id"))
-  }
 
   /** q67: the SAME as-of semantics as `asofJoin`, executed by the
     * custom physical operator (`plans.AsOfJoinExec`): co-clustered
@@ -125,24 +117,40 @@ object TemporalJoins {
       .orderBy(col("click_id"))
   }
 
-  /** q72: the row-level interval join — every (click, view) pair of the
-    * same user with the view in the 10 minutes up to the click. Same
-    * bucket blocking as `rangeJoinAgg` (each qualifying pair meets in
-    * exactly one bucket — no dedup pass, no nested loop); inner join. */
-  def intervalPairs(spark: SparkSession, d: String): DataFrame = {
-    val W = 600000000L // 10 min in µs
-    val ev = graft.Tables.eventsNs(spark, d)
-    val clicks = ev.filter(col("event_type") === "click")
+  /** The range-join window and blocking bucket width: 10 min in µs. */
+  private val RangeWindowUs = 600000000L
+
+  /** The clicks of eventsNs rows `ev` as (click_id, user_id, cts µs). */
+  private def clickTimes(ev: DataFrame): DataFrame =
+    ev.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("user_id"),
         expr("ts div 1000").as("cts"))
+
+  /** Every (click, view) pair of one user with the view in
+    * [cts − RangeWindowUs, cts]: `clicks` ([[clickTimes]]) ⋈ the views
+    * of `ev` as (vts, `viewCol`). Blocked on W-sized buckets:
+    * cts − vts ∈ [0, W] ⇒ bucket(vts) ∈ {bucket(cts), bucket(cts) − 1},
+    * so each qualifying pair meets in EXACTLY one bucket — no dedup
+    * pass. */
+  private[graft] def windowPairs(ev: DataFrame, clicks: DataFrame,
+      viewCol: Column): DataFrame = {
+    val W = RangeWindowUs
     val views = ev.filter(col("event_type") === "view")
-      .select(col("user_id"), expr("ts div 1000").as("vts"),
-        col("event_id").as("view_id"))
+      .select(col("user_id"), expr("ts div 1000").as("vts"), viewCol)
       .withColumn("b", expr(s"vts div ${W}L"))
     clicks
       .withColumn("b", explode(array(expr(s"cts div ${W}L"), expr(s"cts div ${W}L - 1"))))
       .join(views, Seq("user_id", "b"))
       .filter(col("vts") <= col("cts") && col("cts") - col("vts") <= W)
+  }
+
+  /** q72: the row-level interval join — every (click, view) pair of the
+    * same user with the view in the 10 minutes up to the click. Same
+    * bucket blocking as `rangeJoinAgg` (each qualifying pair meets in
+    * exactly one bucket — no dedup pass, no nested loop); inner join. */
+  def intervalPairs(spark: SparkSession, d: String): DataFrame = {
+    val ev = graft.Tables.eventsNs(spark, d)
+    windowPairs(ev, clickTimes(ev), col("event_id").as("view_id"))
       .select(col("click_id"), col("user_id"), col("view_id"),
         (col("cts") - col("vts")).as("gap_us"))
       .orderBy(col("click_id"), col("view_id"))
@@ -151,20 +159,9 @@ object TemporalJoins {
   /** Per click: count / min-gap / max-value of the same user's views in
     * the 10 minutes up to the click (inclusive window [cts−W, cts]). */
   def rangeJoinAgg(spark: SparkSession, d: String): DataFrame = {
-    val W = 600000000L // 10 min in µs; also the blocking bucket width
     val ev = graft.Tables.eventsNs(spark, d)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        expr("ts div 1000").as("cts"))
-    val views = ev.filter(col("event_type") === "view")
-      .select(col("user_id"), expr("ts div 1000").as("vts"), col("value"))
-      .withColumn("b", expr(s"vts div ${W}L"))
-    // cts−vts ∈ [0, W] ⇒ bucket(vts) ∈ {bucket(cts), bucket(cts)−1}:
-    // each qualifying pair meets in EXACTLY one bucket — no dedup pass
-    val cand = clicks
-      .withColumn("b", explode(array(expr(s"cts div ${W}L"), expr(s"cts div ${W}L - 1"))))
-      .join(views, Seq("user_id", "b"))
-      .filter(col("vts") <= col("cts") && col("cts") - col("vts") <= W)
+    val clicks = clickTimes(ev)
+    val cand = windowPairs(ev, clicks, col("value"))
     val agg = cand.groupBy(col("click_id"))
       .agg(count(lit(1)).as("nv"), min(col("cts") - col("vts")).as("mg"),
         max(col("value")).as("mv"))

@@ -149,37 +149,40 @@ class GraphAnalyticsSpec extends SparkSpec {
   }
 
   test("q141 session associations ≡ local basket recompute; lift identity holds") {
-    val ev = Tables.eventsNs(spark, d)
-      .selectExpr("user_id", "event_type", "ts", "event_id").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    // local sessionize: per user, (ts, event_id) order, 30-min gap rule
-    val baskets = ev.groupBy(_._1).toSeq.flatMap { case (uid, g) =>
-      val sorted = g.sortBy(e => (e._3, e._4))
-      var sid = 0L
-      var prev = Long.MinValue
-      sorted.map { case (_, tpe, ts, _) =>
-        if (prev == Long.MinValue || ts - prev > 1800000000000L) sid += 1
-        prev = ts
-        ((uid, sid), tpe)
+    // the test corpus, then the planted exact-30-minute gaps
+    for (dir <- Seq(d, SessionFixture.dir(spark))) {
+      val ev = Tables.eventsNs(spark, dir)
+        .selectExpr("user_id", "event_type", "ts", "event_id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+      // local sessionize: per user, (ts, event_id) order, 30-min gap rule
+      val baskets = ev.groupBy(_._1).toSeq.flatMap { case (uid, g) =>
+        val sorted = g.sortBy(e => (e._3, e._4))
+        var sid = 0L
+        var prev = Long.MinValue
+        sorted.map { case (_, tpe, ts, _) =>
+          if (prev == Long.MinValue || ts - prev > 1800000000000L) sid += 1
+          prev = ts
+          ((uid, sid), tpe)
+        }
+      }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
+      val nSess = baskets.size.toLong
+      val tc = baskets.values.flatten.groupBy(identity).map { case (t, g) => t -> g.size.toLong }
+      val pc = baskets.values.toSeq.flatMap { s =>
+        s.toSeq.sorted.combinations(2).map { case Seq(a, b) => (a, b) }
+      }.groupBy(identity).map { case (p, g) => p -> g.size.toLong }
+        .filter(_._2 >= 5L)
+      val exp = pc.toSeq.map { case ((a, b), nb) =>
+        (a, b, nb, tc(a), tc(b), 1000L * nb / tc(a), 1000L * nb / tc(b),
+          (BigInt(1000) * nb * nSess / (BigInt(tc(a)) * tc(b))).toLong)
+      }.sortBy(x => (x._1, x._2))
+      val got = Queries.sessionAssociations(spark, dir).collect()
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
+          r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toSeq
+      assert(got == exp && got.nonEmpty)
+      // lift sanity: support never exceeds either side's total
+      got.foreach { case (_, _, nb, na2, nb2, _, _, _) =>
+        assert(nb <= na2 && nb <= nb2)
       }
-    }.groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSet }
-    val nSess = baskets.size.toLong
-    val tc = baskets.values.flatten.groupBy(identity).map { case (t, g) => t -> g.size.toLong }
-    val pc = baskets.values.toSeq.flatMap { s =>
-      s.toSeq.sorted.combinations(2).map { case Seq(a, b) => (a, b) }
-    }.groupBy(identity).map { case (p, g) => p -> g.size.toLong }
-      .filter(_._2 >= 5L)
-    val exp = pc.toSeq.map { case ((a, b), nb) =>
-      (a, b, nb, tc(a), tc(b), 1000L * nb / tc(a), 1000L * nb / tc(b),
-        (BigInt(1000) * nb * nSess / (BigInt(tc(a)) * tc(b))).toLong)
-    }.sortBy(x => (x._1, x._2))
-    val got = Queries.sessionAssociations(spark, d).collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-        r.getLong(4), r.getLong(5), r.getLong(6), r.getLong(7))).toSeq
-    assert(got == exp && got.nonEmpty)
-    // lift sanity: support never exceeds either side's total
-    got.foreach { case (_, _, nb, na2, nb2, _, _, _) =>
-      assert(nb <= na2 && nb <= nb2)
     }
   }
 

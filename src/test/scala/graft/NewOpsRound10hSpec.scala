@@ -10,38 +10,41 @@ class NewOpsRound10hSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
   test("q292 impurity ≡ local session recompute; Gini within [0, (k-1)/k]") {
-    val ev = Tables.eventsNs(spark, d)
-      .select("user_id", "event_id", "event_type", "ts").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-    val trans = ev.groupBy(_._1).toSeq.flatMap { case (_, g) =>
-      val sorted = g.sortBy(e => (e._4, e._2))
-      // session split at 30-minute gaps, transitions within sessions
-      val sessions = sorted.foldLeft(Vector.empty[Vector[(Long, Long, String, Long)]]) {
-        case (acc, e) =>
-          if (acc.isEmpty || e._4 - acc.last.last._4 > 1800000000000L)
-            acc :+ Vector(e)
-          else acc.init :+ (acc.last :+ e)
+    // the test corpus, then the planted exact-30-minute gaps
+    for (dir <- Seq(d, SessionFixture.dir(spark))) {
+      val ev = Tables.eventsNs(spark, dir)
+        .select("user_id", "event_id", "event_type", "ts").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+      val trans = ev.groupBy(_._1).toSeq.flatMap { case (_, g) =>
+        val sorted = g.sortBy(e => (e._4, e._2))
+        // session split at 30-minute gaps, transitions within sessions
+        val sessions = sorted.foldLeft(Vector.empty[Vector[(Long, Long, String, Long)]]) {
+          case (acc, e) =>
+            if (acc.isEmpty || e._4 - acc.last.last._4 > 1800000000000L)
+              acc :+ Vector(e)
+            else acc.init :+ (acc.last :+ e)
+        }
+        sessions.flatMap(s => s.sliding(2).collect {
+          case Seq(a, b) => (a._3, b._3)
+        })
       }
-      sessions.flatMap(s => s.sliding(2).collect {
-        case Seq(a, b) => (a._3, b._3)
-      })
-    }
-    val exp = trans.groupBy(_._1).map { case (ante, g) =>
-      val counts = g.groupBy(_._2).map { case (nxt, h) => nxt -> h.size.toLong }
-      val n = counts.values.sum
-      val ssq = counts.values.map(c => BigInt(c) * c).sum
-      val gini = ((BigInt(1000000) * (BigInt(n) * n - ssq)) /
-        (BigInt(n) * n)).toLong
-      val (topNxt, topC) = counts.toSeq.sortBy { case (x, c) => (-c, x) }.head
-      (ante, n, counts.size.toLong, gini, topNxt, 1000L * topC / n)
-    }.toSeq.sortBy(_._1)
-    val got = Queries.transitionImpurity(spark, d).collect().toSeq
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getString(4), r.getLong(5)))
-    assert(got == exp)
-    // Gini bounds: 0 ≤ g ≤ (k−1)/k · 1e6 (k = next-type fan-out)
-    got.foreach { t =>
-      assert(t._4 >= 0L && t._4 <= 1000000L * (t._3 - 1) / t._3)
+      val exp = trans.groupBy(_._1).map { case (ante, g) =>
+        val counts = g.groupBy(_._2).map { case (nxt, h) => nxt -> h.size.toLong }
+        val n = counts.values.sum
+        val ssq = counts.values.map(c => BigInt(c) * c).sum
+        val gini = ((BigInt(1000000) * (BigInt(n) * n - ssq)) /
+          (BigInt(n) * n)).toLong
+        val (topNxt, topC) = counts.toSeq.sortBy { case (x, c) => (-c, x) }.head
+        (ante, n, counts.size.toLong, gini, topNxt, 1000L * topC / n)
+      }.toSeq.sortBy(_._1)
+      val got = Queries.transitionImpurity(spark, dir).collect().toSeq
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getString(4), r.getLong(5)))
+      assert(got == exp)
+      // Gini bounds: 0 ≤ g ≤ (k−1)/k · 1e6 (k = next-type fan-out)
+      got.foreach { t =>
+        assert(t._4 >= 0L && t._4 <= 1000000L * (t._3 - 1) / t._3)
+      }
     }
   }
 

@@ -223,33 +223,36 @@ class PairMiningSpec extends SparkSpec {
   }
 
   test("q181 session paths ≡ local sessionize + trigram scan") {
-    val ev = Tables.eventsNs(spark, d)
-      .select("event_id", "user_id", "event_type", "ts").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
-    val paths = scala.collection.mutable.Map[(String, String, String),
-      (Long, Set[(Long, Long)])]()
-    for ((u, evs) <- ev.groupBy(_._2)) {
-      val sorted = evs.sortBy(e => (e._4, e._1))
-      var sid = 0L
-      var prev = Long.MinValue
-      val withSid = sorted.map { e =>
-        if (prev == Long.MinValue || e._4 - prev > 1800000000000L) sid += 1
-        prev = e._4
-        (e._3, sid)
+    // the test corpus, then the planted exact-30-minute gaps
+    for (dir <- Seq(d, SessionFixture.dir(spark))) {
+      val ev = Tables.eventsNs(spark, dir)
+        .select("event_id", "user_id", "event_type", "ts").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
+      val paths = scala.collection.mutable.Map[(String, String, String),
+        (Long, Set[(Long, Long)])]()
+      for ((u, evs) <- ev.groupBy(_._2)) {
+        val sorted = evs.sortBy(e => (e._4, e._1))
+        var sid = 0L
+        var prev = Long.MinValue
+        val withSid = sorted.map { e =>
+          if (prev == Long.MinValue || e._4 - prev > 1800000000000L) sid += 1
+          prev = e._4
+          (e._3, sid)
+        }
+        for (w <- withSid.sliding(3) if w.length == 3 && w(0)._2 == w(2)._2) {
+          val k = (w(0)._1, w(1)._1, w(2)._1)
+          val (n, ss) = paths.getOrElse(k, (0L, Set.empty[(Long, Long)]))
+          paths(k) = (n + 1, ss + ((u, w(0)._2)))
+        }
       }
-      for (w <- withSid.sliding(3) if w.length == 3 && w(0)._2 == w(2)._2) {
-        val k = (w(0)._1, w(1)._1, w(2)._1)
-        val (n, ss) = paths.getOrElse(k, (0L, Set.empty[(Long, Long)]))
-        paths(k) = (n + 1, ss + ((u, w(0)._2)))
-      }
+      val exp = paths.toSeq
+        .map { case ((a, b, c), (n, ss)) => (a, b, c, n, ss.size.toLong) }
+        .sortBy(t => (-t._4, t._1, t._2, t._3)).take(20)
+      val got = Queries.sessionPaths(spark, dir).collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getString(2),
+          r.getLong(3), r.getLong(4)))
+      assert(got == exp && got.nonEmpty)
     }
-    val exp = paths.toSeq
-      .map { case ((a, b, c), (n, ss)) => (a, b, c, n, ss.size.toLong) }
-      .sortBy(t => (-t._4, t._1, t._2, t._3)).take(20)
-    val got = Queries.sessionPaths(spark, d).collect().toSeq
-      .map(r => (r.getString(0), r.getString(1), r.getString(2),
-        r.getLong(3), r.getLong(4)))
-    assert(got == exp && got.nonEmpty)
   }
 
   /** Local q23 pipeline: distinct 3-gram polyhash shingles, 16
