@@ -464,7 +464,8 @@ object Dedup {
     * linear in corpus size instead of the all-pairs cartesian. The
     * DuckDB oracle reproduces the identical buckets, so the result is
     * hash-checked end-to-end; recall vs the exact all-pairs baseline
-    * (`embeddingNearDupExact`) is measured in DedupSpec. */
+    * (the spec-side `ReferenceTwins.embeddingNearDupExact`) is measured
+    * in DedupSpec. */
   def embeddingNearDup(spark: SparkSession, d: String): DataFrame = {
     // referenced by the explode and both verify-join sides: cached so the
     // norm + 16 plane projections compute once per row; released when
@@ -1169,21 +1170,6 @@ object Dedup {
     s1.join(nearDup, Seq("doc_id"), "left_anti")
       .select(col("doc_id"), col("lang"))
       .orderBy(col("doc_id"))
-  }
-
-  /** Exact all-pairs cosine ≥ 0.4 — the quadratic ground-truth twin of
-    * `embeddingNearDup`, kept for DedupSpec's recall measurement (it is
-    * deliberately NOT a `queries` entry: its BroadcastNestedLoopJoin is
-    * the canonical 100×-scale killer). */
-  def embeddingNearDupExact(spark: SparkSession, d: String): DataFrame = {
-    val e = Similarity.withNorm(Tables.embeddings(spark, d))
-    val cos = Similarity.cosine(col("a.v"), col("b.v"), col("a.nn"), col("b.nn"))
-    e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
-      .withColumn("cos", cos)
-      .filter(col("cos") >= 0.4)
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        round(col("cos"), 6).as("cosine"))
-      .orderBy(col("vec_a"), col("vec_b"))
   }
 
   /** q145: paragraph-granularity exact dedup (Dolma-style) — the

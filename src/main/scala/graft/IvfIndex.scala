@@ -43,11 +43,12 @@ object IvfIndex {
     * measured q172 at 14.7× wall for 10× data before this) — constant
     * CELL SIZE keeps total pair work linear. At every driver SF
     * (≤ 2000 vectors) this floors to 16, so the DuckDB oracles replay
-    * unchanged; the knob only engages beyond them. One count() on the
-    * vec table per call — footer-metadata cheap, and the index dir it
-    * selects is the persisted salted stage. */
+    * unchanged; the knob only engages beyond them. `n` is the vec
+    * table's row count read from its parquet footers on the driver
+    * (`Tables.rowCounts`: no Spark job), and the index dir it selects
+    * is the persisted salted stage. */
   def scaledNlist(spark: SparkSession, d: String): Int = {
-    val n = Tables.embeddings(spark, d).count()
+    val n = Tables.rowCounts(spark, Seq(s"$d/embeddings.parquet")).head
     math.max(16, ((n + 124) / 125).toInt)
   }
 

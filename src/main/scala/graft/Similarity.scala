@@ -28,13 +28,11 @@ object Similarity {
     emb.select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .withColumn("nn", dot(col("v"), col("v")))
 
-  /** Native sequential dot product (DotProductExpr) — the HOF twin
-    * below computes the identical value but interpreted (CodegenFallback),
-    * which is ~two orders slower inside a pairwise join. */
+  /** Native sequential dot product (DotProductExpr) — the spec-side
+    * HOF twin `ReferenceTwins.dotHof` computes the identical value but
+    * interpreted (CodegenFallback), which is ~two orders slower inside a
+    * pairwise join. */
   def dot(a: Column, b: Column): Column = graft.functions.GraftFunctions.dot(a, b)
-
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0d), (acc, x) => acc + x)
 
   def cosine(av: Column, bv: Column, an: Column, bn: Column): Column =
     dot(av, bv) / sqrt(an * bn)

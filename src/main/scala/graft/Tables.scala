@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
+import scala.util.control.NonFatal
 
 /** Loaders for the driver-generated test tables (TESTDATA.md), and the
   * one parquet read path of the engine (`parquet`).
@@ -50,6 +51,39 @@ object Tables {
         val df = spark.read.parquet(path)
         if (stamp != "absent") schemas.put(key, (stamp, df.schema))
         df
+    }
+  }
+
+  /** Exact row count of each committed parquet path (a file or a dir of
+    * parts, partition subdirs included), in order: the sum of its data
+    * files' footer record counts, read on the driver, so no Spark job,
+    * plan or codegen runs. A corrupt or unreadable file fails the count,
+    * naming the file; it never reads as 0. */
+  def rowCounts(spark: SparkSession, paths: Seq[String]): Seq[Long] = {
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = spark.sparkContext.hadoopConfiguration
+    // Spark's data-file rule: no `_x` (bar partition dirs `_k=v`), no
+    // `.x`, no in-flight `x._COPYING_`
+    def isData(name: String): Boolean =
+      !((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_"))
+    def files(fs: FileSystem, st: FileStatus): Iterator[FileStatus] =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).iterator.filter(c => isData(c.getPath.getName))
+          .flatMap(files(fs, _))
+      else Iterator(st)
+    def footerRows(st: FileStatus): Long =
+      try {
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try r.getRecordCount finally r.close()
+      } catch { case NonFatal(e) =>
+        throw new java.io.IOException(s"cannot count the rows of parquet file ${st.getPath}: $e", e)
+      }
+    paths.map { p =>
+      val fs = new Path(p).getFileSystem(conf)
+      files(fs, fs.getFileStatus(new Path(p))).map(footerRows).sum
     }
   }
 

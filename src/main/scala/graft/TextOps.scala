@@ -16,11 +16,6 @@ object TextOps {
   /** Large prime modulus shared with the oracle SQL. */
   val P = 1000000007L
 
-  /** Characters of a string, excluding the trailing "" that Spark's
-    * `split(s, "")` keeps (Java split with limit -1) and DuckDB's
-    * `string_split(s, '')` does not. */
-  def chars(s: Column): Column = filter(split(s, ""), c => c =!= "")
-
   /** Polynomial rolling hash over codepoints:
     * h = fold(chars, 0, (acc, c) => (acc*131 + ascii(c)) mod P).
     * Oracle twin: list_reduce(list_prepend(0, list_transform(
@@ -28,11 +23,6 @@ object TextOps {
     * Dispatches to the native codegen expression (PolyHashExpr) — same
     * math, no per-char array materialization. */
   def polyHash(s: Column): Column = graft.functions.GraftFunctions.polyhash(s)
-
-  /** Reference formulation via SQL higher-order functions — kept as the
-    * semantic spec for PolyHashExpr (equality asserted in FunctionsSpec). */
-  def polyHashHof(s: Column): Column =
-    aggregate(chars(s), lit(0L), (acc, c) => (acc * 131L + ascii(c)) % P)
 
   /** Whitespace tokens (the corpus is single-space separated). */
   def toks(text: Column): Column = split(text, " ")
@@ -45,26 +35,15 @@ object TextOps {
       .otherwise(array())
 
   /** Distinct shingle-hash set of a text — the unit of Jaccard
-    * similarity for the dedup family. Native kernel; HOF twin below. */
+    * similarity for the dedup family. Native kernel; its HOF twin is
+    * the spec-side `ReferenceTwins.shingleHashSetHof`. */
   def shingleHashSet(text: Column, n: Int): Column =
     graft.functions.GraftFunctions.shingleHashes(toks(text), n)
 
-  def shingleHashSetHof(text: Column, n: Int): Column =
-    array_distinct(transform(shingles(toks(text), n), s => polyHashHof(s)))
-
-  /** The i-th MinHash permutation of a hash value:
-    * ((2i+1)·h + 12345 + 7919·i) mod P — a_i odd keeps the map
-    * bijective mod 2^k factors; constants mirrored in the oracle. */
-  def minhashPerm(h: Column, i: Column): Column =
-    ((lit(2L) * i + 1L) * h + lit(12345L) + lit(7919L) * i) % P
-
-  /** k MinHash values over a distinct-hash-set column (native kernel). */
+  /** k MinHash values over a distinct-hash-set column (native kernel;
+    * HOF twin `ReferenceTwins.minhashesHof`). */
   def minhashes(hset: Column, k: Int): Column =
     graft.functions.GraftFunctions.minhashes(hset, k)
-
-  def minhashesHof(hset: Column, k: Int): Column =
-    transform(sequence(lit(0), lit(k - 1)),
-      i => array_min(transform(hset, h => minhashPerm(h, i))))
 
   /** Fold `rowsPerBand` consecutive minhashes into one band key. */
   def bandKeys(mh: Column, bands: Int, rowsPerBand: Int): Column =

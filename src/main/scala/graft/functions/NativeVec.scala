@@ -170,7 +170,7 @@ private[functions] trait ArrayOfType { self: Expression =>
   *
   * NULL-exact twin of `aggregate(zip_with(a,b,(x,y)->x*y),0.0,(s,v)->s+v)`:
   * a null input array, a length mismatch, or a null element all yield
-  * NULL, as `Similarity.dotHof` does (FunctionsSpec pins the two equal
+  * NULL, as the spec-side `ReferenceTwins.dotHof` does (FunctionsSpec pins the two equal
   * on nullable and ragged operands). */
 case class DotProductExpr(left: Expression, right: Expression)
     extends BinaryExpression with ArrayOfType {

@@ -1,7 +1,6 @@
 package graft.pipeline
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 import graft.{Curation, Dedup, TextAnalysis}
 
 /** The curation operators (q49-q57) composed as a salted-stage DAG —
@@ -143,23 +142,18 @@ object CurateDag {
   /** Always-rerun report: per-stage document counts — the curation
     * funnel a pipeline owner watches.
     *
-    * One aggregation counts all 8 stages, so a memo-warm rerun pays 2
-    * Spark jobs, not 3 per stage. Each output dir is scanned with an
-    * empty user schema: Spark skips its schema-inference job and
-    * decodes no column. Every scan still passes the S4 read gate. */
+    * The 8 counts come from `Tables.rowCounts`: each output's parquet
+    * footers already store its exact row count, so a memo-warm rerun
+    * reads 8 small dirs' footers on the driver and starts no Spark job.
+    * Every dir still passes the S4 read gate first. */
   object CurationReport extends Stage {
     override def deps: Seq[Stage] = Seq(Pack, ChunkManifest)
     override def outputDir(ctx: Ctx): Option[String] = None
     override def complete(ctx: Ctx): Boolean = false
     @volatile var last: Option[Seq[(String, Long)]] = None
     override def run(ctx: Ctx): Unit = {
-      val scans = funnelStages.zipWithIndex.map { case ((_, s), i) =>
-        ctx.spark.read.schema(new StructType()).parquet(s.readableDir(ctx))
-          .select(lit(i).as("stage"))
-      }
-      val counts = scans.reduce(_ union _).groupBy("stage").count().collect()
-        .map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val funnel = funnelStages.zipWithIndex.map { case ((k, _), i) => k -> counts.getOrElse(i, 0L) }
+      val counts = graft.Tables.rowCounts(ctx.spark, funnelStages.map(_._2.readableDir(ctx)))
+      val funnel = funnelStages.map(_._1).zip(counts)
       last = Some(funnel)
       println(funnel.map { case (k, v) => s"$k=$v" }.mkString("curation funnel: ", ", ", ""))
     }

@@ -29,12 +29,15 @@ class CurateDagSpec extends SparkSpec {
     assert(first == allStages, first.toString)
     val counts = stageCounts
     assert(firstReport.contains(counts), firstReport.toString)
-    // memoization: everything but the always-rerun report skips
+    // memoization: everything but the always-rerun report skips, and the
+    // report reads its counts from the stage outputs' footers
     CurateDag.CurationReport.last = None
-    assert(CurateDag.run(ctx) == Seq("CurationReport"))
+    val (warm, warmJobs) = jobsOf(CurateDag.run(ctx))
+    assert(warm == Seq("CurationReport"))
+    assert(warmJobs == 0, s"a memo-warm rerun started $warmJobs Spark jobs")
     assert(CurateDag.CurationReport.last.contains(counts), CurateDag.CurationReport.last.toString)
 
-    // the report's scans keep the S4 read gate: an incomplete stage
+    // the report's counts keep the S4 read gate: an incomplete stage
     // output fails the report, naming the stage
     val mixDir = CurateDag.Mixture.outputDir(ctx).get
     val flag = new org.apache.hadoop.fs.Path(mixDir, "_SUCCESS")

@@ -74,7 +74,7 @@ class DedupSpec extends SparkSpec {
     val out = Dedup.embeddingNearDup(spark, d).collect()
     assert(out.forall(r => r.getDouble(2) >= 0.4 && r.getDouble(2) <= 1.0))
     // LSH-blocked pairs ⊆ exact all-pairs, with identical cosines
-    val exact = Dedup.embeddingNearDupExact(spark, d).collect()
+    val exact = ReferenceTwins.embeddingNearDupExact(spark, d).collect()
       .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
     out.foreach { r =>
       val k = (r.getLong(0), r.getLong(1))
@@ -439,6 +439,13 @@ class DedupSpec extends SparkSpec {
     assert(SaltedIndex.builds("ivf") == fitsBefore, "KMeans re-fit on a warm index")
     // salting: different nlist relocates the index
     assert(IvfIndex.dir(spark, d, 16) != IvfIndex.dir(spark, d, 32))
+    // the q115/q172/q336 index key: scaledNlist's footer count is the
+    // scan's count and starts no Spark job, so nlist (and the salted
+    // dir `dir(spark, d, nlist)` it keys) is the one the scan gave
+    val n = Tables.embeddings(spark, d).count()
+    val (nlist, jobs) = jobsOf(IvfIndex.scaledNlist(spark, d))
+    assert(jobs == 0, s"scaledNlist started $jobs Spark jobs")
+    assert(nlist == math.max(16, ((n + 124) / 125).toInt) && nlist == 16)
   }
 
   test("token stats agree with the documents table's own n_chars") {
@@ -542,7 +549,7 @@ class DedupSpec extends SparkSpec {
     }.sortBy(_._1)
     assert(got.toSeq == expect)
     // soundness: every dropped doc has a genuine all-pairs cosine dup
-    val exactPairs = Dedup.embeddingNearDupExact(spark, d).collect()
+    val exactPairs = ReferenceTwins.embeddingNearDupExact(spark, d).collect()
       .filter(_.getDouble(2) >= 0.4)
       .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     got.foreach { case (v, _, p, _) =>

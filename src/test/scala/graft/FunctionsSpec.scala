@@ -14,7 +14,7 @@ class FunctionsSpec extends SparkSpec {
   test("native polyhash equals the HOF formulation on the corpus") {
     val d = "/root/testdata/sf0.001"
     val bad = Tables.documents(spark, d)
-      .select(TextOps.polyHash(col("text")).as("a"), TextOps.polyHashHof(col("text")).as("b"))
+      .select(TextOps.polyHash(col("text")).as("a"), ReferenceTwins.polyHashHof(col("text")).as("b"))
       .filter(col("a") =!= col("b")).count()
     assert(bad == 0)
   }
@@ -41,16 +41,16 @@ class FunctionsSpec extends SparkSpec {
     // dot product on embeddings
     val e = Tables.embeddings(spark, d)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
-    assert(e.select(dot(col("v"), col("v")).as("a"), Similarity.dotHof(col("v"), col("v")).as("b"))
+    assert(e.select(dot(col("v"), col("v")).as("a"), ReferenceTwins.dotHof(col("v"), col("v")).as("b"))
       .filter(col("a") =!= col("b")).count() == 0)
     // shingle hash sets + minhashes on documents
     val t = TextOps.toks(col("text"))
     val both = Tables.documents(spark, d).select(
       TextOps.shingleHashSet(col("text"), 3).as("na"),
-      TextOps.shingleHashSetHof(col("text"), 3).as("ha"))
+      ReferenceTwins.shingleHashSetHof(col("text"), 3).as("ha"))
     assert(both.filter(col("na") =!= col("ha")).count() == 0)
     assert(both.select(TextOps.minhashes(col("na"), 16).as("nm"),
-        TextOps.minhashesHof(col("ha"), 16).as("hm"))
+        ReferenceTwins.minhashesHof(col("ha"), 16).as("hm"))
       .filter(col("nm") =!= col("hm")).count() == 0)
     // simhash bit-vote vs independent scala computation
     val th = transform(t, x => TextOps.polyHash(x))
@@ -100,7 +100,7 @@ class FunctionsSpec extends SparkSpec {
     def vals(c: org.apache.spark.sql.Column): Seq[Any] =
       df.select(c.as("s")).collect().toSeq
         .map(r => if (r.isNullAt(0)) null else r.getDouble(0))
-    val hof = vals(Similarity.dotHof(col("a"), col("b")))
+    val hof = vals(ReferenceTwins.dotHof(col("a"), col("b")))
     val native = vals(Similarity.dot(col("a"), col("b")))
     assert(native == hof)
     assert(hof(0) == 11.0)

@@ -110,6 +110,10 @@ class NewOpsRound7dSpec extends SparkSpec {
     import spark.implicits._
     (1L to 20001L).toDF("vec_id").write.parquet(s"$tmp/embeddings.parquet")
     assert(IvfIndex.scaledNlist(spark, tmp) == 161) // ceil(20001/125)
+    // the same rows in several part files
+    (1L to 20001L).toDF("vec_id").repartition(3).write.mode("overwrite")
+      .parquet(s"$tmp/embeddings.parquet")
+    assert(IvfIndex.scaledNlist(spark, tmp) == 161)
   }
 
   test("q206 A/B SRM ≡ local hash assignment") {

@@ -76,7 +76,7 @@ class PlanSpec extends SparkSpec {
     val e = planOf(Dedup.embeddingNearDup(spark, d))
     assert(!e.contains("BroadcastNestedLoopJoin") && !e.contains("CartesianProduct"), e)
     // the exact spec-side twin is the one allowed to nested-loop
-    assert(planOf(Dedup.embeddingNearDupExact(spark, d)).contains("BroadcastNestedLoopJoin"))
+    assert(planOf(ReferenceTwins.embeddingNearDupExact(spark, d)).contains("BroadcastNestedLoopJoin"))
   }
 
   test("q44/q45: temporal joins plan with no nested-loop/cartesian join") {

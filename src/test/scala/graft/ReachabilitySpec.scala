@@ -50,13 +50,11 @@ class ReachabilitySpec extends AnyFunSuite {
 }
 
 object ReachabilitySpec {
-  /** Kept on purpose though no code line names them: the HOF reference
-    * twins FunctionsSpec compares the native kernels against, the exact
-    * all-pairs baseline DedupSpec measures q25's recall against, the
-    * star rounds specs run at sizes where `clusterLabels` takes the
-    * driver path, and the build counter the warm-no-rebuild specs read. */
-  val AllowedDefs: Set[String] = Set("dotHof", "shingleHashSetHof", "minhashesHof",
-    "embeddingNearDupExact", "starLabels", "builds")
+  /** Kept on purpose though no code line names them: the star rounds
+    * specs run at sizes where `clusterLabels` takes the driver path, and
+    * the build counter the warm-no-rebuild specs read. (The reference
+    * twins specs compare against live in `src/test`, `ReferenceTwins`.) */
+  val AllowedDefs: Set[String] = Set("starLabels", "builds")
   /** The entry points `sbt runMain` starts by name. */
   val AllowedTypes: Set[String] = Set("Bench", "Verify", "Main", "Explain")
 

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.{BeforeAndAfterAll, Outcome}
@@ -12,6 +14,32 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def withFixture(test: NoArgTest): Outcome =
     CacheScope.scope(super.withFixture(test))
+
+  /** `body`'s result and the Spark jobs it starts, counted by job group:
+    * a marker job in a second group runs after it, and the listener bus
+    * delivers in order, so once the marker is seen every job of `body`
+    * has been. */
+  def jobsOf[T](body: => T): (T, Int) = {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    val (group, marker) = (s"under-test-${System.nanoTime()}", s"marker-${System.nanoTime()}")
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "body under test")
+      val result = try body finally sc.clearJobGroup()
+      sc.setJobGroup(marker, "listener drain marker")
+      try spark.range(1).collect() finally sc.clearJobGroup()
+      eventually(timeout(30.seconds)) { assert(groups.contains(marker)) }
+      (result, groups.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
 
   /** Runs `body` with Spark's file committer writing no `_SUCCESS` (as on
     * many object-store committers), first checking that a plain parquet

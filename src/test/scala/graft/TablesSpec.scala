@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{BinaryType, StringType}
 import graft.pipeline.{Ctx, Memo, PbConf, Runner, Stage}
 
@@ -13,32 +12,6 @@ class TablesSpec extends SparkSpec {
   import spark.implicits._
 
   private def tmp(): String = Files.createTempDirectory("tables").toString
-
-  /** `body`'s result and the Spark jobs it starts, counted by job group:
-    * a marker job in a second group runs after it, and the listener bus
-    * delivers in order, so once the marker is seen every job of `body`
-    * has been. */
-  private def jobsOf[T](body: => T): (T, Int) = {
-    import org.scalatest.concurrent.Eventually._
-    import org.scalatest.time.SpanSugar._
-    val sc = spark.sparkContext
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(groups.add)
-    }
-    val (group, marker) = (s"tables-${System.nanoTime()}", s"marker-${System.nanoTime()}")
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "read under test")
-      val result = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "listener drain marker")
-      try spark.range(1).collect() finally sc.clearJobGroup()
-      eventually(timeout(30.seconds)) { assert(groups.contains(marker)) }
-      (result, groups.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
-  }
 
   test("a repeat read of an unchanged path starts no Spark job before its action") {
     val d = tmp()
@@ -126,6 +99,52 @@ class TablesSpec extends SparkSpec {
       hc.unset("fs.throwfs.impl")
       hc.unset("fs.throwfs.impl.disable.cache")
     }
+  }
+
+  /** The parquet part files of a dir Spark wrote. */
+  private def parts(dir: String): Seq[Path] =
+    Files.list(Path.of(dir)).iterator.asScala
+      .filter(f => f.getFileName.toString.startsWith("part-")).toSeq
+
+  private def scanCount(p: String): Long = spark.read.parquet(p).count()
+
+  test("rowCounts reads a scan's count from the footers and starts no Spark job") {
+    val d = tmp()
+    spark.range(100).repartition(5).write.parquet(s"$d/multi")
+    assert(parts(s"$d/multi").size == 5)
+    spark.range(400).repartition(40).write.parquet(s"$d/wide")
+    assert(parts(s"$d/wide").size == 40)
+    Seq.empty[(Long, String)].toDF("id", "s").write.parquet(s"$d/empty")
+    spark.range(50).selectExpr("id", "id % 3 AS k").write.partitionBy("k").parquet(s"$d/byk")
+    spark.range(7).coalesce(1).write.parquet(s"$d/one")
+    val single = parts(s"$d/one").head.toString
+    // planted beside the data: copies of a real part file under the
+    // names Spark never reads as data (the committer's _SUCCESS is there)
+    spark.range(10).coalesce(1).write.parquet(s"$d/planted")
+    val part = parts(s"$d/planted").head
+    assert(Files.exists(Path.of(s"$d/planted/_SUCCESS")))
+    Seq("_metadata", "_common_metadata", s".${part.getFileName}.crc.parquet",
+        s"_temporary/0/${part.getFileName}", s"${part.getFileName}._COPYING_")
+      .foreach { n =>
+        val to = Path.of(s"$d/planted/$n")
+        Files.createDirectories(to.getParent)
+        Files.copy(part, to)
+      }
+    val paths = Seq(s"$d/multi", s"$d/wide", s"$d/empty", s"$d/byk", single, s"$d/planted")
+    val (counts, jobs) = jobsOf(Tables.rowCounts(spark, paths))
+    assert(jobs == 0, s"$jobs Spark jobs")
+    assert(counts == paths.map(scanCount))
+    assert(counts == Seq(100L, 400L, 0L, 50L, 7L, 10L))
+  }
+
+  test("rowCounts fails on a truncated parquet file, naming it") {
+    val d = tmp()
+    spark.range(1000).repartition(2).write.parquet(s"$d/t")
+    val bad = parts(s"$d/t").head
+    val bytes = Files.readAllBytes(bad)
+    Files.write(bad, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    val e = intercept[java.io.IOException](Tables.rowCounts(spark, Seq(s"$d/t")))
+    assert(e.getMessage.contains(bad.getFileName.toString), e.getMessage)
   }
 
   test("every parquet read in src/main goes through Tables.parquet or declares its schema") {
