@@ -27,6 +27,11 @@ import org.apache.spark.sql.functions._
   * Every intermediate is gzip parquet (`Stage.writeGz`) + the `_SUCCESS`
   * flag `Runner` writes in a salted dir, exactly the reference's storage
   * contract (pb_etl/tasks.py:183,203,232,392,425; target.py:15-19).
+  * Within one `Runner` walk, NormDenominators hands its five maxima and
+  * FitModel its fitted `PipelineModel` forward (`Runner.handOff`), so
+  * FitModel and Predict take them in memory; any other reader — a
+  * memo-warm walk, a fresh JVM — reads the committed dir, behind the
+  * same S4 gate either way.
   */
 object PbEtl {
   import Schemas._
@@ -81,11 +86,15 @@ object PbEtl {
       val pairs = attrNorm.zipWithIndex.map { case (c, i) =>
         (c, if (row.isNullAt(i)) Double.NaN else row.getDouble(i))
       }
-      writeGz(pairs.toDF("feature", "max_val"), outputDir(ctx).get, coalesce1 = true)
+      val dir = outputDir(ctx).get
+      writeGz(pairs.toDF("feature", "max_val"), dir, coalesce1 = true)
+      Runner.handOff(dir, pairs.toMap)
     }
 
-    def maxMap(ctx: Ctx): Map[String, Double] =
-      read(ctx).collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    def maxMap(ctx: Ctx): Map[String, Double] = handedOff(ctx) { dir =>
+      graft.Tables.parquet(ctx.spark, dir).collect()
+        .map(r => r.getString(0) -> r.getDouble(1)).toMap
+    }
   }
 
   /** P3 `the_norm` (pb_etl/tasks.py:235-244): divide each listed column
@@ -179,44 +188,56 @@ object PbEtl {
         .setMaxIter(conf.epochs).setSeed(conf.seed)
       val mlpModel = mlp.fit(trainF)
       // M7: per-iteration objective (the reference dumps Keras epoch
-      // loss, pb_etl/tasks.py:334-342) ...
+      // loss, pb_etl/tasks.py:334-342)
       val losses = scala.util.Try(mlpModel.summary.objectiveHistory.toSeq)
         .getOrElse(Seq.empty)
-      // ... and a real validation metric on the 20% split the
-      // reference computes-then-discards: AUC is undefined on a
-      // single-class or empty holdout (the 3-row spec fixture), so null
-      // is recorded there rather than a fake number
-      // scored holdout feeds two actions (count/classes agg + AUC):
-      // cache so feature transform + scoring run once, not twice
-      val scoredVal = graft.CacheScope.cached(mlpModel.transform(prep.transform(valid)))
-      val valAgg = scoredVal.agg(count(lit(1)), countDistinct(col("TARGET"))).head()
-      val (valN, valClasses) = (valAgg.getLong(0), valAgg.getLong(1))
-      val valAuc: Option[Double] =
-        if (valClasses == 2) scala.util.Try {
-          new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
-            .setLabelCol("TARGET").setRawPredictionCol("rawPrediction")
-            .setMetricName("areaUnderROC")
-            .evaluate(scoredVal)
-        }.toOption else None
       val model = new Pipeline()
         .setStages((prep.stages :+ mlpModel).map(_.asInstanceOf[PipelineStage]))
         .fit(train) // all stages are Transformers: copy-through, no refit
 
+      // the save runs on its own thread while this one scores the
+      // holdout; it is awaited before run returns or rethrows, so a
+      // failed save fails the stage and the flag lands after the model
       val dir = outputDir(ctx).get
-      model.write.overwrite().save(s"$dir/model")
-      // K4: training-history JSON; salted dir makes re-runs clean
-      // (the reference's makedirs crash, SURVEY.md §7.4.7, has no analog)
-      val hist =
-        s"""{"layers":[${(d +: conf.hidden :+ 2).mkString(",")}],""" +
-          s""""maxIter":${conf.epochs},"seed":${conf.seed},""" +
-          s""""loss":[${losses.mkString(",")}],""" +
-          s""""val_n":$valN,"val_auc":${valAuc.map(_.toString).getOrElse("null")}}"""
-      val out = ctx.fs(dir).create(new org.apache.hadoop.fs.Path(dir, "history.json"), true)
-      out.write(hist.getBytes("UTF-8")); out.close()
+      val save = new java.util.concurrent.FutureTask[Unit](
+        () => model.write.overwrite().session(ctx.spark).save(s"$dir/model"))
+      new Thread(save, s"$name-save").start()
+      try {
+        // M7, continued: a real validation metric on the 20% split the
+        // reference computes-then-discards. AUC is undefined on a
+        // single-class or empty holdout (the 3-row spec fixture), so
+        // null is recorded there rather than a fake number. Labels are
+        // {0,1} (the 2-unit head requires it), so min < max is the
+        // two-class test. The scored holdout feeds two actions (the
+        // agg and AUC): cache so transform + scoring run once
+        val scoredVal = graft.CacheScope.cached(mlpModel.transform(prep.transform(valid)))
+        val valAgg = scoredVal.agg(count(lit(1)), min(col("TARGET")), max(col("TARGET"))).head()
+        val valN = valAgg.getLong(0)
+        val valAuc: Option[Double] =
+          if (!valAgg.isNullAt(1) && valAgg.getDouble(1) < valAgg.getDouble(2)) scala.util.Try {
+            new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
+              .setLabelCol("TARGET").setRawPredictionCol("rawPrediction")
+              .setMetricName("areaUnderROC")
+              .evaluate(scoredVal)
+          }.toOption else None
+        // K4: training-history JSON; salted dir makes re-runs clean
+        // (the reference's makedirs crash, SURVEY.md §7.4.7, has no analog)
+        val hist =
+          s"""{"layers":[${(d +: conf.hidden :+ 2).mkString(",")}],""" +
+            s""""maxIter":${conf.epochs},"seed":${conf.seed},""" +
+            s""""loss":[${losses.mkString(",")}],""" +
+            s""""val_n":$valN,"val_auc":${valAuc.map(_.toString).getOrElse("null")}}"""
+        val out = ctx.fs(dir).create(new org.apache.hadoop.fs.Path(dir, "history.json"), true)
+        out.write(hist.getBytes("UTF-8")); out.close()
+      } finally {
+        try save.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+      Runner.handOff(dir, model)
     }
 
     def load(ctx: Ctx): PipelineModel =
-      PipelineModel.load(s"${outputDir(ctx).get}/model")
+      handedOff(ctx)(dir => PipelineModel.load(s"$dir/model"))
   }
 
   /** M6/P4: score the forecast set; Y_hat = P(class=1)

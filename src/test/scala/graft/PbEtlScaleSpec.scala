@@ -2,6 +2,9 @@ package graft
 
 import graft.pipeline._
 import java.nio.file.Files
+import org.apache.spark.ml.PipelineModel
+import org.apache.spark.ml.functions.vector_to_array
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The pb-etl DAG on a 20k-row deterministic synthetic dataset — the
@@ -78,6 +81,41 @@ class PbEtlScaleSpec extends SparkSpec {
     assert(p.count() == nTest)
     val r = p.agg(min("Y_hat"), max("Y_hat")).head()
     assert(r.getDouble(0) >= 0.0 && r.getDouble(1) <= 1.0)
+  }
+
+  /** Predict's input rebuilt from the committed dirs: the normalized
+    * forecast set with the `<cat>_str` columns the feature stages read. */
+  private def forecastFeatures: DataFrame = {
+    val df = PbEtl.theNorm(PbEtl.LoadTest.read(ctx), PbEtl.NormDenominators.maxMap(ctx))
+    Schemas.catCol.foldLeft(df)((d, c) => d.withColumn(s"${c}_str", col(c).cast("string")))
+      .na.fill(0.0, Schemas.numCol)
+  }
+
+  private def yHat(df: DataFrame): Map[Long, Double] =
+    df.select("TRANSACTION_ID", "Y_hat").collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  test("the model handed off in the cold walk scores exactly as the committed model reloaded") {
+    val cold = yHat(PbEtl.Predict.read(ctx))
+    val reloaded = PipelineModel.load(s"${PbEtl.FitModel.readableDir(ctx)}/model")
+      .transform(forecastFeatures)
+      .select(col("TRANSACTION_ID"), vector_to_array(col("probability")).getItem(1).as("Y_hat"))
+    assert(cold.size == nTest)
+    assert(yHat(reloaded) == cold)
+    // a later walk with FitModel complete and Predict gone has no handoff:
+    // it loads the model from disk and must write the same Y_hat
+    val dir = PbEtl.Predict.outputDir(ctx).get
+    assert(ctx.fs(dir).delete(new org.apache.hadoop.fs.Path(dir), true))
+    assert(PbEtl.runAll(ctx) == Seq("Predict", "FinalResults"))
+    assert(yHat(PbEtl.Predict.read(ctx)) == cold)
+  }
+
+  test("history.json records a two-class holdout: val_n > 0, val_auc in [0,1]") {
+    val hist = Files.readString(
+      java.nio.file.Paths.get(PbEtl.FitModel.readableDir(ctx)).resolve("history.json"))
+    val valN = "\"val_n\":(\\d+)".r.findFirstMatchIn(hist).map(_.group(1).toLong)
+    val valAuc = "\"val_auc\":([^,}]+)".r.findFirstMatchIn(hist).map(_.group(1))
+    assert(valN.exists(_ > 0), hist)
+    assert(valAuc.flatMap(_.toDoubleOption).exists(a => a >= 0.0 && a <= 1.0), hist)
   }
 
   test("backtest rates are sane: actual == generator rate, forecast in (0,1)") {
