@@ -213,11 +213,15 @@ object PbEtl {
         val scoredVal = graft.CacheScope.cached(mlpModel.transform(prep.transform(valid)))
         val valAgg = scoredVal.agg(count(lit(1)), min(col("TARGET")), max(col("TARGET"))).head()
         val valN = valAgg.getLong(0)
+        // numBins 0: the exact curve. The default 1000 bins group scores
+        // within range partitions whose sampled bounds are seeded by the
+        // RDD id, so the AUC moved in its 5th digit with how many RDDs
+        // the JVM had made, the concurrent save's included
         val valAuc: Option[Double] =
           if (!valAgg.isNullAt(1) && valAgg.getDouble(1) < valAgg.getDouble(2)) scala.util.Try {
             new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
               .setLabelCol("TARGET").setRawPredictionCol("rawPrediction")
-              .setMetricName("areaUnderROC")
+              .setMetricName("areaUnderROC").setNumBins(0)
               .evaluate(scoredVal)
           }.toOption else None
         // K4: training-history JSON; salted dir makes re-runs clean
