@@ -215,8 +215,8 @@ object PbEtl {
         val valN = valAgg.getLong(0)
         // numBins 0: the exact curve. The default 1000 bins group scores
         // within range partitions whose sampled bounds are seeded by the
-        // RDD id, so the AUC moved in its 5th digit with how many RDDs
-        // the JVM had made, the concurrent save's included
+        // RDD id, so a binned AUC moves in its 5th digit with how many
+        // RDDs the JVM has made, the concurrent save's included
         val valAuc: Option[Double] =
           if (!valAgg.isNullAt(1) && valAgg.getDouble(1) < valAgg.getDouble(2)) scala.util.Try {
             new org.apache.spark.ml.evaluation.BinaryClassificationEvaluator()
