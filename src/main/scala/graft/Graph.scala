@@ -607,117 +607,63 @@ object Graph {
     * rounds (empty peel) are skipped — byte-identical output, the
     * oracle replays the no-op rounds and agrees.
     *
-    * INCREMENTAL SUPPORT MAINTENANCE with a DELTA-VS-REBUILD switch
-    * (rounds 13a/13b; the r12 verdict's one `weak`). Round 1 counts
-    * support in ONE fused lazy plan (enumerate → explode-to-edges →
-    * hash-agg) and materializes NO triangle relation: measured at
-    * sf0.1, the first peel destroys 97.8% of the 1.88M triangles, so
-    * persisting them — then walking the dead through the decrement
-    * chain — was the r13a plan's dominant waste (19.8 s total). Each
-    * later round picks the cheaper maintenance arm by comparing the
-    * materialized peel/survivor counts it already has:
-    *  - REBUILD (peeled ≥ survivors, and always the first non-final
-    *    round): re-enumerate triangles on the survivor subgraph and
-    *    re-count support there — enumeration is monotone in edges, so
-    *    when most of the graph just died this is strictly less work
-    *    than touching the dead triangles one by one.
-    *  - DELTA (peeled < survivors): a triangle dies exactly when its
-    *    first edge peels, so surviving support drops by the count of
-    *    newly-dead triangles containing the edge — (alive ⨝ peeled) →
-    *    dead triples, (dead explode → per-edge count) → decrements,
-    *    (survivors ⟕ decrements) → next support, plus one anti-join
-    *    retiring dead triples: O(|alive| + |peeled|), never a
-    *    re-enumeration (the r12-measured 6.3×-at-30× spill wall).
-    * Both arms maintain the same invariant s_r(e) = |{alive triangles
-    * ∋ e}| — the support of e in the surviving subgraph — so the
-    * rounds-exhausted exit needs no re-pricing pass (the oracle's
-    * final support block recomputes it from scratch and must agree). */
+    * ONE SUPPORT ROUTINE. Support is first counted on the whole graph;
+    * each round peels the edges under k−2 and recounts support on the
+    * survivor subgraph with the same routine: orient, enumerate,
+    * explode-to-edges and hash-agg in ONE fused lazy plan, persisted
+    * through its one count, with no triangle relation ever
+    * materialized. The support a round holds is therefore always
+    * s_r(e) = |triangles ∋ e in the surviving subgraph|, so the
+    * rounds-exhausted exit needs no re-pricing pass (the oracle's final
+    * support block recomputes it from scratch and must agree).
+    * Recounting on the survivors, rather than decrementing each
+    * survivor by its newly-dead triangles, is the cheap side on this
+    * corpus: the first peel destroys 97.8% of sf0.1's 1.88M triangles,
+    * and from sf0.001 to sf0.1 every round after the first peels at
+    * least as many edges as survive it. */
   def kTruss(spark: SparkSession, d: String): DataFrame =
     kTrussOf(spark, coPurchaseEdges(spark, d))
 
-  /** Spec observability: rounds that took each maintenance arm in the
-    * most recent [[kTrussOf]] run on this JVM (the delta arm never
-    * fires on the test corpus — sf0.001 converges at round 1 and
-    * sf0.01/sf0.1 rebuild every round — so the planted-graph spec
-    * forces and asserts it through these). */
-  @volatile var ktRebuildRounds: Int = 0
-  @volatile var ktDeltaRounds: Int = 0
-
   /** [[kTruss]] over an injected canonical (p1 < p2, distinct) edge
     * relation — the operator body, parameterized for the planted-graph
-    * delta-arm spec. */
-  private[graft] def kTrussOf(spark: SparkSession, edges0In: DataFrame): DataFrame = {
+    * spec. */
+  private[graft] def kTrussOf(spark: SparkSession, edges0: DataFrame): DataFrame = {
     val thr = (KTrussK - 2).toLong
-    ktRebuildRounds = 0
-    ktDeltaRounds = 0
     import CacheScope.truncate
-    // triangle triple → its three canonical (p1 < p2) edges `e`; corner
-    // ids are arbitrary order under (deg,id) orientation, so each
-    // edge is re-sorted — the triple itself stays the identity key
-    def triEdges: Column = explode(array(
-        struct(least(col("a"), col("b")).as("p1"), greatest(col("a"), col("b")).as("p2")),
-        struct(least(col("b"), col("c")).as("p1"), greatest(col("b"), col("c")).as("p2")),
-        struct(least(col("a"), col("c")).as("p1"), greatest(col("a"), col("c")).as("p2"))))
-      .as("e")
-    def incidence(t: DataFrame): DataFrame =
-      t.select(col("a"), col("b"), col("c"), triEdges)
-        .select(col("a"), col("b"), col("c"), col("e.p1"), col("e.p2"))
-    def degreesOf(edges: DataFrame): DataFrame =
-      edges.select(col("p1").as("node"))
+    // per-edge support of `edges` within the subgraph they span, fused:
+    // (deg,id) orientation → adjacency-intersect enumeration →
+    // explode-to-edges → hash-agg → one left join, ONE lazy plan. The
+    // count fills the persisted support (persist-through); the
+    // orientation then feeds nothing more. Corner ids come in (deg,id)
+    // order, so each triangle edge is re-sorted to canonical p1 < p2.
+    // `edges` is either the parquet read of the salted edge stage (a
+    // leaf scan already) or a filter over the cached previous support.
+    def support(edges: DataFrame): DataFrame = {
+      val deg = edges.select(col("p1").as("node"))
         .unionAll(edges.select(col("p2").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("dg"))
-    // per-edge support of `edges` from a triangle relation, fused:
-    // explode-to-edges + hash-agg + one left join, all ONE lazy plan
-    def supportOf(edges: DataFrame, tris: DataFrame): DataFrame =
-      edges.join(
-        tris.select(triEdges)
-          .groupBy(col("e.p1").as("p1"), col("e.p2").as("p2"))
-          .agg(count(lit(1)).as("s0")),
-        Seq("p1", "p2"), "left")
-      .select(col("p1"), col("p2"), coalesce(col("s0"), lit(0L)).as("s"))
+      val oriented = CacheScope.cached(orient(edges, deg))
+      def edge(x: String, y: String): Column =
+        struct(least(col(x), col(y)).as("p1"), greatest(col(x), col(y)).as("p2"))
+      val perEdge = orientedTriangles(oriented)
+        .select(explode(array(edge("a", "b"), edge("b", "c"), edge("a", "c"))).as("e"))
+        .groupBy(col("e.p1").as("p1"), col("e.p2").as("p2"))
+        .agg(count(lit(1)).as("s0"))
+      val supP = CacheScope.cached(edges.join(perEdge, Seq("p1", "p2"), "left")
+        .select(col("p1"), col("p2"), coalesce(col("s0"), lit(0L)).as("s")))
+      supP.count()
+      oriented.unpersist()
+      supP
+    }
 
-    // the edge relation is a parquet read of the persisted salted
-    // stage — its "lineage" is already a leaf scan, so no persist or
-    // truncation (r13: the persist+count+df.rdd round-trip cost ~2.7 s
-    // at sf0.1 and bought nothing)
-    val edges0 = edges0In
-
-    // ---- round 1: FUSED support count, NO triangle materialization
-    // (r13 optimization). The full graph's triangle set is mostly
-    // destroyed by the first peel (measured at sf0.1: 97.8% of 1.88M
-    // triangles die in round 1), so persisting it — and then paying the
-    // dead-triple/decrement/anti-join chain over the 98% — was the old
-    // plan's dominant waste. Support is instead counted in ONE lazy
-    // plan (adjacency-intersect enumeration → explode-to-edges →
-    // hash-agg, partial aggregation map-side), and the triangle
-    // relation the incremental rounds need is built LATER, on whatever
-    // subgraph survives the peel (the rebuild arm below). ----
-    val oriented0 = CacheScope.cached(orient(edges0, degreesOf(edges0)))
-    var supP = CacheScope.cached(supportOf(edges0, orientedTriangles(oriented0)))
-    // |edges| rides the round-1 materialization: later rounds derive
-    // the survivor count arithmetically (total − peeled) instead of
-    // paying a separate count job per round (r14 — the old loop ran
-    // FIVE actions per round: isEmpty + peeled count + survivor count
-    // + rebuild enumerate + rebuild support; now TWO: peel count +
-    // fused rebuild, each later round's fixed driver-barrier cost
-    // roughly halves at sf0.1 where survivor graphs are tiny).
-    var total = supP.count()
-    oriented0.unpersist() // the count filled supP: it feeds nothing more
+    var supP = support(edges0)
     var sup = truncate(supP)
-
-    // survivor triangle relation, materialized lazily by the first
-    // rebuild arm (null until then)
-    var aliveP: DataFrame = null
-    var alive: DataFrame = null
-
     // PEEL rows are persisted per round (they feed the result plan);
     // peels are DISJOINT — an edge peels once — so all rounds' peel
-    // caches together hold ≤ |edges| rows, where the r13 keep-list
-    // held every round's EDGE-SIZED support relation alive until
-    // return (the r13 verdict's §5 memory wall at scale). Only the
-    // CURRENT support stays persisted: once the next round's support
-    // is materialized, its predecessor feeds nothing (peel rows have
-    // their own cache) and unpersists immediately.
+    // caches together hold ≤ |edges| rows. Only the CURRENT support
+    // stays persisted: once the next round's support is materialized,
+    // its predecessor feeds nothing (peel rows have their own cache)
+    // and unpersists immediately.
     var peels = Vector.empty[DataFrame]
     var r = 1
     var converged = false
@@ -725,81 +671,24 @@ object Graph {
       val peelP = CacheScope.cached(sup.filter(col("s") < thr)
         .select(col("p1"), col("p2"), lit(r.toLong).as("peel_round"),
           col("s").as("support")))
-      // convergence = the SAME count job that materializes the peel
-      // rows (the old separate isEmpty action is gone)
-      val nPeeled = peelP.count()
-      converged = nPeeled == 0
+      // convergence = the SAME count job that materializes the peel rows
+      converged = peelP.count() == 0
       if (converged) peelP.unpersist()
       else {
         peels :+= peelP
-        val nSurv = total - nPeeled
         // survivor edges re-filter the CACHED support — an in-memory
         // scan per reference, no persist of its own needed
-        val surv = sup.filter(col("s") >= thr).select(col("p1"), col("p2"))
-        // DELTA-VS-REBUILD switch (incremental-view-maintenance
-        // economics): both arms maintain the same invariant
-        // s_r(e) = |alive triangles ∋ e|. The delta arm is O(|alive| +
-        // |touched triangles|) — right when the peel is small; the
-        // rebuild arm re-enumerates triangles on the SURVIVOR subgraph
-        // — right when the peel removed most of the graph (the
-        // enumeration is monotone in edges, so rebuilding on the
-        // smaller side is strictly less work than walking the dead).
-        // Round 1 always rebuilds (no triangle relation exists yet).
-        if (alive == null || nPeeled >= nSurv) {
-          ktRebuildRounds += 1
-          // persist-THROUGH (r14): the support count is the one action
-          // of the arm — it computes through nextAliveP's persist and
-          // fills the triangle cache as a side effect, so the old
-          // separate enumerate count() barrier is gone
-          val oriented = CacheScope.cached(orient(surv, degreesOf(surv)))
-          val nextAliveP = CacheScope.cached(orientedTriangles(oriented))
-          val nextSupP = CacheScope.cached(supportOf(surv, nextAliveP))
-          nextSupP.count()
-          oriented.unpersist()
-          if (aliveP != null) aliveP.unpersist()
-          aliveP = nextAliveP
-          alive = truncate(nextAliveP)
-          supP.unpersist()
-          supP = nextSupP
-          sup = truncate(nextSupP)
-        } else {
-          ktDeltaRounds += 1
-          val peeled = peelP.select(col("p1"), col("p2"))
-          // a triangle dies with its first peeled edge; DISTINCT triples
-          // so a triangle losing 2+ edges this round still decrements
-          // its surviving edge exactly once
-          val deadP = CacheScope.cached(incidence(alive).join(peeled, Seq("p1", "p2"))
-            .select(col("a"), col("b"), col("c")).distinct())
-          deadP.count()
-          val dead = truncate(deadP)
-          val dec = incidence(dead).groupBy(col("p1"), col("p2"))
-            .agg(count(lit(1)).as("dcnt"))
-          val nextSupP = CacheScope.cached(sup.filter(col("s") >= thr)
-            .join(dec, Seq("p1", "p2"), "left")
-            .select(col("p1"), col("p2"),
-              (col("s") - coalesce(col("dcnt"), lit(0L))).as("s")))
-          nextSupP.count()
-          val nextAliveP = CacheScope.cached(
-            alive.join(dead, Seq("a", "b", "c"), "left_anti"))
-          nextAliveP.count()
-          aliveP.unpersist(); deadP.unpersist()
-          aliveP = nextAliveP
-          alive = truncate(nextAliveP)
-          supP.unpersist()
-          supP = nextSupP
-          sup = truncate(nextSupP)
-        }
-        total = nSurv
+        val nextSupP = support(sup.filter(col("s") >= thr).select(col("p1"), col("p2")))
+        supP.unpersist()
+        supP = nextSupP
+        sup = truncate(nextSupP)
       }
       r += 1
     }
     // the peel rows and the final support back the result until the
-    // caller's scope ends
-    if (aliveP != null) aliveP.unpersist()
-    // survivor support: the maintained relation IS the support on the
-    // final surviving graph (invariant above) — no re-pricing pass in
-    // either exit. When converged the filter is the identity (an empty
-    // peel means no row is under threshold).
+    // caller's scope ends. Survivor support is the held support (the
+    // invariant above) in either exit; when converged the filter is the
+    // identity (an empty peel means no row is under threshold).
     val core = (if (converged) sup.filter(col("s") >= thr) else sup)
       .select(col("p1"), col("p2"), lit(0L).as("peel_round"),
         col("s").as("support"))

@@ -149,7 +149,6 @@ object CurateDag {
   object CurationReport extends Stage {
     override def deps: Seq[Stage] = Seq(Pack, ChunkManifest)
     override def outputDir(ctx: Ctx): Option[String] = None
-    override def complete(ctx: Ctx): Boolean = false
     @volatile var last: Option[Seq[(String, Long)]] = None
     override def run(ctx: Ctx): Unit = {
       val counts = graft.Tables.rowCounts(ctx.spark, funnelStages.map(_._2.readableDir(ctx)))

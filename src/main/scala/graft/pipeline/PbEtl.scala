@@ -35,18 +35,14 @@ import org.apache.spark.sql.functions._
   */
 object PbEtl {
   import Schemas._
-  import Stage.writeGz
-
-  private def csv(ctx: Ctx, sub: String, schema: org.apache.spark.sql.types.StructType): DataFrame =
-    ctx.spark.read.schema(schema).option("header", "true")
-      .csv(s"${ctx.conf.dataRoot}/$sub")
+  import Stage.{writeGz, writeText}
 
   // --- external inputs (S1/S2; reference tasks.py:89-149) ---------------
-  object TrnAttr extends CsvSource("train/attr")
-  object TrnTscore extends CsvSource("train/tscore")
-  object TstAttr extends CsvSource("test/attr")
-  object TstTscore extends CsvSource("test/tscore")
-  object BacktestActuals extends CsvSource("results")
+  object TrnAttr extends CsvSource("train/attr", attr)
+  object TrnTscore extends CsvSource("train/tscore", tscore)
+  object TstAttr extends CsvSource("test/attr", attrTest)
+  object TstTscore extends CsvSource("test/tscore", tscore)
+  object BacktestActuals extends CsvSource("results", results)
 
   /** J1: train attributes ⋈ traffic score, left outer on the key
     * (pb_etl/tasks.py:152-183). tscore is 1:1 with attr (same key set,
@@ -55,10 +51,8 @@ object PbEtl {
   object LoadData extends Stage {
     override def deps: Seq[Stage] = Seq(TrnAttr, TrnTscore)
     def run(ctx: Ctx): Unit = {
-      val attrDf = csv(ctx, "train/attr", attr)
-      val tsDf = csv(ctx, "train/tscore", tscore)
-      val joined = attrDf.join(tsDf, Seq("TRANSACTION_ID"), "left_outer")
-      writeGz(joined, outputDir(ctx).get)
+      writeGz(TrnAttr.read(ctx).join(TrnTscore.read(ctx), Seq("TRANSACTION_ID"), "left_outer"),
+        outputDir(ctx).get)
     }
   }
 
@@ -66,9 +60,7 @@ object PbEtl {
   object LoadTest extends Stage {
     override def deps: Seq[Stage] = Seq(TstAttr, TstTscore)
     def run(ctx: Ctx): Unit = {
-      val attrDf = csv(ctx, "test/attr", attrTest)
-      val tsDf = csv(ctx, "test/tscore", tscore)
-      writeGz(attrDf.join(tsDf, Seq("TRANSACTION_ID"), "left_outer"),
+      writeGz(TstAttr.read(ctx).join(TstTscore.read(ctx), Seq("TRANSACTION_ID"), "left_outer"),
         outputDir(ctx).get)
     }
   }
@@ -231,8 +223,7 @@ object PbEtl {
             s""""maxIter":${conf.epochs},"seed":${conf.seed},""" +
             s""""loss":[${losses.mkString(",")}],""" +
             s""""val_n":$valN,"val_auc":${valAuc.map(_.toString).getOrElse("null")}}"""
-        val out = ctx.fs(dir).create(new org.apache.hadoop.fs.Path(dir, "history.json"), true)
-        out.write(hist.getBytes("UTF-8")); out.close()
+        writeText(ctx, dir, "history.json", hist)
       } finally {
         try save.get()
         catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
@@ -269,10 +260,8 @@ object PbEtl {
   object BackTest extends Stage {
     override def deps: Seq[Stage] = Seq(Predict, BacktestActuals)
     def run(ctx: Ctx): Unit = {
-      val actuals = csv(ctx, "results", results)
-      val preds = Predict.read(ctx)
-      writeGz(actuals.join(preds, Seq("TRANSACTION_ID"), "left_outer"),
-        outputDir(ctx).get)
+      writeGz(BacktestActuals.read(ctx)
+        .join(Predict.read(ctx), Seq("TRANSACTION_ID"), "left_outer"), outputDir(ctx).get)
     }
   }
 
@@ -291,11 +280,8 @@ object PbEtl {
       last = Some((n, actual, expected))
       // K5-equivalent result artifact: 1-row JSON (the Django ORM row's
       // (expected, actual) pair, pb_etl_app/management/commands/etl.py:33-39)
-      val fs = ctx.fs(ctx.conf.workRoot)
-      val p = new org.apache.hadoop.fs.Path(ctx.conf.workRoot, "final_results.json")
-      val out = fs.create(p, true)
-      out.write(s"""{"expected":$expected,"actual":$actual,"n":$n}""".getBytes("UTF-8"))
-      out.close()
+      writeText(ctx, ctx.conf.workRoot, "final_results.json",
+        s"""{"expected":$expected,"actual":$actual,"n":$n}""")
       // K5 proper: optional RDBMS sink — the 1-row report appended via
       // Spark's JDBC writer (the reference's ORM insert). coalesce(1):
       // one connection, one insert, no point fanning out a single row.

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.Path
 
 /** Pipeline configuration.
@@ -149,13 +150,22 @@ object Stage {
   def writeGz(df: DataFrame, dir: String, coalesce1: Boolean = false): Unit =
     (if (coalesce1) df.coalesce(1) else df)
       .write.mode(SaveMode.Overwrite).option("compression", "gzip").parquet(dir)
+
+  /** A small result file: `text` as UTF-8 at `<dir>/<file>`, overwriting;
+    * the stream is closed even when the write throws. */
+  def writeText(ctx: Ctx, dir: String, file: String, text: String): Unit = {
+    val out = ctx.fs(dir).create(new Path(dir, file), true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+  }
 }
 
 /** An external raw-CSV input (reference ExternalTask, tasks.py:89-149):
   * no `run`, completeness = any `*.csv` file present under the source dir
-  * (the reference's `flag=None` glob fallback, target.py:104-114).
+  * (the reference's `flag=None` glob fallback, target.py:104-114). `read`
+  * parses its headered CSVs with the declared `schema`, behind the same
+  * completeness gate.
   */
-abstract class CsvSource(val sub: String) extends Stage {
+abstract class CsvSource(val sub: String, schema: StructType) extends Stage {
   override def outputDir(ctx: Ctx): Option[String] =
     Some(s"${ctx.conf.dataRoot}/$sub")
   override def complete(ctx: Ctx): Boolean = {
@@ -166,6 +176,8 @@ abstract class CsvSource(val sub: String) extends Stage {
   }
   override def run(ctx: Ctx): Unit =
     sys.error(s"external input missing: ${outputDir(ctx).get}/*.csv")
+  override def read(ctx: Ctx): DataFrame =
+    ctx.spark.read.schema(schema).option("header", "true").csv(readableDir(ctx))
 }
 
 /** Depth-first topological executor with memo-skip — the Spark-side

@@ -196,14 +196,12 @@ class NewOpsRound9eSpec extends SparkSpec {
   }
 
   // ---- q258 ---------------------------------------------------------
-  test("q258 k-truss ≡ local fixed-round peel") {
-    val li = spark.read.parquet(s"$d/lineitem.parquet")
-      .select("l_orderkey", "l_partkey").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).distinct
-    var edges: Set[(Long, Long)] = li.groupBy(_._1).values.flatMap { g =>
-      val ps = g.map(_._2).distinct.sorted.take(1024)
-      for (i <- ps.indices; j <- (i + 1) until ps.length) yield (ps(i), ps(j))
-    }.toSet
+  /** Local from-scratch replay of q258's fixed-round peel over a
+    * canonical (p1 < p2) edge set: each round recounts every edge's
+    * triangles on the surviving edges, peels those under k−2, and the
+    * survivors keep their support on the final graph. Rows are
+    * (p1, p2, peel_round, support) sorted by (p1, p2), as kTruss emits. */
+  private def localPeel(edges0: Set[(Long, Long)]): Seq[(Long, Long, Long, Long)] = {
     val thr = (Graph.KTrussK - 2).toLong
     def supports(es: Set[(Long, Long)]): Map[(Long, Long), Long] = {
       val adj = scala.collection.mutable.Map
@@ -216,6 +214,7 @@ class NewOpsRound9eSpec extends SparkSpec {
         (a, b) -> (adj(a) & adj(b)).size.toLong
       }.toMap
     }
+    var edges = edges0
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     var r = 1; var converged = false
     var lastSup: Map[(Long, Long), Long] = Map.empty
@@ -231,15 +230,65 @@ class NewOpsRound9eSpec extends SparkSpec {
     }
     val fin = if (converged) lastSup else supports(edges)
     fin.foreach { case ((a, b), s) => out += ((a, b, 0L, s)) }
-    val exp = out.sortBy(t => (t._1, t._2)).toSeq
-    val got = Graph.kTruss(spark, d).collect().toSeq
+    out.sortBy(t => (t._1, t._2)).toSeq
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long, Long)] =
+    df.collect().toSeq
       .map(r2 => (r2.getLong(0), r2.getLong(1), r2.getLong(2), r2.getLong(3)))
+
+  test("q258 k-truss ≡ local fixed-round peel") {
+    val li = spark.read.parquet(s"$d/lineitem.parquet")
+      .select("l_orderkey", "l_partkey").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).distinct
+    val edges: Set[(Long, Long)] = li.groupBy(_._1).values.flatMap { g =>
+      val ps = g.map(_._2).distinct.sorted.take(1024)
+      for (i <- ps.indices; j <- (i + 1) until ps.length) yield (ps(i), ps(j))
+    }.toSet
+    val thr = (Graph.KTrussK - 2).toLong
+    val exp = localPeel(edges)
+    val got = rowsOf(Graph.kTruss(spark, d))
     assert(got == exp)
     // peel certificate: peeled support below threshold, a real cascade
     // (some edge peels AFTER round 1 — triangles it relied on died)
     assert(got.forall { case (_, _, pr, s) => pr == 0L || s < thr })
     assert(got.exists(_._3 >= 2L), "peel must cascade past round 1")
     assert(got.exists(_._3 == 0L), "a nonempty truss must survive")
+  }
+
+  test("q258 planted graph: later rounds peel few edges; output ≡ local replay") {
+    // K14 clique (support 12 per edge — a stable truss core that keeps
+    // the survivor count high) + a fragile gadget: a 12-clique
+    // {a, b, c1..c10} with edge (b, c1) REMOVED. Gadget supports start
+    // at 9-10 (< thr = 10 for a few edges), so round 1 peels a cascade
+    // seed while the K14 survives; later rounds peel the gadget
+    // remnant a few edges at a time — rounds where far fewer edges
+    // peel than survive, which the corpus graphs never produce (there
+    // every round after the first peels at least as many as survive).
+    val clique = (1L to 14L)
+    val cliqueEdges = for {
+      i <- clique; j <- clique if i < j
+    } yield (i, j)
+    val gadget = 100L +: 101L +: (110L to 119L) // a=100, b=101, c1..c10
+    val gadgetEdges = (for {
+      i <- gadget; j <- gadget if i < j
+    } yield (i, j)).filterNot(e => e == (101L, 110L)) // drop (b, c1)
+    val edges = (cliqueEdges ++ gadgetEdges).distinct
+    val s = spark
+    import s.implicits._
+
+    val exp = localPeel(edges.toSet)
+    // some round ≥ 2 peels fewer edges than survive it
+    val smallPeel = (2L to Graph.KTrussRounds.toLong).exists { r =>
+      val peeled = exp.count(_._3 == r)
+      peeled > 0 && peeled < exp.count(t => t._3 == 0L || t._3 > r)
+    }
+    assert(smallPeel, "planted graph must peel a round smaller than its survivors")
+
+    val got = rowsOf(Graph.kTrussOf(spark, edges.toDF("p1", "p2")))
+    assert(got == exp)
+    assert(got.exists(_._3 >= 2L), "peel must cascade past round 1")
+    assert(got.exists(_._3 == 0L), "the K14 core must survive")
   }
 
   test("q258 truss ⊆ core: every truss survivor's endpoints keep ≥ k−1 truss degree... within survivors") {
