@@ -58,9 +58,17 @@ object Tables {
     * parts, partition subdirs included), in order: the sum of its data
     * files' footer record counts, read on the driver, so no Spark job,
     * plan or codegen runs. A corrupt or unreadable file fails the count,
-    * naming the file; it never reads as 0. */
+    * naming the file; it never reads as 0.
+    *
+    * Each footer is opened with read options built from the session's
+    * Hadoop conf: the one-argument `ParquetFileReader.open` builds its
+    * own options over a fresh Hadoop `Configuration`, which loads the
+    * default resources again for every file (most of a memo-warm
+    * CurationReport's time) and drops conf-driven settings such as
+    * decryption properties. */
   def rowCounts(spark: SparkSession, paths: Seq[String]): Seq[Long] = {
     import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    import org.apache.parquet.HadoopReadOptions
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val conf = spark.sparkContext.hadoopConfiguration
@@ -76,7 +84,8 @@ object Tables {
       else Iterator(st)
     def footerRows(st: FileStatus): Long =
       try {
-        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        val r = ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf),
+          HadoopReadOptions.builder(conf, st.getPath).build())
         try r.getRecordCount finally r.close()
       } catch { case NonFatal(e) =>
         throw new java.io.IOException(s"cannot count the rows of parquet file ${st.getPath}: $e", e)

@@ -145,6 +145,8 @@ object CurateDag {
     * The 8 counts come from `Tables.rowCounts`: each output's parquet
     * footers already store its exact row count, so a memo-warm rerun
     * reads 8 small dirs' footers on the driver and starts no Spark job.
+    * It opens them with read options over the session's Hadoop conf, not
+    * a fresh `Configuration` per file, which cost most of a warm rerun.
     * Every dir still passes the S4 read gate first. */
   object CurationReport extends Stage {
     override def deps: Seq[Stage] = Seq(Pack, ChunkManifest)

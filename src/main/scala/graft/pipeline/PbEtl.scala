@@ -4,8 +4,12 @@ import org.apache.spark.ml.{Pipeline, PipelineModel, PipelineStage}
 import org.apache.spark.ml.classification.MultilayerPerceptronClassifier
 import org.apache.spark.ml.feature.{OneHotEncoder, StringIndexer, VectorAssembler}
 import org.apache.spark.ml.linalg.Vector
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.{DataFrame, Observation, SaveMode}
 import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.ObjectMapper
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import scala.util.control.NonFatal
 
 /** The pb-etl dataflow re-expressed Spark-first (SURVEY.md §2, §7).
   *
@@ -35,7 +39,7 @@ import org.apache.spark.sql.functions._
   */
 object PbEtl {
   import Schemas._
-  import Stage.{writeGz, writeText}
+  import Stage.{readText, writeGz, writeText}
 
   // --- external inputs (S1/S2; reference tasks.py:89-149) ---------------
   object TrnAttr extends CsvSource("train/attr", attr)
@@ -256,27 +260,66 @@ object PbEtl {
     * (pb_etl/tasks.py:395-425). The prediction side is one row per
     * forecast transaction — it grows with the data, so it joins
     * UNHINTED (a forced broadcast would OOM the driver on a large
-    * forecast period; AQE broadcasts when genuinely small). */
+    * forecast period; AQE broadcasts when genuinely small).
+    *
+    * The write also records the five totals FinalResults reports from
+    * (`Dataset.observe`: aggregated by the write's own tasks, no extra
+    * job) in `<dir>/_totals.json`, before the Runner flags the dir, so
+    * the flag covers them; the `_` prefix keeps the file out of every
+    * parquet read. The Y_hat sum is a double sum like `avg`'s, not a
+    * decimal one: written by one task, it is a re-scan's to the bit;
+    * written by several, their partial sums merge in completion order,
+    * a re-scan's in file order, so the last bits may differ. Version
+    * 1.0.0: a dir committed without totals is never read. */
   object BackTest extends Stage {
+    override def version: String = "1.0.0"
     override def deps: Seq[Stage] = Seq(Predict, BacktestActuals)
+    val Totals = "_totals.json"
     def run(ctx: Ctx): Unit = {
+      val dir = outputDir(ctx).get
+      val totals = Observation()
+      val target = col("TARGET").cast("double")
       writeGz(BacktestActuals.read(ctx)
-        .join(Predict.read(ctx), Seq("TRANSACTION_ID"), "left_outer"), outputDir(ctx).get)
+        .join(Predict.read(ctx), Seq("TRANSACTION_ID"), "left_outer")
+        .observe(totals, count(lit(1)).as("n"),
+          count(target).as("target_n"), sum(target).as("target_sum"),
+          count(col("Y_hat")).as("y_hat_n"), sum(col("Y_hat")).as("y_hat_sum")), dir)
+      // the listener bus publishes the totals just after the write returns
+      val row = Await.result(totals.future, 5.minutes)
+      writeText(ctx, dir, Totals, row.schema.fieldNames.zip(row.toSeq)
+        .map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}"))
     }
   }
 
   /** A2/A3/K6/O5: the deletion-rate report — mean(TARGET) vs mean(Y_hat)
     * (pb_etl/tasks.py:428-444, etl.py:22-39). No memo dir: always
-    * re-runs, like the reference's output()-less FinalResults. */
+    * re-runs, like the reference's output()-less FinalResults.
+    *
+    * It reads the totals BackTest recorded at commit, behind the S4 gate,
+    * and starts no Spark job: each mean is the double sum ÷ the non-null
+    * count, what `avg` evaluates, nulls excluded as `avg` excludes them.
+    * A missing or unparsable totals file fails naming its path, and a
+    * column with no non-null value fails naming the dir; neither falls
+    * back to a scan. */
   object FinalResults extends Stage {
     override def deps: Seq[Stage] = Seq(BackTest)
     override def outputDir(ctx: Ctx): Option[String] = None
     @volatile var last: Option[(Long, Double, Double)] = None
     def run(ctx: Ctx): Unit = {
-      val r = BackTest.read(ctx)
-        .agg(count(lit(1)), avg(col("TARGET").cast("double")), avg(col("Y_hat")))
-        .head()
-      val (n, actual, expected) = (r.getLong(0), r.getDouble(1), r.getDouble(2))
+      val dir = BackTest.readableDir(ctx)
+      val path = s"$dir/${BackTest.Totals}"
+      val totals = try new ObjectMapper().readTree(readText(ctx, dir, BackTest.Totals))
+      catch { case NonFatal(e) =>
+        throw new IllegalStateException(s"cannot read the backtest totals at $path: $e", e) }
+      def field(k: String) = Option(totals.get(k)).filter(_.isNumber).getOrElse(
+        throw new IllegalStateException(s"the backtest totals at $path have no number \"$k\""))
+      def mean(c: String, k: String): Double = {
+        val cnt = field(s"${k}_n").asLong
+        if (cnt == 0) throw new IllegalStateException(
+          s"stage BackTest output at $dir has no non-null $c to average")
+        field(s"${k}_sum").asDouble / cnt
+      }
+      val (n, actual, expected) = (field("n").asLong, mean("TARGET", "target"), mean("Y_hat", "y_hat"))
       last = Some((n, actual, expected))
       // K5-equivalent result artifact: 1-row JSON (the Django ORM row's
       // (expected, actual) pair, pb_etl_app/management/commands/etl.py:33-39)

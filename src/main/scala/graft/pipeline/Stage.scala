@@ -157,6 +157,13 @@ object Stage {
     val out = ctx.fs(dir).create(new Path(dir, file), true)
     try out.write(text.getBytes("UTF-8")) finally out.close()
   }
+
+  /** The twin of `writeText`: `<dir>/<file>` as UTF-8; the stream is
+    * closed even when the read throws. */
+  def readText(ctx: Ctx, dir: String, file: String): String = {
+    val in = ctx.fs(dir).open(new Path(dir, file))
+    try new String(in.readAllBytes(), "UTF-8") finally in.close()
+  }
 }
 
 /** An external raw-CSV input (reference ExternalTask, tasks.py:89-149):
@@ -204,7 +211,7 @@ abstract class CsvSource(val sub: String, schema: StructType) extends Stage {
   *
   * The walk is sequential. In pb-etl only LoadTest sits off the
   * LoadData → NormDenominators → FitModel chain, and on the traced
-  * `dags` cold pass (seed 1, 4 vCPUs) it took 0.23 s of the 11.9 s
+  * `dags` cold pass (seed 1, 4 vCPUs) it took 0.31 s of the 13.3 s
   * walk, so running it beside the chain could save at most that.
   */
 object Runner {

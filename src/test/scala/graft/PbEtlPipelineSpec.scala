@@ -126,8 +126,82 @@ class PbEtlPipelineSpec extends SparkSpec {
   }
 
   test("memoized stages are skipped on re-run; FinalResults always re-runs (O2/O5)") {
-    val again = PbEtl.runAll(ctx)
+    val (again, jobs) = jobsOf(PbEtl.runAll(ctx))
     assert(again == Seq("FinalResults"))
+    assert(jobs == 0, s"a memo-warm walk started $jobs Spark jobs")
+  }
+
+  /** `(count, avg(TARGET), avg(Y_hat))` over the committed backtest, the
+    * doubles as raw bits. */
+  private def rescanned(c: Ctx): (Long, Long, Long) = {
+    val r = PbEtl.BackTest.read(c)
+      .agg(count(lit(1)), avg(col("TARGET").cast("double")), avg(col("Y_hat"))).head()
+    (r.getLong(0), java.lang.Double.doubleToLongBits(r.getDouble(1)),
+      java.lang.Double.doubleToLongBits(r.getDouble(2)))
+  }
+
+  private def reported(c: Ctx): (Long, Long, Long) = {
+    PbEtl.FinalResults.last = None
+    PbEtl.FinalResults.run(c)
+    val Some((n, actual, expected)) = PbEtl.FinalResults.last
+    (n, java.lang.Double.doubleToLongBits(actual), java.lang.Double.doubleToLongBits(expected))
+  }
+
+  test("FinalResults reports count/avg of the committed backtest, bit for bit") {
+    assert(reported(ctx) == rescanned(ctx))
+  }
+
+  /** A cold walk up to BackTest over the fixture with two planted
+    * actuals: a key no forecast row has (null Y_hat) and a null TARGET. */
+  private lazy val planted = {
+    val tmp = Files.createTempDirectory("pbetl-nulls")
+    writeFixtures(tmp)
+    writeCsv(tmp, "results", "TRANSACTION_ID,TARGET", Seq(
+      "275452,0", "275451,1", "275450,", "999999,1"))
+    val c = Ctx(spark, ctx.conf.copy(dataRoot = tmp.toString, workRoot = tmp.resolve("work").toString))
+    assert(Runner.run(c, PbEtl.BackTest) == allStages.init)
+    c
+  }
+
+  test("the cold walk's FinalResults starts no Spark job") {
+    val c = planted // the cold walk itself runs outside the count
+    val (_, jobs) = jobsOf(PbEtl.FinalResults.run(c))
+    assert(jobs == 0, s"FinalResults on a just-committed backtest started $jobs Spark jobs")
+  }
+
+  test("FinalResults excludes null TARGET and null Y_hat rows as avg does") {
+    val bt = PbEtl.BackTest.read(planted)
+    assert(bt.count() == 4)
+    assert(bt.filter(col("Y_hat").isNull).count() == 1 && bt.filter(col("TARGET").isNull).count() == 1)
+    val (n, actual, expected) = reported(planted)
+    assert((n, actual, expected) == rescanned(planted))
+    assert(n == 4 && java.lang.Double.longBitsToDouble(actual) == 2.0 / 3)
+    // the mean of the 3 forecasts, not their sum over 4 rows
+    val yHat = PbEtl.Predict.read(planted).collect().map(_.getDouble(1))
+    assert(math.abs(java.lang.Double.longBitsToDouble(expected) - yHat.sum / 3) < 1e-12)
+  }
+
+  test("FinalResults fails on missing, unparsable or empty totals, naming them; no rescan") {
+    val dir = PbEtl.BackTest.readableDir(ctx)
+    val totals = new org.apache.hadoop.fs.Path(dir, PbEtl.BackTest.Totals)
+    val kept = Stage.readText(ctx, dir, PbEtl.BackTest.Totals)
+    def failure(): String = {
+      val (e, jobs) = jobsOf(intercept[IllegalStateException](PbEtl.FinalResults.run(ctx)))
+      assert(jobs == 0, s"a failing FinalResults started $jobs Spark jobs")
+      e.getMessage
+    }
+    // through the Hadoop FS, so the local checksum file follows each write
+    def plant(text: String): Unit = Stage.writeText(ctx, dir, PbEtl.BackTest.Totals, text)
+    try {
+      assert(ctx.fs(dir).delete(totals, false))
+      assert(failure().contains(totals.toString))
+      plant("{\"n\":3,")
+      assert(failure().contains(totals.toString))
+      plant("""{"n":3,"target_n":0,"target_sum":null,"y_hat_n":3,"y_hat_sum":1.5}""")
+      val m = failure()
+      assert(m.contains(s"stage BackTest output at $dir") && m.contains("TARGET"), m)
+    } finally plant(kept)
+    assert(reported(ctx) == rescanned(ctx))
   }
 
   test("read refuses an incomplete target: deleted _SUCCESS blocks the read (S4)") {

@@ -118,6 +118,19 @@ class PbEtlScaleSpec extends SparkSpec {
     assert(valAuc.flatMap(_.toDoubleOption).exists(a => a >= 0.0 && a <= 1.0), hist)
   }
 
+  test("FinalResults reports count/avg of the committed backtest") {
+    val r = PbEtl.BackTest.read(ctx)
+      .agg(count(lit(1)), avg(col("TARGET").cast("double")), avg(col("Y_hat"))).head()
+    PbEtl.FinalResults.run(ctx)
+    val Some((n, actual, expected)) = PbEtl.FinalResults.last
+    assert(n == r.getLong(0) && actual == r.getDouble(1))
+    // this backtest is written by 4 tasks: their partial Y_hat sums merge
+    // in completion order at commit and in file order on a re-scan, so
+    // the two means may differ in the last bits (the 4 partials of one
+    // run give 2350.432692584019 or ...0196 over the 24 merge orders)
+    assert(math.abs(expected - r.getDouble(2)) <= 8 * math.ulp(r.getDouble(2)), (expected, r))
+  }
+
   test("backtest rates are sane: actual == generator rate, forecast in (0,1)") {
     PbEtl.FinalResults.run(ctx)
     val Some((n, actual, expected)) = PbEtl.FinalResults.last
